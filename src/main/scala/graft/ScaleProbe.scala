@@ -1621,7 +1621,7 @@ object ScaleProbe {
         "distributed orchestration (interleaved, min/med per arm)") {
         val qAb = twoTermQueries(10000L, 90000000L)
         def once(planned: Boolean): Double = {
-          graft.plans.Bm25IndexStore.driverPlanningEnabled = planned
+          WandKernel.driverPlanningEnabled.set(planned)
           try {
             val t0 = System.nanoTime()
             val n = Bm25IndexStore
@@ -1629,7 +1629,7 @@ object ScaleProbe {
             require(n == 50000L, s"A/B serve returned $n rows")
             (System.nanoTime() - t0) / 1e9
           } finally
-            graft.plans.Bm25IndexStore.driverPlanningEnabled = true
+            WandKernel.driverPlanningEnabled.set(true)
         }
         once(true); once(false) // discard: per-plan codegen warm-up
         val walls = (1 to 3).flatMap(_ =>

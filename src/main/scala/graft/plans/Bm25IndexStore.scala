@@ -161,17 +161,19 @@ object Bm25IndexStore {
     * are excluded, mirroring `bm25Retrieval`.
     */
   def search(spark: SparkSession, table: String, queryDocs: DataFrame,
-      topN: Int): DataFrame = {
-    val q = queryDocs
+      topN: Int): DataFrame =
+    WandKernel.finalTopK(
+      naivePartials(spark, spark.table(table), queryTerms(queryDocs), topN,
+        df => Retire.survivors(spark, table, df, "doc_id")),
+      topN, "score")
+
+  /** The batch's distinct (query_id, tkey) terms. */
+  private def queryTerms(queryDocs: DataFrame): DataFrame =
+    queryDocs
       .select(col("doc_id").as("query_id"), tokens(col("text")).as("toks"))
       .select(col("query_id"), explode(col("toks")).as("term"))
       .distinct()
       .select(col("query_id"), xxhash64(col("term")).as("tkey"))
-    WandKernel.finalTopK(
-      naivePartials(spark, spark.table(table), q, topN,
-        df => Retire.survivors(spark, table, df, "doc_id")),
-      topN, "score")
-  }
 
   /** Tombstone `ids` (doc_id rows) — deleted docs vanish from every
     * serve path immediately; [[compact]] later drops their postings
@@ -227,7 +229,7 @@ object Bm25IndexStore {
     * tying. Broadcast state is candidates × terms-per-query —
     * [[wandSearch]] keeps it bounded by routing dense queries to the
     * naive kernel and hash-chunking what remains under
-    * [[BroadcastRows]].
+    * [[WandKernel.BroadcastRows]].
     */
   private def scoreCandidates(
       post: DataFrame, q: DataFrame, cand: DataFrame): DataFrame =
@@ -236,127 +238,19 @@ object Bm25IndexStore {
       .groupBy("query_id", "doc_id")
       .agg(round(sum("w"), 4).as("score"))
 
-  /** See [[WandKernel.BroadcastRows]] — re-exported as both stores'
-    * default chunk budget.
-    */
-  private[plans] val BroadcastRows = WandKernel.BroadcastRows
-
-  /** Collect caps for the driver-planned orchestration ([[wandSearch]]
-    * fast path): the (query, term) frame and the prefix rows are the
-    * only corpus-derived state it pulls to the driver, both bounded
-    * BEFORE their collect (the prefix volume is Σ min(P, df) — known
-    * from the df table alone). Past either cap the distributed
-    * orchestration serves instead, so driver memory stays bounded by
-    * construction — the [[graft.operators.Similarity]] ANN batch-cap
-    * discipline applied to lexical serving.
-    */
-  private[plans] val DriverBatchRows = 2000000L
-  private[plans] val PrefixCollectRows = 4000000L
-
-  /** Test seam: IndexStoreSpec flips this off to drive the DISTRIBUTED
-    * orchestration on spec-sized batches (which the driver-planned
-    * path would otherwise always claim) and pin both paths to
-    * identical output. Production never touches it.
-    */
-  private[graft] var driverPlanningEnabled = true
-
-  /** Driver-planned WAND serving for collectable batches — the
-    * [[WandKernel.serveDriverPlanned]] orchestration (four Spark
-    * actions, limit-bounded prefix collect, θ from exact seed scores)
-    * instantiated with BM25's algebra: query factor 1 (scores are
-    * plain weight sums) and the saved `w` as the impact column. The
-    * exact-scoring and naive closures are [[search]]'s arithmetic
-    * restricted to candidate pairs / query-id sets, so output matches
-    * [[search]] row-for-row like every other wandSearch path.
-    */
-  private def serveDriverPlanned(
-      spark: SparkSession, table: String, rows: Array[(Long, Long, Long)],
-      topN: Int, prefixP: Int, broadcastRows: Long): Option[DataFrame] = {
-    import spark.implicits._
-    // tombstones as a driver predicate for the kernel's pair state;
-    // an over-cap dead set declines driver planning (the distributed
-    // orchestration's anti-joins handle any tombstone volume)
-    val deadSet = Retire.deadSet(spark, table) match {
-      case None => return None
-      case Some(s) => s
-    }
-    // the kernel invokes the masked closures several times (chunks,
-    // naive fallback); reuse ONE materialized frame built from the
-    // already-collected set instead of re-scanning + re-broadcasting
-    // the dead table at every site ([[Retire.liveVia]])
-    val live = Retire.liveVia(spark, deadSet, "doc_id")
-    val post = spark.table(table)
-    // the batch arrives PRE-COLLECTED (wandSearch's one bounded job) —
-    // this path runs no query-side Spark action of its own
-    val qRows = rows.map { case (k, t, df) => (k, t, 1.0, df) }
-    def qDfOf(ids: Long => Boolean): DataFrame =
-      qRows.iterator.filter(r => ids(r._1)).map(r => (r._1, r._2))
-        .toSeq.toDF("query_id", "tkey")
-    val qAllDf = qDfOf(_ => true)
-    WandKernel.serveDriverPlanned(
-      spark, qRows, topN, prefixP, broadcastRows, PrefixCollectRows,
-      scanPrefix = tk => post.filter(col("rnk_w") <= prefixP)
-        .join(broadcast(tk), "tkey")
-        .select(col("tkey"), col("doc_id"),
-          col("w").as("impact"), col("rnk_w")),
-      scanTail = chosen => live(post.filter(col("rnk_w") > prefixP)
-        .join(broadcast(chosen), "tkey")
-        .filter(col("w") >= col("cut") &&
-          col("doc_id") =!= col("query_id")))
-        .select("query_id", "doc_id"),
-      naivePlan = ids => naivePartials(spark, post, qDfOf(ids), topN, live),
-      scoreCand = c => scoreCandidates(post, qAllDf, c),
-      scoreName = "score",
-      isDead = deadSet.contains)
-  }
-
   /** Top-`topN` BM25 matches served with MaxScore-style impact-ordered
-    * pruning — identical output to [[search]] (same scores, same
-    * tie-breaks; spec-pinned and same DuckDB oracle), at a fraction of
-    * its join volume on dense-overlap corpora. [[search]] pays
-    * Σ df(query terms) join rows — the measured 570M-row / 74.8 s 10×
-    * worst case; this serve touches:
-    *
-    *   1. PREFIX: the top-`prefixP` impacts of each query term
-    *      (`rnk_w <= P` pushed to the scan, file-sorted by (tkey,
-    *      rnk_w)) seed candidate docs; the top-4k docs per query by
-    *      partial prefix score are EXACT-scored (a queries×4k-pair
-    *      scan) and the k-th exact seed score is the LOWER BOUND θ on
-    *      the final k-th score.
-    *   2. TAIL: a doc outside every prefix has, for each of its query
-    *      terms, weight ≤ that term's P-th impact (`capw`); its score
-    *      is therefore < θ unless some single term carries
-    *      w ≥ θ − ε − (Σ capw − capw_t) — the MaxScore bound. Only
-    *      tail rows clearing that per-term cutoff (and only for terms
-    *      whose cutoff ≤ capw — others cannot produce one) join at
-    *      all; their docs are exact-scored with the prefix candidates
-    *      and the true top-k falls out.
-    *   3. ROUTE: each query is PRICED before any tail work — naive
-    *      cost Σ df(all its terms) vs WAND cost (surviving terms'
-    *      Σ df + its prefix pairs). Queries where pruning does not at
-    *      least halve the volume (dense-overlap corpora where caps
-    *      swamp θ; 60-term doc-as-query batches; θ = −∞ exhaustive
-    *      queries) are served by [[search]]'s bucketed-join kernel
-    *      instead — the optimal plan in that regime, so WAND
-    *      degenerates to a tie by construction, never a blowup. The
-    *      scoring broadcast for the routed remainder is hash-chunked
-    *      under [[BroadcastRows]], so driver/executor state stays
-    *      bounded even if the Σ df pricing underestimates.
-    *
-    * Proof shape for the skipped docs: with m = |q ∩ d| terms all
-    * below cutoff, score < m·(θ−ε−C) + Σ_{t∈q∩d} capw ≤ θ−ε when
-    * θ−ε ≤ C (m ≥ 1 and each capw ≥ 0), and ≤ C < θ−ε otherwise —
-    * strictly under the k-th best either way, so no tie-break can
-    * resurrect them. Extended (rank-0) postings always enter the
-    * prefix, so extension keeps exactness (see [[extend]]).
+    * pruning — [[WandKernel.wandSearch]] instantiated with BM25's
+    * algebra: query factor 1 (scores are plain weight sums) over the
+    * saved `w` impacts; the exact-scoring and naive closures are
+    * [[search]]'s arithmetic restricted to candidate pairs / query
+    * sets, so output matches [[search]] row-for-row (spec-pinned; same
+    * DuckDB oracle). Queries route to WAND only when pruning shrinks
+    * their naive volume by [[WandKernel.RouteVolFactor]].
     */
   def wandSearch(spark: SparkSession, table: String, queryDocs: DataFrame,
       topN: Int, prefixP: Int = 64,
-      broadcastRows: Long = BroadcastRows): DataFrame = {
-    import graft.functions.TopKAgg
-    import spark.implicits._
+      broadcastRows: Long = WandKernel.BroadcastRows): DataFrame = {
     val post = spark.table(table)
-    // the LAZY query plan: tokenize the batch and join the df table.
     // LEFT join + coalesce(0): the frozen df table counts BUILD-time
     // terms only, but extend() appends scorable rank-0 postings for
     // out-of-build-vocabulary batch terms — an inner join would
@@ -364,201 +258,15 @@ object Bm25IndexStore {
     // [[search]] (which joins postings directly) on extended
     // artifacts. df = 0 only underprices that term's naive volume in
     // the routing arithmetic, never a score.
-    val dfT = spark.table(dfTable(table)).select(col("tkey"), col("df"))
-    val qdfPlan = queryDocs
-      .select(col("doc_id").as("query_id"), tokens(col("text")).as("toks"))
-      .select(col("query_id"), explode(col("toks")).as("term"))
-      .distinct()
-      .select(col("query_id"), xxhash64(col("term")).as("tkey"))
-      .join(dfT, Seq("tkey"), "left")
-      .select(col("query_id"), col("tkey"),
+    val q = queryTerms(queryDocs)
+      .join(spark.table(dfTable(table)).select("tkey", "df"), Seq("tkey"),
+        "left")
+      .select(col("query_id"), col("tkey"), lit(1.0).as("qf"),
         coalesce(col("df"), lit(0L)).as("df"))
-    // collectable batches take the DRIVER-PLANNED orchestration: ONE
-    // bounded job ([[WandKernel.boundedCollect]]) tokenizes, bounds,
-    // and fetches the batch — the r12 shape (eager checkpoint → count
-    // → collect) paid three driver-sequenced actions for the same
-    // state, whose fixed scheduler latency multiplied 3-6× under host
-    // contention. It declines past its DRIVER-STATE caps (pair cells /
-    // collect budgets), which the distributed orchestration below
-    // owns; an over-budget scoring volume chunks IN-PLACE (r14).
-    var qdfM: DataFrame = null
-    if (driverPlanningEnabled)
-      WandKernel.boundedCollect(
-          qdfPlan.as[(Long, Long, Long)], DriverBatchRows).foreach { rows =>
-        serveDriverPlanned(spark, table, rows, topN, prefixP,
-          broadcastRows).foreach(out => return out)
-        // driver planning refused (driver-state caps) —
-        // the distributed path reuses the already-collected batch via
-        // parallelize instead of paying a second tokenize pass.
-        // (A batch boundedCollect itself refuses — > DriverBatchRows
-        // rows, i.e. corpus-scale — re-runs the query plan once for
-        // the checkpoint below: one extra batch-linear pass, paid only
-        // in the regime where the distributed serve dominates it, and
-        // bounded further by the fetch's cancel-on-overrun.)
-        qdfM = spark.createDataset(spark.sparkContext.parallelize(
-            rows.toIndexedSeq, spark.sparkContext.defaultParallelism))
-          .toDF("query_id", "tkey", "df")
-          .localCheckpoint(true)
-      }
-    val qdf = if (qdfM != null) qdfM else qdfPlan.localCheckpoint(true)
-    val q = qdf.select("query_id", "tkey")
-    // every intermediate below is QUERY-BATCH-sized; each is
-    // checkpointed so the postings table is scanned exactly three
-    // times (prefix, tail, final scoring) instead of once per
-    // broadcast subplan that references it
-    // df-only pre-route + pricing stats in one job
-    // ([[WandKernel.queryStats]]): dense corpora skip the θ/cap
-    // pipeline on one df aggregation (measured: the replica-corpus tie
-    // previously paid a full prefix scan + exact-θ pass for a routing
-    // answer this bound already knew)
-    val qstats = WandKernel.queryStats(qdf, prefixP)
-    val qCnt = qstats.select(col("query_id"), col("nt"))
-    val eligible = qstats.filter(col("eligible")).select("query_id")
-    // when the pre-route refuses EVERY query (dense-overlap corpora,
-    // doc-as-query batches), the whole θ/cap/cutoff pipeline — prefix
-    // scan, exact-θ pass, routing — is driver-sequenced dead weight:
-    // collapse to the naive kernel directly (identical output; the
-    // general path's naive branch restricted to the full batch)
-    def live(df: DataFrame): DataFrame =
-      Retire.survivors(spark, table, df, "doc_id")
-    if (eligible.isEmpty)
-      return WandKernel.finalTopK(
-        naivePartials(spark, post, q, topN, live), topN, "score")
-    val qE = q.join(broadcast(eligible), Seq("query_id"), "left_semi")
-    val prefix = post.filter(col("rnk_w") <= prefixP)
-      .join(broadcast(qE), "tkey")
-      .localCheckpoint(true)
-    // tombstoned docs never become candidates or θ-seeds (prefixLive
-    // feeds pairScores below); `prefix` itself still feeds the CAPS,
-    // where a dead doc's weight only loosens an upper bound —
-    // compaction restores tightness, like rank-0 extended rows
-    val prefixLive = live(prefix)
-    // per-(query, term) cap, GAP-TOLERANT (see WandKernel's cap-rule
-    // comment — compaction removes retired rows without re-ranking, so
-    // prefixes carry rank gaps): "no tail" comes from the FROZEN df
-    // alone (df ≤ P ⇒ the build-time list fit in the prefix; deletion
-    // only shrinks it), a tailed term's cap is the min SURVIVING
-    // rank-1..P impact (every surviving prefix row outranks the
-    // original P-th, which bounds every tail row), and a tailed term
-    // with ZERO surviving prefix rows leaves no sound cap — its
-    // queries route to the naive kernel. Rank-0 extended rows are
-    // always candidates and must not deflate the cap; no self-match
-    // filter (a query's own doc occupies a prefix slot like any other).
-    // Derived BEFORE the θ-seed pass so uncappable queries never pay
-    // the seed exact-scoring scan they cannot use.
-    val caps0 = qdf
-      .join(broadcast(eligible), Seq("query_id"), "left_semi")
-      .join(prefix.filter(col("rnk_w") >= 1)
-          .groupBy("query_id", "tkey").agg(min("w").as("minw")),
-        Seq("query_id", "tkey"), "left")
-      .select(col("query_id"), col("tkey"),
-        when(col("df") <= prefixP, lit(0.0))
-          .otherwise(col("minw")).as("capw"))
-      .localCheckpoint(true)
-    val uncapped = caps0.filter(col("capw").isNull)
-      .select("query_id").distinct()
-    val caps = caps0
-      .join(broadcast(uncapped), Seq("query_id"), "left_anti")
-    // θ comes from PARTIAL prefix scores, not a full scoring pass: the
-    // sum of a pair's prefix contributions lower-bounds its true score,
-    // so the k-th best partial is a valid (slightly looser) threshold —
-    // and deriving it costs only the prefix rows already scanned,
-    // where an exact-θ pass would re-touch every candidate posting
-    val pairScores = prefixLive
-      .join(broadcast(uncapped), Seq("query_id"), "left_anti")
-      .filter(col("doc_id") =!= col("query_id"))
-      .groupBy("query_id", "doc_id")
-      .agg(sum("w").as("pscore"))
-    // a query whose entire prefix is tombstone-masked (or self) has no
-    // LIVE pairs: no θ-seed, no prefix candidates — and the routing
-    // below would price it at volume 0 and wand-route it into an EMPTY
-    // result (a pre-existing hole the compact-era stress pass caught:
-    // delete the rank-1 doc of a single-term query at P=1 and the
-    // query vanished from the output). No θ means no sound pruning, so
-    // such queries join the forced-naive set. The driver-planned path
-    // is immune — its missing-θ default is −∞, which degrades to a
-    // full tail scan.
-    val forceNaive = uncapped.unionByName(
-        eligible.join(pairScores.select("query_id").distinct(),
-          Seq("query_id"), "left_anti"))
-      .distinct().localCheckpoint(true)
-    val candA = pairScores.select("query_id", "doc_id")
-    // θ is the topN-th EXACT score of a small SEED set — the top
-    // 4·topN docs per query by partial prefix score, fully scored
-    // (queries × 4·topN pairs, one cheap candidate-bounded scan).
-    // A partial-score θ underestimates by every contribution outside
-    // the prefix, and on flat-impact lists that gap is exactly what
-    // lets whole common-term tails slip under the cutoff (measured:
-    // 11M candidate pairs with partial θ vs prefix-only with exact-
-    // seed θ on the zipf probe). Exact seed scores are still a LOWER
-    // bound on the true topN-th — seeds are real docs.
-    val seeds = pairScores.groupBy("query_id")
-      .agg(TopKAgg.topK(4 * topN, col("pscore"), col("doc_id")).as("top"))
-      .select(col("query_id"),
-        explode(expr("transform(top, x -> x._2)")).as("doc_id"))
-    val theta = scoreCandidates(post, q, seeds).groupBy("query_id")
-      .agg(TopKAgg.topK(topN, col("score"), col("doc_id")).as("top"))
-      .select(col("query_id"),
-        when(size(col("top")) >= topN,
-          element_at(col("top"), topN).getField("_1"))
-          .otherwise(lit(Double.MinValue)).as("theta"))
-      .localCheckpoint(true)
-    val totals = caps.groupBy("query_id")
-      .agg(sum("capw").as("cap_total"))
-    val cutoffs = caps.join(totals, "query_id").join(theta, "query_id")
-      .select(col("query_id"), col("tkey"),
-        (col("theta") - lit(WandKernel.RoundEps) - col("cap_total")
-          + col("capw")).as("cut"), col("capw"))
-      // a term whose cutoff exceeds its cap cannot yield a tail row
-      // (tail weights are ≤ capw) — dropping it here keeps the join
-      // from emitting rows it would only filter
-      .filter(col("cut") <= col("capw"))
-      .select("query_id", "tkey", "cut")
-    // second sound tail rule — [[WandKernel.essentialSplit]]
-    val essential = WandKernel.essentialSplit(caps, "capw", theta)
-    // price every plan in the same unit — Σ df = the postings rows its
-    // joins emit; the naive price and term count rode in on qstats.
-    // Only ELIGIBLE queries are priced — the rest already routed naive
-    // without touching the postings.
-    val est1 = cutoffs.join(qdf, Seq("query_id", "tkey"))
-      .groupBy("query_id").agg(sum("df").as("est1"))
-    val est2 = essential.join(qdf, Seq("query_id", "tkey"))
-      .groupBy("query_id").agg(sum("df").as("est2"))
-    val nPref = candA.groupBy("query_id").agg(count(lit(1)).as("npref"))
-    // ROUTE (scaladoc step 3) — [[WandKernel.routes]]: tail rule by
-    // price, then WAND only when the FULL pruned volume (tail rows +
-    // scoring broadcast) at least halves the naive one; uncappable and
-    // live-prefix-empty queries are forced ineligible here so they
-    // reach the naive branch exactly once (leaving them in would
-    // double-score the former and EMPTY-result the latter)
-    val routes = WandKernel.routes(
-      qstats.join(
-          broadcast(forceNaive.withColumn("fnaive", lit(true))),
-          Seq("query_id"), "left")
-        .withColumn("eligible", col("eligible") && col("fnaive").isNull)
-        .drop("fnaive"),
-      est1, est2, nPref)
-    val chosen = WandKernel.chosenCutoffs(cutoffs, essential, routes)
-    val candB = live(post.filter(col("rnk_w") > prefixP)
-      .join(broadcast(chosen), "tkey")
-      .filter(col("w") >= col("cut") && col("doc_id") =!= col("query_id")))
-      .select("query_id", "doc_id")
-    val wandIds = routes.filter(col("use_wand")).select("query_id")
-    val cand = candA.join(broadcast(wandIds), Seq("query_id"), "left_semi")
-      .unionByName(candB).distinct()
-    // bounded exact scoring — [[WandKernel.chunkedScores]]; the priced
-    // volume decides up front whether the candidates even need
-    // materializing (selective batches fit one chunk and skip it)
-    val wandScores = WandKernel.chunkedScores(
-      cand, qCnt, broadcastRows, topN, WandKernel.pricedRows(routes))(
-      c => scoreCandidates(post, q, c))
-    // naive-routed queries — everything NOT wand-routed (pre-route
-    // ineligible + priced-out), i.e. exactly [[search]]'s kernel
-    // restricted to their ids (when the whole batch routes to WAND
-    // the empty broadcast propagates and AQE elides this scan)
-    val naiveQ = q.join(broadcast(wandIds), Seq("query_id"), "left_anti")
-    val naiveScores = naivePartials(spark, post, naiveQ, topN, live)
-    WandKernel.finalTopK(
-      wandScores.unionByName(naiveScores), topN, "score")
+    def terms(q: DataFrame): DataFrame = q.select("query_id", "tkey")
+    WandKernel.wandSearch(spark, table, "w", "score", q, topN, prefixP,
+        broadcastRows)(
+      scoreCand = (q, cand) => scoreCandidates(post, terms(q), cand),
+      naive = (q, live) => naivePartials(spark, post, terms(q), topN, live))
   }
 }

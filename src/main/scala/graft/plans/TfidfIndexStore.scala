@@ -201,13 +201,6 @@ object TfidfIndexStore {
       .saveAsTable(table)
   }
 
-  /** Top-`topN` cosine matches per query id, served ENTIRELY from the
-    * saved index — query vectors are the queries' own saved postings
-    * rows (queries are corpus members, the doc-as-query retrieval
-    * shape), so not even the query batch re-tokenizes. Self-matches
-    * excluded; pairs sharing zero terms never surface (no join row) —
-    * both mirroring the in-session form.
-    */
   /** The query-vector fetch (queries are corpus members): the batch's
     * saved (tkey, wq) rows, read from the doc-keyed mirror when the
     * artifact has one — a compact 3-column, doc_id-clustered scan —
@@ -281,18 +274,27 @@ object TfidfIndexStore {
         round(col("dot") / (col("nq") * col("nrm")), 4).as("score"))
   }
 
+  /** Top-`topN` cosine matches per query id, served ENTIRELY from the
+    * saved index — query vectors are the queries' own saved postings
+    * rows (queries are corpus members, the doc-as-query retrieval
+    * shape), so not even the query batch re-tokenizes. Self-matches
+    * excluded; pairs sharing zero terms never surface (no join row) —
+    * both mirroring the in-session form.
+    */
   def search(spark: SparkSession, table: String, queryIds: DataFrame,
       topN: Int): DataFrame = {
-    val post = spark.table(table)
     val norms = spark.table(normsTable(table))
-    val qn = norms.join(broadcast(queryIds), "doc_id")
-      .select(col("doc_id").as("query_id"), col("nrm").as("nq"))
-    val q = queryVectors(spark, table, queryIds)
     WandKernel.finalTopK(
-      naiveCosine(spark, post, norms, q, qn,
+      naiveCosine(spark, spark.table(table), norms,
+        queryVectors(spark, table, queryIds), queryNorms(norms, queryIds),
         df => Retire.survivors(spark, table, df, "doc_id")),
       topN, "cosine")
   }
+
+  /** The batch's (query_id, nq) vector norms. */
+  private def queryNorms(norms: DataFrame, queryIds: DataFrame): DataFrame =
+    norms.join(broadcast(queryIds), "doc_id")
+      .select(col("doc_id").as("query_id"), col("nrm").as("nq"))
 
   /** Exact cosine of every candidate pair — [[search]]'s arithmetic
     * (term-keyed dot, norm division, 4dp rounding) restricted to
@@ -312,283 +314,43 @@ object TfidfIndexStore {
       .select(col("query_id"), col("doc_id"),
         round(col("dot") / (col("nq") * col("nrm")), 4).as("score"))
 
-
-  /** Top-`topN` cosine matches served with the MaxScore machinery of
-    * [[Bm25IndexStore.wandSearch]], adapted to the normalized vector-
-    * space score: a pair's cosine is Σ_t (wq_t/‖q‖)·(w_t/‖d‖), so the
-    * per-term impact is the saved `wn = w/‖d‖` and each query term's
-    * contribution bound is (wq_t/‖q‖)·capwn_t with capwn the P-th
-    * ranked `wn`. Tail cutoffs are expressed back in `wn` units
-    * (divide by the positive query factor); terms with zero query
-    * weight cannot lift a doc and produce no cutoff. Identical output
-    * to [[search]] — same exact-scoring pipeline on the candidates,
-    * and skipped docs are strictly below the k-th score by the same
-    * m-term bound (spec-pinned; carries the same oracle). Per-query
-    * routing and the chunked scoring broadcast follow
-    * [[Bm25IndexStore.wandSearch]] step 3: a query WAND-serves only
-    * when pruning at least halves its naive Σ df volume, so
-    * dense-overlap batches fall back to [[search]]'s kernel instead
-    * of building an unbounded candidate broadcast.
+  /** Top-`topN` cosine matches served with MaxScore-style pruning —
+    * [[WandKernel.wandSearch]] instantiated with the cosine algebra: a
+    * pair's cosine is Σ_t (wq_t/‖q‖)·(w_t/‖d‖), so the query factor is
+    * wq/‖q‖ and the impact is the saved norm-scaled `wn` = w/‖d‖. The
+    * norm DIVISION lives in the exact-scoring and naive closures, which
+    * reproduce [[search]]'s Σ wq·w / (‖q‖·‖d‖) summation order to the
+    * ulp, so 4dp rounding cannot diverge between paths and output
+    * matches [[search]] row-for-row (spec-pinned; same oracle).
+    * Queries route to WAND only when pruning shrinks their naive Σ df
+    * volume by [[WandKernel.RouteVolFactor]].
     */
   def wandSearch(spark: SparkSession, table: String, queryIds: DataFrame,
       topN: Int, prefixP: Int = 64,
-      broadcastRows: Long = Bm25IndexStore.BroadcastRows): DataFrame = {
-    import graft.functions.TopKAgg
+      broadcastRows: Long = WandKernel.BroadcastRows): DataFrame = {
     val post = spark.table(table)
     val norms = spark.table(normsTable(table))
-    val qn = norms.join(broadcast(queryIds), "doc_id")
-      .select(col("doc_id").as("query_id"), col("nrm").as("nq"))
-    // ONE action fetches the batch's saved vectors — from the
-    // doc-keyed mirror ([[queryVectors]]), not a full impact-ordered
-    // postings scan — and tags each term with its pricing df, so the
-    // pre-route can refuse a dense batch having touched only the
-    // mirror and the df table
-    // LEFT join + coalesce(0): the pricing df table counts BUILD-time
-    // selected postings only, but an extend()ed doc's top-k can hold a
-    // term no build doc selected — an inner join would silently DROP
-    // that term from the query vector and break the 'identical to
-    // search()' contract; df = 0 merely underprices that term's naive
-    // volume, a routing imprecision, never a score change
-    val dfT = spark.table(dfTable(table)).select(col("tkey"), col("df"))
-    // nq rides along in the same frame so the driver-planned
-    // orchestration fetches the whole query state in one bounded job
-    val qvecPlan = queryVectors(spark, table, queryIds)
-      .join(dfT, Seq("tkey"), "left")
-      .join(broadcast(qn), "query_id")
-      .select(col("query_id"), col("tkey"), col("wq"),
-        coalesce(col("df"), lit(0L)).as("df"), col("nq"))
-    // collectable batches take the DRIVER-PLANNED orchestration —
-    // [[WandKernel.serveDriverPlanned]] instantiated with the cosine
-    // algebra (see [[serveDriverPlanned]] below); it declines past its
-    // driver-state caps (pair cells / collect budgets), which the
-    // distributed orchestration below owns — an over-budget scoring
-    // volume chunks in-place (r14). The all-ineligible refusal
-    // (dense-overlap corpora) happens INSIDE the kernel on driver
-    // arithmetic — on dense corpora the whole WAND overhead is then
-    // the ONE bounded mirror-fetch job ([[WandKernel.boundedCollect]];
-    // the r12 shape paid checkpoint + count + collect for the same
-    // state), and an eligible batch pays at most four Spark actions
-    // instead of the distributed form's driver-sequenced stage
-    // cascade (the Bm25IndexStore measurement: 9.4 → 4.6 s).
-    var qvecM: DataFrame = null
-    if (Bm25IndexStore.driverPlanningEnabled) {
-      import spark.implicits._
-      WandKernel.boundedCollect(
-          qvecPlan.as[(Long, Long, Double, Long, Double)],
-          Bm25IndexStore.DriverBatchRows).foreach { rows =>
-        serveDriverPlanned(spark, table, post, norms, rows,
-          topN, prefixP, broadcastRows)
-          .foreach(out => return out)
-        // refused — the distributed path reuses the collected batch
-        // (an over-cap batch, where boundedCollect itself refuses,
-        // re-runs the mirror-fetch plan once for the checkpoint below —
-        // see the Bm25 twin's tradeoff note)
-        qvecM = spark.createDataset(spark.sparkContext.parallelize(
-            rows.toIndexedSeq, spark.sparkContext.defaultParallelism))
-          .toDF("query_id", "tkey", "wq", "df", "nq")
-          .localCheckpoint(true)
-      }
-    }
-    val qvec = if (qvecM != null) qvecM else qvecPlan.localCheckpoint(true)
-    val qpost = qvec.select("tkey", "query_id", "wq")
-    val qdf = qvec.select("query_id", "tkey", "df")
-    def live(df: DataFrame): DataFrame =
-      Retire.survivors(spark, table, df, "doc_id")
-    def naiveAll(): DataFrame =
-      WandKernel.finalTopK(
-        naiveCosine(spark, post, norms, qpost, qn, live), topN, "cosine")
-    // batch-sized intermediates are checkpointed — three postings
-    // scans total (prefix, tail, final scoring), not one per
-    // referencing broadcast subplan
-    val qstats = WandKernel.queryStats(qdf, prefixP)
-    val qCnt = qstats.select(col("query_id"), col("nt"))
-    val eligible = qstats.filter(col("eligible")).select("query_id")
-    if (eligible.isEmpty) return naiveAll()
-    val qpostE = qpost.join(broadcast(eligible), Seq("query_id"), "left_semi")
-    val prefix = post.filter(col("rnk_w") <= prefixP)
-      .join(broadcast(qpostE), "tkey")
-      .localCheckpoint(true)
-    // tombstoned docs never become candidates or θ-seeds; `prefix`
-    // still feeds the CAPS below, where a dead doc's wn only loosens
-    // an upper bound (compaction restores tightness)
-    val prefixLive = live(prefix)
-    // contribution cap per (query, term): (wq/‖q‖) · (P-th wn),
-    // GAP-TOLERANT (see [[Bm25IndexStore.wandSearch]]'s cap comment —
-    // compaction leaves rank gaps): "no tail" from the FROZEN df
-    // alone, cap = min SURVIVING rank-1..P impact otherwise, and a
-    // tailed term with zero surviving prefix rows (and wq > 0 — a
-    // zero-weight term cannot lift any doc) routes its queries naive.
-    // Caps over TRUE ranks only: rank-0 extended postings are always
-    // candidates and must not deflate the impact bound. Derived
-    // BEFORE the θ-seed pass so uncappable queries never pay the seed
-    // exact-scoring scan they cannot use.
-    val capwn0 = qdf
-      .join(broadcast(eligible), Seq("query_id"), "left_semi")
-      .join(prefix.filter(col("rnk_w") >= 1)
-          .groupBy("query_id", "tkey").agg(min("wn").as("minwn")),
-        Seq("query_id", "tkey"), "left")
-      .select(col("query_id"), col("tkey"),
-        when(col("df") <= prefixP, lit(0.0))
-          .otherwise(col("minwn")).as("capwn"))
-      .localCheckpoint(true)
-    val uncapped = capwn0.filter(col("capwn").isNull)
-      .join(broadcast(qpost), Seq("query_id", "tkey"))
-      .filter(col("wq") > 0.0)
-      .select("query_id").distinct()
-    val capwn = capwn0
-      .join(broadcast(uncapped), Seq("query_id"), "left_anti")
-      .filter(col("capwn").isNotNull)
-    // θ from PARTIAL prefix cosines (prefix dot / true norms): a
-    // lower bound of each pair's full cosine, so the k-th best partial
-    // is a valid threshold at only the prefix rows' cost
-    val pairScores = prefixLive
-      .join(broadcast(uncapped), Seq("query_id"), "left_anti")
-      .filter(col("doc_id") =!= col("query_id"))
-      .groupBy("query_id", "doc_id")
-      .agg(sum(col("wq") * col("w")).as("pdot"))
-      .join(norms, "doc_id")
-      .join(broadcast(qn), "query_id")
-      .select(col("query_id"), col("doc_id"),
-        (col("pdot") / (col("nq") * col("nrm"))).as("pscore"))
-      .localCheckpoint(true)
-    // live-prefix-empty queries have no θ-seed and no prefix
-    // candidates: forced naive alongside the uncappable set, else the
-    // routing prices them at volume 0 and wand-routes them into an
-    // empty result (see [[Bm25IndexStore.wandSearch]]'s twin comment)
-    val forceNaive = uncapped.unionByName(
-        eligible.join(pairScores.select("query_id").distinct(),
-          Seq("query_id"), "left_anti"))
-      .distinct().localCheckpoint(true)
-    val candA = pairScores.select("query_id", "doc_id")
-    // θ = topN-th EXACT cosine of the top-4·topN partial seeds per
-    // query (the Bm25IndexStore.wandSearch refinement — a partial θ
-    // lets flat-impact tails under the cutoff)
-    val seeds = pairScores.groupBy("query_id")
-      .agg(TopKAgg.topK(4 * topN, col("pscore"), col("doc_id")).as("top"))
-      .select(col("query_id"),
-        explode(expr("transform(top, x -> x._2)")).as("doc_id"))
-    val theta = scoreCandidates(post, norms, qpost, qn, seeds)
-      .groupBy("query_id")
-      .agg(TopKAgg.topK(topN, col("score"), col("doc_id")).as("top"))
-      .select(col("query_id"),
-        when(size(col("top")) >= topN,
-          element_at(col("top"), topN).getField("_1"))
-          .otherwise(lit(Double.MinValue)).as("theta"))
-      .localCheckpoint(true)
-    val caps = capwn
-      .join(broadcast(qpost), Seq("query_id", "tkey"))
-      .join(broadcast(qn), "query_id")
-      .filter(col("wq") > 0.0)
-      .select(col("query_id"), col("tkey"), col("capwn"),
-        (col("wq") / col("nq")).as("qf"),
-        (col("wq") / col("nq") * col("capwn")).as("capb"))
-    val totals = caps.groupBy("query_id")
-      .agg(sum("capb").as("cap_total"))
-    val cutoffs = caps.join(totals, "query_id").join(theta, "query_id")
-      .select(col("query_id"), col("tkey"),
-        ((col("theta") - lit(WandKernel.RoundEps) - col("cap_total")
-          + col("capb")) / col("qf")).as("cut"), col("capwn"))
-      .filter(col("cut") <= col("capwn"))
-      .select("query_id", "tkey", "cut")
-    // the dual tail rule on the cosine contribution caps —
-    // [[WandKernel.essentialSplit]]
-    val essential = WandKernel.essentialSplit(caps, "capb", theta)
-    // pricing + routing — [[Bm25IndexStore.wandSearch]]'s step 3 in
-    // the same Σ df unit; the naive price and term count rode in on
-    // qstats, and only eligible queries are priced
-    val est1 = cutoffs.join(qdf, Seq("query_id", "tkey"))
-      .groupBy("query_id").agg(sum("df").as("est1"))
-    val est2 = essential.join(qdf, Seq("query_id", "tkey"))
-      .groupBy("query_id").agg(sum("df").as("est2"))
-    val nPref = candA.groupBy("query_id").agg(count(lit(1)).as("npref"))
-    // routing + chosen tail probes — [[WandKernel.routes]] /
-    // [[WandKernel.chosenCutoffs]] (the (1 + nt) broadcast pricing
-    // lives there); uncappable and live-prefix-empty queries forced
-    // ineligible so they reach the naive branch exactly once
-    val routes = WandKernel.routes(
-      qstats.join(
-          broadcast(forceNaive.withColumn("fnaive", lit(true))),
-          Seq("query_id"), "left")
-        .withColumn("eligible", col("eligible") && col("fnaive").isNull)
-        .drop("fnaive"),
-      est1, est2, nPref)
-    val chosen = WandKernel.chosenCutoffs(cutoffs, essential, routes)
-    val candB = live(post.filter(col("rnk_w") > prefixP)
-      .join(broadcast(chosen), "tkey")
-      .filter(col("wn") >= col("cut") && col("doc_id") =!= col("query_id")))
-      .select("query_id", "doc_id")
-    val wandIds = routes.filter(col("use_wand")).select("query_id")
-    val cand = candA.join(broadcast(wandIds), Seq("query_id"), "left_semi")
-      .unionByName(candB).distinct()
-    // bounded exact scoring — [[WandKernel.chunkedScores]]; the priced
-    // volume decides up front whether the candidates even need
-    // materializing (selective batches fit one chunk and skip it)
-    val wandScores = WandKernel.chunkedScores(
-      cand, qCnt, broadcastRows, topN, WandKernel.pricedRows(routes))(
-      c => scoreCandidates(post, norms, qpost, qn, c))
-    // naive-routed queries — everything NOT wand-routed (pre-route
-    // ineligible + priced-out); AQE elides the scan when the whole
-    // batch WAND-routes
-    val naiveQ = qpost.join(broadcast(wandIds), Seq("query_id"), "left_anti")
-    val naiveScores = naiveCosine(spark, post, norms, naiveQ, qn, live)
-    WandKernel.finalTopK(
-      wandScores.unionByName(naiveScores), topN, "cosine")
-  }
-
-  /** Driver-planned serving — [[WandKernel.serveDriverPlanned]]
-    * instantiated with the cosine algebra: the query factor is
-    * wq/‖q‖ and the impact column is the saved norm-scaled
-    * `wn` = w/‖d‖, so a pair's cosine is exactly Σ qf·wn and the
-    * shared θ/caps/cutoffs/essential/routing arithmetic runs
-    * unchanged; the norm DIVISION (the only algebra delta vs BM25)
-    * lives in the exact-scoring closures, which reproduce [[search]]'s
-    * Σ wq·w / (‖q‖·‖d‖) summation order to the ulp so 4dp rounding
-    * cannot diverge between paths.
-    */
-  private def serveDriverPlanned(
-      spark: SparkSession, table: String, post: DataFrame,
-      norms: DataFrame, rows: Array[(Long, Long, Double, Long, Double)],
-      topN: Int, prefixP: Int, broadcastRows: Long): Option[DataFrame] = {
-    import spark.implicits._
-    // tombstones as a driver predicate; over-cap declines driver
-    // planning and the distributed anti-joins take over ([[Retire]])
-    val deadSet = Retire.deadSet(spark, table) match {
-      case None => return None
-      case Some(s) => s
-    }
-    // one materialized mask reused across the kernel's closure calls —
-    // see the Bm25 twin site ([[Retire.liveVia]])
-    val live = Retire.liveVia(spark, deadSet, "doc_id")
-    // the batch arrives PRE-COLLECTED (wandSearch's one bounded job);
-    // the scoring closures' query-side frames rebuild from it locally
-    // — no mirror re-fetch, no query-side Spark action in this path
-    val qRows = rows.map { case (k, t, wq, df, nq) => (k, t, wq / nq, df) }
-    val qpost = rows.iterator.map(r => (r._2, r._1, r._3)).toSeq
-      .toDF("tkey", "query_id", "wq")
-    val qn = rows.iterator.map(r => (r._1, r._5)).toSeq.distinct
-      .toDF("query_id", "nq")
-    def naivePlan(ids: Set[Long]): DataFrame = {
-      val qp = rows.iterator.filter(r => ids(r._1))
-        .map(r => (r._2, r._1, r._3)).toSeq.toDF("tkey", "query_id", "wq")
-      val qnIds = rows.iterator.filter(r => ids(r._1))
-        .map(r => (r._1, r._5)).toSeq.distinct.toDF("query_id", "nq")
-      naiveCosine(spark, post, norms, qp, qnIds, live)
-    }
-    WandKernel.serveDriverPlanned(
-      spark, qRows, topN, prefixP, broadcastRows,
-      Bm25IndexStore.PrefixCollectRows,
-      scanPrefix = tk => post.filter(col("rnk_w") <= prefixP)
-        .join(broadcast(tk), "tkey")
-        .select(col("tkey"), col("doc_id"),
-          col("wn").as("impact"), col("rnk_w")),
-      scanTail = chosen => live(post.filter(col("rnk_w") > prefixP)
-        .join(broadcast(chosen), "tkey")
-        .filter(col("wn") >= col("cut") &&
-          col("doc_id") =!= col("query_id")))
-        .select("query_id", "doc_id"),
-      naivePlan = naivePlan,
-      scoreCand = c => scoreCandidates(post, norms, qpost, qn, c),
-      scoreName = "cosine",
-      isDead = deadSet.contains)
+    // the batch's saved vectors come from the doc-keyed mirror
+    // ([[queryVectors]]), not a full impact-ordered postings scan, so
+    // the pre-route can refuse a dense batch having touched only the
+    // mirror and the df table. LEFT join + coalesce(0): the pricing df
+    // table counts BUILD-time selected postings only, but an extend()ed
+    // doc's top-k can hold a term no build doc selected — an inner join
+    // would silently DROP that term from the query vector; df = 0
+    // merely underprices that term's naive volume, never a score. nq
+    // rides along so one bounded job fetches the whole query state.
+    val q = queryVectors(spark, table, queryIds)
+      .join(spark.table(dfTable(table)).select("tkey", "df"), Seq("tkey"),
+        "left")
+      .join(broadcast(queryNorms(norms, queryIds)), "query_id")
+      .select(col("query_id"), col("tkey"), (col("wq") / col("nq")).as("qf"),
+        coalesce(col("df"), lit(0L)).as("df"), col("wq"), col("nq"))
+    def vec(q: DataFrame): DataFrame = q.select("tkey", "query_id", "wq")
+    def qn(q: DataFrame): DataFrame = q.select("query_id", "nq").distinct()
+    WandKernel.wandSearch(spark, table, "wn", "cosine", q, topN, prefixP,
+        broadcastRows)(
+      scoreCand = (q, cand) =>
+        scoreCandidates(post, norms, vec(q), qn(q), cand),
+      naive = (q, live) => naiveCosine(spark, post, norms, vec(q), qn(q), live))
   }
 }

@@ -3,15 +3,15 @@ package graft.plans
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The store-agnostic half of MaxScore/WAND serving, shared by
-  * [[Bm25IndexStore.wandSearch]] and [[TfidfIndexStore.wandSearch]]:
-  * the df-only pre-route, the essential-terms split, the per-query
-  * Σ-df pricing/routing, the hash-chunked exact-scoring loop, and the
-  * final top-k assembly. The stores keep what genuinely differs —
-  * impact column and units (BM25 `w` vs norm-scaled `wn`), query-side
-  * derivation (tokenized text vs index-resident weights), candidate
-  * scoring arithmetic, and cutoff algebra — and delegate the rest
-  * here so a bound or routing fix lands in exactly one place.
+/** MaxScore/WAND serving for the impact-index stores
+  * ([[Bm25IndexStore]], [[TfidfIndexStore]]), written once: the bounded
+  * batch fetch, the driver-planned orchestration, and on its refusal
+  * the distributed one — pre-route, prefix, caps, θ, cutoffs, the
+  * essential split, routing, chunked exact scoring and the naive
+  * remainder. A store supplies only what genuinely differs — its lazy
+  * query frame, the impact column (BM25 `w`, tf-idf norm-scaled `wn`),
+  * the per-(query, term) query factor, and its exact-scoring and naive
+  * kernels — so a bound or routing fix lands in exactly one place.
   */
 private[graft] object WandKernel {
 
@@ -26,9 +26,22 @@ private[graft] object WandKernel {
     * × their query's terms; tens of bytes per hashed-relation row, so
     * 4M rows is a couple hundred MB of executor state — far under the
     * default broadcast and driver-result limits the unchunked form
-    * was measured to blow through on dense corpora).
+    * was measured to blow through on dense corpora). Both stores'
+    * default `broadcastRows`.
     */
   val BroadcastRows = 4000000L
+
+  /** Collect caps for the driver-planned orchestration: the (query,
+    * term) frame and the prefix rows are the only corpus-derived state
+    * it pulls to the driver, both bounded BEFORE their collect (the
+    * prefix volume is Σ min(P, df) — known from the df table alone).
+    * Past either cap the distributed orchestration serves instead, so
+    * driver memory stays bounded by construction — the
+    * [[graft.operators.Similarity]] ANN batch-cap discipline applied
+    * to lexical serving.
+    */
+  val DriverBatchRows = 2000000L
+  val PrefixCollectRows = 4000000L
 
   /** Driver PAIR-STATE budget for [[serveDriverPlanned]]: the expanded
     * per-(query, doc) partial/cap cells, bounded above by
@@ -60,6 +73,18 @@ private[graft] object WandKernel {
     new java.util.concurrent.atomic.AtomicLong
   private[graft] val statChunkedScoreFallbacks =
     new java.util.concurrent.atomic.AtomicLong
+
+  /** Test seam: the specs switch this off to drive the DISTRIBUTED
+    * orchestration on spec-sized batches (which the driver-planned
+    * path would otherwise always claim) and pin both paths to
+    * identical output. ThreadLocal for the reason given below: a
+    * process-global switch would reroute concurrently-served
+    * production queries. Production never touches it.
+    */
+  private[graft] val driverPlanningEnabled =
+    new ThreadLocal[java.lang.Boolean] {
+      override def initialValue(): java.lang.Boolean = true
+    }
 
   /** Test seam (InvariantProps' refusal-boundary law): when set,
     * replaces [[DriverPairCells]] inside [[serveDriverPlanned]] so the
@@ -218,170 +243,126 @@ private[graft] object WandKernel {
     */
   val RouteVolFactor = 16L
 
-  /** PRE-ROUTE on the df table alone (no postings scan): even in a
-    * query's optimistic best case — every prefix slot a distinct
-    * candidate, zero tail rows — its WAND volume is Σ min(P, df)
-    * candidates × (1 + nt) scoring rows; a query that already fails
-    * the [[RouteVolFactor]] bar there can never WAND-serve, so it
-    * skips the entire θ/cap/cutoff pipeline. On dense-overlap corpora
-    * NO query is eligible and WAND's whole overhead collapses to this
-    * one df-table aggregation in front of the naive kernel.
+  /** Top-`topN` matches per query served with MaxScore-style
+    * impact-ordered pruning — identical output to the store's `search`
+    * (same scores, same tie-breaks; spec-pinned, same DuckDB oracle),
+    * at a fraction of its join volume where pruning bites. `search`
+    * pays Σ df(query terms) join rows — the measured 570M-row / 74.8 s
+    * 10× BM25 worst case; this serve touches:
     *
-    * ONE checkpointed frame carries everything per-query the later
-    * stages read — `eligible` (the pre-route verdict), `estn` (the
-    * naive Σ-df price), `nt` (term count, the broadcast-volume
-    * factor) — so the pre-route, the pricing, and the chunk budget
-    * share a single driver-sequenced job instead of three.
-    * `qdf` is one (query_id, tkey, df) row per matched query term.
+    *   1. PREFIX: the top-`prefixP` impacts of each query term
+    *      (`rnk_w <= P` pushed to the scan, files sorted by (tkey,
+    *      rnk_w)) seed candidate docs; the top-4k docs per query by
+    *      partial prefix score are EXACT-scored and the k-th exact
+    *      seed score is the LOWER BOUND θ on the final k-th score.
+    *   2. TAIL: a doc outside every prefix has, for each of its query
+    *      terms, impact ≤ that term's P-th impact `cap`, so the term
+    *      adds at most capb = qf·cap; its score is therefore < θ
+    *      unless some single term carries qf·impact ≥
+    *      θ − ε − (Σ capb − capb_t) — the MaxScore bound, divided back
+    *      into impact units by qf (qf ≤ 0 terms cannot lift a doc and
+    *      emit none). Only tail rows clearing that per-term cutoff
+    *      (and only for terms whose cutoff ≤ cap) join at all; their
+    *      docs are exact-scored with the prefix candidates and the
+    *      true top-k falls out.
+    *   3. ROUTE: each query is PRICED before any tail work — naive
+    *      cost Σ df(all its terms) vs WAND cost (surviving terms'
+    *      Σ df + its prefix pairs, times the scoring broadcast's
+    *      per-candidate term count). A query WAND-serves only when
+    *      pruning shrinks that volume by [[RouteVolFactor]]; the rest
+    *      (dense-overlap corpora where caps swamp θ, doc-as-query
+    *      batches, θ = −∞ exhaustive queries) take the store's naive
+    *      kernel — the optimal plan in that regime, so WAND
+    *      degenerates to a tie by construction, never a blowup. The
+    *      routed remainder's scoring broadcast is hash-chunked under
+    *      `broadcastRows`, so driver/executor state stays bounded even
+    *      if the Σ df pricing underestimates.
+    *
+    * Proof shape for the skipped docs: with m = |q ∩ d| terms all
+    * below cutoff, score < m·(θ−ε−C) + Σ_{t∈q∩d} capb ≤ θ−ε when
+    * θ−ε ≤ C (m ≥ 1 and each capb ≥ 0), and ≤ C < θ−ε otherwise —
+    * strictly under the k-th best either way, so no tie-break can
+    * resurrect them. Extended (rank-0) postings always enter the
+    * prefix, so extension keeps exactness.
+    *
+    * Collectable batches take [[serveDriverPlanned]]: ONE bounded job
+    * ([[boundedCollect]]) fetches the batch — the r12 shape (eager
+    * checkpoint → count → collect) paid three driver-sequenced actions
+    * for the same state, whose fixed scheduler latency multiplied 3-6×
+    * under host contention. It declines past its DRIVER-STATE caps
+    * (pair cells, collect budgets, the tombstone set), which
+    * [[serveDistributed]] owns.
+    *
+    * The store's side of the contract:
+    *   - `table`: postings (tkey, doc_id, `impact`, rnk_w), tombstoned
+    *     through [[Retire]] on doc_id;
+    *   - `queries`: the LAZY query frame, one row per matched
+    *     (query_id: Long, tkey: Long) with the query factor qf: Double
+    *     (1 for BM25's additive weights, wq/‖q‖ for tf-idf cosine —
+    *     a pair's score is Σ qf·impact in both stores) and the pricing
+    *     df: Long as its first four columns, then whatever the store's
+    *     closures read;
+    *   - `scoreCand(q, cand)`: exact (query_id, doc_id, score) rows for
+    *     candidate (query_id, doc_id) pairs under the query frame `q` —
+    *     `search`'s arithmetic restricted to the candidates;
+    *   - `naive(q, live)`: `search`'s Σ-postings kernel over the query
+    *     frame `q` under the tombstone mask `live`. May return PARTIAL
+    *     rows ([[naivePartialTopK]]) as long as each query's exact
+    *     top-`topN` is present — every consumer reduces through
+    *     [[finalTopK]].
     */
-  def queryStats(qdf: DataFrame, prefixP: Int): DataFrame =
-    qdf.groupBy("query_id")
-      .agg(sum(least(col("df"), lit(prefixP.toLong))).as("estpre"),
-        sum("df").as("estn"), count(lit(1)).as("nt"))
-      .withColumn("eligible",
-        col("estpre") * (lit(1L) + col("nt")) * RouteVolFactor <
-          col("estn"))
-      .select("query_id", "estn", "nt", "eligible")
-      .localCheckpoint(true)
-
-  /** The MaxScore essential split — the SECOND sound tail rule: order
-    * a query's terms by ascending contribution cap and mark the
-    * maximal low-cap suffix whose cap sum stays under θ as
-    * NON-ESSENTIAL; a doc outside the prefix with no essential-term
-    * posting scores at most that sum < θ. Candidates under this rule
-    * are ALL tail rows of essential terms (no weight cutoff — a
-    * sub-cutoff essential row can still combine with others past θ,
-    * which is exactly where per-term cutoffs are unsound to stack).
-    * The rules prune complementary shapes: cutoffs win when θ clears
-    * the whole cap sum (selective queries — tails drop entirely); the
-    * split wins when a few high-cap terms carry θ and the huge
-    * low-impact lists become non-essential.
-    * `caps` must have (query_id, tkey, <capCol>); returns the
-    * essential (query_id, tkey) pairs.
-    */
-  def essentialSplit(
-      caps: DataFrame, capCol: String, theta: DataFrame): DataFrame = {
-    val wAsc = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col(capCol).asc, col("tkey"))
-    caps.join(theta, "query_id")
-      .withColumn("cum", sum(capCol).over(wAsc))
-      .filter(col("cum") >= col("theta") - lit(RoundEps))
-      .select("query_id", "tkey")
+  def wandSearch(
+      spark: SparkSession, table: String, impact: String,
+      scoreName: String, queries: DataFrame, topN: Int, prefixP: Int,
+      broadcastRows: Long)(
+      scoreCand: (DataFrame, DataFrame) => DataFrame,
+      naive: (DataFrame, DataFrame => DataFrame) => DataFrame)
+      : DataFrame = {
+    val post = spark.table(table).select(col("tkey"), col("doc_id"),
+      col(impact).as("impact"), col("rnk_w"))
+    val fetched =
+      if (driverPlanningEnabled.get()) boundedCollect(queries, DriverBatchRows)
+      else None
+    fetched.flatMap { rows =>
+      // tombstones as a driver predicate for the pair state; an
+      // over-cap dead set declines driver planning. The closures run
+      // several times per serve (chunks, naive fallback), so they share
+      // ONE materialized mask ([[Retire.liveVia]]) and rebuild their
+      // query frames from the collected rows — no query-side Spark
+      // action of their own
+      Retire.deadSet(spark, table).flatMap { dead =>
+        import scala.jdk.CollectionConverters._
+        val live = Retire.liveVia(spark, dead, "doc_id")
+        def frame(ids: Long => Boolean): DataFrame = spark.createDataFrame(
+          rows.iterator.filter(r => ids(r.getLong(0))).toSeq.asJava,
+          queries.schema)
+        lazy val all = frame(_ => true)
+        serveDriverPlanned(spark, rows.map(r =>
+            (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))),
+          topN, prefixP, broadcastRows, post, live,
+          naivePlan = ids => naive(frame(ids), live),
+          scoreCand = c => scoreCand(all, c), scoreName, dead.contains)
+      }
+    }.getOrElse {
+      // refused: a collected batch is reused via parallelize instead of
+      // a second query-plan pass. (A batch boundedCollect itself
+      // refuses — > DriverBatchRows rows, i.e. corpus-scale — re-runs
+      // the query plan once for this checkpoint: one extra batch-linear
+      // pass, paid only where the distributed serve dominates it.)
+      val sc = spark.sparkContext
+      val q = fetched.fold(queries)(rows => spark.createDataFrame(
+          sc.parallelize(rows.toIndexedSeq, sc.defaultParallelism),
+          queries.schema))
+        .localCheckpoint(true)
+      def live(df: DataFrame): DataFrame =
+        Retire.survivors(spark, table, df, "doc_id")
+      serveDistributed(q, topN, prefixP, broadcastRows, post, live,
+        naivePlan = naive(_, live),
+        scoreCand = scoreCand(q, _), scoreName)
+    }
   }
 
-  /** ROUTE: tail rule by price, then WAND only when the FULL pruned
-    * volume beats the naive one by [[RouteVolFactor]] (the measured
-    * per-row cost ratio between the exact-scoring broadcast and the
-    * co-located naive kernel). The pruned volume is est
-    * (tail rows emitted) PLUS the exact-scoring broadcast, ≤
-    * (est + npref) candidates × nt terms — the nt factor is what a
-    * Σ-df-only price missed, measured as 25+ CONCURRENT 4M-row chunk
-    * broadcasts OOMing the driver on the dense replica corpus
-    * (candidates ≈ queries × docs there; the bucketed join is both
-    * cheaper AND bounded, so that regime must route naive).
-    * Returns (query_id, use_ess, use_wand, vol) for the ELIGIBLE
-    * queries — `vol` is the priced upper bound on the query's scoring-
-    * broadcast rows ((tail-rule Σ df + prefix pairs) × (1 + nt)), kept
-    * in the output so [[chunkedScores]] can size its chunking WITHOUT
-    * first materializing the candidate set. Checkpointed (three
-    * consumers — chosen cutoffs, the wand-id semi join, the naive
-    * remainder — would otherwise recompute it).
-    */
-  def routes(qstats: DataFrame, est1: DataFrame, est2: DataFrame,
-      nPref: DataFrame): DataFrame =
-    qstats.filter(col("eligible"))
-      .select("query_id", "estn", "nt")
-      .join(est1, Seq("query_id"), "left")
-      .join(est2, Seq("query_id"), "left")
-      .join(nPref, Seq("query_id"), "left")
-      .select(col("query_id"),
-        (coalesce(col("est2"), lit(0L)) <
-          coalesce(col("est1"), lit(0L))).as("use_ess"),
-        ((least(coalesce(col("est1"), lit(0L)),
-            coalesce(col("est2"), lit(0L)))
-          + coalesce(col("npref"), lit(0L)))
-          * (lit(1L) + coalesce(col("nt"), lit(0L)))).as("vol"),
-        col("estn"))
-      .select(col("query_id"), col("use_ess"), col("vol"),
-        (col("vol") * RouteVolFactor < col("estn")).as("use_wand"))
-      .localCheckpoint(true)
-
-  /** The wand-routed batch's total priced scoring volume — a tiny
-    * local aggregation over the checkpointed routes frame; an UPPER
-    * bound on the exact broadcast rows (vol over-counts tail rows by
-    * the cutoffs' slack), which is what lets the single-chunk fast
-    * path below skip materializing the candidates.
-    */
-  def pricedRows(routes: DataFrame): Long =
-    routes.filter(col("use_wand"))
-      .agg(coalesce(sum("vol"), lit(0L))).first.getLong(0)
-
-  /** The chosen tail-probe rows: per-term cutoffs for wand-routed
-    * queries priced onto rule 1, whole essential lists (cut = −∞) for
-    * rule 2 — a single (query_id, tkey, cut) frame the store joins
-    * against its tail postings. Not checkpointed: one consumer (the
-    * tail scan's broadcast), and every input is batch-sized off
-    * checkpointed frames — its subplan rides the tail scan's job
-    * instead of costing its own.
-    */
-  def chosenCutoffs(cutoffs: DataFrame, essential: DataFrame,
-      routes: DataFrame): DataFrame =
-    cutoffs.join(routes, "query_id")
-      .filter(col("use_wand") && !col("use_ess"))
-      .select("query_id", "tkey", "cut")
-      .unionByName(essential.join(routes, "query_id")
-        .filter(col("use_wand") && col("use_ess"))
-        .select(col("query_id"), col("tkey"),
-          lit(Double.MinValue).as("cut")))
-
-  /** Chunk the exact-scoring broadcast under the hard budget; the
-    * selective regime this path serves fits one chunk, and each extra
-    * chunk costs one more bounded postings scan — bounded state over
-    * scan count, deliberately. Each chunk reduces to its own
-    * per-query top-k and is EAGERLY materialized: chunks are
-    * (query, doc)-hash disjoint, so any pair a chunk's top-k drops is
-    * dominated by k pairs that survive into the union and the global
-    * top-k is exact — and the materialization forces chunks to
-    * execute one at a time, so exactly ONE chunk broadcast is live at
-    * any moment (a lazy union holds every chunk's broadcast
-    * simultaneously, which is the unbounded state the budget exists
-    * to prevent). `score` maps a candidate (query_id, doc_id) frame
-    * to exact (query_id, doc_id, score) rows.
-    */
-  def chunkedScores(cand: DataFrame, qCnt: DataFrame,
-      broadcastRows: Long, topN: Int, estRows: Long)(
-      score: DataFrame => DataFrame): DataFrame = {
-    import graft.functions.TopKAgg
-    def reduceChunk(c: DataFrame): DataFrame =
-      score(c)
-        .groupBy("query_id")
-        .agg(TopKAgg.topK(topN, col("score"), col("doc_id")).as("top"))
-        .select(col("query_id"), explode(col("top")).as("r"))
-        .select(col("query_id"), col("r._2").as("doc_id"),
-          col("r._1").as("score"))
-    // FAST PATH — the selective regime WAND exists for: when even the
-    // priced UPPER bound fits one chunk, the candidate set needs no
-    // materialization and no exact count — its subplan (tail scan +
-    // prefix pairs) rides the one scoring job, two driver-sequenced
-    // jobs fewer than the general path
-    if (estRows <= broadcastRows) return reduceChunk(cand)
-    statChunkedScoreFallbacks.incrementAndGet()
-    val candM = cand.localCheckpoint(true)
-    val bRows = candM.join(broadcast(qCnt), "query_id")
-      .agg(coalesce(sum("nt"), lit(0L))).first.getLong(0)
-    val nChunks =
-      math.max(1L, (bRows + broadcastRows - 1) / broadcastRows).toInt
-    (0 until nChunks).map { i =>
-      val part = reduceChunk(
-        if (nChunks == 1) candM
-        else candM.filter(pmod(
-          xxhash64(col("query_id"), col("doc_id")), lit(nChunks)) === i))
-      if (nChunks == 1) part else part.localCheckpoint(true)
-    }.reduce(_ unionByName _)
-  }
-
-  /** Driver-planned WAND serving for collectable batches — the
-    * store-generic orchestration behind both stores' fast path. The
+  /** Driver-planned WAND serving for collectable batches. The
     * θ/caps/cutoffs/essential/routing state is QUERY-BATCH-sized, yet
     * the distributed orchestration pays a driver-sequenced Spark
     * action (and its AQE stage cascade) per stage — measured ~60 jobs
@@ -389,28 +370,17 @@ private[graft] object WandKernel {
     * is not enormous. Here the SAME algebra runs locally between at
     * most FOUR Spark actions:
     *
-    *   1. ONE bounded job fetches the query rows — the caller's
-    *      [[boundedCollect]]; no eager checkpoint, no separate count
-    *      action (the r12 shape paid three driver-sequenced actions
-    *      here, which is where the loaded-window latency multiplied);
-    *      eligibility/pricing arithmetic is local (an all-ineligible
-    *      batch returns the naive plan immediately — one scan);
+    *   1. ONE bounded job fetches the query rows ([[wandSearch]]'s
+    *      [[boundedCollect]]); eligibility/pricing arithmetic is local
+    *      (an all-ineligible batch returns the naive plan immediately
+    *      — one scan);
     *   2. ONE prefix scan, collected (bounded by Σ min(P, df), checked
-    *      before the scan; `limit` is the HARD bound — see below);
+    *      before the scan; [[boundedCollect]] is the HARD bound — see
+    *      below);
     *   3. ONE candidate-bounded scan exact-scores the θ seeds (only
     *      when the free partial θ lets too much volume through);
     *   4. ONE final plan (tail scan + exact scoring + naive remainder
     *      + top-k) — the only action whose output is the result.
-    *
-    * Generic over the stores' scoring algebra: `qf` is the
-    * per-(query, term) query factor (1 for BM25's additive weights,
-    * wq/‖q‖ for tf-idf cosine) and `impact` is whatever per-posting
-    * column the closures expose (BM25 `w`; tf-idf `wn` = w/‖d‖) — a
-    * pair's score is Σ qf·impact in both stores, so caps (qf · P-th
-    * impact), per-term tail cutoffs (re-expressed in impact units by
-    * dividing by qf; qf ≤ 0 terms cannot lift a doc and emit none),
-    * the essential split, the per-pair bound, and the Σ-df routing all
-    * run unchanged.
     *
     * Soundness under local float jitter: partial prefix sums pick the
     * SEED SET only, and θ is the topN-th of the seeds' SPARK-computed
@@ -428,40 +398,26 @@ private[graft] object WandKernel {
     * memory.
     *
     * `qRows`: one (query_id, tkey, qf, df) row per matched query term.
-    * `scanPrefix`: the DISTINCT eligible (tkey) keys → the LAZY prefix
-    * frame (tkey, doc_id, impact, rnk_w) — per-query expansion happens
-    * on the driver, so shared terms are scanned and collected once;
-    * the kernel fetches it in ONE job under [[boundedCollect]]'s
+    * `post`: the impact-aliased postings; the prefix over the DISTINCT
+    * eligible terms is fetched in ONE job under [[boundedCollect]]'s
     * per-task hard budget — the Σ min(P, df) pre-check is an early
-    * refusal, NOT the memory bound:
-    * rank-0 extended postings all pass `rnk_w <= P` while the frozen
-    * df table never counts them, so a heavily extended artifact can
-    * exceed the estimate arbitrarily; an overrun falls back to the
-    * distributed path, which keeps these rows in executors.
-    * `scanTail`: chosen (query_id, tkey, cut) rows (cut in impact
-    * units; −∞ = whole essential list) → tail candidate
-    * (query_id, doc_id) pairs, self-matches already excluded.
-    * `naivePlan`: (query_id, doc_id, score) rows for a query-id set —
-    * the store's Σ-postings kernel restricted to those ids. May return
-    * PARTIAL rows (per-partition top-`topN`, the
-    * [[naivePartialTopK]] contract) as long as each query's exact
-    * top-`topN` is present — every consumer reduces through
-    * [[finalTopK]] at the same `topN`.
-    * `scoreCand`: candidate (query_id, doc_id) pairs → exact
-    * (query_id, doc_id, score) rows — the store's `search` arithmetic.
+    * refusal, NOT the memory bound: rank-0 extended postings all pass
+    * `rnk_w <= P` while the frozen df table never counts them, so a
+    * heavily extended artifact can exceed the estimate arbitrarily; an
+    * overrun falls back to the distributed path, which keeps these
+    * rows in executors. `live`: the tombstone mask. `naivePlan`: naive
+    * score rows for a query-id set. `scoreCand`: candidate (query_id, doc_id) pairs →
+    * exact (query_id, doc_id, score) rows.
     */
-  def serveDriverPlanned(
+  private def serveDriverPlanned(
       spark: SparkSession,
       qRows: Array[(Long, Long, Double, Long)],
-      topN: Int, prefixP: Int, broadcastRows: Long,
-      prefixCollectCap: Long,
-      scanPrefix: DataFrame => DataFrame,
-      scanTail: DataFrame => DataFrame,
+      topN: Int, prefixP: Int, broadcastRows: Long, post: DataFrame,
+      live: DataFrame => DataFrame,
       naivePlan: Set[Long] => DataFrame,
       scoreCand: DataFrame => DataFrame,
       scoreName: String,
-      pairCellsCap: Long = DriverPairCells,
-      isDead: Long => Boolean = _ => false): Option[DataFrame] = {
+      isDead: Long => Boolean): Option[DataFrame] = {
     import spark.implicits._
     lastRefusedDriverPlanning.set(false)
     def refuse(): Option[DataFrame] = {
@@ -473,7 +429,7 @@ private[graft] object WandKernel {
       statDriverPlannedServes.incrementAndGet()
       Some(df)
     }
-    val cellsCap = pairCellsCapOverride.get().getOrElse(pairCellsCap)
+    val cellsCap = pairCellsCapOverride.get().getOrElse(DriverPairCells)
     val byQ = qRows.groupBy(_._1)
     val estn = byQ.map { case (k, rs) => k -> rs.map(_._4).sum }
     val estpre = byQ.map { case (k, rs) =>
@@ -493,7 +449,7 @@ private[graft] object WandKernel {
     // two distinct refusals: the EXPANDED pair-state volume (driver
     // memory for the per-(query, doc) cells — [[DriverPairCells]]) and,
     // below, the distinct-term COLLECT volume (Spark→driver transfer —
-    // `prefixCollectCap`). They were one check when the collect was
+    // [[PrefixCollectRows]]). They were one check when the collect was
     // per-(query, term); splitting them is what lets shared-vocabulary
     // batches twice as large stay driver-planned.
     if (eligible.iterator.map(estpre).sum > cellsCap) return refuse()
@@ -514,7 +470,7 @@ private[graft] object WandKernel {
         .map { case (t, rs) => t -> rs.map(_._1) }
     val dfOfTerm = qRows.iterator.map(r => r._2 -> r._4).toMap
     if (queriesOfTerm.keysIterator.map(t =>
-        math.min(prefixP.toLong, dfOfTerm(t))).sum > prefixCollectCap)
+        math.min(prefixP.toLong, dfOfTerm(t))).sum > PrefixCollectRows)
       return refuse()
     // ONE bounded job, not limit(cap+1).collect(): executeTake scales
     // partitions up incrementally (1 → 4 → 16 → …), each step its own
@@ -524,8 +480,11 @@ private[graft] object WandKernel {
     // the frozen-df estimate never counts those rows) and refuses in
     // the same cases the limit-then-recheck shape did.
     val prefixT = boundedCollect(
-      scanPrefix(queriesOfTerm.keysIterator.toSeq.toDF("tkey"))
-        .as[(Long, Long, Double, Int)], prefixCollectCap) match {
+      post.filter(col("rnk_w") <= prefixP)
+        .join(broadcast(queriesOfTerm.keysIterator.toSeq.toDF("tkey")),
+          "tkey")
+        .select("tkey", "doc_id", "impact", "rnk_w")
+        .as[(Long, Long, Double, Int)], PrefixCollectRows) match {
       case None => return refuse()
       case Some(rows) => rows
     }
@@ -697,8 +656,8 @@ private[graft] object WandKernel {
         .toDF("query_id", "doc_id")
       val cand =
         if (chosen.isEmpty) candA
-        else candA.unionByName(
-          scanTail(chosen.toDF("query_id", "tkey", "cut"))).distinct()
+        else candA.unionByName(tailCandidates(post, prefixP, live)(
+          chosen.toDF("query_id", "tkey", "cut"))).distinct()
       // exact scoring under the hard chunk budget. The selective
       // regime fits one chunk and keeps the previous inline plan; a
       // MID-SIZE batch whose priced volume overruns the budget now
@@ -762,6 +721,241 @@ private[graft] object WandKernel {
     // orchestration's per-stage Spark planning
     lastRouteStats.set((allQ.size, eligible.size, aExact.wandIds.size))
     served(serve(aExact))
+  }
+
+  /** The distributed orchestration — the path for batches the driver
+    * cannot hold (past [[DriverBatchRows]] or the pair-cells cap; the
+    * 100k-query BASELINE r14 `wandserve` regime). `q` is the
+    * checkpointed query frame, `post` the impact-aliased postings;
+    * every intermediate is QUERY-BATCH-sized and checkpointed, so the
+    * postings table is scanned exactly three times (prefix, tail, final
+    * scoring) instead of once per broadcast subplan that references it.
+    */
+  private def serveDistributed(
+      q: DataFrame, topN: Int, prefixP: Int, broadcastRows: Long,
+      post: DataFrame, live: DataFrame => DataFrame,
+      naivePlan: DataFrame => DataFrame,
+      scoreCand: DataFrame => DataFrame,
+      scoreName: String): DataFrame = {
+    import graft.functions.TopKAgg
+    val qdf = q.select("query_id", "tkey", "qf", "df")
+    // PRE-ROUTE on the df table alone (no postings scan): even in a
+    // query's optimistic best case — every prefix slot a distinct
+    // candidate, zero tail rows — its WAND volume is Σ min(P, df)
+    // candidates × (1 + nt) scoring rows; a query that already fails
+    // the [[RouteVolFactor]] bar there can never WAND-serve. ONE
+    // checkpointed frame carries the verdict, the naive Σ-df price
+    // `estn` and the term count `nt`, so the pre-route, the pricing and
+    // the chunk budget share a single job. When it refuses EVERY query
+    // (dense-overlap corpora, doc-as-query batches) the whole θ/cap/
+    // cutoff pipeline is dead weight: serve the naive kernel directly
+    val qstats = qdf.groupBy("query_id")
+      .agg(sum(least(col("df"), lit(prefixP.toLong))).as("estpre"),
+        sum("df").as("estn"), count(lit(1)).as("nt"))
+      .select(col("query_id"), col("estn"), col("nt"),
+        (col("estpre") * (lit(1L) + col("nt")) * RouteVolFactor <
+          col("estn")).as("eligible"))
+      .localCheckpoint(true)
+    val eligible = qstats.filter(col("eligible")).select("query_id")
+    if (eligible.isEmpty) return finalTopK(naivePlan(q), topN, scoreName)
+    val qE = qdf.join(broadcast(eligible), Seq("query_id"), "left_semi")
+    val prefix = post.filter(col("rnk_w") <= prefixP)
+      .join(broadcast(qE.select("query_id", "tkey", "qf")), "tkey")
+      .localCheckpoint(true)
+    // per-(query, term) cap in impact units, GAP-TOLERANT (see
+    // [[serveDriverPlanned]]'s cap rule — compaction leaves rank gaps):
+    // "no tail" from the FROZEN df alone, cap = min SURVIVING
+    // rank-1..P impact otherwise, and a tailed term with zero surviving
+    // prefix rows (and qf > 0 — a zero-weight term cannot lift any doc)
+    // routes its queries naive. Rank-0 extended rows are always
+    // candidates and must not deflate the cap; dead docs stay in (their
+    // impact only loosens an upper bound; compaction restores
+    // tightness). Derived BEFORE the θ-seed pass so uncappable queries
+    // never pay the seed scan they cannot use.
+    val caps0 = qE
+      .join(prefix.filter(col("rnk_w") >= 1)
+          .groupBy("query_id", "tkey").agg(min("impact").as("minimp")),
+        Seq("query_id", "tkey"), "left")
+      .select(col("query_id"), col("tkey"), col("qf"),
+        when(col("df") <= prefixP, lit(0.0))
+          .otherwise(col("minimp")).as("cap"))
+      .localCheckpoint(true)
+    val uncapped = caps0.filter(col("cap").isNull && col("qf") > 0.0)
+      .select("query_id").distinct()
+    val caps = caps0
+      .join(broadcast(uncapped), Seq("query_id"), "left_anti")
+      .filter(col("cap").isNotNull && col("qf") > 0.0)
+      .withColumn("capb", col("qf") * col("cap"))
+    // θ seeds from PARTIAL prefix scores over LIVE docs: a pair's
+    // prefix contributions lower-bound its true score
+    val pairScores = live(prefix)
+      .join(broadcast(uncapped), Seq("query_id"), "left_anti")
+      .filter(col("doc_id") =!= col("query_id"))
+      .groupBy("query_id", "doc_id")
+      .agg(sum(col("qf") * col("impact")).as("pscore"))
+    // a query whose entire prefix is tombstone-masked (or self) has no
+    // LIVE pairs: no θ-seed, no prefix candidates — routing would price
+    // it at volume 0 and wand-route it into an EMPTY result (delete the
+    // rank-1 doc of a single-term query at P=1 and the query vanished).
+    // No θ means no sound pruning, so such queries join the
+    // forced-naive set with the uncappable ones. The driver-planned
+    // path is immune — its missing-θ default is −∞, a full tail scan.
+    val forceNaive = uncapped.unionByName(
+        eligible.join(pairScores.select("query_id").distinct(),
+          Seq("query_id"), "left_anti"))
+      .distinct().localCheckpoint(true)
+    val candA = pairScores.select("query_id", "doc_id")
+    // θ is the topN-th EXACT score of the top 4·topN docs per query by
+    // partial score (one cheap candidate-bounded scan): a partial θ
+    // underestimates by every contribution outside the prefix, and on
+    // flat-impact lists that gap lets whole common-term tails slip under
+    // the cutoff (measured: 11M candidate pairs with partial θ vs
+    // prefix-only with exact-seed θ on the zipf probe). Seeds are real
+    // docs, so θ is still a LOWER bound on the true topN-th.
+    val seeds = pairScores.groupBy("query_id")
+      .agg(TopKAgg.topK(4 * topN, col("pscore"), col("doc_id")).as("top"))
+      .select(col("query_id"),
+        explode(expr("transform(top, x -> x._2)")).as("doc_id"))
+    val theta = scoreCand(seeds).groupBy("query_id")
+      .agg(TopKAgg.topK(topN, col("score"), col("doc_id")).as("top"))
+      .select(col("query_id"),
+        when(size(col("top")) >= topN,
+          element_at(col("top"), topN).getField("_1"))
+          .otherwise(lit(Double.MinValue)).as("theta"))
+      .localCheckpoint(true)
+    // rule 1, per-term cutoffs in impact units; a term whose cutoff
+    // exceeds its cap cannot yield a tail row
+    val cutoffs = caps
+      .join(caps.groupBy("query_id").agg(sum("capb").as("cap_total")),
+        "query_id")
+      .join(theta, "query_id")
+      .select(col("query_id"), col("tkey"),
+        ((col("theta") - lit(RoundEps) - col("cap_total") + col("capb"))
+          / col("qf")).as("cut"), col("cap"))
+      .filter(col("cut") <= col("cap"))
+      .select("query_id", "tkey", "cut")
+    // rule 2, the MaxScore essential split: order a query's terms by
+    // ascending cap and mark the maximal low-cap suffix whose cap sum
+    // stays under θ NON-ESSENTIAL; a doc outside the prefix with no
+    // essential-term posting scores at most that sum < θ. Candidates
+    // are ALL tail rows of essential terms (a sub-cutoff essential row
+    // can still combine past θ). The rules prune complementary shapes:
+    // cutoffs win when θ clears the whole cap sum (selective queries),
+    // the split when a few high-cap terms carry θ and the huge
+    // low-impact lists become non-essential.
+    val essential = caps.join(theta, "query_id")
+      .withColumn("cum", sum("capb").over(
+        org.apache.spark.sql.expressions.Window.partitionBy("query_id")
+          .orderBy(col("capb").asc, col("tkey"))))
+      .filter(col("cum") >= col("theta") - lit(RoundEps))
+      .select("query_id", "tkey")
+    // ROUTE: price both rules in the same unit — Σ df, the postings
+    // rows their joins emit — take the cheaper, then WAND only when the
+    // FULL pruned volume (tail rows + the exact-scoring broadcast,
+    // ≤ (est + npref) candidates × nt terms) beats the naive Σ df by
+    // [[RouteVolFactor]]. The nt factor is what a Σ-df-only price
+    // missed, measured as 25+ concurrent 4M-row chunk broadcasts OOMing
+    // the driver on the dense replica corpus. Uncappable and
+    // live-prefix-empty queries are forced ineligible so they reach the
+    // naive branch exactly once. `vol` stays in the frame so the chunk
+    // budget needs no candidate materialization.
+    def est(rule: DataFrame, name: String): DataFrame =
+      rule.join(qdf, Seq("query_id", "tkey"))
+        .groupBy("query_id").agg(sum("df").as(name))
+    def z(c: String) = coalesce(col(c), lit(0L))
+    val routes = qstats
+      .join(broadcast(forceNaive.withColumn("fnaive", lit(true))),
+        Seq("query_id"), "left")
+      .filter(col("eligible") && col("fnaive").isNull)
+      .join(est(cutoffs, "est1"), Seq("query_id"), "left")
+      .join(est(essential, "est2"), Seq("query_id"), "left")
+      .join(candA.groupBy("query_id").agg(count(lit(1)).as("npref")),
+        Seq("query_id"), "left")
+      .select(col("query_id"), (z("est2") < z("est1")).as("use_ess"),
+        ((least(z("est1"), z("est2")) + z("npref")) * (lit(1L) + col("nt")))
+          .as("vol"), col("estn"))
+      .filter(col("vol") * RouteVolFactor < col("estn"))
+      .select("query_id", "use_ess", "vol")
+      .localCheckpoint(true)
+    // the chosen tail probes: rule-1 cutoffs, or whole essential lists
+    // (cut = −∞) — riding the tail scan's job, not their own
+    val chosen = cutoffs.join(routes.filter(!col("use_ess")), "query_id")
+      .select("query_id", "tkey", "cut")
+      .unionByName(essential.join(routes.filter(col("use_ess")), "query_id")
+        .select(col("query_id"), col("tkey"),
+          lit(Double.MinValue).as("cut")))
+    val wandIds = routes.select("query_id")
+    val cand = candA.join(broadcast(wandIds), Seq("query_id"), "left_semi")
+      .unionByName(tailCandidates(post, prefixP, live)(chosen)).distinct()
+    // the priced volume (an UPPER bound on the exact broadcast rows)
+    // decides up front whether the candidates even need materializing
+    val priced = routes.agg(coalesce(sum("vol"), lit(0L))).first.getLong(0)
+    val wandScores = chunkedScores(cand, qstats.select("query_id", "nt"),
+      broadcastRows, topN, priced)(scoreCand)
+    // naive-routed queries — everything NOT wand-routed (when the whole
+    // batch routes to WAND the empty broadcast propagates and AQE
+    // elides this scan)
+    finalTopK(wandScores.unionByName(naivePlan(
+        q.join(broadcast(wandIds), Seq("query_id"), "left_anti"))),
+      topN, scoreName)
+  }
+
+  /** The chosen (query_id, tkey, cut) tail probes (cut in impact
+    * units; −∞ = a whole essential list) → live tail candidate
+    * (query_id, doc_id) pairs, self-matches excluded.
+    */
+  private def tailCandidates(post: DataFrame, prefixP: Int,
+      live: DataFrame => DataFrame)(chosen: DataFrame): DataFrame =
+    live(post.filter(col("rnk_w") > prefixP)
+      .join(broadcast(chosen), "tkey")
+      .filter(col("impact") >= col("cut") &&
+        col("doc_id") =!= col("query_id")))
+      .select("query_id", "doc_id")
+
+  /** Chunk the exact-scoring broadcast under the hard budget; the
+    * selective regime this path serves fits one chunk, and each extra
+    * chunk costs one more bounded postings scan — bounded state over
+    * scan count, deliberately. Each chunk reduces to its own
+    * per-query top-k and is EAGERLY materialized: chunks are
+    * (query, doc)-hash disjoint, so any pair a chunk's top-k drops is
+    * dominated by k pairs that survive into the union and the global
+    * top-k is exact — and the materialization forces chunks to
+    * execute one at a time, so exactly ONE chunk broadcast is live at
+    * any moment (a lazy union holds every chunk's broadcast
+    * simultaneously, which is the unbounded state the budget exists
+    * to prevent). `score` maps a candidate (query_id, doc_id) frame
+    * to exact (query_id, doc_id, score) rows.
+    */
+  private def chunkedScores(cand: DataFrame, qCnt: DataFrame,
+      broadcastRows: Long, topN: Int, estRows: Long)(
+      score: DataFrame => DataFrame): DataFrame = {
+    import graft.functions.TopKAgg
+    def reduceChunk(c: DataFrame): DataFrame =
+      score(c)
+        .groupBy("query_id")
+        .agg(TopKAgg.topK(topN, col("score"), col("doc_id")).as("top"))
+        .select(col("query_id"), explode(col("top")).as("r"))
+        .select(col("query_id"), col("r._2").as("doc_id"),
+          col("r._1").as("score"))
+    // FAST PATH — the selective regime WAND exists for: when even the
+    // priced UPPER bound fits one chunk, the candidate set needs no
+    // materialization and no exact count — its subplan (tail scan +
+    // prefix pairs) rides the one scoring job, two driver-sequenced
+    // jobs fewer than the general path
+    if (estRows <= broadcastRows) return reduceChunk(cand)
+    statChunkedScoreFallbacks.incrementAndGet()
+    val candM = cand.localCheckpoint(true)
+    val bRows = candM.join(broadcast(qCnt), "query_id")
+      .agg(coalesce(sum("nt"), lit(0L))).first.getLong(0)
+    val nChunks =
+      math.max(1L, (bRows + broadcastRows - 1) / broadcastRows).toInt
+    (0 until nChunks).map { i =>
+      val part = reduceChunk(
+        if (nChunks == 1) candM
+        else candM.filter(pmod(
+          xxhash64(col("query_id"), col("doc_id")), lit(nChunks)) === i))
+      if (nChunks == 1) part else part.localCheckpoint(true)
+    }.reduce(_ unionByName _)
   }
 
   /** Per-partition top-`topN` of summed pair weights over CO-LOCATED

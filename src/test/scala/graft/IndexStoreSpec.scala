@@ -463,7 +463,7 @@ class IndexStoreSpec extends AnyFunSuite {
 
   test("bm25 wandSearch equals search exactly (impact-ordered pruning " +
     "loses nothing), at tiny and default prefixes, and after extension") {
-    import graft.plans.Bm25IndexStore
+    import graft.plans.{Bm25IndexStore, WandKernel}
     val docs = base
     val (table, path) = freshTable("bm25w")
     spark.sql(s"DROP TABLE IF EXISTS ${table}_df")
@@ -488,12 +488,12 @@ class IndexStoreSpec extends AnyFunSuite {
     // collectable batches) and DISTRIBUTED (forced via the test seam)
     // — must produce the identical frame at every prefix
     try {
-      Bm25IndexStore.driverPlanningEnabled = false
+      WandKernel.driverPlanningEnabled.set(false)
       assert(rows(Bm25IndexStore.wandSearch(
         spark, table, queries, 3, prefixP = 2)) === plain)
       assert(rows(Bm25IndexStore.wandSearch(
         spark, table, queries, 3)) === plain)
-    } finally Bm25IndexStore.driverPlanningEnabled = true
+    } finally WandKernel.driverPlanningEnabled.set(true)
     // rank-0 extended postings always enter the prefix → still exact
     val copies = docs.filter(col("doc_id") % 7 === 0)
       .select((col("doc_id") + 5000000L).as("doc_id"), col("text"))
@@ -518,10 +518,10 @@ class IndexStoreSpec extends AnyFunSuite {
     assert(rows(Bm25IndexStore.wandSearch(
       spark, table, qs2, 3, prefixP = 2)) === expect)
     try {
-      Bm25IndexStore.driverPlanningEnabled = false
+      WandKernel.driverPlanningEnabled.set(false)
       assert(rows(Bm25IndexStore.wandSearch(
         spark, table, qs2, 3, prefixP = 2)) === expect)
-    } finally Bm25IndexStore.driverPlanningEnabled = true
+    } finally WandKernel.driverPlanningEnabled.set(true)
   }
 
   test("tfidf extend folds a batch in under the frozen idf: copies of " +
@@ -597,12 +597,12 @@ class IndexStoreSpec extends AnyFunSuite {
     // collectable batches) and DISTRIBUTED (forced via the test seam)
     // — must produce the identical frame at every prefix
     try {
-      graft.plans.Bm25IndexStore.driverPlanningEnabled = false
+      graft.plans.WandKernel.driverPlanningEnabled.set(false)
       assert(rows(TfidfIndexStore.wandSearch(
         spark, table, queryIds, 3, prefixP = 2)) === plain)
       assert(rows(TfidfIndexStore.wandSearch(
         spark, table, queryIds, 3)) === plain)
-    } finally graft.plans.Bm25IndexStore.driverPlanningEnabled = true
+    } finally graft.plans.WandKernel.driverPlanningEnabled.set(true)
   }
 
   /** Spark JOBS started while `body` runs — the unit that pays fixed
@@ -712,7 +712,7 @@ class IndexStoreSpec extends AnyFunSuite {
     "flow): the regime engages (counter), planning does NOT refuse, " +
     "output equals search, and the serve costs no more driver-" +
     "sequenced jobs than the distributed orchestration it replaced") {
-    import graft.plans.{Bm25IndexStore, WandKernel}
+    import graft.plans.{Bm25IndexStore, TfidfIndexStore, WandKernel}
     import spark.implicits._
     // the WIN-regime zipf fixture (the regime-selector test's): a
     // dense corpus demotes every query to naive under the exact θ and
@@ -729,10 +729,31 @@ class IndexStoreSpec extends AnyFunSuite {
     Bm25IndexStore.build(corpus, table, path, buckets = 4)
     val queries = (1 to 5).map(i => (2000L + i, s"rare${i * 7} stop"))
       .toDF("doc_id", "text")
+    // the same fixture as a tf-idf artifact: its queries are corpus
+    // members, so the keyword docs join the corpus (each one's nearest
+    // neighbor is its rare term's twin at cosine 1), and ten stop-free
+    // docs keep the stopword's idf above zero — a df == n_docs term
+    // weighs 0 and never reaches the postings
+    val (tfTable, tfPath) = freshTable("tfxchunk")
+    Seq("norms", "df", "rawdf", "stats", "bydoc").foreach(t =>
+      spark.sql(s"DROP TABLE IF EXISTS ${tfTable}_$t"))
+    TfidfIndexStore.build(corpus.unionByName(queries).unionByName(
+        (1 to 10).map(i => (900L + i, s"filler$i")).toDF("doc_id", "text")),
+      10, tfTable, tfPath, buckets = 4)
+    val queryIds = queries.select("doc_id")
     def rows(df: DataFrame) = df.collect().map(r =>
       (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
-    val plain = rows(Bm25IndexStore.search(spark, table, queries, 1))
-    assert(plain.nonEmpty)
+    // one input per impact-index store: (name, search, wandSearch at a
+    // chunk budget, distributed-serve job ceiling) — both instantiate
+    // the one shared orchestration, and the ceilings pin its job count
+    // for each instantiation on this fixture
+    val inputs: Seq[(String, DataFrame, Long => DataFrame, Int)] = Seq(
+      ("bm25", Bm25IndexStore.search(spark, table, queries, 1),
+        b => Bm25IndexStore.wandSearch(spark, table, queries, 1,
+          prefixP = 2, broadcastRows = b), 41),
+      ("tfidf", TfidfIndexStore.search(spark, tfTable, queryIds, 1),
+        b => TfidfIndexStore.wandSearch(spark, tfTable, queryIds, 1,
+          prefixP = 2, broadcastRows = b), 38))
     // broadcastRows=1 puts ANY wand-routed priced volume over the
     // single-chunk budget (vol ≥ 1+nt per routed query), so the serve
     // must run the hash-disjoint chunk loop IN the driver-planned
@@ -740,20 +761,21 @@ class IndexStoreSpec extends AnyFunSuite {
     // orchestration. AQE off so one action == one job, as in the pin
     // test above.
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    try inputs.foreach { case (store, search, wandSearch, distCap) =>
+      val plain = rows(search)
+      assert(plain.nonEmpty, store)
       val chunked0 = WandKernel.statChunkedScoreFallbacks.get()
       val refused0 = WandKernel.statDriverPlanningRefusals.get()
       var planned: DataFrame = null
       val plannedJobs = countJobs {
-        planned = Bm25IndexStore.wandSearch(spark, table, queries, 1,
-          prefixP = 2, broadcastRows = 1L)
+        planned = wandSearch(1L)
       }
       assert(rows(planned) === plain,
-        "chunked driver-planned serve must equal search")
+        s"$store: chunked driver-planned serve must equal search")
       assert(WandKernel.statChunkedScoreFallbacks.get() > chunked0,
-        "the chunk loop must actually engage (counter delta)")
+        s"$store: the chunk loop must actually engage (counter delta)")
       assert(WandKernel.statDriverPlanningRefusals.get() === refused0,
-        "an over-budget volume must NOT refuse driver planning (r14)")
+        s"$store: an over-budget volume must NOT refuse driver planning (r14)")
       // the flow change's whole justification, pinned: at the same
       // budget on the same fixture, the in-place chunked serve costs
       // no more driver-sequenced jobs than the distributed
@@ -761,16 +783,18 @@ class IndexStoreSpec extends AnyFunSuite {
       // equality is allowed so a tiny fixture can't flake the pin)
       var dist: DataFrame = null
       val distJobs = countJobs {
-        Bm25IndexStore.driverPlanningEnabled = false
-        try dist = Bm25IndexStore.wandSearch(spark, table, queries, 1,
-          prefixP = 2, broadcastRows = 1L)
-        finally Bm25IndexStore.driverPlanningEnabled = true
+        WandKernel.driverPlanningEnabled.set(false)
+        try dist = wandSearch(1L)
+        finally WandKernel.driverPlanningEnabled.set(true)
       }
       assert(rows(dist) === plain,
-        "distributed chunked serve must equal search")
+        s"$store: distributed chunked serve must equal search")
       assert(plannedJobs <= distJobs,
-        s"driver-planned chunked ($plannedJobs jobs) must not exceed " +
-          s"the distributed orchestration ($distJobs jobs)")
+        s"$store: driver-planned chunked ($plannedJobs jobs) must not " +
+          s"exceed the distributed orchestration ($distJobs jobs)")
+      assert(distJobs <= distCap,
+        s"$store: distributed chunked serve must stay ≤ $distCap jobs, " +
+          s"got $distJobs")
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 

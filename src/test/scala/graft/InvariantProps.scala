@@ -756,7 +756,7 @@ object InvariantProps extends Properties("graft.invariants") {
   property("wandSearch == search: both stores, both orchestrations, " +
     "random corpora/extends/deletes/queries at random budgets") =
     Prop.forAll(genWandCase) { c =>
-      import graft.plans.{Bm25IndexStore, Retire, TfidfIndexStore}
+      import graft.plans.{Bm25IndexStore, Retire, TfidfIndexStore, WandKernel}
       val tag = java.util.UUID.randomUUID().toString
         .replace("-", "").take(10)
       val tmp = java.nio.file.Files
@@ -793,12 +793,12 @@ object InvariantProps extends Properties("graft.invariants") {
         val tfRef = rows(TfidfIndexStore.search(spark, tfx, qIdFrame, 3))
         val ok = Seq(true, false).forall { planned =>
           try {
-            Bm25IndexStore.driverPlanningEnabled = planned
+            WandKernel.driverPlanningEnabled.set(planned)
             rows(Bm25IndexStore.wandSearch(spark, bm, docsAsQueries, 3,
               prefixP = c.prefixP, broadcastRows = c.bcast)) == bmRef &&
             rows(TfidfIndexStore.wandSearch(spark, tfx, qIdFrame, 3,
               prefixP = c.prefixP, broadcastRows = c.bcast)) == tfRef
-          } finally Bm25IndexStore.driverPlanningEnabled = true
+          } finally WandKernel.driverPlanningEnabled.set(true)
         }
         ok
       } finally {

@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.plans.{AhashIndexStore, Bm25IndexStore, IvfIndexStore,
-  PqStore, Retire, ShingleIndexStore, TfidfIndexStore, VhashIndexStore}
+  PqStore, Retire, ShingleIndexStore, TfidfIndexStore, VhashIndexStore,
+  WandKernel}
 
 /** Document retirement across the persisted index artifacts: delete
   * masks immediately through every serve path (including both WAND
@@ -101,10 +102,10 @@ class RetireSpec extends AnyFunSuite {
     assert(rows4(Bm25IndexStore.wandSearch(
       spark, table, queries, 3)) === expect)
     try {
-      Bm25IndexStore.driverPlanningEnabled = false
+      WandKernel.driverPlanningEnabled.set(false)
       assert(rows4(Bm25IndexStore.wandSearch(
         spark, table, queries, 3, prefixP = 2)) === expect)
-    } finally Bm25IndexStore.driverPlanningEnabled = true
+    } finally WandKernel.driverPlanningEnabled.set(true)
     // extend AFTER delete: a re-ingest of a deleted id stays masked
     val reingest = docs.filter(col("doc_id") === dead.head)
     Bm25IndexStore.extend(reingest, table, buckets = 4)
@@ -144,10 +145,10 @@ class RetireSpec extends AnyFunSuite {
     assert(rows4(TfidfIndexStore.wandSearch(
       spark, table, queryIds, 3, prefixP = 2)) === expect)
     try {
-      Bm25IndexStore.driverPlanningEnabled = false
+      WandKernel.driverPlanningEnabled.set(false)
       assert(rows4(TfidfIndexStore.wandSearch(
         spark, table, queryIds, 3, prefixP = 2)) === expect)
-    } finally Bm25IndexStore.driverPlanningEnabled = true
+    } finally WandKernel.driverPlanningEnabled.set(true)
     TfidfIndexStore.compact(spark, table)
     assert(!spark.catalog.tableExists(Retire.deadTable(table)))
     assert(spark.table(table)
@@ -401,14 +402,14 @@ class RetireSpec extends AnyFunSuite {
     assert(tfRef.map(_._3).contains(3L))
     for (planned <- Seq(true, false)) {
       try {
-        Bm25IndexStore.driverPlanningEnabled = planned
+        WandKernel.driverPlanningEnabled.set(planned)
         assert(rows4(Bm25IndexStore.wandSearch(
           spark, bm, q, 3, prefixP = 1)) === bmRef,
           s"bm25 planned=$planned")
         assert(rows4(TfidfIndexStore.wandSearch(
           spark, tfx, ids(2L), 3, prefixP = 1)) === tfRef,
           s"tfidf planned=$planned")
-      } finally Bm25IndexStore.driverPlanningEnabled = true
+      } finally WandKernel.driverPlanningEnabled.set(true)
     }
   }
 }
