@@ -139,13 +139,13 @@ object ElectionSchemas {
       StructField("Name", StringType),
       StructField("WardSeats", IntegerType),
       StructField("PRSeats", IntegerType)))))))
+
+  /** The stored form of every IEC payload table: one JSON document per
+    * row, exactly what the HTTP fetch stage produces.
+    */
+  val payload: StructType = StructType(Seq(StructField("body", StringType)))
 }
 
-/** Parquet/CSV-backed sources for production-shaped runs: dimension CSVs
-  * with explicit schemas (no inference in production paths, SURVEY §1.3)
-  * and parquet fact tables; JSON payload tables as one `body` string per
-  * document, exactly what the HTTP fetch stage produces.
-  */
 /** JDBC-backed sources — the production mapping of the reference's SQL
   * Server reads (SURVEY.md §2.1 S2-S4: `SELECT * FROM <table>` cursors
   * become `spark.read.jdbc` table scans; Catalyst pushes job filters like
@@ -187,23 +187,39 @@ final class JdbcElectionSources(
   def seatResultsJson: DataFrame = ballotResultsJson
 }
 
+/** Parquet/CSV-backed sources for production-shaped runs: dimension CSVs
+  * and parquet fact tables, every one read with its declared
+  * `ElectionSchemas` entry (no inference in production paths, SURVEY §1.3
+  * — so building a frame launches no Spark job, and a file whose column
+  * types drifted fails at the scan instead of flowing through); JSON
+  * payload tables as one `body` string per document, exactly what the
+  * HTTP fetch stage produces.
+  */
 final class FileElectionSources(spark: SparkSession, dir: String)
     extends ElectionSources {
-  import ElectionSchemas._
   private def csv(name: String, schema: StructType): DataFrame =
     spark.read.option("header", "true").schema(schema).csv(s"$dir/$name.csv")
-  private def pq(name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private def pq(name: String, schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(s"$dir/$name.parquet")
   def wards: DataFrame = csv("Wards", ElectionSchemas.wards)
   def munis: DataFrame = csv("Munis", ElectionSchemas.munis)
-  def councilWinners: DataFrame = pq("LED_GIS_CouncilWinners")
-  def parties: DataFrame = pq("PCR_Party")
-  def votingDistricts: DataFrame = pq("EE_VotingDistricts")
-  def displayVotingDistricts: DataFrame = pq("LED_GIS_Display_VotingDistrict")
-  def vdStats: DataFrame = pq("Fact_LGE_Master_VDStats")
-  def displayWard: DataFrame = pq("LED_GIS_Display_Ward")
-  def wardCandidates: DataFrame = pq("LED_GIS_Display_Ward_WardCandidates")
-  def ballotResultsJson: DataFrame = pq("LGEBallotResults")
-  def councilorsJson: DataFrame = pq("CouncilorsByEvent")
-  def seatResultsJson: DataFrame = pq("LGESeatCalculationResults")
+  def councilWinners: DataFrame =
+    pq("LED_GIS_CouncilWinners", ElectionSchemas.councilWinners)
+  def parties: DataFrame = pq("PCR_Party", ElectionSchemas.parties)
+  def votingDistricts: DataFrame =
+    pq("EE_VotingDistricts", ElectionSchemas.votingDistricts)
+  def displayVotingDistricts: DataFrame =
+    pq("LED_GIS_Display_VotingDistrict",
+      ElectionSchemas.displayVotingDistricts)
+  def vdStats: DataFrame = pq("Fact_LGE_Master_VDStats", ElectionSchemas.vdStats)
+  def displayWard: DataFrame =
+    pq("LED_GIS_Display_Ward", ElectionSchemas.displayWard)
+  def wardCandidates: DataFrame =
+    pq("LED_GIS_Display_Ward_WardCandidates", ElectionSchemas.wardCandidates)
+  def ballotResultsJson: DataFrame =
+    pq("LGEBallotResults", ElectionSchemas.payload)
+  def councilorsJson: DataFrame =
+    pq("CouncilorsByEvent", ElectionSchemas.payload)
+  def seatResultsJson: DataFrame =
+    pq("LGESeatCalculationResults", ElectionSchemas.payload)
 }

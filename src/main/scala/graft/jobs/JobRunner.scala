@@ -27,6 +27,9 @@ import org.apache.spark.sql.SparkSession
   */
 object JobRunner {
 
+  /** The thread-local property `SparkContext.setJobDescription` sets. */
+  private val JobDescription = "spark.job.description"
+
   def main(args: Array[String]): Unit = {
     // master precedence: GRAFT_MASTER (explicit env override) >
     // spark-submit's --master (arrives as the spark.master system
@@ -45,12 +48,17 @@ object JobRunner {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    // the log level is process-wide: set only where JobRunner owns the
+    // session, never on one injected into run()
+    spark.sparkContext.setLogLevel("WARN")
     try run(spark, args, sys.env) finally spark.stop()
   }
 
   /** The composition main() performs, with the session and environment
     * injected (testable in-process; main wires the real ones).
-    * Returns the written CSV path.
+    * Returns the written CSV path. Every Spark job the run launches
+    * carries the description `sanef.<job>`; the caller's description is
+    * restored afterwards.
     */
   def run(
       spark: SparkSession, args: Array[String],
@@ -58,9 +66,18 @@ object JobRunner {
     require(args.length >= 10,
       "usage: JobRunner WAZI_ENDPOINT WAZI_TOKEN DATASET_ID IEC_TOKEN " +
         "IEC_ENDPOINT DB_SERVER DB DB_USERNAME DB_PASSWORD RESET_DATASET")
+    val sc = spark.sparkContext
+    val prior = sc.getLocalProperty(JobDescription)
+    sc.setLocalProperty(JobDescription, s"sanef.${args(4)}")
+    try compose(spark, args, env)
+    finally sc.setLocalProperty(JobDescription, prior)
+  }
+
+  private def compose(
+      spark: SparkSession, args: Array[String],
+      env: Map[String, String]): java.nio.file.Path = {
     val Array(waziEndpoint, waziToken, datasetId, iecToken, iecEndpoint,
       dbServer, db, dbUser, dbPassword, reset) = args.take(10)
-    spark.sparkContext.setLogLevel("WARN")
     val sources: ElectionSources =
       if (dbServer.startsWith("file:")) {
         new FileElectionSources(spark, dbServer.stripPrefix("file:"))

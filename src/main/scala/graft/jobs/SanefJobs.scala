@@ -15,8 +15,9 @@ import org.apache.spark.sql.types._
   * O(wards) DB round trips → one distributed job.
   *
   * Output row order: the reference's CSV order comes from pandas groupby's
-  * sorted-key iteration (SURVEY §2.7 O3) — every job here ends in an
-  * explicit total orderBy reproducing it deterministically.
+  * sorted-key iteration (SURVEY §2.7 O3) — every job here ends in
+  * `sortedSingle`, a total sort inside one partition reproducing it
+  * deterministically.
   */
 object SanefJobs {
 
@@ -46,8 +47,21 @@ object SanefJobs {
       .join(unfinished, Seq("fklWardId"), "left_anti")
       .join(broadcast(src.wards), col("fklWardId") === col("WardID"))
       .select("ProvinceID", "MunicipalityID", "WardID")
+      // its own output order (a registered query and the IecApi fan-out
+      // input); under the ward jobs' semi-joins EliminateSorts drops it
       .orderBy("WardID")
   }
+
+  /** The jobs' ordered tail: one shuffle into a single partition, then a
+    * local sort on the output keys. Same total order and CSV bytes
+    * as a global `orderBy`, without its range-partitioner sampling job;
+    * the single task is the one `CsvSink`'s `coalesce(1)` already implies,
+    * and every job's output is bounded by its dimensions (wards × parties,
+    * munis × parties). Upstream stages stay parallel: the funnel sits
+    * behind the shuffle, not a `coalesce` that would collapse them too.
+    */
+  private def sortedSingle(keys: Column*)(df: DataFrame): DataFrame =
+    df.repartition(1).sortWithinPartitions(keys: _*)
 
   /** Province decode dim (JobConfig.provinceCodes as a broadcast frame —
     * the reference's thrice-repeated inline dict, SANEF_Uploader.py:226).
@@ -84,7 +98,7 @@ object SanefJobs {
         col("WardID").as("Geography"),
         col("p.Name").as("Party"),
         col("p.TotalValidVotes").as("Count"))
-      .orderBy("Geography", "Party")
+      .transform(sortedSingle(col("Geography"), col("Party")))
   }
 
   // =====================================================================
@@ -112,7 +126,8 @@ object SanefJobs {
         .as(Seq("Voter Turnout", "Count")))
       .select(col("fklWardID").as("Geography"),
         col("Voter Turnout"), col("Count"))
-      .orderBy(col("Geography"), col("Voter Turnout").desc) // Voted first
+      .transform(sortedSingle(
+        col("Geography"), col("Voter Turnout").desc)) // Voted first
   }
 
   // =====================================================================
@@ -130,7 +145,7 @@ object SanefJobs {
         concat_ws(" - ", col("sPartyAbbr"), col("sCandidateName"))
           .as("Party"),
         col("lCount").as("Count"))
-      .orderBy("Geography", "Party")
+      .transform(sortedSingle(col("Geography"), col("Party")))
   }
 
   // =====================================================================
@@ -154,7 +169,7 @@ object SanefJobs {
       .select(
         col("c.WardID").as("Geography"),
         concat_ws(" - ", col("c.Name"), col("c.PartyName")).as("Contents"))
-      .orderBy("Geography")
+      .transform(sortedSingle(col("Geography")))
   }
 
   // =====================================================================
@@ -171,7 +186,7 @@ object SanefJobs {
         col("sWardGeography").as("Geography"),
         col("sPartyName").as("Party"),
         col("lCount").as("Count"))
-      .orderBy("Geography", "Party")
+      .transform(sortedSingle(col("Geography"), col("Party")))
   }
 
   // =====================================================================
@@ -194,7 +209,7 @@ object SanefJobs {
         .as(Seq("Councils", "Count")))
       .select(col("ProvinceCode").as("Geography"),
         col("Councils"), col("Count"))
-      .orderBy("Geography", "Councils")
+      .transform(sortedSingle(col("Geography"), col("Councils")))
   }
 
   // =====================================================================
@@ -211,7 +226,7 @@ object SanefJobs {
       .agg(count("sPartyName").as("Count"))
       .select(col("ProvinceCode").as("Geography"),
         col("sPartyName").as("Party"), col("Count"))
-      .orderBy("Geography", "Party")
+      .transform(sortedSingle(col("Geography"), col("Party")))
   }
 
   // =====================================================================
@@ -237,7 +252,7 @@ object SanefJobs {
         array_join(array_sort(collect_list(col("li"))), ""),
         lit("</ul>")).as("Contents"))
       .select(col("ProvinceCode").as("Geography"), col("Contents"))
-      .orderBy("Geography")
+      .transform(sortedSingle(col("Geography")))
   }
 
   // =====================================================================
@@ -264,7 +279,8 @@ object SanefJobs {
         .as(Seq("Seat Type", "Count")))
       .select(col("Municipality").as("Geography"), col("Party Name"),
         col("Seat Type"), col("Count"))
-      .orderBy(col("Geography"), col("Party Name"), col("Seat Type").desc)
+      .transform(sortedSingle(
+        col("Geography"), col("Party Name"), col("Seat Type").desc))
   }
 
   // =====================================================================

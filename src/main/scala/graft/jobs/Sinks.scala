@@ -13,11 +13,11 @@ import org.apache.spark.sql.DataFrame
 /** Job sinks (SURVEY.md §2.1 S7/S8).
   *
   * CsvSink reproduces the reference's single-CSV materialization
-  * (`upload()` at SANEF_Uploader.py:50-55): coalesce(1) is correct here
-  * because every job's output is O(10^4) rows (§6) — the heavy lifting
-  * happened distributed upstream; only the final tiny frame funnels to one
-  * task. The `<endpoint>.<ddMMyyyy-HHmm>.csv` stamp (:51-52) is applied on
-  * rename.
+  * (`upload()` at SANEF_Uploader.py:50-55). The nine jobs already hand it
+  * one sorted partition (SanefJobs' ordered tail), so its coalesce(1) is
+  * a no-op for them and only guards other callers, whose frames it funnels
+  * to one task — safe because every output here is O(10^4) rows (§6). The
+  * `<endpoint>.<ddMMyyyy-HHmm>.csv` stamp (:51-52) is applied on rename.
   *
   * HttpUploadSink is the Wazimap multipart POST (:57-64) — pure driver
   * code after the write, deliberately NOT a Spark operator.

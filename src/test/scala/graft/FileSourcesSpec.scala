@@ -2,15 +2,16 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.jobs._
 
-/** FileElectionSources round-trip: dimension CSVs with explicit schemas
-  * (S1 — no inference in production paths) + parquet fact stand-ins,
-  * through a complete job. Validates the file-backed production path that
-  * JdbcElectionSources mirrors.
+/** FileElectionSources round-trip: dimension CSVs and parquet tables,
+  * all read with declared schemas (S1 — no inference in production
+  * paths), through a complete job. Validates the file-backed production
+  * path that JdbcElectionSources mirrors.
   */
 class FileSourcesSpec extends AnyFunSuite {
 
@@ -54,6 +55,39 @@ class FileSourcesSpec extends AnyFunSuite {
     assert(got.toSeq === Seq(
       Seq("EC", "Hung", 1L), Seq("EC", "Outright Majority", 0L),
       Seq("WC", "Hung", 0L), Seq("WC", "Outright Majority", 1L)))
+  }
+
+  test("every file source reads with its declared schema; building the " +
+    "twelve frames launches no Spark job") {
+    val dir = new ElectionFixture(spark).writeFiles(
+      Files.createTempDirectory("graft-files-all").toString)
+    val src = new FileElectionSources(spark, dir)
+    var frames = Seq.empty[(String, DataFrame, StructType)]
+    val jobs = JobCensus.of(spark) {
+      frames = Seq(
+        ("wards", src.wards, ElectionSchemas.wards),
+        ("munis", src.munis, ElectionSchemas.munis),
+        ("councilWinners", src.councilWinners,
+          ElectionSchemas.councilWinners),
+        ("parties", src.parties, ElectionSchemas.parties),
+        ("votingDistricts", src.votingDistricts,
+          ElectionSchemas.votingDistricts),
+        ("displayVotingDistricts", src.displayVotingDistricts,
+          ElectionSchemas.displayVotingDistricts),
+        ("vdStats", src.vdStats, ElectionSchemas.vdStats),
+        ("displayWard", src.displayWard, ElectionSchemas.displayWard),
+        ("wardCandidates", src.wardCandidates,
+          ElectionSchemas.wardCandidates),
+        ("ballotResultsJson", src.ballotResultsJson, ElectionSchemas.payload),
+        ("councilorsJson", src.councilorsJson, ElectionSchemas.payload),
+        ("seatResultsJson", src.seatResultsJson, ElectionSchemas.payload))
+    }
+    // a schema-inference pass would show up here as a `parquet at` job
+    assert(jobs.isEmpty, jobs.mkString("\n"))
+    assert(frames.size === 12)
+    frames.foreach { case (name, frame, schema) =>
+      assert(frame.schema === schema, name)
+    }
   }
 
   test("jsonl corpus source: explicit schema, three malformed-line modes") {

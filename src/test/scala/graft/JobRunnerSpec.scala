@@ -80,6 +80,77 @@ class JobRunnerSpec extends AnyFunSuite {
     assert(Files.readString(path) === "Geography,Councils,Count\nNone,-,0\n")
   }
 
+  test("run names every Spark job sanef.<job>; the caller's job " +
+    "description and log level are left as they were") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    val sc = spark.sparkContext
+    val level = LogManager.getRootLogger.getLevel
+    sc.setLogLevel("ERROR")
+    sc.setJobDescription("caller")
+    try {
+      val outDir = Files.createTempDirectory("graft-out").toString
+      val args = Array("http://unused", "t", "1384", "i", "hung_councils",
+        s"file:$fixtureDir", "db", "u", "p", "noreset")
+      val jobs = JobCensus.of(spark) {
+        JobRunner.run(spark, args,
+          Map("GRAFT_OUT_DIR" -> outDir, "GRAFT_SKIP_UPLOAD" -> "1"))
+      }
+      assert(jobs.nonEmpty)
+      assert(jobs.forall(_.description == "sanef.hung_councils"),
+        jobs.mkString("\n"))
+      assert(sc.getLocalProperty("spark.job.description") === "caller")
+      assert(LogManager.getRootLogger.getLevel === Level.ERROR)
+    } finally {
+      sc.setJobDescription(null)
+      sc.setLogLevel(level.toString)
+    }
+  }
+
+  /** The Spark-job budget of one file-backed run per job, measured on the
+    * shared fixture: the two dead job kinds stay gone (parquet schema
+    * inference, the range-partitioner sampling of a global sort), and a
+    * new driver-side action shows up as a count above its ceiling.
+    */
+  test("file-backed runs of all nine jobs: no schema inference, no " +
+    "global sort, Spark-job counts within budget, rows as in memory") {
+    import org.apache.spark.sql.execution.SortExec
+    val fx = new ElectionFixture(spark)
+    val dir = fx.writeFiles(Files.createTempDirectory("graft-nine").toString)
+    val src = new FileElectionSources(spark, dir)
+    // measured with declared schemas and the single-partition sorted
+    // tail (inference plus a global orderBy cost ward_votes_by_party 11)
+    val budget = Map(
+      "ward_votes_by_party" -> 7, "voter_turnout" -> 7,
+      "ward_votes_by_candidate" -> 7, "ward_councillor_elected" -> 3,
+      "pr_votes_by_party" -> 7, "hung_councils" -> 5,
+      "councils_won_by_party" -> 6, "list_of_hung_councils" -> 5,
+      "seats_won" -> 3)
+    assert(budget.keySet === SanefJobs.all.map(_.name).toSet)
+    SanefJobs.all.foreach { spec =>
+      val outDir = Files.createTempDirectory("graft-out").toString
+      var path: java.nio.file.Path = null
+      val jobs = JobCensus.of(spark) {
+        path = JobRunner.run(spark,
+          Array("http://unused", "t", spec.datasetId.toString, "i",
+            spec.name, s"file:$dir", "db", "u", "p", "noreset"),
+          Map("GRAFT_OUT_DIR" -> outDir, "GRAFT_SKIP_UPLOAD" -> "1"))
+      }
+      info(s"${spec.name}: ${jobs.size} jobs")
+      assert(!jobs.exists(_.stages.exists(_.startsWith("parquet at"))),
+        s"${spec.name} inferred a schema:\n${jobs.mkString("\n")}")
+      assert(jobs.size <= budget(spec.name),
+        s"${spec.name} over budget:\n${jobs.mkString("\n")}")
+      val plan = SanefJobs.run(spark, src, spec.name)
+        .queryExecution.sparkPlan
+      assert(plan.collect { case s: SortExec if s.global => s }.isEmpty,
+        s"${spec.name} sorts globally:\n$plan")
+      val mem = SanefJobs.run(spark, fx, spec.name)
+      assert(Files.readString(path).split("\n").toSeq ===
+        mem.columns.mkString(",") +: mem.collect().toSeq.map(_.mkString(",")),
+        spec.name)
+    }
+  }
+
   test("wrong arity fails loudly") {
     assertThrows[IllegalArgumentException] {
       JobRunner.run(spark, Array("a", "b"), Map.empty)

@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.jobs._
@@ -21,112 +20,8 @@ class SanefJobsSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private def df(schema: StructType, rows: Seq[Row]): DataFrame =
-    spark.createDataFrame(
-      new java.util.ArrayList[Row](scala.jdk.CollectionConverters
-        .SeqHasAsJava(rows).asJava),
-      schema)
-
-  private def jsonDf(bodies: Seq[String]): DataFrame = {
-    import spark.implicits._
-    bodies.toDF("body")
-  }
-
-  import ElectionSchemas._
-
-  /** Fixture world:
-    * - wards 101,102 (P1/M1117), 103 (P1/M1101), 901,902,903 (P9/M9001)
-    * - completed wards (delim 78, no zero-vote VD at event 1091):
-    *   101, 103, 901, 903 (902 has a zero VD; 904 is delim 77)
-    */
-  object Fx extends ElectionSources {
-    def wards: DataFrame = df(ElectionSchemas.wards, Seq(
-      Row(1, 1117, 101L), Row(1, 1117, 102L), Row(1, 1101, 103L),
-      Row(9, 9001, 901L), Row(9, 9001, 902L), Row(9, 9001, 903L)))
-
-    def munis: DataFrame = df(ElectionSchemas.munis, Seq(
-      Row(1, 1117, "BUF", "Buffalo City", 1),
-      Row(1, 1101, "DC10", "Sarah Baartman", 3),
-      Row(9, 9001, "CPT", "Cape Town", 1),
-      Row(8, 8001, "JB1", "Unused Muni", 2)))
-
-    def votingDistricts: DataFrame = df(ElectionSchemas.votingDistricts, Seq(
-      Row(101L, 78), Row(101L, 78), // duplicate → DISTINCT must collapse
-      Row(102L, 78), Row(103L, 78),
-      Row(901L, 78), Row(902L, 78), Row(903L, 78),
-      Row(904L, 77))) // wrong delimitation → excluded
-
-    def displayVotingDistricts: DataFrame =
-      df(ElectionSchemas.displayVotingDistricts, Seq(
-        Row(101L, 1L, 10L, 1091), Row(101L, 1L, 5L, 1091),
-        Row(101L, 2L, 3L, 1091),
-        Row(102L, 3L, 0L, 1091), Row(102L, 3L, 0L, 1091), // sums to 0 → unfinished
-        Row(103L, 4L, 7L, 1091),
-        Row(901L, 5L, 0L, 1091), Row(901L, 5L, 5L, 1091), // sums to 5 → fine
-        Row(902L, 6L, 0L, 1091),                          // zero VD → unfinished
-        Row(902L, 7L, 9L, 1091),
-        Row(903L, 8L, 4L, 999)))  // other event → no 1091 rows → completed
-
-    def vdStats: DataFrame = df(ElectionSchemas.vdStats, Seq(
-      Row(101L, 100L, 40L, 1091), Row(101L, 100L, 20L, 1091),
-      Row(101L, 50L, 10L, 1091),
-      Row(103L, 80L, 40L, 1091),
-      Row(901L, 60L, 30L, 1091), Row(901L, 999L, 999L, 999),
-      Row(902L, 70L, 35L, 1091))) // not completed → excluded
-
-    def councilWinners: DataFrame = df(ElectionSchemas.councilWinners, Seq(
-      //  pk,  EE,  muni, party, lead, maj, avail, won, draw, hung
-      Row(1L, 1091, 1117, 1, 1, 1, 10, 6, 0, 1),
-      Row(2L, 1091, 1101, 2, 2, 2, 8, 5, 0, 0),
-      Row(3L, 1091, 9001, 1, 1, 1, 12, 7, 0, 0),
-      Row(4L, 1091, 7777, 1, 1, 1, 5, 3, 0, 1), // muni not in Munis.csv → dropped
-      Row(5L, 999, 1117, 2, 2, 2, 10, 6, 0, 1))) // other event → excluded
-
-    def parties: DataFrame = df(ElectionSchemas.parties, Seq(
-      Row(1, "Party A", "PA"), Row(2, "Party B", "PB")))
-
-    def displayWard: DataFrame = df(ElectionSchemas.displayWard, Seq(
-      Row(1L, 1091, 101L, "Ward 101", 1, "Party A", "PA", 100L, 60L, "", 42L),
-      Row(2L, 1091, 101L, "Ward 101", 2, "Party B", "PB", 100L, 60L, "", 18L),
-      Row(3L, 1091, 103L, "Ward 103", 1, "Party A", "PA", 80L, 40L, "", 40L),
-      Row(4L, 1091, 902L, "Ward 902", 1, "Party A", "PA", 70L, 35L, "", 35L),
-      Row(5L, 999, 101L, "Ward 101", 1, "Party X", "PX", 1L, 1L, "", 1L)))
-
-    def wardCandidates: DataFrame = df(ElectionSchemas.wardCandidates, Seq(
-      Row(1L, 1091, 101L, "Ward 101", 1, "Alice Smith", 11L, 1, "Party A",
-        "PA", 30L),
-      Row(2L, 1091, 101L, "Ward 101", 2, "Bob Jones", 12L, 2, "Party B",
-        "PB", 12L),
-      Row(3L, 1091, 103L, "Ward 103", 1, "Carol White", 13L, 1, "Party A",
-        "PA", 40L),
-      Row(4L, 1091, 902L, "Ward 902", 1, "Dan Black", 14L, 1, "Party A",
-        "PA", 35L),
-      Row(5L, 999, 101L, "Ward 101", 1, "Eve Grey", 15L, 1, "Party X",
-        "PX", 1L)))
-
-    def ballotResultsJson: DataFrame = jsonDf(Seq(
-      """{"WardID": 101, "PartyBallotResults": [
-        |{"Name": "Party A", "TotalValidVotes": 30},
-        |{"Name": "Party B", "TotalValidVotes": 12}]}""".stripMargin,
-      """{"WardID": 902, "PartyBallotResults": [
-        |{"Name": "Party A", "TotalValidVotes": 35}]}""".stripMargin,
-      """{"WardID": 903, "PartyBallotResults": [
-        |{"Name": "Party A", "TotalValidVotes": 4}]}""".stripMargin))
-
-    def councilorsJson: DataFrame = jsonDf(Seq(
-      """[{"WardID": 101, "Name": "Alice Smith", "PartyName": "Party A"},
-        |{"WardID": 101, "Name": "Bob Jones", "PartyName": "Party B"},
-        |{"WardID": 102, "Name": "Carol White", "PartyName": "Party A"}]"""
-        .stripMargin))
-
-    def seatResultsJson: DataFrame = jsonDf(Seq(
-      """{"MunicipalityID": 1117, "PartyResults": [
-        |{"Name": "Party A", "WardSeats": 3, "PRSeats": 2},
-        |{"Name": "Party B", "WardSeats": 1, "PRSeats": 0}]}""".stripMargin,
-      """{"MunicipalityID": 7777, "PartyResults": [
-        |{"Name": "Party A", "WardSeats": 9, "PRSeats": 9}]}""".stripMargin,
-      "null")) // a None response (guard at SANEF_Uploader.py:577)
-  }
+  /** The shared fixture world (ElectionFixture documents it). */
+  lazy val Fx: ElectionSources = new ElectionFixture(spark)
 
   private def rows(d: DataFrame): Seq[Seq[Any]] =
     d.collect().toSeq.map(_.toSeq)
