@@ -916,9 +916,6 @@ object ScaleProbe {
     // like the batch, not like the corpus
     t("bm25 index: build 50k docs (tokenize+weigh+save)") {
       val wh = java.nio.file.Files.createTempDirectory("graft-bm25").toString
-      spark.sql("DROP TABLE IF EXISTS probe_bm25")
-      spark.sql("DROP TABLE IF EXISTS probe_bm25_df")
-      spark.sql("DROP TABLE IF EXISTS probe_bm25_stats")
       graft.plans.Bm25IndexStore.build(
         docs, "probe_bm25", s"$wh/bm25", buckets = 32)
       spark.table("probe_bm25").count()
@@ -964,16 +961,14 @@ object ScaleProbe {
       val a = operators.TextAnalysis.tfidfRetrievalFromVecs(
         operators.TextAnalysis.tfidfVectorsFromTf(tf, nDocs, 10), qids, 3)
       val b = operators.TextAnalysis
-        .bm25RetrievalFromTf(tf, qids, 3, 1.2, 0.75)
+        .bm25RetrievalFromTf(tf, qids, 3)
       val n = operators.TextAnalysis.rankerAgreement(a, b).count()
       tf.unpersist(); n
     }
     t("tfidf index: build 50k docs (tokenize+weigh+save)") {
       val wh = java.nio.file.Files.createTempDirectory("graft-tfx").toString
-      spark.sql("DROP TABLE IF EXISTS probe_tfx")
-      spark.sql("DROP TABLE IF EXISTS probe_tfx_norms")
       graft.plans.TfidfIndexStore.build(
-        docs, 10, "probe_tfx", s"$wh/tfx", buckets = 32)
+        docs, "probe_tfx", s"$wh/tfx", buckets = 32)
       spark.table("probe_tfx").count()
     }
     t("tfidf index: search 500 queries vs saved 50k (naive postings " +
@@ -1004,8 +999,6 @@ object ScaleProbe {
       .localCheckpoint(true)
     t("bm25 zipf: build 50k zipf docs") {
       val wh = java.nio.file.Files.createTempDirectory("graft-bm25z").toString
-      Seq("probe_bm25z", "probe_bm25z_df", "probe_bm25z_stats")
-        .foreach(tb => spark.sql(s"DROP TABLE IF EXISTS $tb"))
       graft.plans.Bm25IndexStore.build(
         zipfDocs, "probe_bm25z", s"$wh/bm25z", buckets = 32)
       spark.table("probe_bm25z").count()
@@ -1526,8 +1519,6 @@ object ScaleProbe {
       t("wandserve: build 500k-doc zipf BM25 index (10× corpus)") {
         val wh = java.nio.file.Files
           .createTempDirectory("graft-bm25z10").toString
-        Seq("probe_bm25z10", "probe_bm25z10_df", "probe_bm25z10_stats")
-          .foreach(tb => spark.sql(s"DROP TABLE IF EXISTS $tb"))
         Bm25IndexStore.build(zipf10, "probe_bm25z10", s"$wh/bm25z10",
           buckets = 32)
         spark.table("probe_bm25z10").count()

@@ -333,13 +333,22 @@ object TextAnalysis {
     * token-less ones tf can't see.
     */
   def tfidfTopTermsFromTf(
-      tf: DataFrame, nDocs: DataFrame, k: Int): DataFrame = {
+      tf: DataFrame, nDocs: DataFrame, k: Int): DataFrame =
+    tfidfTopTermsFromDf(
+      tf.join(tf.groupBy("term").agg(count(lit(1)).as("df")), "term"),
+      nDocs, k)
+
+  /** The per-doc top-`k` of (doc_id, term, tf, df) rows by tf·ln(N/df)
+    * — [[tfidfTopTermsFromTf]] with the df supplied, which is how
+    * [[graft.plans.TfidfIndexStore]] weighs an extension batch under
+    * its build's frozen df.
+    */
+  private[graft] def tfidfTopTermsFromDf(
+      tfdf: DataFrame, nDocs: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val w = Window.partitionBy("doc_id")
       .orderBy(col("score").desc, col("term"))
-    tf.join(dfreq, "term")
-      .crossJoin(broadcast(nDocs))
+    tfdf.crossJoin(broadcast(nDocs))
       .withColumn("score",
         round(col("tf") * log(col("n_docs").cast("double") / col("df")), 4))
       .withColumn("rnk", row_number().over(w))
@@ -856,32 +865,47 @@ object TextAnalysis {
   // score with id tie-break is engine-exact.
   // ---------------------------------------------------------------------
   def bm25Retrieval(
-      docs: DataFrame, queryPred: Column, topN: Int,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame =
+      docs: DataFrame, queryPred: Column, topN: Int): DataFrame =
     bm25RetrievalFromTf(termFreq(docs),
-      docs.filter(queryPred).select("doc_id"), topN, k1, b)
+      docs.filter(queryPred).select("doc_id"), topN)
+
+  /** BM25's tf saturation and length normalization, the Lucene
+    * defaults. Fixed for every BM25 ranker and for
+    * [[graft.plans.Bm25IndexStore]], so an extension batch can never
+    * be weighed on a different scale from the saved postings.
+    */
+  private final val Bm25K1 = 1.2
+  private final val Bm25B = 0.75
+
+  /** Per-(doc, term) BM25 weights (doc_id, tkey, w) of (doc_id, term,
+    * tf, df) rows, with `dl` the (doc_id, dl) document lengths and
+    * `stats` the one-row (n_docs, avgdl) corpus constants — the one
+    * definition [[bm25RetrievalFromTf]] and the BM25 index store share.
+    */
+  private[graft] def bm25Weights(
+      tfdf: DataFrame, dl: DataFrame, stats: DataFrame): DataFrame =
+    tfdf.join(dl, "doc_id")
+      .crossJoin(broadcast(stats))
+      .withColumn("idf", log(
+        (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1.0))
+      .withColumn("w", round(
+        col("idf") * (col("tf") * lit(Bm25K1 + 1.0)) /
+          (col("tf") + lit(Bm25K1) *
+            (lit(1.0 - Bm25B) + lit(Bm25B) * col("dl") / col("avgdl"))),
+        4))
+      .select(col("doc_id"), xxhash64(col("term")).as("tkey"), col("w"))
 
   /** BM25 retrieval from a precomputed tf frame — split out so
     * [[hybridRrf]] shares one tokenize pass across both rankers.
     */
   def bm25RetrievalFromTf(
-      tf: DataFrame, queryIds: DataFrame, topN: Int,
-      k1: Double, b: Double): DataFrame = {
+      tf: DataFrame, queryIds: DataFrame, topN: Int): DataFrame = {
     val spark = tf.sparkSession
     import spark.implicits._
     val dl = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
     val stats = dl.agg(count(lit(1)).as("n_docs"), avg("dl").as("avgdl"))
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
-    val weights = tf
-      .join(dfreq, "term").join(dl, "doc_id")
-      .crossJoin(broadcast(stats))
-      .withColumn("idf", log(
-        (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1.0))
-      .withColumn("w", round(
-        col("idf") * (col("tf") * lit(k1 + 1.0)) /
-          (col("tf") + lit(k1) *
-            (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl"))), 4))
-      .select(col("doc_id"), xxhash64(col("term")).as("tkey"), col("w"))
+    val weights = bm25Weights(tf.join(dfreq, "term"), dl, stats)
     val vecs = weights
       .groupBy("doc_id")
       .agg(sort_array(collect_list(struct(col("tkey"), col("w")))).as("tw"))
@@ -1264,7 +1288,7 @@ object TextAnalysis {
     // tf unpersists
     val lexical = tfidfRetrievalFromVecs(
       tfidfVectorsFromTf(tf, nDocs, kVec), queryIds, kList)
-    val bm25 = bm25RetrievalFromTf(tf, queryIds, kList, 1.2, 0.75)
+    val bm25 = bm25RetrievalFromTf(tf, queryIds, kList)
     val out = rrfFusion(Seq(lexical, bm25), topN).localCheckpoint(true)
     tf.unpersist()
     out
@@ -1304,7 +1328,7 @@ object TextAnalysis {
       // consume after tf unpersists
       val lex = tfidfRetrievalFromVecs(
         tfidfVectorsFromTf(tf, nDocs, 10), queryIds, 10)
-      val bm = bm25RetrievalFromTf(tf, queryIds, 10, 1.2, 0.75)
+      val bm = bm25RetrievalFromTf(tf, queryIds, 10)
       tf.unpersist()
       (lex, bm)
     }
@@ -2847,7 +2871,7 @@ object TextAnalysis {
         documents(s, d), bm, s"$tmp/graft_bm25_$id", buckets = 8)
     if (!s.catalog.tableExists(tfx))
       graft.plans.TfidfIndexStore.build(
-        documents(s, d), 10, tfx, s"$tmp/graft_tfidfx_$id", buckets = 8)
+        documents(s, d), tfx, s"$tmp/graft_tfidfx_$id", buckets = 8)
     (tfx, bm)
   }
 

@@ -78,13 +78,7 @@ object AggStore {
     */
   private def save(df: DataFrame, table: String, path: String): Unit = {
     val spark = df.sparkSession
-    val base = new org.apache.hadoop.fs.Path(path)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    val next =
-      if (!fs.exists(base)) 0
-      else fs.listStatus(base).map(_.getPath.getName)
-        .filter(n => n.startsWith("v") && n.drop(1).forall(_.isDigit))
-        .map(_.drop(1).toInt).foldLeft(-1)(math.max) + 1
+    val next = nextVersion(spark, path)
     spark.sql(s"DROP TABLE IF EXISTS $table")
     df.write.option("path", s"$path/v$next").mode("overwrite")
       .format("parquet").saveAsTable(table)
@@ -125,6 +119,15 @@ object AggStore {
       .map(_.toString).toSeq
   }
 
+  /** The `<n>` of the next fresh `v<n>` save under `path`: one past the
+    * newest of [[versionPaths]], 0 when there is none. Every versioned
+    * store (this one and the impact-index stores) picks its save
+    * directory here.
+    */
+  def nextVersion(spark: SparkSession, path: String): Int =
+    versionPaths(spark, path).lastOption
+      .fold(0)(p => new org.apache.hadoop.fs.Path(p).getName.drop(1).toInt + 1)
+
   /** Retention for the version history [[save]] accumulates: delete
     * superseded `v<n>` directories, keeping the newest `keep` (≥ 1, so
     * the live version the catalog table points at is never removable).
@@ -134,18 +137,11 @@ object AggStore {
     */
   def vacuum(spark: SparkSession, path: String, keep: Int = 2): Int = {
     require(keep >= 1, "keep must retain at least the live version")
-    val base = new org.apache.hadoop.fs.Path(path)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(base)) 0
-    else {
-      val doomed = fs.listStatus(base).map(_.getPath)
-        .filter(p => p.getName.startsWith("v") &&
-          p.getName.drop(1).nonEmpty && p.getName.drop(1).forall(_.isDigit))
-        .sortBy(p => -p.getName.drop(1).toInt)
-        .drop(keep)
-      doomed.foreach(p => fs.delete(p, true))
-      doomed.length
-    }
+    val conf = spark.sessionState.newHadoopConf()
+    val doomed = versionPaths(spark, path).dropRight(keep)
+      .map(new org.apache.hadoop.fs.Path(_))
+    doomed.foreach(p => p.getFileSystem(conf).delete(p, true))
+    doomed.length
   }
 
   /** The rollup with read-time derived measures: avg from sum/count.

@@ -8,10 +8,12 @@ import org.apache.spark.sql.functions._
   * batch fetch, the driver-planned orchestration, and on its refusal
   * the distributed one — pre-route, prefix, caps, θ, cutoffs, the
   * essential split, routing, chunked exact scoring and the naive
-  * remainder. A store supplies only what genuinely differs — its lazy
-  * query frame, the impact column (BM25 `w`, tf-idf norm-scaled `wn`),
-  * the per-(query, term) query factor, and its exact-scoring and naive
-  * kernels — so a bound or routing fix lands in exactly one place.
+  * remainder. Its one caller is [[ImpactIndexStore.wandSearch]], which
+  * passes the store's lazy query frame (with the per-(query, term)
+  * query factor), its impact column (BM25 `w`, tf-idf norm-scaled
+  * `wn`), and exact-scoring and naive closures built from the shared
+  * candidate join and naive prologue plus the store's pair tails — so a
+  * bound or routing fix lands in exactly one place.
   */
 private[graft] object WandKernel {
 

@@ -219,7 +219,7 @@ class DocStreamsSpec extends AnyFunSuite {
     val bm = "servestream_bm"
     val tfx = "servestream_tf"
     graft.plans.Bm25IndexStore.build(base, bm, s"$tmp/bm", buckets = 4)
-    graft.plans.TfidfIndexStore.build(base, 10, tfx, s"$tmp/tf",
+    graft.plans.TfidfIndexStore.build(base, tfx, s"$tmp/tf",
       buckets = 4)
     val queryDocs = base.filter(col("doc_id") % 25 === 0).collect()
       .map(r => Doc(r.getLong(0), r.getString(1), "search", ts(0)))

@@ -206,7 +206,7 @@ class IndexStoreSpec extends AnyFunSuite {
     spark.sql(s"DROP TABLE IF EXISTS $table")
     spark.sql(s"DROP TABLE IF EXISTS ${table}_norms")
     val path = Files.createTempDirectory("graft-tfx").toString + "/tfx"
-    TfidfIndexStore.build(base, 10, table, path, buckets = 8)
+    TfidfIndexStore.build(base, table, path, buckets = 8)
     val queryIds = base.filter(col("doc_id") % 25 === 0).select("doc_id")
     val served = TfidfIndexStore.search(spark, table, queryIds, 3)
     def rows(df: DataFrame) = df.collect()
@@ -425,6 +425,20 @@ class IndexStoreSpec extends AnyFunSuite {
       AggStore.vacuum(spark, pInc, keep = 0))
   }
 
+  test("a stray bare `v` entry under an artifact path is not a version: " +
+    "build still picks the next v<n>") {
+    import graft.plans.AggStore
+    val (table, path) = freshAgg("barev")
+    val ev = Tables.events(spark, dir).select(col("event_type"),
+      col("value"))
+    AggStore.build(ev, Seq("event_type"), "value", table, path)
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path, "v"))
+    AggStore.build(ev, Seq("event_type"), "value", table, path)
+    assert(AggStore.versionPaths(spark, path).map(p =>
+      new org.apache.hadoop.fs.Path(p).getName) === Seq("v0", "v1"))
+    assert(spark.table(table).count() > 0)
+  }
+
   test("bm25 store: saved-index search equals the in-session query; " +
     "frozen-stats extension ties a verbatim copy to its original") {
     import graft.plans.Bm25IndexStore
@@ -449,7 +463,7 @@ class IndexStoreSpec extends AnyFunSuite {
     val (q0, _, n1, s1) = served.head
     val copy = docs.filter(col("doc_id") === n1)
       .select((col("doc_id") + 5000000L).as("doc_id"), col("text"))
-    Bm25IndexStore.extend(copy, table, buckets = 4)
+    Bm25IndexStore.extend(copy, table)
     val after = rows(Bm25IndexStore.search(spark, table, queries, 3))
       .filter(_._1 == q0)
     assert(after.map(_._3).contains(n1 + 5000000L),
@@ -497,7 +511,7 @@ class IndexStoreSpec extends AnyFunSuite {
     // rank-0 extended postings always enter the prefix → still exact
     val copies = docs.filter(col("doc_id") % 7 === 0)
       .select((col("doc_id") + 5000000L).as("doc_id"), col("text"))
-    Bm25IndexStore.extend(copies, table, buckets = 4)
+    Bm25IndexStore.extend(copies, table)
     assert(rows(Bm25IndexStore.wandSearch(
       spark, table, queries, 3, prefixP = 2)) ===
       rows(Bm25IndexStore.search(spark, table, queries, 3)))
@@ -509,7 +523,7 @@ class IndexStoreSpec extends AnyFunSuite {
     import spark.implicits._
     val novelBatch = Seq((6000000L, "zzquuxnovel zzquuxnovel alpha"))
       .toDF("doc_id", "text")
-    Bm25IndexStore.extend(novelBatch, table, buckets = 4)
+    Bm25IndexStore.extend(novelBatch, table)
     val qs2 = queries.unionByName(
       Seq((6999999L, "zzquuxnovel")).toDF("doc_id", "text"))
     val expect = rows(Bm25IndexStore.search(spark, table, qs2, 3))
@@ -532,12 +546,12 @@ class IndexStoreSpec extends AnyFunSuite {
       s"${table}_stats").foreach(t =>
       spark.sql(s"DROP TABLE IF EXISTS $t"))
     val path = Files.createTempDirectory("graft-tfxe").toString + "/tfx"
-    TfidfIndexStore.build(base, 10, table, path, buckets = 4)
+    TfidfIndexStore.build(base, table, path, buckets = 4)
     val before = spark.table(table).count()
     // extended batch: verbatim copies of every 7th doc, offset ids
     val copies = base.filter(col("doc_id") % 7 === 0)
       .select((col("doc_id") + 5000000L).as("doc_id"), col("text"))
-    TfidfIndexStore.extend(copies, table, buckets = 4)
+    TfidfIndexStore.extend(copies, table)
     // copies weight identically under the frozen idf → same top-k
     // terms, same norms → each copy's postings mirror its original's
     val post = spark.table(table)
@@ -578,7 +592,7 @@ class IndexStoreSpec extends AnyFunSuite {
     spark.sql(s"DROP TABLE IF EXISTS $table")
     spark.sql(s"DROP TABLE IF EXISTS ${table}_norms")
     val path = Files.createTempDirectory("graft-tfxw").toString + "/tfx"
-    TfidfIndexStore.build(base, 10, table, path, buckets = 8)
+    TfidfIndexStore.build(base, table, path, buckets = 8)
     val queryIds = base.filter(col("doc_id") % 25 === 0).select("doc_id")
     def rows(df: DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
@@ -652,6 +666,43 @@ class IndexStoreSpec extends AnyFunSuite {
         all.mkString(" | "))
       counted.size
     } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("impact-index lifecycle job budget: build, extend, delete and " +
+    "compact launch no more Spark jobs than pinned, for both stores") {
+    import graft.plans.{Bm25IndexStore, TfidfIndexStore}
+    val docs = base
+    val copies = docs.filter(col("doc_id") % 7 === 0)
+      .select((col("doc_id") + 5000000L).as("doc_id"), col("text"))
+    val dead = docs.filter(col("doc_id") % 5 === 0).select("doc_id")
+    def census(body: => Unit): Int = JobCensus.of(spark)(body).size
+    // per store, each lifecycle step with its Spark-job ceiling: the
+    // counts measured before the two stores' lifecycles were folded
+    // into one
+    val (bm, bmPath) = freshTable("bm25life")
+    val (tf, tfPath) = freshTable("tfxlife")
+    val steps: Seq[(String, Seq[(String, () => Unit, Int)])] = Seq(
+      "bm25" -> Seq(
+        ("build", () => Bm25IndexStore.build(docs, bm, bmPath, buckets = 4),
+          13),
+        ("extend", () => Bm25IndexStore.extend(copies, bm), 7),
+        ("delete", () => Bm25IndexStore.delete(spark, bm, dead), 2),
+        ("compact", () => Bm25IndexStore.compact(spark, bm), 8)),
+      "tfidf" -> Seq(
+        ("build", () => TfidfIndexStore.build(docs, tf, tfPath,
+          buckets = 4), 20),
+        ("extend", () => TfidfIndexStore.extend(copies, tf), 15),
+        ("delete", () => TfidfIndexStore.delete(spark, tf, dead), 2),
+        ("compact", () => TfidfIndexStore.compact(spark, tf), 22)))
+    steps.foreach { case (store, lifecycle) =>
+      lifecycle.foreach { case (step, run, cap) =>
+        val jobs = census(run())
+        info(s"$store $step: $jobs jobs")
+        assert(jobs <= cap, s"$store $step: $jobs Spark jobs > pinned $cap")
+      }
+    }
+    Seq(bm, tf).foreach(t =>
+      assert(spark.table(t).join(dead, "doc_id").count() === 0, t))
   }
 
   test("wandSearch driver-planned serve is action-coalesced: the pinned " +
@@ -739,7 +790,7 @@ class IndexStoreSpec extends AnyFunSuite {
       spark.sql(s"DROP TABLE IF EXISTS ${tfTable}_$t"))
     TfidfIndexStore.build(corpus.unionByName(queries).unionByName(
         (1 to 10).map(i => (900L + i, s"filler$i")).toDF("doc_id", "text")),
-      10, tfTable, tfPath, buckets = 4)
+      tfTable, tfPath, buckets = 4)
     val queryIds = queries.select("doc_id")
     def rows(df: DataFrame) = df.collect().map(r =>
       (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
@@ -897,7 +948,7 @@ class IndexStoreSpec extends AnyFunSuite {
     // term and must be the only indexed doc
     val docs = (1L to 4L).map(i => (i, "same same words"))
       .toSeq :+ ((9L, "same distinctive words"))
-    TfidfIndexStore.build(docs.toDF("doc_id", "text"), 10, table, path,
+    TfidfIndexStore.build(docs.toDF("doc_id", "text"), table, path,
       buckets = 4)
     val post = spark.table(table).collect()
     assert(post.forall(r => !r.getDouble(2).isNaN && !r.getDouble(3).isNaN),
@@ -908,8 +959,7 @@ class IndexStoreSpec extends AnyFunSuite {
     assert(norms.forall(_.getDouble(1) > 0.0), "no zero norms persisted")
     // an all-zero EXTEND batch also drops instead of appending NaN
     TfidfIndexStore.extend(
-      Seq((100L, "same words")).toDF("doc_id", "text"), table,
-      buckets = 4)
+      Seq((100L, "same words")).toDF("doc_id", "text"), table)
     assert(spark.table(table).filter(col("doc_id") === 100L).count() === 0)
     // search over the surviving index stays NaN-free
     val got = TfidfIndexStore.search(spark, table,

@@ -770,11 +770,11 @@ object InvariantProps extends Properties("graft.invariants") {
       val qIdFrame = c.queryIds.toDF("doc_id")
       try {
         Bm25IndexStore.build(corpus, bm, s"$tmp/bm", buckets = 2)
-        TfidfIndexStore.build(corpus, 10, tfx, s"$tmp/tf", buckets = 2)
+        TfidfIndexStore.build(corpus, tfx, s"$tmp/tf", buckets = 2)
         if (c.extendB.nonEmpty) {
           val ext = c.extendB.toDF("doc_id", "text")
-          Bm25IndexStore.extend(ext, bm, buckets = 2)
-          TfidfIndexStore.extend(ext, tfx, buckets = 2)
+          Bm25IndexStore.extend(ext, bm)
+          TfidfIndexStore.extend(ext, tfx)
         }
         if (c.dead.nonEmpty) {
           val d = c.dead.toDF("doc_id")
@@ -860,7 +860,7 @@ object InvariantProps extends Properties("graft.invariants") {
       val queryDocs = ext.take(c.nQ).toDF("doc_id", "text")
       try {
         Bm25IndexStore.build(corpus, bm, s"$tmp/bm", buckets = 2)
-        Bm25IndexStore.extend(ext.toDF("doc_id", "text"), bm, buckets = 2)
+        Bm25IndexStore.extend(ext.toDF("doc_id", "text"), bm)
         val P = 1
         // per eligible query: estpre = min(P, df(the)) + 0 + 0 = 1
         val estpreSum = c.nQ.toLong

@@ -71,7 +71,7 @@ class PlanShapeSpec extends AnyFunSuite {
     val path = java.nio.file.Files
       .createTempDirectory("graft-plan-tfx").toString + "/tfx"
     val base = Tables.documents(spark, dir).select("doc_id", "text")
-    plans.TfidfIndexStore.build(base, 10, table, path, buckets = 4)
+    plans.TfidfIndexStore.build(base, table, path, buckets = 4)
     val out = plans.TfidfIndexStore.search(spark, table,
       base.filter(org.apache.spark.sql.functions.col("doc_id") % 25 === 0)
         .select("doc_id"), 3)

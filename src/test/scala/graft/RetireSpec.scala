@@ -108,7 +108,7 @@ class RetireSpec extends AnyFunSuite {
     } finally WandKernel.driverPlanningEnabled.set(true)
     // extend AFTER delete: a re-ingest of a deleted id stays masked
     val reingest = docs.filter(col("doc_id") === dead.head)
-    Bm25IndexStore.extend(reingest, table, buckets = 4)
+    Bm25IndexStore.extend(reingest, table)
     assert(rows4(Bm25IndexStore.search(spark, table, queries, 3))
       === expect, "a re-extended deleted id must stay masked")
     // compact: physical removal — identical results, dead rows gone,
@@ -126,7 +126,7 @@ class RetireSpec extends AnyFunSuite {
   test("tfidf: delete masks neighbors AND the query side; compact is " +
     "observationally identical across search and wandSearch") {
     val (table, path) = fresh("tfx")
-    TfidfIndexStore.build(docs, 10, table, path, buckets = 4)
+    TfidfIndexStore.build(docs, table, path, buckets = 4)
     val queryIds = docs.filter(col("doc_id") % 25 === 0)
       .select("doc_id")
     val pre = rows4(TfidfIndexStore.search(spark, table, queryIds, 10))
@@ -391,7 +391,7 @@ class RetireSpec extends AnyFunSuite {
     val (bm, bmPath) = fresh("wandgap_bm")
     val (tfx, tfPath) = fresh("wandgap_tf")
     Bm25IndexStore.build(corpus, bm, bmPath, buckets = 2)
-    TfidfIndexStore.build(corpus, 10, tfx, tfPath, buckets = 2)
+    TfidfIndexStore.build(corpus, tfx, tfPath, buckets = 2)
     Bm25IndexStore.delete(spark, bm, ids(1L))
     TfidfIndexStore.delete(spark, tfx, ids(1L))
     val q = corpus.filter(col("doc_id") === 2L)
