@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.functions.RepetitionStats
@@ -21,6 +22,13 @@ import graft.operators.Quality
   * `dropDuplicatesWithinWatermark` so state stays bounded by the
   * lateness horizon instead of growing with corpus size — the same
   * at-least-once-source contract as [[EventStreams.dedupStream]].
+  *
+  * Each micro-batch does its work once, on at most one task per core:
+  * [[dedupByContent]] bounds the gate stage's task count, and every
+  * foreachBatch gate that reads its batch more than once reads it
+  * through [[once]]: one job computes the batch, and with it the dedup
+  * state, into blocks that every plan of the gate reads and that are
+  * released when the gate's sink returns.
   *
   * Expected input schema: (doc_id long, text string, source string,
   * ingest_ts timestamp).
@@ -118,10 +126,20 @@ object DocStreams {
     * horizon are dropped, and fingerprint state is evicted once the
     * watermark passes — bounded by arrival rate × horizon, not corpus
     * size.
+    *
+    * The prepared frame is narrow-coalesced to the session's default
+    * parallelism first, so the stage that scans the source, runs
+    * [[prepare]]'s kernels and writes the dedup shuffle runs at most one
+    * task per core. A source that makes many tiny partitions per batch
+    * (MemoryStream: one per `addData` offer; a Kafka topic with more
+    * partitions than cores at a trickle rate) would otherwise pay one
+    * task per partition. The dedup state's own partitioning (the hash
+    * exchange on `fp`) is unchanged.
     */
   def dedupByContent(
       prepared: DataFrame, watermark: String = "1 hour"): DataFrame =
     prepared
+      .coalesce(prepared.sparkSession.sparkContext.defaultParallelism)
       .withWatermark("ingest_ts", watermark)
       .dropDuplicatesWithinWatermark("fp")
 
@@ -181,26 +199,35 @@ object DocStreams {
     * which as a direct stream-static join would be an unbounded
     * streaming aggregation; the canonical production form is
     * `foreachBatch`: each micro-batch runs the BATCH asymmetric matcher
-    * ([[graft.operators.Dedup.crossJaccardMatches]] — batch side
-    * broadcast, persisted corpus index never reshuffled), and only
-    * admitted docs reach the sink. Exactly-once composes the usual way
-    * (idempotent sink keyed on (batchId, doc_id)).
+    * ([[graft.operators.Dedup.crossJaccardMatchesIndexed]] — batch side
+    * broadcast, corpus index never reshuffled), and only admitted docs
+    * reach the sink. Exactly-once composes the usual way (idempotent
+    * sink keyed on (batchId, doc_id)).
     *
-    * The corpus shingle index should be persisted by the caller — it is
-    * reused verbatim for every micro-batch of the run.
+    * The corpus index is reused verbatim for every micro-batch of the
+    * run, so the caller should persist it. Its per-doc shingle counts
+    * are computed here, once, when the query is defined, instead of
+    * re-aggregated over the whole index by every batch; their
+    * checkpoint blocks go when the returned writer and its query are no
+    * longer reachable.
     */
   def admitAgainstCorpus(
       docs: DataFrame, corpusShingles: DataFrame,
       threshold: Double = 0.5, n: Int = 3)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+    val sizes = corpusShingles.groupBy("doc_id").agg(count(lit(1)).as("n"))
+      .localCheckpoint(eager = true)
     docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val shNew = graft.operators.Dedup
-        .shingleIndex(batch.select("doc_id", "text"), n)
-      val matched = graft.operators.Dedup
-        .crossJaccardMatches(shNew, corpusShingles, threshold)
-        .select(col("id_new").as("doc_id")).distinct()
-      sink(batch.join(matched, Seq("doc_id"), "left_anti"), batchId)
+      once(batch) { b =>
+        val matched = graft.operators.Dedup
+          .crossJaccardMatchesIndexed(
+            graft.operators.Dedup.shingleIndex(b.select("doc_id", "text"), n),
+            corpusShingles, sizes, threshold)
+          .select(col("id_new").as("doc_id")).distinct()
+        sink(b.join(matched, Seq("doc_id"), "left_anti"), batchId)
+      }
     }
+  }
 
   /** [[admitAgainstCorpus]] against the PERSISTED signature index
     * ([[graft.plans.ShingleIndexStore]]) instead of an in-session
@@ -225,11 +252,13 @@ object DocStreams {
       threshold: Double = 0.5, n: Int = 3)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val matched = graft.plans.ShingleIndexStore
-        .matchBatchBySignature(batch.select("doc_id", "text"), n, table,
-          threshold)
-        .select(col("id_new").as("doc_id")).distinct()
-      sink(batch.join(matched, Seq("doc_id"), "left_anti"), batchId)
+      once(batch) { b =>
+        val matched = graft.plans.ShingleIndexStore
+          .matchBatchBySignature(b.select("doc_id", "text"), n, table,
+            threshold)
+          .select(col("id_new").as("doc_id")).distinct()
+        sink(b.join(matched, Seq("doc_id"), "left_anti"), batchId)
+      }
     }
 
   /** Streaming DSIR admission: score every arriving document against a
@@ -285,18 +314,20 @@ object DocStreams {
       nprobe: Int = 4)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     vecs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val dup = graft.plans.IvfIndexStore
-        .knn(batch.select("vec_id", "embedding"), 1, nprobe, table)
-        .filter(col("sim") >= threshold)
-        .select(col("query_id").as("vec_id")).distinct()
-      sink(batch.join(dup, Seq("vec_id"), "left_anti"), batchId)
+      once(batch) { b =>
+        val dup = graft.plans.IvfIndexStore
+          .knn(b.select("vec_id", "embedding"), 1, nprobe, table)
+          .filter(col("sim") >= threshold)
+          .select(col("query_id").as("vec_id")).distinct()
+        sink(b.join(dup, Seq("vec_id"), "left_anti"), batchId)
+      }
     }
 
   /** Streaming PERCEPTUAL admission against the saved audio
     * fingerprint index — the media sibling of [[admitBySimilarity]],
     * completing the streaming-gate matrix across modalities (text
     * shingles / embeddings / audio / video): each micro-batch of
-    * (doc_id, payload) clips fingerprints ONLY itself
+    * (doc_id, payload) clips fingerprints ONLY itself, once
     * ([[graft.plans.AhashIndexStore.matchFingerprints]] — the same
     * probe the batch admission uses, so stream ≡ batch admission
     * row-for-row, INCLUDING undecodable payloads: the batch path's
@@ -316,24 +347,17 @@ object DocStreams {
       maxHamming: Int = graft.plans.AhashIndexStore.Radius)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     clips.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      // persist + eager materialize, NOT localCheckpoint: checkpoint
-      // blocks release only when the ContextCleaner GCs the frame, so
-      // an unbounded foreachBatch loop accumulates executor storage
-      // between driver GCs — unpersist in `finally` keeps per-batch
-      // storage bounded deterministically (the batch stores pay this
-      // per CALL; only the streaming loop compounds it)
-      val fps = graft.plans.AhashIndexStore
-        .fingerprints(batch.select("doc_id", "payload"))
-        .persist()
-      try {
-        fps.count() // materialize once; both consumers below read cache
-        val dup = graft.plans.AhashIndexStore
-          .matchFingerprints(fps, table, maxHamming)
-        // left_semi dedups the probe side by definition — no distinct()
-        sink(batch
-          .join(fps.select("doc_id"), Seq("doc_id"), "left_semi")
-          .join(dup, Seq("doc_id"), "left_anti"), batchId)
-      } finally fps.unpersist(false)
+      once(batch) { b =>
+        once(graft.plans.AhashIndexStore
+            .fingerprints(b.select("doc_id", "payload"))) { fps =>
+          val dup = graft.plans.AhashIndexStore
+            .matchFingerprints(fps, table, maxHamming)
+          // left_semi dedups the probe side by definition — no distinct()
+          sink(b
+            .join(fps.select("doc_id"), Seq("doc_id"), "left_semi")
+            .join(dup, Seq("doc_id"), "left_anti"), batchId)
+        }
+      }
     }
 
   /** [[admitByAudioFingerprint]] for VIDEO clips: the probe is the
@@ -347,19 +371,16 @@ object DocStreams {
       maxHamming: Int = graft.plans.VhashIndexStore.Radius)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     clips.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      // persist/unpersist per batch, not localCheckpoint — see the
-      // audio twin's bounded-storage comment
-      val fr = graft.plans.VhashIndexStore
-        .frames(batch.select("doc_id", "payload"))
-        .persist()
-      try {
-        fr.count()
-        val dup = graft.plans.VhashIndexStore
-          .matchFrames(fr, table, maxHamming)
-        sink(batch
-          .join(fr.select("doc_id"), Seq("doc_id"), "left_semi")
-          .join(dup, Seq("doc_id"), "left_anti"), batchId)
-      } finally fr.unpersist(false)
+      once(batch) { b =>
+        once(graft.plans.VhashIndexStore
+            .frames(b.select("doc_id", "payload"))) { fr =>
+          val dup = graft.plans.VhashIndexStore
+            .matchFrames(fr, table, maxHamming)
+          sink(b
+            .join(fr.select("doc_id"), Seq("doc_id"), "left_semi")
+            .join(dup, Seq("doc_id"), "left_anti"), batchId)
+        }
+      }
     }
 
   /** Serving-time streaming RETRIEVAL over the saved BM25 artifact —
@@ -427,15 +448,17 @@ object DocStreams {
       minScore: Double = 0.0)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val admitted = batch
-        .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
-        .join(broadcast(weights), Seq("term"), "left")
-        // avg over exploded occurrences IS the tf-weighted mean
-        .groupBy("doc_id")
-        .agg(avg(coalesce(col("lr"), lit(defaultLr))).as("score"))
-        .filter(col("score") > minScore)
-        .select("doc_id")
-      sink(batch.join(admitted, Seq("doc_id"), "left_semi"), batchId)
+      once(batch) { b =>
+        val admitted = b
+          .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
+          .join(broadcast(weights), Seq("term"), "left")
+          // avg over exploded occurrences IS the tf-weighted mean
+          .groupBy("doc_id")
+          .agg(avg(coalesce(col("lr"), lit(defaultLr))).as("score"))
+          .filter(col("score") > minScore)
+          .select("doc_id")
+        sink(b.join(admitted, Seq("doc_id"), "left_semi"), batchId)
+      }
     }
 
   /** Streaming span scrub: strip from every arriving document the token
@@ -501,6 +524,31 @@ object DocStreams {
       .select(explode(array_distinct(
         shinglesFromTokens(col("toks"), n))).as("g"))
       .distinct()
+
+  /** Runs `body` over `frame` computed exactly once. One job computes
+    * the frame into checkpointed blocks (`localCheckpoint`, which keeps
+    * its statistics and partitioning for the planner), and every
+    * reference to the frame `body` gets reads those blocks, a
+    * self-joined one included. `Dataset.persist` does not give that:
+    * the analyzer re-instances a self-joined reference to a
+    * foreachBatch frame (a scan of an existing RDD) with fresh attribute
+    * ids, the cache lookup misses, and the micro-batch's lineage,
+    * stateful operators included, runs again.
+    *
+    * The blocks are released when `body` returns or throws, not when
+    * the ContextCleaner gets to them, so an unbounded foreachBatch loop
+    * holds one batch's blocks at a time instead of accumulating them
+    * between driver GCs. Spark logs a warning on each release that the
+    * truncated lineage cannot be recomputed: the frame is not read
+    * after `body` returns, which is the foreachBatch contract anyway.
+    */
+  private def once(frame: DataFrame)(body: DataFrame => Unit): Unit = {
+    val cut = frame.localCheckpoint(eager = true)
+    try body(cut)
+    finally cut.queryExecution.analyzed
+      .collect { case r: LogicalRDD => r.rdd }
+      .foreach(_.unpersist(blocking = false))
+  }
 
   /** The full ingest pipeline: gate → scrub → dedup → windowed stats. */
   def pipeline(

@@ -758,4 +758,130 @@ class DocStreamsSpec extends AnyFunSuite {
       assert(streamed === batch)
     } finally q.stop()
   }
+
+  test("one pass per micro-batch: the gate stage runs at most one task " +
+    "per core, and the dedup state runs once per batch") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val dir = "/root/testdata/sf0.001"
+    val base = Tables.documents(spark, dir).select("doc_id", "text")
+    // 40 documents of the admission fixture's batch, each its own
+    // addData offer: the source hands the batch one partition per doc
+    val docs = base.filter(col("doc_id") % 3 === 0)
+      .select((col("doc_id") + 2000000L).as("doc_id"),
+        when(col("doc_id") % 2 === 0, substring(col("text"), 21, 1000000))
+          .otherwise(substring(col("text"), 1, 80)).as("text"))
+      .orderBy("doc_id").limit(40)
+      .collect().map(r => Doc(r.getLong(0), r.getString(1), "crawl", ts(0)))
+    val corpusSh = graft.operators.Dedup.shingleIndex(base, 3).persist()
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-snap-onepass").toString
+    val input = MemoryStream[Doc]
+    docs.foreach(d => input.addData(d))
+    val stageTasks =
+      new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(s: org.apache.spark.scheduler
+          .SparkListenerStageSubmitted): Unit = {
+        stageTasks.add((s.stageInfo.name, s.stageInfo.numTasks)); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    var progress = Array.empty[org.apache.spark.sql.streaming
+      .StreamingQueryProgress]
+    try JobCensus.of(spark) {
+      val q = DocStreams.admitAgainstCorpus(
+        DocStreams.dedupByContent(prepare(input.toDF())), corpusSh)(
+        DocStreams.snapshotSink(root)).start()
+      try q.processAllAvailable() finally q.stop()
+      progress = q.recentProgress
+    } finally spark.sparkContext.removeSparkListener(l)
+    corpusSh.unpersist()
+
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val batches = progress.filter(_.stateOperators.nonEmpty)
+    assert(batches.exists(_.numInputRows > 0))
+    batches.foreach { p =>
+      assert(p.stateOperators(0).numStateStoreInstances === partitions,
+        s"batch ${p.batchId}: the dedup state must run once per batch")
+    }
+    val fps = prepare(docs.toSeq.toDF()).select("fp").distinct().count()
+    assert(batches.filter(_.numInputRows > 0).last.stateOperators(0)
+      .numRowsTotal === fps, "state holds each distinct fingerprint once")
+    val slots = spark.sparkContext.defaultParallelism
+    import scala.jdk.CollectionConverters._
+    val wide = stageTasks.asScala.filter(_._2 > slots).toSeq
+    assert(wide.isEmpty,
+      s"stages over $slots tasks, one per source offer: $wide")
+    val landed = graft.plans.SnapshotStore.read(spark, root)
+      .select("doc_id").as[Long].collect().toSet
+    val expect = graft.operators.Dedup.qIncrementalDedup(spark, dir)
+      .collect().map(_.getLong(0)).toSet
+      .intersect(docs.map(_.doc_id).toSet)
+    assert(landed === expect,
+      "one-pass admission must equal the one-shot batch result")
+    assert(landed.nonEmpty)
+  }
+
+  test("perceptual admission reads each micro-batch once and runs its " +
+    "fingerprint kernel outside the sink's plan") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import graft.multimodal.{Multimodal => MM}
+    val ids = Tables.documents(spark, "/root/testdata/sf0.001")
+      .select("doc_id").as[Long].collect().filter(_ % 16 == 0).take(4).toSeq
+    // the payload column passes through a counting tap ahead of the
+    // gate: every evaluation of the micro-batch's lineage counts once
+    // per row
+    val produced = spark.sparkContext.longAccumulator("payload rows")
+    val tap = udf { (b: Array[Byte]) => produced.add(1); b }
+      .asNondeterministic()
+    def kernelIn(df: org.apache.spark.sql.DataFrame, kernel: Class[_]) =
+      df.queryExecution.optimizedPlan
+        .exists(_.expressions.exists(_.exists(e => kernel.isInstance(e))))
+    def runGate(rows: Seq[(Long, Array[Byte])], kernel: Class[_])(
+        gate: org.apache.spark.sql.DataFrame => ((org.apache.spark.sql
+          .DataFrame, Long) => Unit) => org.apache.spark.sql.streaming
+          .DataStreamWriter[org.apache.spark.sql.Row]): Set[Long] = {
+      val admitted = scala.collection.mutable.Set[Long]()
+      var inSink = false
+      val in = MemoryStream[(Long, Array[Byte])]
+      in.addData(rows: _*)
+      produced.reset()
+      val q = gate(in.toDF().select(col("_1").as("doc_id"),
+        tap(col("_2")).as("payload"))) { (out, _) =>
+        inSink = inSink || kernelIn(out, kernel)
+        admitted ++= out.select("doc_id").collect().map(_.getLong(0))
+      }.start()
+      try q.processAllAvailable() finally q.stop()
+      assert(produced.value === rows.length.toLong,
+        s"${kernel.getSimpleName}: the micro-batch must be computed once")
+      assert(!inSink, s"${kernel.getSimpleName} must not rerun in the sink")
+      admitted.toSet
+    }
+
+    val aTable = "ahash_stream_once"
+    spark.sql(s"DROP TABLE IF EXISTS $aTable")
+    graft.plans.AhashIndexStore.build(
+      ids.map(id => (id, MM.renderClip(id, copy = false)))
+        .toDF("doc_id", "payload"), aTable, java.nio.file.Files
+        .createTempDirectory("graft-ahash-once").toString + "/idx")
+    val aRows = ids.map(id => (id + 1000000L, MM.renderClip(id, copy = true))) ++
+      Seq((2000016L, MM.renderClip(2000016L, copy = false)),
+        (9999999L, Array[Byte](1, 2, 3)))
+    assert(runGate(aRows, classOf[graft.functions.AHash64Expr])(
+      DocStreams.admitByAudioFingerprint(_, aTable)) === Set(2000016L))
+
+    val vTable = "vhash_stream_once"
+    spark.sql(s"DROP TABLE IF EXISTS $vTable")
+    graft.plans.VhashIndexStore.build(
+      ids.map(id => (id, MM.renderVideo(id, copy = false)))
+        .toDF("doc_id", "payload"), vTable, java.nio.file.Files
+        .createTempDirectory("graft-vhash-once").toString + "/idx")
+    val vRows = ids.map(id => (id + 1000000L, MM.renderVideo(id, copy = true))) ++
+      Seq((2000016L, MM.renderVideo(2000016L, copy = false)),
+        (9999999L, Array[Byte](4, 5, 6)))
+    assert(runGate(vRows, classOf[graft.functions.VHashFramesExpr])(
+      DocStreams.admitByVideoFingerprint(_, vTable)) === Set(2000016L))
+  }
 }

@@ -843,4 +843,22 @@ class SnapshotStoreSpec extends AnyFunSuite {
     assert(idSet(SnapshotStore.read(spark, root)) === (100L to 100L + N).toSet,
       "state() replayed a stale cached live set from the old incarnation")
   }
+
+  test("appendOnce Spark-job budget: one data write plus the schema " +
+    "inference over the live groups; a replayed tag runs no job") {
+    val root = freshRoot()
+    SnapshotStore.appendOnce(df(1, 2), root, "batch-0")
+    SnapshotStore.appendOnce(df(3), root, "batch-1")
+    val jobs = JobCensus.of(spark) {
+      assert(SnapshotStore.appendOnce(df(4, 5), root, "batch-2") === Some(2))
+    }
+    // the group write, and the schema check's inference over the live
+    // groups' footers: a ceiling at today's count that may only go down
+    assert(jobs.size <= 2, s"appendOnce ran ${jobs.size} Spark " +
+      s"jobs: ${jobs.map(_.stages.mkString("+")).mkString("; ")}")
+    val replay = JobCensus.of(spark) {
+      assert(SnapshotStore.appendOnce(df(6), root, "batch-2") === None)
+    }
+    assert(replay.isEmpty, s"a replayed tag ran Spark jobs: $replay")
+  }
 }
