@@ -735,13 +735,11 @@ object ScaleProbe {
     t("ivf staleness vs recall under drifted extend (signal + recall " +
       "co-move; default-threshold rebuild recovers)") {
       import graft.plans.IvfIndexStore
-      Seq("probe_ivf_stale", "probe_ivf_stale_cells", "probe_ivf_stale_stats")
-        .foreach(tb => spark.sql(s"DROP TABLE IF EXISTS $tb"))
       val path = java.nio.file.Files
         .createTempDirectory("graft-probe-ivfstale").toString + "/ivf"
       IvfIndexStore.build(emb, nlist = 48, "probe_ivf_stale", path, buckets = 8)
       val sFresh = IvfIndexStore.staleness(spark, "probe_ivf_stale")
-      IvfIndexStore.extend(driftedEmb, "probe_ivf_stale", buckets = 8)
+      IvfIndexStore.extend(driftedEmb, "probe_ivf_stale")
       val sDrift = IvfIndexStore.staleness(spark, "probe_ivf_stale")
       val union = emb.unionByName(driftedEmb).localCheckpoint(true)
       val q = driftedEmb.filter(col("vec_id") % 997 === 0)
@@ -766,7 +764,7 @@ object ScaleProbe {
         q, k = 5, nprobe = 6, "probe_ivf_stale"), exact)
       val candDrifted = candidatesPerQuery()
       val rebuilt = IvfIndexStore.rebuildIfStale(
-        spark, "probe_ivf_stale", path, buckets = 8)
+        spark, "probe_ivf_stale", path)
       val recallRebuilt = driftRecall(IvfIndexStore.knn(
         q, k = 5, nprobe = 6, "probe_ivf_stale"), exact)
       val candRebuilt = candidatesPerQuery()
@@ -778,9 +776,6 @@ object ScaleProbe {
     t("pq staleness vs recall under drifted extend (frozen codebooks " +
       "mis-quantize the new cluster; default-threshold rebuild recovers)") {
       import graft.plans.PqStore
-      Seq("probe_pq_stale", "probe_pq_stale_codes", "probe_pq_stale_rot",
-        "probe_pq_stale_stats")
-        .foreach(tb => spark.sql(s"DROP TABLE IF EXISTS $tb"))
       val path = java.nio.file.Files
         .createTempDirectory("graft-probe-pqstale").toString + "/pq"
       PqStore.build(emb, 8, 64, "probe_pq_stale", path)
@@ -887,9 +882,6 @@ object ScaleProbe {
     // rebuilding the corpus index from scratch
     t("incremental index 50k docs (build once)") {
       val wh = java.nio.file.Files.createTempDirectory("graft-idx").toString
-      spark.sql("DROP TABLE IF EXISTS probe_idx")
-      spark.sql("DROP TABLE IF EXISTS probe_idx_sizes")
-      spark.sql("DROP TABLE IF EXISTS probe_idx_sigs")
       graft.plans.ShingleIndexStore.build(
         docs, 3, "probe_idx", s"$wh/idx", buckets = 32)
       spark.table("probe_idx").count()
@@ -901,8 +893,7 @@ object ScaleProbe {
       graft.plans.ShingleIndexStore
         .matchBatch(idxBatch, 3, "probe_idx", 0.5).count())
     t("incremental index: extend (append 5k docs)") {
-      graft.plans.ShingleIndexStore.extend(
-        idxBatch, 3, "probe_idx", buckets = 32)
+      graft.plans.ShingleIndexStore.extend(idxBatch, 3, "probe_idx")
       spark.table("probe_idx_sizes").count()
     }
     // the twin WITHOUT the artifact: re-shingle the whole corpus to
@@ -1699,7 +1690,6 @@ object ScaleProbe {
       import spark.implicits._
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
       val aTable = "probe_soak_ahash"
-      spark.sql(s"DROP TABLE IF EXISTS $aTable")
       val aPath = java.nio.file.Files
         .createTempDirectory("graft-soak-ahash").toString + "/idx"
       t("docsoak: build 2k-clip audio fingerprint index") {
@@ -1723,7 +1713,8 @@ object ScaleProbe {
         val in = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[(Long, Array[Byte])]
         val admitted = new java.util.concurrent.atomic.AtomicLong(0)
-        val q = graft.streaming.DocStreams.admitByAudioFingerprint(
+        val q = graft.streaming.DocStreams
+          .admitByFingerprint(graft.plans.AhashIndexStore)(
           in.toDF().toDF("doc_id", "payload"), aTable) { (out, _) =>
           admitted.addAndGet(out.count()); ()
         }.start()

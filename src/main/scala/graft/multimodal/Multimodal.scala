@@ -714,7 +714,7 @@ object Multimodal {
     */
   private def videoFrames(s: SparkSession, d: String): DataFrame =
     memo(s, d, "vframes")(
-      graft.plans.VhashIndexStore.frames(videoCorpus(s, d)))
+      graft.plans.VhashIndexStore.fingerprints(videoCorpus(s, d)))
 
   /** Memoized clip-level pair list over [[videoFrames]] — both the
     * pair row and its recall ledger read this one materialized list
@@ -813,7 +813,7 @@ object Multimodal {
       .take(12)
     val table = s"graft_vhashidx_$tag"
     val path = s"${sys.props("java.io.tmpdir")}/graft_vhashidx_$tag"
-    graft.plans.VhashIndexStore.buildFromFrames(
+    graft.plans.VhashIndexStore.buildFromFingerprints(
       videoFrames(s, d), table, path)
     import s.implicits._
     val batch = Tables.documents(s, d).select("doc_id")

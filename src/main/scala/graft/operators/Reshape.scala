@@ -276,7 +276,7 @@ object Reshape {
     graft.plans.AggStore.build(ev.filter(col("day") < cut),
       Seq("event_type", "day"), "cents", table, path)
     graft.plans.AggStore.extend(
-      ev.filter(col("day") >= cut), "cents", table, path)
+      ev.filter(col("day") >= cut), "cents", table)
     // display shaping: the 2dp money columns round AT their native
     // precision (never a .5 boundary), while avg carries sub-cent
     // precision and so is emitted as EXACT integer micro-dollars via
@@ -1165,7 +1165,7 @@ object Reshape {
         .select("event_type", "wk", "cents"),
       Seq("event_type", "wk"), "cents", table, path)
     graft.plans.AggStore.extend(ev.filter(col("day") >= cut)
-      .select("event_type", "wk", "cents"), "cents", table, path)
+      .select("event_type", "wk", "cents"), "cents", table)
     // diff the two NEWEST versions (repeat invocations append history;
     // the latest pair is always this run's build/extend)
     val vs = graft.plans.AggStore.versionPaths(s, path)

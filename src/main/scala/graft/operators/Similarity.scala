@@ -1803,7 +1803,7 @@ object Similarity {
       .unionByName(base.filter(col("vec_id") % 5 === 1)
         .select((col("vec_id") + 2000000L).as("vec_id"),
           transform(col("embedding"), x => -x).as("embedding")))
-    graft.plans.IvfIndexStore.admitAndExtend(batch, table, 8, 0.9)
+    graft.plans.IvfIndexStore.admitAndExtend(batch, table, 0.9)
       .orderBy("vec_id")
   }
 

@@ -65,84 +65,37 @@ object AggStore {
         min("min_v").as("min_v"), max("max_v").as("max_v"))
   }
 
-  /** Each save lands in a fresh `v<n>` subdirectory and the table is
-    * repointed at it — never an in-place overwrite of a directory a
-    * live plan may have listed. Overwriting in place corrupts reads two
-    * ways at once: the JVM-shared file-status cache can serve the
-    * replaced listing (observed: FAILED_READ_FILE on the overwritten
-    * part file every bench iteration), and on object stores a
-    * concurrent reader sees a half-deleted prefix. Write-new-then-
-    * repoint is the atomic-swap discipline table formats formalize;
-    * the superseded `v<n-1>` dirs double as the snapshot history the
-    * CDC diff derivation consumes.
-    */
-  private def save(df: DataFrame, table: String, path: String): Unit = {
-    val spark = df.sparkSession
-    val next = nextVersion(spark, path)
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    df.write.option("path", s"$path/v$next").mode("overwrite")
-      .format("parquet").saveAsTable(table)
-  }
-
   /** Aggregate `facts` by `dims` over `measure` and persist the state
-    * table — the one full historical scan.
+    * table — the one full historical scan. Each save is a fresh
+    * [[Publish]] version directly under `v<n>`, so the version
+    * directories ARE the snapshot history: consecutive entries of
+    * [[versionPaths]] diff into a change feed (see `q_rollup_cdc`).
     */
   def build(facts: DataFrame, dims: Seq[String], measure: String,
       table: String, path: String): Unit =
-    save(partials(facts, dims, measure), table, path)
+    Publish.version(facts.sparkSession, path, Seq(table -> ""))(
+      _.save(partials(facts, dims, measure), table))
 
   /** Fold `batch` into the saved state: one agg over the batch only,
-    * merged with the |dims|-row artifact. Materialized via
-    * `localCheckpoint` BEFORE the overwrite for the [[LmStore.extend]]
-    * reason — the merge plan reads the very table the write replaces.
+    * merged with the |dims|-row live version into the next version
+    * beside it.
     */
-  def extend(batch: DataFrame, measure: String, table: String,
-      path: String): Unit = {
-    val saved = batch.sparkSession.table(table)
-    val merged = merge(saved, partials(batch, dimsOf(saved), measure))
-      .localCheckpoint(true)
-    save(merged, table, path)
+  def extend(batch: DataFrame, measure: String, table: String): Unit = {
+    val spark = batch.sparkSession
+    val saved = spark.table(table)
+    Publish.version(spark, Publish.root(spark, table), Seq(table -> ""))(
+      _.save(merge(saved, partials(batch, dimsOf(saved), measure)), table))
   }
 
-  /** The version directories under `path`, oldest → newest. This IS the
-    * snapshot history: consecutive entries diff into a change feed
-    * (see `q_rollup_cdc`).
-    */
-  def versionPaths(spark: SparkSession, path: String): Seq[String] = {
-    val base = new org.apache.hadoop.fs.Path(path)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(base)) Seq.empty
-    else fs.listStatus(base).map(_.getPath)
-      .filter(p => p.getName.startsWith("v") &&
-        p.getName.drop(1).nonEmpty && p.getName.drop(1).forall(_.isDigit))
-      .sortBy(_.getName.drop(1).toInt)
-      .map(_.toString).toSeq
-  }
+  def versionPaths(spark: SparkSession, path: String): Seq[String] =
+    Publish.versionPaths(spark, path)
 
-  /** The `<n>` of the next fresh `v<n>` save under `path`: one past the
-    * newest of [[versionPaths]], 0 when there is none. Every versioned
-    * store (this one and the impact-index stores) picks its save
-    * directory here.
+  /** [[Publish.vacuum]]: the snapshot-history use case (CDC diff between
+    * versions) sets `keep` to its window; a pure latest-state store
+    * vacuums with keep=1 after every extend.
     */
-  def nextVersion(spark: SparkSession, path: String): Int =
-    versionPaths(spark, path).lastOption
-      .fold(0)(p => new org.apache.hadoop.fs.Path(p).getName.drop(1).toInt + 1)
-
-  /** Retention for the version history [[save]] accumulates: delete
-    * superseded `v<n>` directories, keeping the newest `keep` (≥ 1, so
-    * the live version the catalog table points at is never removable).
-    * Returns the number of versions removed. The snapshot-history use
-    * case (CDC diff between versions) sets `keep` to its window; a pure
-    * latest-state store vacuums with keep=1 after every extend.
-    */
-  def vacuum(spark: SparkSession, path: String, keep: Int = 2): Int = {
-    require(keep >= 1, "keep must retain at least the live version")
-    val conf = spark.sessionState.newHadoopConf()
-    val doomed = versionPaths(spark, path).dropRight(keep)
-      .map(new org.apache.hadoop.fs.Path(_))
-    doomed.foreach(p => p.getFileSystem(conf).delete(p, true))
-    doomed.length
-  }
+  def vacuum(spark: SparkSession, path: String, keep: Int = 2): Int =
+    Publish.vacuum(spark, path, keep)
 
   /** The rollup with read-time derived measures: avg from sum/count.
     * No rounding here — display shaping is the caller's; the state keeps

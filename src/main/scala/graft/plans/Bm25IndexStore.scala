@@ -36,33 +36,36 @@ object Bm25IndexStore extends ImpactIndexStore(
     impact = "w", scoreName = "score", sides = Seq("df", "stats"),
     docKeyedSides = Nil) {
 
-  /** Postings (tkey, doc_id, w) of a (doc_id, term, tf) frame under
-    * `table`'s saved df and stats; terms absent from the df table weigh
-    * with df = 0.
+  /** Postings (tkey, doc_id, w) of a (doc_id, term, tf) frame under the
+    * saved `df` and `stats` tables; terms absent from `df` weigh with
+    * df = 0.
     */
-  private def weigh(tf: DataFrame, table: String): DataFrame = {
-    val spark = tf.sparkSession
+  private def weigh(tf: DataFrame, df: DataFrame,
+      stats: DataFrame): DataFrame =
     TextAnalysis.bm25Weights(
-      tf.join(spark.table(dfTable(table)).withColumnRenamed("tkey", "tk"),
+      tf.join(df.withColumnRenamed("tkey", "tk"),
           xxhash64(col("term")) === col("tk"), "left")
         .withColumn("df", coalesce(col("df"), lit(0L))),
-      tf.groupBy("doc_id").agg(sum("tf").as("dl")),
-      spark.table(statsTable(table)))
+      tf.groupBy("doc_id").agg(sum("tf").as("dl")), stats)
       .select("tkey", "doc_id", "w")
-  }
 
-  protected def weighBuild(docs: DataFrame, b: Build): DataFrame = {
-    val tf = b.hold(TextAnalysis.termFreq(docs))
-    b.save(tf.groupBy("term").agg(count(lit(1)).as("df"))
-      .select(xxhash64(col("term")).as("tkey"), col("df")), "df")
-    b.save(tf.groupBy("doc_id").agg(sum("tf").as("dl"))
-      .agg(count(lit(1)).as("n_docs"), avg("dl").as("avgdl")), "stats")
-    weigh(tf, b.table)
+  protected def weighBuild(docs: DataFrame, table: String, buckets: Int,
+      v: Publish.Version): DataFrame = {
+    val tf = v.hold(TextAnalysis.termFreq(docs))
+    weigh(tf,
+      v.save(tf.groupBy("term").agg(count(lit(1)).as("df"))
+        .select(xxhash64(col("term")).as("tkey"), col("df")), dfTable(table)),
+      v.save(tf.groupBy("doc_id").agg(sum("tf").as("dl"))
+        .agg(count(lit(1)).as("n_docs"), avg("dl").as("avgdl")),
+        statsTable(table)))
   }
 
   protected def weighExtend(batch: DataFrame, table: String,
-      buckets: Int): DataFrame =
-    weigh(TextAnalysis.termFreq(batch), table).localCheckpoint(true)
+      buckets: Int): DataFrame = {
+    val spark = batch.sparkSession
+    weigh(TextAnalysis.termFreq(batch), spark.table(dfTable(table)),
+      spark.table(statsTable(table))).localCheckpoint(true)
+  }
 
   /** The batch's distinct (query_id, tkey) terms. */
   private def queryTerms(queryDocs: DataFrame): DataFrame =

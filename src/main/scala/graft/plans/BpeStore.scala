@@ -28,13 +28,13 @@ object BpeStore {
 
   def mergesTable(table: String): String = s"${table}_bpe_merges"
 
-  /** Train on `corpus` (doc_id, text) and save the ordered merge table
-    * (rnk, lhs, rhs, freq) under `path`, registered as an external
-    * table, plus the build-time usage baseline [[staleness]] reads
-    * (bundled — the two stores implement one policy, and a retrain
-    * that kept an old baseline would poison every later staleness
-    * reading; the extra cost is one vocab-broadcast segmentation pass
-    * over the word table).
+  /** Train on `corpus` (doc_id, text) and publish the ordered merge
+    * table (rnk, lhs, rhs, freq) as a fresh version under `path`, with
+    * the build-time usage baseline [[staleness]] reads as its `stats`
+    * member (bundled — the two stores implement one policy, and a
+    * retrain that kept an old baseline would poison every later
+    * staleness reading; the extra cost is one vocab-broadcast
+    * segmentation pass over the word table).
     */
   def build(
       corpus: DataFrame, numMerges: Int, table: String,
@@ -53,20 +53,24 @@ object BpeStore {
     */
   def buildFromWords(
       spark: SparkSession, words: DataFrame, numMerges: Int,
-      table: String, path: String): Unit = {
-    val merges = TextAnalysis.bpeLearnFromWords(words, numMerges)
-    spark.sql(s"DROP TABLE IF EXISTS ${mergesTable(table)}")
-    merges.write.option("path", path).mode("overwrite")
-      .format("parquet").saveAsTable(mergesTable(table))
-    saveStatsFromWords(spark, words, table, path)
-  }
+      table: String, path: String): Unit =
+    Publish.version(spark, path, Seq(mergesTable(table) -> "merges",
+        statsTable(table) -> "stats")) { v =>
+      val (uses, nWords) = usageFromWords(words, mergeList(v.save(
+        TextAnalysis.bpeLearnFromWords(words, numMerges), mergesTable(table))))
+      v.save(UsageStats.baseline(spark, uses, nWords, "sym"),
+        statsTable(table))
+    }
+
+  private def mergeList(merges: DataFrame): Seq[(String, String)] =
+    merges.orderBy("rnk")
+      .collect().map(r => (r.getString(1), r.getString(2))).toSeq
 
   /** The saved merge list in rank order — numMerges rows by
     * construction, so the collect is the artifact's defining size.
     */
   def loadMerges(spark: SparkSession, table: String): Seq[(String, String)] =
-    spark.table(mergesTable(table)).orderBy("rnk")
-      .collect().map(r => (r.getString(1), r.getString(2))).toSeq
+    mergeList(spark.table(mergesTable(table)))
 
   /** Encode `docs` (doc_id, text) under the frozen artifact: segment
     * the batch's DISTINCT words by ordered merge application (vocab-
@@ -108,25 +112,6 @@ object BpeStore {
     (uses, nWords)
   }
 
-  /** Persist the build-time usage baseline for [[staleness]].
-    * [[build]] calls this itself — the baseline must always refresh
-    * with the artifact (a retrain that kept an old baseline would
-    * poison every later staleness reading).
-    */
-  def saveStats(
-      corpus: DataFrame, table: String, path: String): Unit =
-    saveStatsFromWords(corpus.sparkSession,
-      graft.operators.Unigram.wordFreq(
-        corpus.select(col("doc_id"), col("text"))), table, path)
-
-  private def saveStatsFromWords(
-      spark: SparkSession, words: DataFrame, table: String,
-      path: String): Unit = {
-    val (uses, nWords) = usageFromWords(words, loadMerges(spark, table))
-    UsageStats.save(spark, uses, nWords,
-      statsTable(table), path + "_stats", "sym")
-  }
-
   /** Measured drift of the frozen merge table against its build-time
     * baseline — [[UnigramStore.staleness]]'s semantics for the BPE
     * family ([[UsageStats.fold]], one definition): residualGrowth =
@@ -152,9 +137,7 @@ object BpeStore {
 
   /** Re-train from `corpus` when either signal clears its ceiling;
     * the rebuilt artifact (merges + refreshed baseline, [[build]]
-    * bundles both) lands at the next free versioned location
-    * ([[UsageStats.nextRebuildPath]] — never over a directory a live
-    * plan may still be reading).
+    * bundles both) is the next version under `path`.
     */
   def rebuildIfStale(
       corpus: DataFrame, numMerges: Int, table: String, path: String,
@@ -165,8 +148,7 @@ object BpeStore {
       corpus.select(col("doc_id"), col("text")))
     val st = stalenessFromWords(spark, words, table)
     if (st.isStale(residualMax, skewMax)) {
-      buildFromWords(spark, words, numMerges, table,
-        UsageStats.nextRebuildPath(path))
+      buildFromWords(spark, words, numMerges, table, path)
       (st, true)
     } else (st, false)
   }

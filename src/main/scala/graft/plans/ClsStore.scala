@@ -28,19 +28,16 @@ object ClsStore {
 
   def weightsTable(table: String): String = s"${table}_cls_weights"
 
-  /** Train on `corpus` (doc_id, text) and save the weight vector as
-    * (j, w) rows under `path`, registered as an external table.
+  /** Train on `corpus` (doc_id, text) and publish the weight vector as
+    * (j, w) rows, a fresh version under `path`.
     */
   def build(corpus: DataFrame, table: String, path: String): Unit = {
     val w = Classifier.train(Classifier.features(corpus))
     val spark = corpus.sparkSession
     import spark.implicits._
-    spark.sql(s"DROP TABLE IF EXISTS ${weightsTable(table)}")
-    w.toSeq.zipWithIndex.map { case (wj, j) => (j, wj) }
-      .toDF("j", "w")
-      .coalesce(1)
-      .write.option("path", path).mode("overwrite")
-      .format("parquet").saveAsTable(weightsTable(table))
+    Publish.version(spark, path, Seq(weightsTable(table) -> "weights"))(
+      _.save(w.toSeq.zipWithIndex.map { case (wj, j) => (j, wj) }
+        .toDF("j", "w").coalesce(1), weightsTable(table)))
   }
 
   /** The saved weight vector — #features rows by construction. */

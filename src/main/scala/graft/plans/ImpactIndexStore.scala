@@ -1,9 +1,7 @@
 package graft.plans
 
-import scala.collection.mutable.ArrayBuffer
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -17,9 +15,8 @@ import org.apache.spark.sql.functions._
   * store's impact column, rnk_w), bucketed + sorted by the 64-bit term
   * fingerprint so term-keyed consumers scan pre-partitioned buckets
   * (the [[ShingleIndexStore]] argument) — plus the store's side tables
-  * `<table>_<side>`. Each build saves under a fresh `v<n>` directory
-  * (the [[AggStore]] discipline: a rebuild never overwrites a directory
-  * a live plan may have listed).
+  * `<table>_<side>`, written and published together as one [[Publish]]
+  * version.
   *
   * A store supplies only its algebra: side tables, build and extend
   * weighting, the WAND query frame `(query_id, tkey, qf, df, …)` and,
@@ -35,19 +32,6 @@ private[graft] abstract class ImpactIndexStore(
   def dfTable(table: String): String = side(table, "df")
   def statsTable(table: String): String = side(table, "stats")
 
-  /** One build in progress: [[save]] writes a side table into the fresh
-    * version directory, [[hold]] persists a frame until the postings
-    * are written.
-    */
-  protected final class Build(val table: String, val buckets: Int,
-      vdir: String) {
-    private[ImpactIndexStore] val held = ArrayBuffer.empty[DataFrame]
-    def save(df: DataFrame, name: String): Unit =
-      df.write.option("path", s"$vdir/$name").mode("overwrite")
-        .format("parquet").saveAsTable(side(table, name))
-    def hold(df: DataFrame): DataFrame = { held += df; df.persist() }
-  }
-
   /** One query batch's scoring algebra: `q` is the query side the
     * postings join on `tkey` (query_id, tkey, …); `naive` scores every
     * matched (query, posting) row of the batch into (partial) scores
@@ -57,8 +41,11 @@ private[graft] abstract class ImpactIndexStore(
   protected final class Pairs(val q: DataFrame,
       val naive: DataFrame => DataFrame, val exact: DataFrame => DataFrame)
 
-  /** The corpus postings (tkey, doc_id, w, impact), side tables saved. */
-  protected def weighBuild(docs: DataFrame, b: Build): DataFrame
+  /** The corpus postings (tkey, doc_id, w, impact), side tables saved
+    * into `v`.
+    */
+  protected def weighBuild(docs: DataFrame, table: String, buckets: Int,
+      v: Publish.Version): DataFrame
 
   /** The batch's postings under the FROZEN side tables, its rows in the
     * doc-keyed side tables appended.
@@ -88,21 +75,14 @@ private[graft] abstract class ImpactIndexStore(
     * worst list; the fixture corpora sort in-task.
     */
   def build(docs: DataFrame, table: String, path: String,
-      buckets: Int): Unit = {
-    val spark = docs.sparkSession
-    (table +: sides.map(side(table, _)))
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    Retire.reset(spark, table)
-    val vdir = s"$path/v${AggStore.nextVersion(spark, path)}"
-    val b = new Build(table, buckets, vdir)
-    weighBuild(docs, b)
-      .withColumn("rnk_w", row_number().over(Window.partitionBy("tkey")
-        .orderBy(col(impact).desc, col("doc_id"))))
-      .write.bucketBy(buckets, "tkey").sortBy("tkey", "rnk_w")
-      .option("path", s"$vdir/postings").mode("overwrite")
-      .format("parquet").saveAsTable(table)
-    b.held.foreach(_.unpersist())
-  }
+      buckets: Int): Unit =
+    Publish.version(docs.sparkSession, path,
+        (table -> "postings") +: sides.map(n => side(table, n) -> n)) { v =>
+      v.save(weighBuild(docs, table, buckets, v)
+        .withColumn("rnk_w", row_number().over(Window.partitionBy("tkey")
+          .orderBy(col(impact).desc, col("doc_id")))),
+        table, Some(BucketSpec(buckets, Seq("tkey"), Seq("tkey", "rnk_w"))))
+    }
 
   /** Fold a new document batch in under the FROZEN build statistics:
     * weigh ONLY the batch, append per-bucket files (bucket count read
@@ -118,13 +98,10 @@ private[graft] abstract class ImpactIndexStore(
     * ranks.
     */
   def extend(batch: DataFrame, table: String): Unit = {
-    val spec = batch.sparkSession.sessionState.catalog
-      .getTableMetadata(TableIdentifier(table)).bucketSpec
-    val buckets =
-      spec.getOrElse(sys.error(s"$table is not bucketed")).numBuckets
-    weighExtend(batch, table, buckets).withColumn("rnk_w", lit(0))
-      .write.bucketBy(buckets, "tkey").sortBy("tkey", "rnk_w")
-      .mode("append").format("parquet").saveAsTable(table)
+    val buckets = Publish.bucketSpec(batch.sparkSession, table)
+      .getOrElse(sys.error(s"$table is not bucketed")).numBuckets
+    Publish.append(
+      weighExtend(batch, table, buckets).withColumn("rnk_w", lit(0)), table)
   }
 
   /** Tombstone `ids` (doc_id rows) — deleted docs vanish from results,

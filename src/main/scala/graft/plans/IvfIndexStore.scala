@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -35,45 +36,30 @@ object IvfIndexStore {
   def cellsTable(table: String): String = s"${table}_cells"
   def statsTable(table: String): String = s"${table}_stats"
 
-  /** Train the quantizer on `emb` and persist centroids + the corpus
-    * cell assignment under `path` / catalog names `table`,
-    * `<table>_cells`.
+  /** Train the quantizer on `emb` and publish centroids, the corpus
+    * cell assignment and the staleness baseline as a fresh version under
+    * `path` / catalog names `table`, `<table>_cells`, `<table>_stats`.
     */
   def build(
       emb: DataFrame, nlist: Int, table: String, path: String,
       buckets: Int, iters: Int = 2, sampleCap: Int = 0): Unit = {
     val spark = emb.sparkSession
     import spark.implicits._
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    spark.sql(s"DROP TABLE IF EXISTS ${cellsTable(table)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${statsTable(table)}")
-    Retire.reset(spark, table)
-    val base = emb.select("vec_id", "embedding")
-    val centroids = Similarity.ivfIndex(base, nlist, iters, sampleCap)
-    centroids.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cell", "centroid")
-      .write
-      .option("path", path)
-      .mode("overwrite")
-      .format("parquet")
-      .saveAsTable(table)
-    assign(base, centroids).write
-      .bucketBy(buckets, "cell")
-      .sortBy("cell")
-      .option("path", s"${path}_cells")
-      .mode("overwrite")
-      .format("parquet")
-      .saveAsTable(cellsTable(table))
-    // build-time baseline for [[staleness]] — computed FROM the saved
-    // cells table (not the in-flight frame) so a fresh build's
-    // staleness is exactly (1.0, 0.0): both sides read the identical
-    // persisted rows through the identical arithmetic
-    cellStats(spark.table(cellsTable(table)), centroids).write
-      .option("path", s"${path}_stats")
-      .mode("overwrite")
-      .format("parquet")
-      .saveAsTable(statsTable(table))
+    Publish.version(spark, path, Seq(table -> "centroids",
+        cellsTable(table) -> "cells", statsTable(table) -> "stats")) { v =>
+      val base = emb.select("vec_id", "embedding")
+      val centroids = Similarity.ivfIndex(base, nlist, iters, sampleCap)
+      v.save(centroids.zipWithIndex
+        .map { case (c, i) => (i, c.toSeq) }.toSeq
+        .toDF("cell", "centroid"), table)
+      val cells = v.save(assign(base, centroids), cellsTable(table),
+        Some(BucketSpec(buckets, Seq("cell"), Seq("cell"))))
+      // build-time baseline for [[staleness]] — computed FROM the saved
+      // cells table (not the in-flight frame) so a fresh build's
+      // staleness is exactly (1.0, 0.0): both sides read the identical
+      // persisted rows through the identical arithmetic
+      v.save(cellStats(cells, centroids), statsTable(table))
+    }
   }
 
   /** Per-cell (n, sum_gap) where gap = 1 − cos(v, home centroid) — the
@@ -117,14 +103,14 @@ object IvfIndexStore {
 
   /** Rebuild the artifact from its own surviving vectors when either
     * staleness signal clears its ceiling; returns whether a rebuild
-    * ran. Geometry (nlist) is carried over from the saved quantizer —
-    * re-sizing nlist to a grown corpus (√n practice) is a caller
-    * decision, not a policy this helper should guess. The survivors
-    * frame is materialized BEFORE [[build]] drops the tables it is
-    * read from.
+    * ran. Geometry (nlist) and the cells layout are carried over from
+    * the saved artifact — re-sizing nlist to a grown corpus (√n
+    * practice) is a caller decision, not a policy this helper should
+    * guess. The survivors frame is materialized once: it feeds every
+    * training pass and the assignment.
     */
   def rebuildIfStale(
-      spark: SparkSession, table: String, path: String, buckets: Int,
+      spark: SparkSession, table: String, path: String,
       residualMax: Double = 1.25, skewMax: Double = 0.25,
       iters: Int = 2, sampleCap: Int = 0): Boolean = {
     val s = staleness(spark, table)
@@ -135,7 +121,9 @@ object IvfIndexStore {
           spark, table, spark.table(cellsTable(table)), "vec_id")
         .select("vec_id", "embedding")
         .localCheckpoint(true)
-      build(survivors, nlist, table, path, buckets, iters, sampleCap)
+      build(survivors, nlist, table, path,
+        Publish.bucketSpec(spark, cellsTable(table)).get.numBuckets,
+        iters, sampleCap)
       true
     }
   }
@@ -174,16 +162,9 @@ object IvfIndexStore {
     * table. Centroids are NOT retrained — rebuild the artifact when the
     * corpus has drifted.
     */
-  def extend(batch: DataFrame, table: String, buckets: Int): Unit = {
-    val spark = batch.sparkSession
-    assign(batch.select("vec_id", "embedding"),
-      loadCentroids(spark, table)).write
-      .bucketBy(buckets, "cell")
-      .sortBy("cell")
-      .mode("append")
-      .format("parquet")
-      .saveAsTable(cellsTable(table))
-  }
+  def extend(batch: DataFrame, table: String): Unit =
+    Publish.append(assign(batch.select("vec_id", "embedding"),
+      loadCentroids(batch.sparkSession, table)), cellsTable(table))
 
   /** Top-k neighbors for `queries(vec_id, embedding)` served from the
     * SAVED assignment: queries probe their `nprobe` nearest cells
@@ -214,14 +195,14 @@ object IvfIndexStore {
     * micro-batch cadence already makes small.
     */
   def admitAndExtend(
-      batch: DataFrame, table: String, buckets: Int,
+      batch: DataFrame, table: String,
       threshold: Double, nprobe: Int = 4): DataFrame = {
     val dup = knn(batch.select("vec_id", "embedding"), 1, nprobe, table)
       .filter(col("sim") >= threshold)
       .select(col("query_id").as("vec_id")).distinct()
     val admitted = batch.join(dup, Seq("vec_id"), "left_anti")
       .localCheckpoint(true)
-    extend(admitted, table, buckets)
+    extend(admitted, table)
     admitted.select("vec_id")
   }
 

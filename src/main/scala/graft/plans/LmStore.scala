@@ -30,56 +30,46 @@ object LmStore {
   def bigramsTable(table: String): String = s"${table}_bigrams"
   def unigramsTable(table: String): String = s"${table}_unigrams"
 
-  private def save(
-      df: DataFrame, table: String, path: String): Unit = {
-    df.sparkSession.sql(s"DROP TABLE IF EXISTS $table")
-    df.write.option("path", path).mode("overwrite")
-      .format("parquet").saveAsTable(table)
-  }
+  private def members(table: String): Seq[(String, String)] =
+    Seq(bigramsTable(table) -> "bigrams", unigramsTable(table) -> "unigrams")
 
-  /** Fit the model on `corpus` (doc_id, text) and save both count
-    * tables under `path`, registered as external tables.
+  private def toks(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+      graft.functions.TextFunctions.tokens(col("text")).as("toks"))
+
+  /** Fit the model on `corpus` (doc_id, text) and publish both count
+    * tables as a fresh version under `path`.
     */
   def build(corpus: DataFrame, table: String, path: String): Unit = {
-    val toks = corpus.select(col("doc_id"),
-      graft.functions.TextFunctions.tokens(col("text")).as("toks"))
-    val (cbg, cu) = TextAnalysis.backoffModel(toks)
-    save(cbg, bigramsTable(table), s"$path/bigrams")
-    save(cu, unigramsTable(table), s"$path/unigrams")
+    val (cbg, cu) = TextAnalysis.backoffModel(toks(corpus))
+    Publish.version(corpus.sparkSession, path, members(table)) { v =>
+      v.save(cbg, bigramsTable(table))
+      v.save(cu, unigramsTable(table))
+    }
   }
 
   /** Score `docs` (doc_id, text) against the SAVED model. The count
     * tables broadcast (vocab-bounded); only the batch is tokenized.
     */
   def score(spark: SparkSession, docs: DataFrame, table: String)
-      : DataFrame = {
-    val toks = docs.select(col("doc_id"),
-      graft.functions.TextFunctions.tokens(col("text")).as("toks"))
-    TextAnalysis.backoffScore(
-      toks,
+      : DataFrame =
+    TextAnalysis.backoffScore(toks(docs),
       broadcast(spark.table(bigramsTable(table))),
       broadcast(spark.table(unigramsTable(table))))
-  }
 
   /** Fold `batch` (doc_id, text) into the saved model by counter
-    * addition: tokenize ONLY the batch, sum its counts into the loaded
-    * tables, rewrite. The merged frames are materialized via
-    * `localCheckpoint` BEFORE the overwrite — the merge plan reads the
-    * very tables the write replaces, and a lazy plan would scan
-    * truncated files mid-overwrite.
+    * addition: tokenize ONLY the batch and sum its counts with the live
+    * version's into the next version beside it.
     */
-  def extend(batch: DataFrame, table: String, path: String): Unit = {
+  def extend(batch: DataFrame, table: String): Unit = {
     val spark = batch.sparkSession
-    val toks = batch.select(col("doc_id"),
-      graft.functions.TextFunctions.tokens(col("text")).as("toks"))
-    val (bBg, bU) = TextAnalysis.backoffModel(toks)
-    val mBg = spark.table(bigramsTable(table)).unionByName(bBg)
-      .groupBy("g").agg(sum("c_bg").as("c_bg"))
-      .localCheckpoint(true)
-    val mU = spark.table(unigramsTable(table)).unionByName(bU)
-      .groupBy("w2").agg(sum("c_u").as("c_u"))
-      .localCheckpoint(true)
-    save(mBg, bigramsTable(table), s"$path/bigrams")
-    save(mU, unigramsTable(table), s"$path/unigrams")
+    val (bBg, bU) = TextAnalysis.backoffModel(toks(batch))
+    Publish.version(spark, Publish.root(spark, bigramsTable(table)),
+        members(table)) { v =>
+      v.save(spark.table(bigramsTable(table)).unionByName(bBg)
+        .groupBy("g").agg(sum("c_bg").as("c_bg")), bigramsTable(table))
+      v.save(spark.table(unigramsTable(table)).unionByName(bU)
+        .groupBy("w2").agg(sum("c_u").as("c_u")), unigramsTable(table))
+    }
   }
 }

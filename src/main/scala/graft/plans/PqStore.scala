@@ -39,46 +39,40 @@ object PqStore {
   def rotTable(table: String): String = s"${table}_rot"
   def statsTable(table: String): String = s"${table}_stats"
 
+  /** Train and publish the artifact as a fresh version under `path`; a
+    * store built without OPQ carries no rotation table.
+    */
   def build(
       emb: DataFrame, m: Int, codewords: Int, table: String,
       path: String, iters: Int = 2, opq: Boolean = false): Unit = {
     val spark = emb.sparkSession
     import spark.implicits._
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    spark.sql(s"DROP TABLE IF EXISTS ${codesTable(table)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${rotTable(table)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${statsTable(table)}")
-    Retire.reset(spark, table)
-    val raw = emb.select("vec_id", "embedding")
-    // with OPQ the WHOLE artifact lives in rotated space: codebooks
-    // train on, and codes encode, the rotated corpus — exactly
-    // [[Similarity.opqPqKnn]]'s in-session arithmetic, split at the
-    // same build/serve seam as the plain store
-    val base =
-      if (!opq) raw
-      else {
-        val r = Similarity.opqRotation(raw, m, codewords)
-        r.zipWithIndex.map { case (row, i) => (i, row.toSeq) }
-          .toSeq.toDF("i", "row")
-          .write.option("path", s"${path}_rot").mode("overwrite")
-          .format("parquet").saveAsTable(rotTable(table))
-        Similarity.rotateEmbeddings(raw, r).localCheckpoint(true)
-      }
-    val books = Similarity.pqTrain(base, m, codewords, iters)
-    books.zipWithIndex.flatMap { case (book, j) =>
-      book.zipWithIndex.map { case (cw, c) => (j, c, cw.toSeq) }
-    }.toSeq.toDF("j", "c", "codeword")
-      .write.option("path", path).mode("overwrite")
-      .format("parquet").saveAsTable(table)
-    Similarity.pqEncode(base, books)
-      .write.option("path", s"${path}_codes").mode("overwrite")
-      .format("parquet").saveAsTable(codesTable(table))
-    // build-time per-(subspace, codeword) usage + quantization-error
-    // baseline for [[staleness]] — m·k rows, one extra corpus pass at
-    // build time (build is the offline step; serve paths never read it)
-    Similarity.pqCodeStats(base, books)
-      .write.option("path", s"${path}_stats").mode("overwrite")
-      .format("parquet").saveAsTable(statsTable(table))
+    Publish.version(spark, path, Seq(table -> "books",
+        codesTable(table) -> "codes", rotTable(table) -> "rot",
+        statsTable(table) -> "stats")) { v =>
+      val raw = emb.select("vec_id", "embedding")
+      // with OPQ the WHOLE artifact lives in rotated space: codebooks
+      // train on, and codes encode, the rotated corpus — exactly
+      // [[Similarity.opqPqKnn]]'s in-session arithmetic, split at the
+      // same build/serve seam as the plain store
+      val base =
+        if (!opq) raw
+        else {
+          val r = Similarity.opqRotation(raw, m, codewords)
+          v.save(r.zipWithIndex.map { case (row, i) => (i, row.toSeq) }
+            .toSeq.toDF("i", "row"), rotTable(table))
+          Similarity.rotateEmbeddings(raw, r).localCheckpoint(true)
+        }
+      val books = Similarity.pqTrain(base, m, codewords, iters)
+      v.save(books.zipWithIndex.flatMap { case (book, j) =>
+        book.zipWithIndex.map { case (cw, c) => (j, c, cw.toSeq) }
+      }.toSeq.toDF("j", "c", "codeword"), table)
+      v.save(Similarity.pqEncode(base, books), codesTable(table))
+      // build-time per-(subspace, codeword) usage + quantization-error
+      // baseline for [[staleness]] — m·k rows, one extra corpus pass at
+      // build time (build is the offline step; serve paths never read it)
+      v.save(Similarity.pqCodeStats(base, books), statsTable(table))
+    }
   }
 
   private def collectStats(df: DataFrame): Seq[((Int, Int), (Long, Double))] =
@@ -113,7 +107,7 @@ object PqStore {
     * when either staleness signal clears its ceiling; returns whether
     * a rebuild ran. Geometry (m, codewords) and the OPQ choice are
     * carried over from the saved artifact. The survivors frame is
-    * materialized BEFORE [[build]] drops the tables it is read from.
+    * materialized once: it feeds every training pass and the encode.
     */
   def rebuildIfStale(
       spark: SparkSession, table: String, path: String,
@@ -166,12 +160,10 @@ object PqStore {
     */
   def extend(batch: DataFrame, table: String): Unit = {
     val spark = batch.sparkSession
-    Similarity.pqEncode(
-        toArtifactSpace(spark, table,
-          batch.select("vec_id", "embedding")),
-        loadBooks(spark, table))
-      .write.mode("append").format("parquet")
-      .saveAsTable(codesTable(table))
+    Publish.append(Similarity.pqEncode(
+        toArtifactSpace(spark, table, batch.select("vec_id", "embedding")),
+        loadBooks(spark, table)),
+      codesTable(table))
   }
 
   /** Two-stage search served from the artifact: ADC over the saved

@@ -9,13 +9,16 @@ import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
 
 /** Document retirement for the persisted index artifacts — the
-  * delete/tombstone/compact layer shared by [[Bm25IndexStore]],
-  * [[TfidfIndexStore]], [[ShingleIndexStore]], [[IvfIndexStore]],
-  * [[PqStore]], [[AhashIndexStore]] and [[VhashIndexStore]]. Before
-  * this layer the stores
-  * were build/load/extend-only: a takedown, opt-out, or bad-batch
-  * rollback meant a full rebuild (re-tokenizing / re-encoding the
-  * corpus). Now:
+  * delete/tombstone/compact layer shared by the doc-keyed stores:
+  * [[Bm25IndexStore]], [[TfidfIndexStore]], [[ShingleIndexStore]],
+  * [[IvfIndexStore]], [[PqStore]] and the [[FingerprintIndexStore]]s
+  * ([[AhashIndexStore]], [[VhashIndexStore]]). Every store, these and
+  * the tombstone-free ones ([[AggStore]], [[LmStore]], [[ClsStore]],
+  * [[BpeStore]], [[UnigramStore]]), publishes its builds through the
+  * one [[Publish]] step, whose catalog [[Publish.swap]] compaction
+  * shares. Before this layer the stores were build/load/extend-only: a
+  * takedown, opt-out, or bad-batch rollback meant a full rebuild
+  * (re-tokenizing / re-encoding the corpus). Now:
   *
   *   - `delete(ids)` appends the ids to a per-store TOMBSTONE table
   *     (`<table>_dead`) — no index file is touched; the write is
@@ -33,9 +36,9 @@ import org.apache.spark.sql.functions._
   *     HARD-LINKED into the new artifact directory unchanged; only hit
   *     files are re-read, filtered, and rewritten through the original
   *     bucket spec. The old directory is never mutated (a live plan
-  *     may have listed it — the AggStore versioned-save rule); the
-  *     catalog swap (drop + rename) is the publication point, and the
-  *     tombstones are cleared only after every member table swapped.
+  *     may have listed it — the [[Publish]] rule); the catalog swap
+  *     ([[Publish.swap]]) is the publication point, and the tombstones
+  *     are cleared only after every member table swapped.
   *
   * Frozen-stats semantics across delete (the family's standing extend
   * contract, extended): corpus-level statistics baked into the
@@ -77,19 +80,9 @@ object Retire {
     * directory behind when a fresh session's in-memory catalog forgets
     * the registration, and the next create would refuse the location.
     */
-  private def deadPath(spark: SparkSession, table: String): Path = {
-    val loc = spark.sessionState.catalog
-      .getTableMetadata(TableIdentifier(table)).location
-    Paths.get(localPath(loc).toString + "_dead")
-  }
-
-  private def deleteDir(dir: Path): Unit =
-    if (Files.exists(dir)) {
-      val s = Files.walk(dir)
-      try s.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(p => { Files.deleteIfExists(p); () })
-      finally s.close()
-    }
+  private def deadPath(spark: SparkSession, table: String): String =
+    new org.apache.hadoop.fs.Path(spark.sessionState.catalog
+      .getTableMetadata(TableIdentifier(table)).location).toString + "_dead"
 
   /** Tombstone `ids` (single Long key column named `keyCol`) for the
     * store anchored at `table`. Ids are materialized BEFORE the append
@@ -106,12 +99,9 @@ object Retire {
       val p = deadPath(spark, table)
       // an on-disk leftover whose registration a previous session's
       // catalog took with it is stale — sweep before the fresh create
-      deleteDir(p)
-      d.write.mode("overwrite").option("path", p.toString)
-        .format("parquet").saveAsTable(deadTable(table))
-    } else
-      d.write.mode("append").format("parquet")
-        .saveAsTable(deadTable(table))
+      Publish.delete(spark, p)
+      Publish.create(d, deadTable(table), p, None)
+    } else Publish.append(d, deadTable(table))
   }
 
   /** The store's tombstones, or None when nothing was ever deleted
@@ -172,24 +162,19 @@ object Retire {
     }
 
   /** Drop the tombstones — the last step of a store's compact, after
-    * every member table has swapped to its physically-filtered form.
-    * The external files go too: a later re-create at the same path
-    * must never resurrect cleared tombstones.
+    * every member table has swapped to its physically-filtered form,
+    * and of every [[Publish]]ed build, so a rebuilt artifact never
+    * inherits stale deletions. The external files go too: a later
+    * re-create at the same path must never resurrect cleared
+    * tombstones.
     */
   def clear(spark: SparkSession, table: String): Unit =
     if (spark.catalog.tableExists(deadTable(table))) {
-      val loc = localPath(spark.sessionState.catalog
-        .getTableMetadata(TableIdentifier(deadTable(table))).location)
+      val loc = spark.sessionState.catalog
+        .getTableMetadata(TableIdentifier(deadTable(table))).location
       spark.sql(s"DROP TABLE IF EXISTS ${deadTable(table)}")
-      deleteDir(loc)
+      Publish.delete(spark, loc.toString)
     }
-
-  /** Drop any tombstones left from a previous incarnation — every
-    * store's `build` calls this alongside its member-table drops, so a
-    * rebuilt artifact never inherits stale deletions.
-    */
-  def reset(spark: SparkSession, table: String): Unit =
-    clear(spark, table)
 
   private def localPath(uri: java.net.URI): Path =
     Paths.get(uri.getPath)
@@ -266,26 +251,10 @@ object Retire {
     val surv = spark.read.parquet(hit.map(_.toString): _*)
       .join(d, Seq(keyCol), "left_anti")
     val tmp = s"${member}__rctmp"
-    spark.sql(s"DROP TABLE IF EXISTS $tmp")
-    val writer0 = surv.write
-      .option("path", out.toString).mode("overwrite").format("parquet")
-    val writer = meta.bucketSpec match {
-      case Some(bs) =>
-        val w = writer0.bucketBy(bs.numBuckets,
-          bs.bucketColumnNames.head, bs.bucketColumnNames.tail: _*)
-        if (bs.sortColumnNames.nonEmpty)
-          w.sortBy(bs.sortColumnNames.head, bs.sortColumnNames.tail: _*)
-        else w
-      case None => writer0
-    }
-    writer.saveAsTable(tmp)
+    Publish.create(surv, tmp, out.toString, meta.bucketSpec)
     keep.foreach(p => Files.createLink(
       out.resolve(p.getFileName.toString), p))
-    // publication point: the catalog swap. The old directory is left
-    // for any live plan that listed it (the versioned-save rule).
-    spark.sql(s"DROP TABLE IF EXISTS $member")
-    spark.sql(s"ALTER TABLE $tmp RENAME TO $member")
-    spark.catalog.refreshTable(member)
+    Publish.swap(spark, tmp, member)
     (hit.size, keep.size)
   }
 

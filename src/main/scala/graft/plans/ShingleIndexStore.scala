@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -57,43 +58,22 @@ object ShingleIndexStore {
     */
   val NumHashes = 48
 
-  /** Build the index from `corpus` and save it (postings + sizes) under
-    * `path`, registered as external tables `table` / `<table>_sizes`.
+  /** Build the index from `corpus` and publish it (postings, sizes,
+    * sigs) as a fresh version under `path`.
     */
   def build(
       corpus: DataFrame, n: Int, table: String, path: String,
-      buckets: Int): Unit = {
-    val spark = corpus.sparkSession
-    // a stale registration at a different path/spec must not shadow the
-    // new artifact; data files at `path` are replaced by Overwrite
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    spark.sql(s"DROP TABLE IF EXISTS ${sizesTable(table)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${sigsTable(table)}")
-    Retire.reset(spark, table)
-    val sh = Dedup.shingleIndex(corpus, n).persist()
-    sh.write
-      .bucketBy(buckets, "g")
-      .sortBy("g")
-      .option("path", path)
-      .mode("overwrite")
-      .format("parquet")
-      .saveAsTable(table)
-    sh.groupBy("doc_id").agg(count(lit(1)).as("n")).write
-      .bucketBy(buckets, "doc_id")
-      .sortBy("doc_id")
-      .option("path", s"${path}_sizes")
-      .mode("overwrite")
-      .format("parquet")
-      .saveAsTable(sizesTable(table))
-    Dedup.minhashSignatures(sh, NumHashes).write
-      .bucketBy(buckets, "doc_id")
-      .sortBy("doc_id")
-      .option("path", s"${path}_sigs")
-      .mode("overwrite")
-      .format("parquet")
-      .saveAsTable(sigsTable(table))
-    sh.unpersist()
-  }
+      buckets: Int): Unit =
+    Publish.version(corpus.sparkSession, path, Seq(table -> "postings",
+        sizesTable(table) -> "sizes", sigsTable(table) -> "sigs")) { v =>
+      def by(key: String) = Some(BucketSpec(buckets, Seq(key), Seq(key)))
+      val sh = v.hold(Dedup.shingleIndex(corpus, n))
+      v.save(sh, table, by("g"))
+      v.save(sh.groupBy("doc_id").agg(count(lit(1)).as("n")),
+        sizesTable(table), by("doc_id"))
+      v.save(Dedup.minhashSignatures(sh, NumHashes), sigsTable(table),
+        by("doc_id"))
+    }
 
   /** The saved index as a DataFrame. Read via the catalog (not
     * `read.parquet(path)`) so the bucket spec survives and g-keyed
@@ -175,29 +155,14 @@ object ShingleIndexStore {
   }
 
   /** Append `batch`'s shingles to the saved index (batch-only
-    * tokenization; bucket spec is validated against the existing table
-    * by the writer).
+    * tokenization; each member keeps the bucket spec the catalog holds).
     */
-  def extend(batch: DataFrame, n: Int, table: String, buckets: Int): Unit = {
+  def extend(batch: DataFrame, n: Int, table: String): Unit = {
     val sh = Dedup.shingleIndex(batch, n).localCheckpoint(true)
-    sh.write
-      .bucketBy(buckets, "g")
-      .sortBy("g")
-      .mode("append")
-      .format("parquet")
-      .saveAsTable(table)
-    sh.groupBy("doc_id").agg(count(lit(1)).as("n")).write
-      .bucketBy(buckets, "doc_id")
-      .sortBy("doc_id")
-      .mode("append")
-      .format("parquet")
-      .saveAsTable(sizesTable(table))
-    Dedup.minhashSignatures(sh, NumHashes).write
-      .bucketBy(buckets, "doc_id")
-      .sortBy("doc_id")
-      .mode("append")
-      .format("parquet")
-      .saveAsTable(sigsTable(table))
+    Publish.append(sh, table)
+    Publish.append(sh.groupBy("doc_id").agg(count(lit(1)).as("n")),
+      sizesTable(table))
+    Publish.append(Dedup.minhashSignatures(sh, NumHashes), sigsTable(table))
   }
 
   /** One production ingest step: batch docs with no near-dup in the
@@ -212,13 +177,13 @@ object ShingleIndexStore {
     * window matters.
     */
   def admitAndExtend(
-      batch: DataFrame, n: Int, table: String, buckets: Int,
+      batch: DataFrame, n: Int, table: String,
       threshold: Double): DataFrame = {
     val matched = matchBatch(batch, n, table, threshold)
       .select(col("id_new").as("doc_id")).distinct()
     val admitted = batch.join(matched, Seq("doc_id"), "left_anti")
       .localCheckpoint(true)
-    extend(admitted, n, table, buckets)
+    extend(admitted, n, table)
     admitted.select("doc_id")
   }
 }

@@ -92,18 +92,19 @@ object TfidfIndexStore extends ImpactIndexStore(
       .repartitionByRange(buckets, col("doc_id"))
       .sortWithinPartitions("doc_id")
 
-  protected def weighBuild(docs: DataFrame, b: Build): DataFrame = {
-    val spark = docs.sparkSession
-    val tf = b.hold(TextAnalysis.termFreq(docs))
-    b.save(tf.groupBy(xxhash64(col("term")).as("tkey"))
-      .agg(count(lit(1)).as("df")), "rawdf")
-    b.save(docs.agg(count(lit(1)).as("n_docs")), "stats")
-    val postings = b.hold(postingsOf(TextAnalysis.tfidfTopTermsFromTf(tf,
-      spark.table(statsTable(b.table)), TermsPerDoc)))
-    b.save(normsOf(postings), "norms")
-    b.save(postings.groupBy("tkey").agg(count(lit(1)).as("df")), "df")
-    b.save(mirror(postings, b.buckets), "bydoc")
-    withImpact(postings, spark.table(normsTable(b.table)))
+  protected def weighBuild(docs: DataFrame, table: String, buckets: Int,
+      v: Publish.Version): DataFrame = {
+    val tf = v.hold(TextAnalysis.termFreq(docs))
+    v.save(tf.groupBy(xxhash64(col("term")).as("tkey"))
+      .agg(count(lit(1)).as("df")), rawDfTable(table))
+    val stats = v.save(docs.agg(count(lit(1)).as("n_docs")), statsTable(table))
+    val postings = v.hold(postingsOf(TextAnalysis.tfidfTopTermsFromTf(tf,
+      stats, TermsPerDoc)))
+    val norms = v.save(normsOf(postings), normsTable(table))
+    v.save(postings.groupBy("tkey").agg(count(lit(1)).as("df")),
+      dfTable(table))
+    v.save(mirror(postings, buckets), byDocTable(table))
+    withImpact(postings, norms)
   }
 
   /** Norms and the mirror append before the postings: a crash between
@@ -115,8 +116,7 @@ object TfidfIndexStore extends ImpactIndexStore(
     * merely carries a vector no postings reference until the extend
     * retries. The appended mirror files are range-clustered like the
     * build's, so per-file doc_id stats keep their pushdown as
-    * extensions accumulate. Pre-bydoc artifacts have no mirror and the
-    * readers fall back to the main postings.
+    * extensions accumulate.
     */
   protected def weighExtend(batch: DataFrame, table: String,
       buckets: Int): DataFrame = {
@@ -128,32 +128,24 @@ object TfidfIndexStore extends ImpactIndexStore(
         spark.table(statsTable(table)), TermsPerDoc))
       .localCheckpoint(true)
     val nrm = normsOf(scored).localCheckpoint(true)
-    nrm.write.mode("append").format("parquet")
-      .saveAsTable(normsTable(table))
-    if (spark.catalog.tableExists(byDocTable(table)))
-      mirror(scored, buckets).write.mode("append").format("parquet")
-        .saveAsTable(byDocTable(table))
+    Publish.append(nrm, normsTable(table))
+    Publish.append(mirror(scored, buckets), byDocTable(table))
     withImpact(scored, nrm)
   }
 
   /** The query-vector fetch: the batch's saved (tkey, query_id, wq)
-    * rows, read from the doc-keyed mirror when the artifact has one and
-    * from the main impact-ordered postings otherwise.
+    * rows, read from the doc-keyed mirror (every published version has
+    * one).
     */
   private def queryVectors(spark: SparkSession, table: String,
-      queryIds: DataFrame): DataFrame = {
-    val src =
-      if (spark.catalog.tableExists(byDocTable(table)))
-        spark.table(byDocTable(table))
-      else spark.table(table).select("doc_id", "tkey", "w")
+      queryIds: DataFrame): DataFrame =
     // a tombstoned doc cannot serve as a QUERY either — reading its
     // saved vector back is itself a retention violation; its query ids
     // simply return no rows (the same observable a rebuilt index gives)
-    Retire.survivors(spark, table, src, "doc_id")
+    Retire.survivors(spark, table, spark.table(byDocTable(table)), "doc_id")
       .join(broadcast(queryIds), "doc_id")
       .select(col("tkey"), col("doc_id").as("query_id"),
         col("w").as("wq"))
-  }
 
   /** The batch's (query_id, nq) vector norms. */
   private def queryNorms(norms: DataFrame, queryIds: DataFrame): DataFrame =

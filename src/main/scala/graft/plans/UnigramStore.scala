@@ -30,27 +30,31 @@ object UnigramStore {
 
   def statsTable(table: String): String = s"${table}_unigram_stats"
 
-  /** Save a trained vocabulary under `path`, registered as an external
-    * table (piece, cnt, score).
+  private def members(table: String): Seq[(String, String)] =
+    Seq(piecesTable(table) -> "pieces", statsTable(table) -> "stats")
+
+  private def piecesFrame(
+      spark: SparkSession, pieces: Seq[Unigram.Piece]): DataFrame = {
+    import spark.implicits._
+    pieces.toDF("piece", "cnt", "score").coalesce(1)
+  }
+
+  /** Publish a trained vocabulary (piece, cnt, score) as a fresh version
+    * under `path`, without a staleness baseline.
     */
   def save(
       spark: SparkSession, pieces: Seq[Unigram.Piece], table: String,
-      path: String): Unit = {
-    import spark.implicits._
-    spark.sql(s"DROP TABLE IF EXISTS ${piecesTable(table)}")
-    pieces.toDF("piece", "cnt", "score")
-      .coalesce(1)
-      .write.option("path", path).mode("overwrite")
-      .format("parquet").saveAsTable(piecesTable(table))
-  }
+      path: String): Unit =
+    Publish.version(spark, path, members(table))(
+      _.save(piecesFrame(spark, pieces), piecesTable(table)))
 
-  /** Train on `corpus` (doc_id, text), save the piece table, and
-    * persist the build-time usage baseline ([[staleness]] reads it):
-    * the training corpus's piece-usage distribution and fertility
-    * under the FINAL vocabulary — one extra vocab-broadcast pass over
-    * the word table. The baseline ALWAYS refreshes with the artifact
-    * (a retrain that kept an old baseline would poison every later
-    * staleness reading).
+  /** Train on `corpus` (doc_id, text) and publish the piece table with
+    * the build-time usage baseline ([[staleness]] reads it) as its
+    * `stats` member: the training corpus's piece-usage distribution and
+    * fertility under the FINAL vocabulary — one extra vocab-broadcast
+    * pass over the word table. The baseline ALWAYS refreshes with the
+    * artifact (a retrain that kept an old baseline would poison every
+    * later staleness reading).
     */
   def build(
       corpus: DataFrame, table: String, path: String): Unit =
@@ -65,11 +69,13 @@ object UnigramStore {
       spark: SparkSession, words: DataFrame, table: String,
       path: String): Unit = {
     val pieces = Unigram.train(words)
-    save(spark, pieces, table, path)
-    val (uses, nWords, _) =
-      Unigram.usage(words, pieces.map(p => p.piece -> p.score).toMap)
-    UsageStats.save(spark, uses, nWords,
-      statsTable(table), path + "_stats", "piece")
+    Publish.version(spark, path, members(table)) { v =>
+      v.save(piecesFrame(spark, pieces), piecesTable(table))
+      val (uses, nWords, _) =
+        Unigram.usage(words, pieces.map(p => p.piece -> p.score).toMap)
+      v.save(UsageStats.baseline(spark, uses, nWords, "piece"),
+        statsTable(table))
+    }
   }
 
   /** Measured drift of the FROZEN tokenizer against its build-time
@@ -106,10 +112,9 @@ object UnigramStore {
   /** Re-train from `corpus` when either staleness signal (measured on
     * that same corpus — the arriving distribution) clears its ceiling.
     * The corpus word collapse is paid ONCE across the measurement and
-    * the retrain; the rebuilt artifact lands at the next free
-    * versioned location ([[UsageStats.nextRebuildPath]] — never over
-    * a directory a live plan may still be reading). Returns the
-    * measured staleness and whether a rebuild happened.
+    * the retrain; the rebuilt artifact is the next version under
+    * `path`. Returns the measured staleness and whether a rebuild
+    * happened.
     */
   def rebuildIfStale(
       corpus: DataFrame, table: String, path: String,
@@ -119,8 +124,7 @@ object UnigramStore {
     val words = Unigram.wordFreq(corpus)
     val st = stalenessFromWords(spark, words, table)
     if (st.isStale(residualMax, skewMax)) {
-      buildFromWords(spark, words, table,
-        UsageStats.nextRebuildPath(path))
+      buildFromWords(spark, words, table, path)
       (st, true)
     } else (st, false)
   }

@@ -1,7 +1,5 @@
 package graft.plans
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The shared machinery of the tokenizer staleness policy — ONE
@@ -12,24 +10,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * [[Staleness.of]]'s (Int, Int)-keyed fold).
   *
   * A baseline is a (key, uses) distribution plus a word-observation
-  * total, persisted as one parquet table with the total on a NULL-key
-  * row (no reserved string a pathological piece/symbol could collide
-  * with).
+  * total, persisted as the `stats` member of the tokenizer's
+  * [[Publish]] version with the total on a NULL-key row (no reserved
+  * string a pathological piece/symbol could collide with).
   */
 object UsageStats {
 
-  /** Persist `uses` + `totalWords` as the build-time baseline. */
-  def save(
+  /** `uses` + `totalWords` as the baseline table's rows. */
+  def baseline(
       spark: SparkSession, uses: Map[String, Long], totalWords: Long,
-      table: String, path: String, keyCol: String): Unit = {
+      keyCol: String): DataFrame = {
     import spark.implicits._
-    spark.sql(s"DROP TABLE IF EXISTS $table")
     (uses.toSeq.map { case (k, v) => (Option(k), v) } :+
         (Option.empty[String] -> totalWords))
       .toDF(keyCol, "uses")
       .coalesce(1)
-      .write.option("path", path).mode("overwrite")
-      .format("parquet").saveAsTable(table)
   }
 
   /** The saved baseline: (usage distribution, word total). */
@@ -79,21 +74,5 @@ object UsageStats {
       (nowObs.toDouble / nowWords) /
         math.max(builtObs.toDouble / builtWords, 1e-12),
       skew, builtWords, nowWords)
-  }
-
-  /** The next free rebuild location for an artifact currently at
-    * `path` — the [[Retire]] `_rc<N>` discipline: strip any existing
-    * `_rb<N>` suffix back to the base, then one past the highest
-    * sibling on disk, so repeated rebuilds never overwrite a directory
-    * a live external table may still be serving from (dropping an
-    * external table keeps its files).
-    */
-  def nextRebuildPath(path: String): String = {
-    val base = path.replaceFirst("_rb\\d+$", "")
-    var i = 1
-    while (Files.exists(Paths.get(s"${base}_rb$i")) ||
-        Files.exists(Paths.get(s"${base}_rb${i}_stats")))
-      i += 1
-    s"${base}_rb$i"
   }
 }

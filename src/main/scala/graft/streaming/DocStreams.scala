@@ -323,61 +323,35 @@ object DocStreams {
       }
     }
 
-  /** Streaming PERCEPTUAL admission against the saved audio
-    * fingerprint index — the media sibling of [[admitBySimilarity]],
-    * completing the streaming-gate matrix across modalities (text
-    * shingles / embeddings / audio / video): each micro-batch of
-    * (doc_id, payload) clips fingerprints ONLY itself, once
-    * ([[graft.plans.AhashIndexStore.matchFingerprints]] — the same
-    * probe the batch admission uses, so stream ≡ batch admission
-    * row-for-row, INCLUDING undecodable payloads: the batch path's
-    * `admitAndExtend` anti-joins fingerprinted rows only, so the
-    * stream semi-joins the batch through its own fingerprints first —
-    * an undecodable clip drops on both paths) and clips within the
-    * banding gate of any saved clip drop before the sink. Same staleness contract as the whole family: the
-    * stream does NOT extend the index mid-run (a foreachBatch write
-    * to the table the same query reads would race its own scans) —
-    * fold admitted batches in between runs via
-    * `AhashIndexStore.admitAndExtend`; tombstones
+  /** Streaming PERCEPTUAL admission against a saved fingerprint index
+    * (audio: [[graft.plans.AhashIndexStore]], video:
+    * [[graft.plans.VhashIndexStore]]) — the media sibling of
+    * [[admitBySimilarity]], completing the streaming-gate matrix across
+    * modalities: each micro-batch of (doc_id, payload) clips
+    * fingerprints ONLY itself, once, and probes the saved index through
+    * the store's `matchFingerprints` — the same probe the batch
+    * admission uses, so stream ≡ batch admission row-for-row, INCLUDING
+    * undecodable payloads: the batch path's `admitAndExtend` anti-joins
+    * fingerprinted rows only, so the stream semi-joins the batch
+    * through its own fingerprints first — an undecodable clip drops on
+    * both paths. Clips within the gate of any saved clip drop before
+    * the sink. Same staleness contract as the whole family: the stream
+    * does NOT extend the index mid-run (a foreachBatch write to the
+    * table the same query reads would race its own scans) — fold
+    * admitted batches in between runs via `admitAndExtend`; tombstones
     * ([[graft.plans.Retire]]) mask mid-stream since every micro-batch
     * replans against the table.
     */
-  def admitByAudioFingerprint(
-      clips: DataFrame, table: String,
-      maxHamming: Int = graft.plans.AhashIndexStore.Radius)(
+  def admitByFingerprint(store: graft.plans.FingerprintIndexStore)(
+      clips: DataFrame, table: String, maxHamming: Int = store.Radius)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     clips.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       once(batch) { b =>
-        once(graft.plans.AhashIndexStore
-            .fingerprints(b.select("doc_id", "payload"))) { fps =>
-          val dup = graft.plans.AhashIndexStore
-            .matchFingerprints(fps, table, maxHamming)
+        once(store.fingerprints(b.select("doc_id", "payload"))) { fps =>
+          val dup = store.matchFingerprints(fps, table, maxHamming)
           // left_semi dedups the probe side by definition — no distinct()
           sink(b
             .join(fps.select("doc_id"), Seq("doc_id"), "left_semi")
-            .join(dup, Seq("doc_id"), "left_anti"), batchId)
-        }
-      }
-    }
-
-  /** [[admitByAudioFingerprint]] for VIDEO clips: the probe is the
-    * frame-aligned median gate over the saved per-frame fingerprints
-    * ([[graft.plans.VhashIndexStore.matchFrames]]), and the same
-    * semi-join through the batch's own decodable frames keeps
-    * stream ≡ batch for undecodable payloads (see the audio twin).
-    */
-  def admitByVideoFingerprint(
-      clips: DataFrame, table: String,
-      maxHamming: Int = graft.plans.VhashIndexStore.Radius)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    clips.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      once(batch) { b =>
-        once(graft.plans.VhashIndexStore
-            .frames(b.select("doc_id", "payload"))) { fr =>
-          val dup = graft.plans.VhashIndexStore
-            .matchFrames(fr, table, maxHamming)
-          sink(b
-            .join(fr.select("doc_id"), Seq("doc_id"), "left_semi")
             .join(dup, Seq("doc_id"), "left_anti"), batchId)
         }
       }

@@ -691,7 +691,7 @@ class DocStreamsSpec extends AnyFunSuite {
     // semi-joins through its own fingerprints to match row-for-row)
     val aAdm = scala.collection.mutable.ArrayBuffer[Long]()
     val aIn = MemoryStream[(Long, Array[Byte])]
-    val q1 = DocStreams.admitByAudioFingerprint(
+    val q1 = DocStreams.admitByFingerprint(graft.plans.AhashIndexStore)(
       aIn.toDF().toDF("doc_id", "payload"), aTable) { (out, _) =>
       aAdm.synchronized {
         aAdm ++= out.select("doc_id").collect().map(_.getLong(0))
@@ -723,7 +723,7 @@ class DocStreamsSpec extends AnyFunSuite {
     } :+ ((9999999L, Array[Byte](4, 5, 6))) // undecodable: must DROP
     val vAdm = scala.collection.mutable.ArrayBuffer[Long]()
     val vIn = MemoryStream[(Long, Array[Byte])]
-    val q2 = DocStreams.admitByVideoFingerprint(
+    val q2 = DocStreams.admitByFingerprint(graft.plans.VhashIndexStore)(
       vIn.toDF().toDF("doc_id", "payload"), vTable) { (out, _) =>
       vAdm.synchronized {
         vAdm ++= out.select("doc_id").collect().map(_.getLong(0))
@@ -870,7 +870,8 @@ class DocStreamsSpec extends AnyFunSuite {
       Seq((2000016L, MM.renderClip(2000016L, copy = false)),
         (9999999L, Array[Byte](1, 2, 3)))
     assert(runGate(aRows, classOf[graft.functions.AHash64Expr])(
-      DocStreams.admitByAudioFingerprint(_, aTable)) === Set(2000016L))
+      DocStreams.admitByFingerprint(graft.plans.AhashIndexStore)(_, aTable))
+      === Set(2000016L))
 
     val vTable = "vhash_stream_once"
     spark.sql(s"DROP TABLE IF EXISTS $vTable")
@@ -882,6 +883,7 @@ class DocStreamsSpec extends AnyFunSuite {
       Seq((2000016L, MM.renderVideo(2000016L, copy = false)),
         (9999999L, Array[Byte](4, 5, 6)))
     assert(runGate(vRows, classOf[graft.functions.VHashFramesExpr])(
-      DocStreams.admitByVideoFingerprint(_, vTable)) === Set(2000016L))
+      DocStreams.admitByFingerprint(graft.plans.VhashIndexStore)(_, vTable))
+      === Set(2000016L))
   }
 }

@@ -83,7 +83,7 @@ class IndexStoreSpec extends AnyFunSuite {
     "index over corpus+batch") {
     val (table, path) = freshTable("extend")
     ShingleIndexStore.build(base, 3, table, path, buckets = 8)
-    ShingleIndexStore.extend(batch, 3, table, buckets = 8)
+    ShingleIndexStore.extend(batch, 3, table)
     val loaded = ShingleIndexStore.load(spark, table)
     val scratch = Dedup.shingleIndex(base.unionByName(batch), 3)
     assert(pairSet(loaded) === pairSet(scratch))
@@ -145,7 +145,7 @@ class IndexStoreSpec extends AnyFunSuite {
     IvfIndexStore.build(emb, nlist = 8, "ivf_e", path, buckets = 4)
     val copies = emb.filter(col("vec_id") % 9 === 0)
       .select((col("vec_id") + 5000000L).as("vec_id"), col("embedding"))
-    IvfIndexStore.extend(copies, "ivf_e", buckets = 4)
+    IvfIndexStore.extend(copies, "ivf_e")
     val got = IvfIndexStore.knn(copies, k = 1, nprobe = 1, "ivf_e")
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     val expect = copies.collect()
@@ -160,7 +160,7 @@ class IndexStoreSpec extends AnyFunSuite {
     ShingleIndexStore.build(base, 3, table, path, buckets = 8)
     val preCount = ShingleIndexStore.load(spark, table).count()
     val admitted = ShingleIndexStore
-      .admitAndExtend(batch, 3, table, buckets = 8, threshold = 0.5)
+      .admitAndExtend(batch, 3, table, threshold = 0.5)
       .collect().map(_.getLong(0)).toSet
     // expectation from the public pieces
     val matched = Dedup.crossJaccardMatches(
@@ -247,7 +247,7 @@ class IndexStoreSpec extends AnyFunSuite {
         org.apache.spark.sql.functions.transform(
           col("embedding"), x => -x).as("embedding"))
     val admitted = IvfIndexStore
-      .admitAndExtend(copies.unionByName(fresh), table, 8, 0.9)
+      .admitAndExtend(copies.unionByName(fresh), table, 0.9)
       .collect().map(_.getLong(0)).toSet
     val wantFresh = fresh.select("vec_id").collect()
       .map(_.getLong(0)).toSet
@@ -352,7 +352,7 @@ class IndexStoreSpec extends AnyFunSuite {
     val b = base.filter(col("doc_id") % 2 === 1)
     val (tInc, pInc) = freshLm("inc")
     LmStore.build(a, tInc, pInc)
-    LmStore.extend(b, tInc, pInc)
+    LmStore.extend(b, tInc)
     val (tFull, pFull) = freshLm("full")
     LmStore.build(a.unionByName(b), tFull, pFull)
     def counts(t: String): (Map[String, Long], Map[String, Long]) = (
@@ -382,8 +382,8 @@ class IndexStoreSpec extends AnyFunSuite {
     val (tInc, pInc) = freshAgg("inc")
     AggStore.build(ev.filter(col("day") < cut1), dims, "value", tInc, pInc)
     AggStore.extend(
-      ev.filter(col("day") >= cut1 && col("day") < cut2), "value", tInc, pInc)
-    AggStore.extend(ev.filter(col("day") >= cut2), "value", tInc, pInc)
+      ev.filter(col("day") >= cut1 && col("day") < cut2), "value", tInc)
+    AggStore.extend(ev.filter(col("day") >= cut2), "value", tInc)
     val (tFull, pFull) = freshAgg("full")
     AggStore.build(ev, dims, "value", tFull, pFull)
     def state(t: String): Map[(String, java.sql.Date), (Long, Double,
@@ -437,6 +437,30 @@ class IndexStoreSpec extends AnyFunSuite {
     assert(AggStore.versionPaths(spark, path).map(p =>
       new org.apache.hadoop.fs.Path(p).getName) === Seq("v0", "v1"))
     assert(spark.table(table).count() > 0)
+  }
+
+  test("LM and agg-state extends merge the live version into the next " +
+    "one without a checkpoint: Spark jobs per extend pinned") {
+    import graft.plans.{AggStore, LmStore}
+    val (tLm, pLm) = freshLm("jobs")
+    val docs = base
+    LmStore.build(docs.filter(col("doc_id") % 2 === 0), tLm, pLm)
+    val lm = JobCensus.of(spark)(
+      LmStore.extend(docs.filter(col("doc_id") % 2 === 1), tLm))
+    val ev = Tables.events(spark, dir).select(col("event_type"),
+      to_date(col("ts")).as("day"), col("value"))
+    val cut = lit("2024-01-21").cast("date")
+    val (tAgg, pAgg) = freshAgg("jobs")
+    AggStore.build(ev.filter(col("day") < cut), Seq("event_type", "day"),
+      "value", tAgg, pAgg)
+    val agg = JobCensus.of(spark)(
+      AggStore.extend(ev.filter(col("day") >= cut), "value", tAgg))
+    info(s"LM extend: ${lm.size} jobs; agg extend: ${agg.size} jobs")
+    // the counts measured with the merge reading the live version and
+    // writing the next one; a checkpoint of each merged table before
+    // the write costs one job more per table (8 and 4)
+    assert(lm.size <= 6, "LM extend Spark jobs")
+    assert(agg.size <= 3, "agg extend Spark jobs")
   }
 
   test("bm25 store: saved-index search equals the in-session query; " +
@@ -1027,7 +1051,7 @@ class IndexStoreSpec extends AnyFunSuite {
     assert(math.abs(fresh.residualGrowth - 1.0) < 1e-9, s"$fresh")
     assert(fresh.occupancySkew === 0.0)
     assert(fresh.builtVecs === fresh.liveVecs)
-    assert(!IvfIndexStore.rebuildIfStale(spark, "ivf_s", path, 4),
+    assert(!IvfIndexStore.rebuildIfStale(spark, "ivf_s", path),
       "a fresh build must not trigger a rebuild at default thresholds")
     // drifted extend: hash-noise vectors with none of the corpus's
     // cluster structure — far from every frozen centroid (residual
@@ -1037,7 +1061,7 @@ class IndexStoreSpec extends AnyFunSuite {
       expr("transform(embedding, (x, i) -> " +
         "cast(pmod(xxhash64(vec_id, i), 1000) / 500.0 - 1.0 as float))")
         .as("embedding"))
-    IvfIndexStore.extend(drifted, "ivf_s", buckets = 4)
+    IvfIndexStore.extend(drifted, "ivf_s")
     val after = IvfIndexStore.staleness(spark, "ivf_s")
     assert(after.residualGrowth > fresh.residualGrowth,
       s"noise vectors must grow the mean residual: $after")
@@ -1048,9 +1072,9 @@ class IndexStoreSpec extends AnyFunSuite {
     // since rebuildIfStale re-measures): AT the measured skew → not
     // stale; just below → stale
     val residualSlack = after.residualGrowth * (1 + 1e-6)
-    assert(!IvfIndexStore.rebuildIfStale(spark, "ivf_s", path, 4,
+    assert(!IvfIndexStore.rebuildIfStale(spark, "ivf_s", path,
       residualMax = residualSlack, skewMax = after.occupancySkew))
-    assert(IvfIndexStore.rebuildIfStale(spark, "ivf_s", path, 4,
+    assert(IvfIndexStore.rebuildIfStale(spark, "ivf_s", path,
       residualMax = residualSlack,
       skewMax = after.occupancySkew * 0.99))
     // the rebuilt quantizer fits the union corpus: staleness resets to
@@ -1100,5 +1124,159 @@ class IndexStoreSpec extends AnyFunSuite {
     // geometry carried over: same m, still no rotation table
     assert(PqStore.loadBooks(spark, table).length === 8)
     assert(PqStore.loadRotation(spark, table).isEmpty)
+  }
+
+  test("a failed build keeps the live version: every store family keeps " +
+    "its members, rows and tombstones, strands no staging table, and " +
+    "builds cleanly afterwards") {
+    import spark.implicits._
+    import graft.multimodal.{Multimodal => MM}
+    import graft.plans._
+    val emb = Tables.embeddings(spark, dir).select("vec_id", "embedding")
+    val small = base.filter(col("doc_id") % 4 === 0).localCheckpoint(true)
+    val clipIds = base.filter(col("doc_id") % 16 === 0).limit(12)
+      .select("doc_id").as[Long].collect().toSeq
+    def clips(render: (Long, Boolean) => Array[Byte]): DataFrame =
+      clipIds.map(id => (id, render(id, false))).toDF("doc_id", "payload")
+        .localCheckpoint(true)
+    val ev = Tables.events(spark, dir).select(col("event_type"), col("value"))
+    val sessions = Seq(spark, ev.sparkSession).distinct
+    // one row per store family: its member tables, the (member, key)
+    // a delete tombstones, the data commits one build makes (the last
+    // one fails), and the build itself
+    final case class Family(name: String, members: Seq[String],
+        keyed: Option[(String, String)], commits: Int,
+        build: (String, String) => Unit)
+    def t(n: String) = s"pub_$n"
+    val families = Seq(
+      Family("agg", Seq(t("agg")), None, 1,
+        AggStore.build(ev, Seq("event_type"), "value", _, _)),
+      Family("bm25", Seq(t("bm25"), s"${t("bm25")}_df",
+          s"${t("bm25")}_stats"), Some(t("bm25") -> "doc_id"), 3,
+        Bm25IndexStore.build(small, _, _, buckets = 4)),
+      Family("tfidf", t("tfidf") +: Seq("norms", "df", "rawdf", "stats",
+          "bydoc").map(x => s"${t("tfidf")}_$x"),
+        Some(t("tfidf") -> "doc_id"), 6,
+        TfidfIndexStore.build(small, _, _, buckets = 4)),
+      Family("shingle", Seq(t("shingle"),
+          ShingleIndexStore.sizesTable(t("shingle")),
+          ShingleIndexStore.sigsTable(t("shingle"))),
+        Some(t("shingle") -> "doc_id"), 3,
+        ShingleIndexStore.build(small, 3, _, _, buckets = 4)),
+      Family("ivf", Seq(t("ivf"), IvfIndexStore.cellsTable(t("ivf")),
+          IvfIndexStore.statsTable(t("ivf"))),
+        Some(IvfIndexStore.cellsTable(t("ivf")) -> "vec_id"), 3,
+        IvfIndexStore.build(emb, nlist = 8, _, _, buckets = 4)),
+      Family("pq", Seq(t("pq"), PqStore.codesTable(t("pq")),
+          PqStore.statsTable(t("pq"))),
+        Some(PqStore.codesTable(t("pq")) -> "vec_id"), 3,
+        PqStore.build(emb, m = 4, codewords = 16, _, _)),
+      Family("lm", Seq(LmStore.bigramsTable(t("lm")),
+          LmStore.unigramsTable(t("lm"))), None, 2,
+        LmStore.build(small, _, _)),
+      Family("cls", Seq(ClsStore.weightsTable(t("cls"))), None, 1,
+        ClsStore.build(small, _, _)),
+      Family("ahash", Seq(t("ahash")), Some(t("ahash") -> "doc_id"), 1,
+        AhashIndexStore.build(clips(MM.renderClip), _, _)),
+      Family("vhash", Seq(t("vhash")), Some(t("vhash") -> "doc_id"), 1,
+        VhashIndexStore.build(clips(MM.renderVideo), _, _)),
+      Family("bpe", Seq(BpeStore.mergesTable(t("bpe")),
+          BpeStore.statsTable(t("bpe"))), None, 2,
+        BpeStore.build(small, 10, _, _)),
+      Family("unigram", Seq(UnigramStore.piecesTable(t("unigram")),
+          UnigramStore.statsTable(t("unigram"))), None, 2,
+        UnigramStore.build(small, _, _)))
+
+    def tables(): Set[String] =
+      spark.catalog.listTables().collect().map(_.name).toSet
+    def digest(m: String): (Long, Long) = {
+      val r = spark.table(m)
+        .selectExpr("count(*)", "coalesce(sum(cast(hash(*) AS BIGINT)), 0)")
+        .head()
+      (r.getLong(0), r.getLong(1))
+    }
+    val failures = families.flatMap { f =>
+      val table = t(f.name)
+      val path = Files.createTempDirectory(s"graft-pub-${f.name}")
+        .toString + "/idx"
+      try {
+        f.build(table, path)
+        val dead = f.keyed.map { case (m, key) =>
+          val id = spark.table(m).select(col(key).cast("long")).head()
+            .getLong(0)
+          Retire.delete(spark, table, Seq(id).toDF(key), key)
+          (m, key, id)
+        }
+        val before = tables()
+        val rows = f.members.map(m => m -> digest(m)).toMap
+        // `Tables.events` frames run in a child session of their own
+        sessions.foreach(_.conf.set("spark.sql.sources.commitProtocolClass",
+          classOf[FailingCommit].getName))
+        FailingCommit.arm(path, f.commits)
+        try intercept[Exception](f.build(table, path))
+        finally {
+          FailingCommit.disarm()
+          sessions.foreach(
+            _.conf.unset("spark.sql.sources.commitProtocolClass"))
+        }
+        assert(FailingCommit.fired, "the injected commit failure never fired")
+        val missing = f.members.filterNot(spark.catalog.tableExists)
+        assert(missing.isEmpty, s"members lost: ${missing.mkString(", ")}")
+        assert(tables() === before, "the catalog changed")
+        f.members.foreach(m =>
+          assert(digest(m) === rows(m), s"$m no longer reads its rows"))
+        dead.foreach { case (m, key, id) =>
+          assert(spark.table(m).filter(col(key) === id).count() > 0)
+          assert(Retire.survivors(spark, table, spark.table(m), key)
+            .filter(col(key) === id).count() === 0,
+            s"tombstoned $key $id is visible again")
+        }
+        f.build(table, path)
+        f.members.foreach(m => assert(spark.table(m).count() > 0, m))
+        assert(Retire.dead(spark, table).isEmpty,
+          "a clean build must start without tombstones")
+        None
+      } catch {
+        case e: Throwable => Some(s"${f.name}: ${e.getMessage}")
+      }
+    }
+    assert(failures.isEmpty, failures.mkString("\n", "\n", ""))
+  }
+}
+
+/** A commit protocol that fails one chosen job commit under an armed
+  * path: the injected mid-write fault of the failed-build test. Until
+  * armed it commits like Spark's default protocol.
+  */
+class FailingCommit(jobId: String, path: String, dynamic: Boolean)
+    extends org.apache.spark.sql.execution.datasources
+      .SQLHadoopMapReduceCommitProtocol(jobId, path, dynamic) {
+  override def commitJob(job: org.apache.hadoop.mapreduce.JobContext,
+      commits: Seq[org.apache.spark.internal.io.FileCommitProtocol
+        .TaskCommitMessage]): Unit = {
+    if (FailingCommit.trips(path))
+      throw new java.io.IOException(s"injected commit failure at $path")
+    super.commitJob(job, commits)
+  }
+}
+
+object FailingCommit {
+  private val under = new java.util.concurrent.atomic.AtomicReference[String]
+  private val left = new java.util.concurrent.atomic.AtomicInteger
+  @volatile var fired = false
+
+  /** Fail the `nth` job commit whose output path contains `prefix`. */
+  def arm(prefix: String, nth: Int): Unit = {
+    fired = false
+    left.set(nth)
+    under.set(prefix)
+  }
+
+  def disarm(): Unit = under.set(null)
+
+  private def trips(path: String): Boolean = {
+    val p = under.get
+    if (p == null || !path.contains(p) || left.decrementAndGet() != 0) false
+    else { fired = true; disarm(); true }
   }
 }

@@ -216,7 +216,7 @@ class RetireSpec extends AnyFunSuite {
     val blockedCopy = batch.filter(col("doc_id") === unblockId)
     assert(blockedCopy.count() === 1)
     val admitted = ShingleIndexStore.admitAndExtend(
-      blockedCopy, 3, table, buckets = 4, 0.5)
+      blockedCopy, 3, table, 0.5)
     assert(admitted.count() === 1,
       "deleting the blocker must re-admit its near-dup")
   }
@@ -241,7 +241,7 @@ class RetireSpec extends AnyFunSuite {
     val copy = emb.filter(col("vec_id") === dead.head)
       .select((col("vec_id") + 9000000L).as("vec_id"), col("embedding"))
     val admitted = IvfIndexStore.admitAndExtend(
-      copy, table, buckets = 4, threshold = 0.999)
+      copy, table, threshold = 0.999)
     assert(admitted.count() === 1,
       "deleting a vector must unblock admission of its copy")
     // roll the admission back so compact compares against `expect`
