@@ -12,6 +12,37 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * fans out over more files/row-groups, so nothing here is local-mode-only.
   */
 object Tables {
+  /** A child of `s` with `s`'s current modifiable conf plus `overrides`:
+    * `newSession()` shares the SparkContext and cached data but owns its
+    * SQLConf, so a setting scoped to a child never mutates the caller's
+    * session. One child per (parent, overrides), memoized WEAKLY (a
+    * child holds no strong reference to its parent, so a stopped or
+    * abandoned parent session and its children are both collectable — a
+    * strong map would leak a SessionState per session in long-lived
+    * JVMs; a fresh child per call would pay its session state's build
+    * on every first query). Re-synced with the parent's conf on every
+    * call, so later `spark.conf.set` calls on the parent (shuffle
+    * partitions, session timezone) reach the child's plans instead of
+    * freezing at first use.
+    */
+  private[graft] def childSession(
+      s: SparkSession, overrides: (String, String)*): SparkSession = {
+    val child = children.synchronized {
+      children.computeIfAbsent(s, _ => new java.util.HashMap)
+        .computeIfAbsent(overrides, _ => s.newSession())
+    }
+    val fixed = overrides.map(_._1).toSet
+    s.conf.getAll.foreach { case (k, v) =>
+      if (!fixed(k) && child.conf.isModifiable(k) &&
+        !child.conf.getOption(k).contains(v)) child.conf.set(k, v)
+    }
+    overrides.foreach { case (k, v) => child.conf.set(k, v) }
+    child
+  }
+
+  private val children = new java.util.WeakHashMap[
+    SparkSession, java.util.Map[Seq[(String, String)], SparkSession]]
+
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
@@ -30,32 +61,12 @@ object Tables {
     *
     * The legacy conf must still be set when the plan EXECUTES (the scan's
     * hadoop conf is captured at runtime, so an eager restore would break
-    * the lazy plan), so it is scoped to a dedicated child session:
-    * `newSession()` shares the SparkContext and cached data but owns its
-    * SQLConf, meaning the caller's session is never mutated and other
-    * nanos-parquet reads in it keep their normal semantics. One child per
-    * parent session, memoized WEAKLY (a child holds no strong reference
-    * to its parent, so a stopped/abandoned parent session and its child
-    * are both collectable — a strong map would leak a SessionState per
-    * session in long-lived JVMs), and re-synced with the parent's current
-    * modifiable conf on every call so later `spark.conf.set` calls on the
-    * parent (shuffle partitions, session timezone) reach events() plans
-    * instead of freezing at first use.
+    * the lazy plan), so it is scoped to a [[childSession]], and other
+    * nanos-parquet reads in the caller's session keep their normal
+    * semantics.
     */
-  private val nanosSessions =
-    new java.util.WeakHashMap[SparkSession, SparkSession]
-
   def events(s: SparkSession, d: String): DataFrame = {
-    val ns = nanosSessions.synchronized {
-      var child = nanosSessions.get(s)
-      if (child == null) { child = s.newSession(); nanosSessions.put(s, child) }
-      child
-    }
-    s.conf.getAll.foreach { case (k, v) =>
-      if (ns.conf.isModifiable(k) && !ns.conf.getOption(k).contains(v))
-        ns.conf.set(k, v)
-    }
-    ns.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val ns = childSession(s, "spark.sql.legacy.parquet.nanosAsLong" -> "true")
     // The fixture's physical `ts` type has changed across driver testdata
     // generations (TIMESTAMP(NANOS) → TIMESTAMP_NTZ), so branch on what the
     // file actually carries instead of assuming one encoding; all branches

@@ -175,16 +175,23 @@ object Classifier {
     // (a) The row count rides the FIRST gradient aggregation (one more
     //     count per partial) instead of its own count() action — n is
     //     the same every pass, and full-batch GD needs it only to scale
-    //     the step. (b) AQE is off around the loop: each one-row agg is
+    //     the step. (b) AQE is off for the loop: each one-row agg is
     //     partial-sums → single final row, where adaptive planning can
     //     contribute nothing at ANY scale (no skew to split, nothing to
     //     coalesce below one output row) yet materializes the shuffle
     //     as its own query-stage JOB — doubling the loop's 16
     //     driver-sequenced sync points, the exact balloon mechanism the
     //     r14/r15 verdicts measured under host load.
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqePrev = spark.conf.get(aqeKey)
-    spark.conf.set(aqeKey, "false")
+    //     It is off in a child session that reads the persisted
+    //     projection through a global temp view: the caller's session
+    //     conf is never written, so a query planned on it meanwhile, on
+    //     any thread, stays adaptive.
+    val gd = childSession(spark, "spark.sql.adaptive.enabled" -> "false")
+    val view =
+      s"graft_cls_gd_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    cached.createGlobalTempView(view)
+    val rows =
+      gd.table(s"${spark.conf.get("spark.sql.globalTempDatabase")}.$view")
     try {
       var n = 0.0
       var iter = 0
@@ -195,7 +202,7 @@ object Classifier {
         val gs = (0 until NumFeatures).map(j =>
           sum(round(err * col(s"x$j") * lit(1e8), 0).cast("long"))
             .as(s"g$j")) :+ count(lit(1)).as("n")
-        val row = cached.agg(gs.head, gs.tail: _*).head()
+        val row = rows.agg(gs.head, gs.tail: _*).head()
         n = row.getLong(NumFeatures).toDouble
         if (n == 0) empty = true // weights stay zero, as before
         else w = Array.tabulate(NumFeatures)(j =>
@@ -203,7 +210,7 @@ object Classifier {
         iter += 1
       }
     } finally {
-      spark.conf.set(aqeKey, aqePrev)
+      spark.catalog.dropGlobalTempView(view)
       cached.unpersist()
     }
     w

@@ -1,11 +1,13 @@
 package graft.plans
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths, FileAlreadyExistsException}
-import java.util.UUID
+import java.util.{Base64, UUID}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Minimal table-format layer over raw parquet — the missing piece
   * between the artifact stores and a lakehouse, extending the
@@ -16,13 +18,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   <root>/data/<uuid>/part-*.parquet   immutable data file groups
   *   <root>/_commits/<v>.json            one record per commit
   *
-  * A commit record is `{version, action, adds, removes}` where `adds` /
-  * `removes` are data-group directories. The LIVE file set at version v
+  * A commit record is `{version, action, adds, removes, tag, schema}`
+  * where `adds` / `removes` are data-group directories and `schema` is
+  * the table schema after the commit. The LIVE file set at version v
   * is the log replay: start empty; `append` adds its groups;
   * `overwrite` removes all prior live groups and adds its own. Readers
-  * never list data directories — the log IS the table (the key
-  * object-store lesson: listings are neither atomic nor consistent;
-  * a log replay is both).
+  * never list data directories and never infer a schema from data
+  * files — the log IS the table (the key object-store lesson: listings
+  * are neither atomic nor consistent; a log replay is both), and every
+  * scan reads its files through the schema logged at its version.
   *
   * Atomicity + isolation: data files are written FIRST (invisible until
   * committed — an abandoned write leaves garbage, never corruption),
@@ -45,18 +49,47 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the driver but the file-group names. Schema evolution follows the
   * lakehouse add-column rule ([[SnapshotStore.checkAppendSchema]]):
   * appends may add columns (old groups read back null-filled), drops
-  * and type changes go through overwrite. Deliberately out of scope vs
-  * a production format: multi-table transactions.
+  * and type changes go through overwrite. The schema a commit logs is
+  * taken from the Spark schema in the footers of the files it wrote
+  * (the same footers its file stats come from), so no Spark job ever
+  * infers it. Deliberately out of scope vs a production format:
+  * multi-table transactions.
   */
 object SnapshotStore {
 
   private def commitsDir(root: String): Path = Paths.get(root, "_commits")
 
+  /** `schema` is the post-commit table schema, base64 of its JSON
+    * ([[encodeSchema]]); only a record that adds no group may omit it.
+    */
   private case class Commit(
       version: Int, action: String, adds: Seq[String],
-      removes: Seq[String], tag: String = "")
+      removes: Seq[String], tag: String = "", schema: String = "")
 
-  // hand-rolled (de)serialization: the record grammar is four fixed
+  /** The schema travels base64-encoded: its JSON quotes, commas and
+    * brackets would break the hand-rolled grammar, the base64 alphabet
+    * cannot, and a torn value still fails the closing-brace check.
+    */
+  private def encodeSchema(s: StructType): String =
+    Base64.getEncoder.encodeToString(s.json.getBytes(UTF_8))
+
+  private def decodeSchema(b64: String): StructType =
+    DataType.fromJson(new String(Base64.getDecoder.decode(b64), UTF_8))
+      .asInstanceOf[StructType]
+
+  private val SchemaGrammar = "[A-Za-z0-9+/]*={0,2}"
+
+  /** Fail closed on a record (or checkpoint) that adds data without a
+    * schema: it was written before the log recorded schemas, and no
+    * fallback infers one.
+    */
+  private def requireSchema(what: String, schema: String,
+      addsData: Boolean): Unit =
+    require(schema.nonEmpty || !addsData,
+      s"$what records no table schema (written before the commit log " +
+        "carried one); rewrite this table")
+
+  // hand-rolled (de)serialization: the record grammar is six fixed
   // fields; a JSON library dependency is not available offline
   private def render(c: Commit): String = {
     // the group names are interpolated unescaped into the record, so
@@ -69,10 +102,9 @@ object SnapshotStore {
       require(g.matches("data/[0-9a-fA-F-]+"),
         s"data group name '$g' violates the data/<uuid> grammar")
     }
-    def arr(xs: Seq[String]) = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
     s"""{"version":${c.version},"action":"${c.action}",""" +
-      s""""adds":${arr(c.adds)},"removes":${arr(c.removes)},""" +
-      s""""tag":"${c.tag}"}"""
+      s""""adds":${jsonArr(c.adds)},"removes":${jsonArr(c.removes)},""" +
+      s""""tag":"${c.tag}","schema":"${c.schema}"}"""
   }
 
   private def parse(s: String): Commit = {
@@ -85,13 +117,6 @@ object SnapshotStore {
       val i = s.indexOf("\"" + name + "\":")
       if (i < 0) "" else field(name).drop(1).takeWhile(_ != '"')
     }
-    def arr(body: String): Seq[String] = {
-      val inner = body.drop(body.indexOf('[') + 1)
-        .takeWhile(_ != ']')
-      if (inner.trim.isEmpty) Nil
-      else inner.split(",").toSeq.map(_.trim.stripPrefix("\"")
-        .stripSuffix("\""))
-    }
     // fail CLOSED on a truncated/torn record: a partial read of the
     // adds array would otherwise yield a mangled group name and the
     // reader would replay a corrupted live set silently. render()
@@ -103,11 +128,15 @@ object SnapshotStore {
     val c = Commit(
       field("version").takeWhile(c => c.isDigit).toInt,
       field("action").drop(1).takeWhile(_ != '"'),
-      arr(field("adds")), arr(field("removes")), opt("tag"))
+      parseArr(field("adds")), parseArr(field("removes")), opt("tag"),
+      opt("schema"))
     (c.adds ++ c.removes).foreach { g =>
       require(g.matches("data/[0-9a-fA-F-]+"),
         s"torn or corrupt commit record (bad group '$g'): $s")
     }
+    require(c.schema.matches(SchemaGrammar),
+      s"torn or corrupt commit record (schema is not base64): $s")
+    requireSchema(s"commit record ${c.version}", c.schema, c.adds.nonEmpty)
     c
   }
 
@@ -176,13 +205,14 @@ object SnapshotStore {
   // dozens of commits, unbounded over a table's ingest lifetime. Every
   // CheckpointInterval-th commit therefore also publishes a CHECKPOINT
   // record carrying the fully-replayed state at that version (live
-  // group set + every appendOnce tag seen), and all hot paths read
-  // latest-checkpoint + record suffix instead of the whole log — the
-  // production table formats' checkpoint discipline, reduced to its
-  // replay-state core. Checkpoints are derived, never authoritative:
-  // a missing/lost one only means a longer replay, and time travel to
-  // a version BEFORE the newest checkpoint replays the retained full
-  // records (explicitly rejected once log retention has pruned them).
+  // group set, table schema, every appendOnce tag seen), and all hot
+  // paths read latest-checkpoint + record suffix instead of the whole
+  // log — the production table formats' checkpoint discipline,
+  // reduced to its replay-state core. Checkpoints are derived, never
+  // authoritative: a missing/lost one only means a longer replay, and
+  // time travel to a version BEFORE the newest checkpoint replays the
+  // retained full records (explicitly rejected once log retention has
+  // pruned them).
 
   private[graft] val CheckpointInterval = 10
 
@@ -194,29 +224,15 @@ object SnapshotStore {
     * groups) referenced from a small `<v>.ckpt` manifest; shards land
     * BEFORE the manifest's putIfAbsent, so a visible manifest implies
     * complete shards, and a checkpointer losing the manifest race
-    * deletes its own orphans. Under the cap the legacy one-file inline
+    * deletes its own orphans. Under the cap the one-file inline
     * form is still written — the common case pays zero extra files.
     * Both forms parse through [[readCkpt]]. Test seam: specs shrink
     * this to force sharding on fixture-sized tables.
     */
   private[graft] var CkptShardGroups = 4096
 
-  private case class Ckpt(
-      version: Int, live: Vector[String], tags: Set[String])
-
-  private def renderCkpt(c: Ckpt): String = {
-    c.live.foreach { g =>
-      require(g.matches("data/[0-9a-fA-F-]+"),
-        s"data group name '$g' violates the data/<uuid> grammar")
-    }
-    c.tags.foreach { t =>
-      require(t.matches("[A-Za-z0-9._-]+"),
-        s"tag '$t' violates the tag grammar")
-    }
-    def arr(xs: Seq[String]) = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
-    s"""{"version":${c.version},"live":${arr(c.live)},""" +
-      s""""tags":${arr(c.tags.toSeq.sorted)}}"""
-  }
+  private case class Ckpt(version: Int, live: Vector[String],
+      tags: Set[String], schema: String)
 
   private def jsonArr(xs: Seq[String]): String =
     xs.map("\"" + _ + "\"").mkString("[", ",", "]")
@@ -228,11 +244,11 @@ object SnapshotStore {
       .stripSuffix("\""))
   }
 
-  /** Parsed manifest head: inline live groups (legacy/one-file form)
+  /** Parsed manifest head: inline live groups (one-file form)
     * or the shard-file names to read.
     */
   private case class CkptHead(
-      version: Int, tags: Set[String],
+      version: Int, tags: Set[String], schema: String,
       inline: Option[Vector[String]], shards: Vector[String])
 
   private def parseCkptHead(s: String): CkptHead = {
@@ -248,6 +264,9 @@ object SnapshotStore {
     val tags = body("tags").map(parseArr).getOrElse(
       throw new IllegalArgumentException(
         s"torn or corrupt checkpoint record (no tags): $s")).toSet
+    val schema = body("schema").fold("")(_.drop(1).takeWhile(_ != '"'))
+    require(schema.matches(SchemaGrammar),
+      s"torn or corrupt checkpoint record (schema is not base64): $s")
     val inline = body("live").map(parseArr)
     val shards = body("shards").map(parseArr).getOrElse(Vector.empty)
     require(inline.isDefined || shards.nonEmpty,
@@ -260,7 +279,7 @@ object SnapshotStore {
       require(n.matches("[0-9]{8}-[0-9a-fA-F-]+-[0-9]+\\.ckptshard"),
         s"torn or corrupt checkpoint record (bad shard name '$n'): $s")
     }
-    CkptHead(version, tags, inline, shards)
+    CkptHead(version, tags, schema, inline, shards)
   }
 
   private def parseShard(s: String): Vector[String] = {
@@ -281,7 +300,8 @@ object SnapshotStore {
     val live = head.inline.getOrElse(
       head.shards.flatMap(n =>
         readRetrying(p.getParent.resolve(n))(parseShard)))
-    Ckpt(head.version, live, head.tags)
+    requireSchema(s"checkpoint ${head.version}", head.schema, live.nonEmpty)
+    Ckpt(head.version, live, head.tags, head.schema)
   }
 
   /** Publish a checkpoint: inline one-file form when the live set fits
@@ -290,19 +310,22 @@ object SnapshotStore {
     * the loser's own shards, which nothing references).
     */
   private def writeCkpt(
-      dir: Path, publisher: CommitPublisher, ck: Ckpt): Unit =
+      dir: Path, publisher: CommitPublisher, ck: Ckpt): Unit = {
+    ck.live.foreach { g =>
+      require(g.matches("data/[0-9a-fA-F-]+"),
+        s"data group name '$g' violates the data/<uuid> grammar")
+    }
+    ck.tags.foreach { t =>
+      require(t.matches("[A-Za-z0-9._-]+"),
+        s"tag '$t' violates the tag grammar")
+    }
+    val head = s"""{"version":${ck.version},""" +
+      s""""tags":${jsonArr(ck.tags.toSeq.sorted)},"schema":"${ck.schema}","""
     if (ck.live.size <= CkptShardGroups) {
-      publisher.putIfAbsent(dir, f"${ck.version}%08d.ckpt", renderCkpt(ck))
+      publisher.putIfAbsent(dir, f"${ck.version}%08d.ckpt",
+        head + s""""live":${jsonArr(ck.live)}}""")
       ()
     } else {
-      ck.live.foreach { g =>
-        require(g.matches("data/[0-9a-fA-F-]+"),
-          s"data group name '$g' violates the data/<uuid> grammar")
-      }
-      ck.tags.foreach { t =>
-        require(t.matches("[A-Za-z0-9._-]+"),
-          s"tag '$t' violates the tag grammar")
-      }
       val uuid = UUID.randomUUID().toString
       val shards = ck.live.grouped(CkptShardGroups).toVector
       val names = shards.indices
@@ -311,13 +334,11 @@ object SnapshotStore {
         publisher.putIfAbsent(dir, names(i),
           s"""{"groups":${jsonArr(shards(i))}}""")
       }
-      val manifest =
-        s"""{"version":${ck.version},""" +
-          s""""tags":${jsonArr(ck.tags.toSeq.sorted)},""" +
-          s""""shards":${jsonArr(names)}}"""
+      val manifest = head + s""""shards":${jsonArr(names)}}"""
       if (!publisher.putIfAbsent(dir, f"${ck.version}%08d.ckpt", manifest))
         names.foreach(n => Files.deleteIfExists(dir.resolve(n)))
     }
+  }
 
   /** Newest-checkpoint cache: checkpoints are IMMUTABLE once published
     * (putIfAbsent slots, version-monotonic names), so the parsed form
@@ -372,14 +393,27 @@ object SnapshotStore {
     }
   }
 
-  /** The shared live-set fold — one replay rule for checkpointed and
-    * from-scratch paths, so they cannot diverge.
+  /** The replayed table at one version: its live groups and its
+    * logged schema (base64, "" before the first commit).
     */
-  private def foldLive(
-      start: Vector[String], commits: Seq[Commit]): Vector[String] =
-    commits.foldLeft(start) { (live, c) =>
-      (if (c.action == "overwrite") Vector.empty
-       else live.filterNot(c.removes.contains)) ++ c.adds
+  private case class Snap(live: Vector[String], schema: String) {
+    def structType: StructType =
+      if (schema.isEmpty) new StructType() else decodeSchema(schema)
+  }
+
+  private val EmptySnap = Snap(Vector.empty, "")
+
+  private def snapOf(ck: Ckpt): Snap = Snap(ck.live, ck.schema)
+
+  /** The shared replay fold — one rule for checkpointed and
+    * from-scratch paths, so they cannot diverge. A record without a
+    * schema adds no group (parse enforces it), so it keeps the prior one.
+    */
+  private def fold(start: Snap, commits: Seq[Commit]): Snap =
+    commits.foldLeft(start) { (snap, c) =>
+      Snap((if (c.action == "overwrite") Vector.empty
+            else snap.live.filterNot(c.removes.contains)) ++ c.adds,
+        if (c.schema.nonEmpty) c.schema else snap.schema)
     }
 
   /** The replay state the hot paths operate on: the newest checkpoint
@@ -390,28 +424,28 @@ object SnapshotStore {
     def lastVersion: Int =
       suffix.lastOption.map(_.version)
         .orElse(ckpt.map(_.version)).getOrElse(-1)
-    def liveBase: Vector[String] = ckpt.fold(Vector.empty[String])(_.live)
+    def base: Snap = ckpt.fold(EmptySnap)(snapOf)
     def hasTag(tag: String): Boolean =
       ckpt.exists(_.tags.contains(tag)) || suffix.exists(_.tag == tag)
     def allTags: Set[String] =
       ckpt.fold(Set.empty[String])(_.tags) ++
         suffix.iterator.map(_.tag).filter(_.nonEmpty)
 
-    /** Live groups at `asOf` (latest when None). A target before the
+    /** The table at `asOf` (latest when None). A target before the
       * base checkpoint replays from the newest OLDER checkpoint (or
       * scratch) plus the retained records up to `asOf` — possible only
       * while [[vacuumLog]] has not pruned those records, in which case
       * the target is explicitly rejected.
       */
-    def liveAt(root: String, asOf: Option[Int]): Seq[String] = {
+    def at(root: String, asOf: Option[Int]): Snap = {
       asOf.foreach { v =>
         require(v <= lastVersion,
           s"version $v does not exist (latest is $lastVersion)")
       }
       asOf match {
-        case None => foldLive(liveBase, suffix)
+        case None => fold(base, suffix)
         case Some(v) if ckpt.forall(_.version <= v) =>
-          foldLive(liveBase, suffix.filter(_.version <= v))
+          fold(base, suffix.filter(_.version <= v))
         case Some(v) =>
           // the slow path: re-list for the newest checkpoint ≤ v and
           // fold the record range (base, v] — and REFUSE on any gap
@@ -431,7 +465,7 @@ object SnapshotStore {
           require(recs.map(_.version) == (b0 + 1 to v),
             s"version $v predates the retained commit log — its " +
               "records were pruned and the snapshot cannot be replayed")
-          foldLive(base.fold(Vector.empty[String])(_.live), recs)
+          fold(base.fold(EmptySnap)(snapOf), recs)
       }
     }
   }
@@ -474,9 +508,10 @@ object SnapshotStore {
   private def afterPublish(root: String, st: LogState, c: Commit,
       publisher: CommitPublisher): Unit =
     if (c.version > 0 && c.version % CheckpointInterval == 0) {
-      val ck = Ckpt(c.version, foldLive(st.liveBase, st.suffix :+ c),
-        st.allTags ++ (if (c.tag.nonEmpty) Set(c.tag) else Set.empty))
-      writeCkpt(commitsDir(root), publisher, ck)
+      val snap = fold(st.base, st.suffix :+ c)
+      writeCkpt(commitsDir(root), publisher, Ckpt(c.version, snap.live,
+        st.allTags ++ (if (c.tag.nonEmpty) Set(c.tag) else Set.empty),
+        snap.schema))
     }
 
   /** The ONE primitive the commit protocol demands of storage:
@@ -550,134 +585,102 @@ object SnapshotStore {
     won
   }
 
-  /** Write `df` as a new immutable data group, return its name. A
-    * `_stats.json` sidecar records per-FILE per-numeric-column
-    * [min, max] plus the group's file manifest for file-level pruning
-    * ([[readWhere]]) — the underscore prefix keeps it invisible to the
-    * parquet reader, and sitting INSIDE the group it shares the
-    * group's immutability and vacuum lifetime. One small aggregation
-    * per commit buys scan skipping for every future read.
+  /** Write `df` as a new immutable data group; returns its name and
+    * the schema its files carry. A `_stats.json` sidecar records
+    * per-FILE per-numeric-column [min, max] plus the group's file
+    * manifest for file-level pruning ([[readWhere]]) — the underscore
+    * prefix keeps it invisible to the parquet reader, and sitting
+    * INSIDE the group it shares the group's immutability and vacuum
+    * lifetime.
     */
-  private def writeGroup(df: DataFrame, root: String): String = {
+  private def writeGroup(
+      df: DataFrame, root: String): (String, StructType) = {
     val group = s"data/${UUID.randomUUID()}"
     df.write.mode("error").parquet(s"$root/$group")
-    sidecarsFor(df.sparkSession, root, Seq(group))
-    group
+    (group, sidecarsFor(df.sparkSession, root, Seq(group)))
   }
 
-  /** Compute and write the `_stats.json` sidecars for `groups` from
-    * the just-written files' PARQUET FOOTERS — driver-side metadata
-    * reads, ZERO Spark jobs (r16: the r15 shape still paid one
-    * read-back aggregation job per COMMIT; the footer already carries
-    * exact per-row-group min/max for every numeric column Spark
-    * writes, so re-scanning the data for the same numbers was a pure
-    * driver-sequenced sync point — the job-count tax every commit of
-    * the snapshot lifecycle rows paid). Stats still come from the
-    * FILES JUST WRITTEN, never from re-running the input's lineage: a
+  /** Write the `_stats.json` sidecars for `groups` from the just-
+    * written files' PARQUET FOOTERS, and return the union of the Spark
+    * schemas those footers carry — the columns the commit adds to the
+    * logged table schema. Driver-side metadata reads, ZERO Spark jobs:
+    * the footer already carries exact per-row-group min/max for every
+    * numeric column Spark writes. Stats come from the FILES JUST
+    * WRITTEN, never from re-running the input's lineage: a
     * nondeterministic input (sample, rand, source-that-moved) would
     * materialize one row set and stat another, and pruning on those
-    * stats silently drops rows.
+    * stats silently drops rows. This is the only stats producer.
     *
-    * Soundness is unchanged: footer min/max are exact for the
-    * supported physical types (signed INT32/INT64, FLOAT, DOUBLE —
-    * everything [[statColumns]] classifies, except DECIMAL); integral
-    * bounds still widen OUTWARD past 2^53 ([[widenLo]]/[[widenHi]]);
-    * a NaN bound or a stats-less chunk yields NO entry, so the file
-    * is simply never pruned ("stats only ever EXCLUDE"). Any column
-    * this reader cannot bound soundly (decimal's unscaled encoding)
-    * falls back to [[sidecarsForViaJob]] — the r15 one-job read-back —
-    * for the whole group set, so the two producers can never mix
-    * within a commit.
-    *
-    * The sidecar format is IDENTICAL: per-file `file|col` [min, max]
-    * ranges plus the `_files` MANIFEST of data-carrying files —
-    * [[readWhere]] addresses kept files directly from it and never
-    * lists the data directory. An empty group (an empty-batch append)
-    * records an empty manifest, exactly as before.
+    * The sidecar holds per-file `file|col` [min, max] ranges plus the
+    * `_files` MANIFEST of data-carrying files — [[readWhere]] addresses
+    * kept files directly from it and never lists the data directory.
+    * An empty group (an empty-batch append) records an empty manifest.
     */
   private def sidecarsFor(
-      spark: SparkSession, root: String, groups: Seq[String]): Unit = {
+      spark: SparkSession, root: String, groups: Seq[String]): StructType = {
     val conf = spark.sessionState.newHadoopConf()
-    val computed = groups.map { g =>
+    groups.foldLeft(new StructType()) { (schema, g) =>
       val dir = Paths.get(root, g)
-      val files = listDir(dir).map(_.getFileName.toString)
+      val stats = listDir(dir).map(_.getFileName.toString)
         .filter(n => n.endsWith(".parquet") &&
           !n.startsWith("_") && !n.startsWith("."))
         .sorted
-      val stats = files.map(f => f -> footerStats(conf, dir.resolve(f)))
-      if (stats.exists(_._2.isEmpty)) None
-      else Some((g,
-        // manifest = data-CARRYING files, matching the read-back
-        // aggregation's input_file_name semantics (a zero-row file
-        // contributes no group there either)
-        stats.collect { case (f, Some((rows, _))) if rows > 0 => f },
+        .map(f => f -> footerStats(conf, dir.resolve(f)))
+      // manifest = data-CARRYING files (a zero-row file holds nothing
+      // a read could need)
+      writeSidecar(root, g,
+        stats.collect { case (f, st) if st.rows > 0 => f },
         stats.flatMap { case (f, st) =>
-          st.toSeq.flatMap(_._2.map { case (c, lo, hi) =>
-            (s"$f|$c", lo, hi)
-          })
-        }))
+          st.ranges.map { case (c, lo, hi) => (s"$f|$c", lo, hi) }
+        })
+      stats.foldLeft(schema)((s, fs) => widen(s, fs._2.schema))
     }
-    if (computed.forall(_.isDefined))
-      computed.flatten.foreach { case (g, files, ranges) =>
-        writeSidecar(root, g, files, ranges)
-      }
-    else sidecarsForViaJob(spark, root, groups)
   }
 
-  /** One file's (row count, per-column [min, max]) from its parquet
-    * footer. None = a column's type/encoding cannot be bounded soundly
-    * from the footer (decimal, unsigned ints) — the caller must use
-    * the Spark read-back path instead. Columns that are simply not
-    * stat-eligible (strings, dates, timestamps, nested) are skipped,
-    * mirroring [[statColumns]]; a column whose chunks lack statistics
-    * or whose bounds are NaN records no entry (file never pruned).
+  /** One file's footer facts: row count, per-column [min, max], and
+    * the Spark schema (nullable, as every parquet read sees it).
+    */
+  private case class FileStats(rows: Long,
+      ranges: Seq[(String, Double, Double)], schema: StructType)
+
+  /** One file's [[FileStats]] from its parquet footer. Stats are sound
+    * or absent ("stats only ever EXCLUDE"): only signed INT32/INT64,
+    * FLOAT and DOUBLE columns are bounded; decimal (unscaled encoding),
+    * unsigned, string, date, timestamp and nested columns record no
+    * entry, so a file is never pruned on them. Integral bounds widen
+    * OUTWARD past 2^53 ([[widenLo]]/[[widenHi]]). A chunk without
+    * usable bounds — no statistics, a NaN bound, or min/max withheld
+    * (parquet withholds them for a float chunk holding NaN) — leaves
+    * the column unbounded for the whole file, unless its null count
+    * proves the chunk all-null, in which case it contributes nothing.
     */
   private def footerStats(
-      conf: org.apache.hadoop.conf.Configuration,
-      file: Path): Option[(Long, Seq[(String, Double, Double)])] = {
+      conf: org.apache.hadoop.conf.Configuration, file: Path): FileStats = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import org.apache.parquet.schema.LogicalTypeAnnotation.{DecimalLogicalTypeAnnotation, IntLogicalTypeAnnotation}
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    import org.apache.parquet.schema.LogicalTypeAnnotation.IntLogicalTypeAnnotation
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{
+      DOUBLE, FLOAT, INT32, INT64}
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
       new org.apache.hadoop.fs.Path(file.toUri), conf))
     try {
       val meta = reader.getFooter
-      val schema = meta.getFileMetaData.getSchema
+      val sparkSchema = meta.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata")
+      require(sparkSchema != null, s"$file carries no Spark schema")
       // classify top-level primitive columns: true integral, false
-      // fractional, absent = not stat-eligible; an UNSOUND type
-      // (decimal's unscaled encoding, unsigned ints) aborts the whole
-      // file so the caller takes the Spark read-back path
-      val classOf = scala.collection.mutable.HashMap
-        .empty[String, Boolean]
-      var unsound = false
-      schema.getFields.asScala.foreach { f =>
-        if (f.isPrimitive) {
+      // fractional, absent = not stat-eligible
+      val classOf = meta.getFileMetaData.getSchema.getFields.asScala
+        .filter(_.isPrimitive).flatMap { f =>
           val p = f.asPrimitiveType()
-          val ann = p.getLogicalTypeAnnotation
-          val prim = p.getPrimitiveTypeName
-          ann match {
-            case _: DecimalLogicalTypeAnnotation => unsound = true
-            case i: IntLogicalTypeAnnotation if !i.isSigned =>
-              unsound = true
-            case _: IntLogicalTypeAnnotation
-                if prim == PrimitiveTypeName.INT32 ||
-                  prim == PrimitiveTypeName.INT64 =>
-              classOf(f.getName) = true
-            case null
-                if prim == PrimitiveTypeName.INT32 ||
-                  prim == PrimitiveTypeName.INT64 =>
-              classOf(f.getName) = true
-            case null
-                if prim == PrimitiveTypeName.FLOAT ||
-                  prim == PrimitiveTypeName.DOUBLE =>
-              classOf(f.getName) = false
-            case _ => // date/timestamp/string/... — not stat-eligible
+          (p.getLogicalTypeAnnotation, p.getPrimitiveTypeName) match {
+            case (i: IntLogicalTypeAnnotation, INT32 | INT64) if i.isSigned =>
+              Some(f.getName -> true)
+            case (null, INT32 | INT64) => Some(f.getName -> true)
+            case (null, FLOAT | DOUBLE) => Some(f.getName -> false)
+            case _ => None
           }
-        }
-      }
-      if (unsound) return None
+        }.toMap
       var rows = 0L
       // per-column fold state: (lo, hi) as Long for integral columns,
       // Double for fractional; `dead` = a chunk without usable bounds
@@ -693,23 +696,24 @@ object SnapshotStore {
           val name = c.getPath.toDotString
           classOf.get(name).foreach { integral =>
             val st = c.getStatistics
-            if (st == null) dead += name
-            else if (st.hasNonNullValue) {
-              if (integral) {
-                val mn = st.genericGetMin.asInstanceOf[Number].longValue
-                val mx = st.genericGetMax.asInstanceOf[Number].longValue
-                loL(name) = loL.get(name).fold(mn)(math.min(_, mn))
-                hiL(name) = hiL.get(name).fold(mx)(math.max(_, mx))
-              } else {
-                val mn = st.genericGetMin.asInstanceOf[Number].doubleValue
-                val mx = st.genericGetMax.asInstanceOf[Number].doubleValue
-                if (mn.isNaN || mx.isNaN) dead += name
-                else {
-                  loD(name) = loD.get(name).fold(mn)(math.min(_, mn))
-                  hiD(name) = hiD.get(name).fold(mx)(math.max(_, mx))
-                }
+            if (st == null || !st.hasNonNullValue) {
+              val allNull = st != null && st.isNumNullsSet &&
+                st.getNumNulls == c.getValueCount
+              if (!allNull) dead += name
+            } else if (integral) {
+              val mn = st.genericGetMin.asInstanceOf[Number].longValue
+              val mx = st.genericGetMax.asInstanceOf[Number].longValue
+              loL(name) = loL.get(name).fold(mn)(math.min(_, mn))
+              hiL(name) = hiL.get(name).fold(mx)(math.max(_, mx))
+            } else {
+              val mn = st.genericGetMin.asInstanceOf[Number].doubleValue
+              val mx = st.genericGetMax.asInstanceOf[Number].doubleValue
+              if (mn.isNaN || mx.isNaN) dead += name
+              else {
+                loD(name) = loD.get(name).fold(mn)(math.min(_, mn))
+                hiD(name) = hiD.get(name).fold(mx)(math.max(_, mx))
               }
-            } // all-null chunk: contributes nothing, like the agg path
+            }
           }
         }
       }
@@ -721,70 +725,35 @@ object SnapshotStore {
           Some((name, loD(name), hiD(name)))
         case _ => None // all-null column: no entry, file never pruned
       }
-      Some((rows, ranges))
+      FileStats(rows, ranges,
+        nullable(DataType.fromJson(sparkSchema)).asInstanceOf[StructType])
     } finally reader.close()
   }
 
-  /** The r15 read-back form — ONE Spark aggregation keyed by file over
-    * every just-written group. Retained as the fallback for stat
-    * columns whose footer encoding [[footerStats]] cannot bound
-    * soundly (decimal); behavior and output format are identical.
+  /** `t` with every nested field, element and value nullable — the
+    * shape a parquet read gives any written schema.
     */
-  private def sidecarsForViaJob(
-      spark: SparkSession, root: String, groups: Seq[String]): Unit = {
-    import org.apache.spark.sql.functions.{col, input_file_name, min, max}
-    val written = spark.read.parquet(groups.map(g => s"$root/$g"): _*)
-    val cols = statColumns(written.schema)
-    val rows =
-      if (cols.isEmpty)
-        written.select(input_file_name().as("_f")).distinct().collect()
-      else {
-        val aggs = cols.flatMap { case (c, integral) =>
-          val t = if (integral) "long" else "double"
-          Seq(min(col(c)).cast(t), max(col(c)).cast(t))
-        }
-        written.groupBy(input_file_name().as("_f"))
-          .agg(aggs.head, aggs.tail: _*).collect()
-      }
-    def fileNameOf(uri: String): String = uri.drop(uri.lastIndexOf('/') + 1)
-    // assign each file row to its group by the path segment before the
-    // file name (group dirs are data/<uuid> — unique by construction)
-    def groupOf(uri: String): String = {
-      val path = java.net.URI.create(uri).getPath
-      groups.find(g => path.contains(s"/$g/")).getOrElse(
-        throw new IllegalStateException(
-          s"written file $uri belongs to none of ${groups.mkString(",")}"))
-    }
-    val byGroup = rows.groupBy(r => groupOf(r.getString(0)))
-    groups.foreach { g =>
-      val gRows = byGroup.getOrElse(g, Array.empty[org.apache.spark.sql.Row])
-      val files = gRows.map(r => fileNameOf(r.getString(0))).sorted.toSeq
-      val ranges = gRows.toSeq.flatMap { r =>
-        val f = fileNameOf(r.getString(0))
-        cols.zipWithIndex.flatMap { case ((c, integral), i) =>
-          if (r.isNullAt(1 + 2 * i) || r.isNullAt(2 + 2 * i)) None
-          else {
-            val (lo, hi) =
-              if (integral)
-                (widenLo(r.getLong(1 + 2 * i)), widenHi(r.getLong(2 + 2 * i)))
-              else (r.getDouble(1 + 2 * i), r.getDouble(2 + 2 * i))
-            // a NaN bound can only poison later comparisons (NaN sorts
-            // above everything in Spark's min/max, and every NaN
-            // comparison is false) — record no entry, so the file is
-            // simply never pruned, the only sound degradation
-            if (lo.isNaN || hi.isNaN) None
-            else Some((s"$f|$c", lo, hi))
-          }
-        }
-      }
-      writeSidecar(root, g, files, ranges)
-    }
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType =>
+      MapType(nullable(m.keyType), nullable(m.valueType),
+        valueContainsNull = true)
+    case other => other
   }
+
+  /** `cur` plus the columns of `add` it lacks, in `add`'s order — the
+    * add-column rule's schema arithmetic (a retype never reaches here:
+    * [[checkAppendSchema]] rejects it, and overwrite logs its own).
+    */
+  private def widen(cur: StructType, add: StructType): StructType =
+    StructType(cur.fields ++
+      add.fields.filterNot(f => cur.fieldNames.contains(f.name)))
 
   /** The ONE sidecar serializer — shared by [[writeGroup]] (fresh
     * stats from just-written files) and [[linkGroup]] (entries carried
-    * forward for re-linked files), so the format cannot diverge
-    * between the two producers.
+    * forward for re-linked files), so the format cannot diverge.
     */
   private def writeSidecar(root: String, group: String,
       files: Seq[String], ranges: Seq[(String, Double, Double)]): Unit = {
@@ -802,24 +771,11 @@ object SnapshotStore {
   private def statNum(v: Double) =
     String.format(java.util.Locale.ROOT, "%.17g", Double.box(v))
 
-  /** The stats-eligible columns as (name, isIntegral). Integral columns
-    * aggregate as LONG, not double: a blind double cast rounds
-    * |values| > 2^53 to nearest, so the sidecar min could round UP past
-    * the true value and pruning would exclude a group that contains
-    * matching rows — silent row loss, violating "stats only ever
-    * EXCLUDE". [[widenLo]]/[[widenHi]] round the stored bound OUTWARD
-    * to the adjacent representable double instead.
+  /** Integral bounds convert to double OUTWARD: a blind cast rounds
+    * |values| > 2^53 to nearest, so a stored min could round UP past
+    * the true value and pruning would exclude a file that holds
+    * matching rows — silent row loss.
     */
-  private def statColumns(
-      s: org.apache.spark.sql.types.StructType): Seq[(String, Boolean)] = {
-    import org.apache.spark.sql.types._
-    s.fields.collect {
-      case f if Set[DataType](ByteType, ShortType, IntegerType, LongType)
-        .contains(f.dataType) => (f.name, true)
-      case f if f.dataType.isInstanceOf[NumericType] => (f.name, false)
-    }.toSeq
-  }
-
   private val ExactLongBound = 1L << 53
 
   private def widenLo(v: Long): Double =
@@ -830,37 +786,37 @@ object SnapshotStore {
     if (math.abs(v) <= ExactLongBound) v.toDouble
     else Math.nextUp(v.toDouble)
 
-  /** A group's parsed stats sidecar: (file manifest when the sidecar
-    * is the per-file format, ranges keyed `file|col` — or legacy bare
-    * `col` for group-granular sidecars). Missing sidecar / column /
-    * all-null file ⇒ no entry, and the reader must KEEP the file
-    * (stats only ever EXCLUDE).
+  /** A group's parsed stats sidecar: (file manifest, ranges keyed
+    * `file|col`). A missing column or all-null file ⇒ no entry, and
+    * the reader must KEEP the file (stats only ever EXCLUDE).
     */
   private def readSidecar(root: String, group: String)
-      : (Option[Seq[String]], Map[String, (Double, Double)]) = {
-    val p = Paths.get(root, group, "_stats.json")
-    if (!Files.exists(p)) (None, Map.empty)
-    else {
-      val s = Files.readString(p)
-      val manifest = {
-        val i = s.indexOf("\"_files\":[")
-        if (i < 0) None
-        else Some(s.drop(i + 10).takeWhile(_ != ']').split(",").toSeq
-          .map(_.trim.stripPrefix("\"").stripSuffix("\""))
-          .filter(_.nonEmpty))
+      : (Seq[String], Map[String, (Double, Double)]) = {
+    val s = Files.readString(Paths.get(root, group, "_stats.json"))
+    val i = s.indexOf("\"_files\":[")
+    require(i >= 0, s"stats sidecar of $group has no file manifest; " +
+      "rewrite this table")
+    val manifest = s.drop(i + 10).takeWhile(_ != ']').split(",").toSeq
+      .map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty)
+    val re = "\"([^\"]+)\":\\[([^\\]]*)\\]".r
+    val ranges = re.findAllMatchIn(s).flatMap { m =>
+      if (m.group(1) == "_files") None
+      else {
+        val parts = m.group(2).split(",")
+        scala.util.Try(
+          (m.group(1), (parts(0).toDouble, parts(1).toDouble))).toOption
       }
-      val re = "\"([^\"]+)\":\\[([^\\]]*)\\]".r
-      val ranges = re.findAllMatchIn(s).flatMap { m =>
-        if (m.group(1) == "_files") None
-        else {
-          val parts = m.group(2).split(",")
-          scala.util.Try(
-            (m.group(1), (parts(0).toDouble, parts(1).toDouble))).toOption
-        }
-      }.toMap
-      (manifest, ranges)
-    }
+    }.toMap
+    (manifest, ranges)
   }
+
+  /** Read `paths` through a logged schema: parquet null-fills the
+    * columns a file lacks, so no footer is inferred at read time and
+    * no projection re-aligns an evolved table.
+    */
+  private def scan(spark: SparkSession, schema: StructType,
+      paths: Seq[String]): DataFrame =
+    spark.read.schema(schema).parquet(paths: _*)
 
   /** Snapshot read with FILE-LEVEL pruning on a numeric range
     * predicate — the file-skipping half of a table format: data files
@@ -868,56 +824,34 @@ object SnapshotStore {
     * never listed in the scan, so a time-partitioned, key-clustered,
     * or clustered-compacted table pays only for the files that can
     * match. Kept files are addressed through the sidecar MANIFEST
-    * (no data-directory listing); a group with a legacy group-granular
-    * or missing sidecar scans whole. The predicate is ALSO applied as
-    * an ordinary filter (pruning is an optimization, never the
+    * (no data-directory listing). The predicate is ALSO applied as an
+    * ordinary filter (pruning is an optimization, never the
     * correctness boundary — files without stats always scan).
     */
   def readWhere(spark: SparkSession, root: String, column: String,
       lo: Double, hi: Double, asOf: Option[Int] = None): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val groups = state(root).liveAt(root, asOf)
-    require(groups.nonEmpty,
-      s"no live data at ${asOf.fold("latest")(v => s"version $v")} in $root")
-    requirePresent(root, groups)
-    val scanPaths = groups.flatMap { g =>
-      val (manifest, ranges) = readSidecar(root, g)
-      manifest match {
-        case Some(files) =>
-          files.filter(f => rangeKeeps(ranges.get(s"$f|$column"), lo, hi))
-            .map(f => s"$root/$g/$f")
-        case None =>
-          if (rangeKeeps(ranges.get(column), lo, hi)) Seq(s"$root/$g")
-          else Nil
-      }
+    val snap = readable(root, state(root).at(root, asOf), asOf)
+    val scanPaths = snap.live.flatMap { g =>
+      val (files, ranges) = readSidecar(root, g)
+      files.filter(f => rangeKeeps(ranges.get(s"$f|$column"), lo, hi))
+        .map(f => s"$root/$g/$f")
     }
+    // the snapshot's logged schema, not the kept files', shapes the
+    // frame: pruning may keep only pre-evolution files (or none), and a
+    // data-dependent schema would make the same query's select succeed
+    // or throw by range. An evolved `column` reads null from old files,
+    // and the range predicate drops those rows.
+    val schema = snap.structType
     val base =
-      if (scanPaths.nonEmpty) spark.read.option("mergeSchema", "true")
-        .parquet(scanPaths: _*)
-      else spark.read.option("mergeSchema", "true")
-        .parquet(s"$root/${groups.head}")
-    // project through the SNAPSHOT's schema (footer union of all live
-    // groups), null-filling columns absent from the surviving files:
-    // after add-column evolution, pruning may keep only pre-evolution
-    // files, and without this the result schema would depend on which
-    // files the sidecars excluded — data values changing a frame's
-    // SHAPE, the one thing 'pruning is only an optimization' forbids.
-    val snapSchema = spark.read.option("mergeSchema", "true")
-      .parquet(groups.map(g => s"$root/$g"): _*).schema
-    // align FIRST, filter second: when `column` was added by schema
-    // evolution and pruning kept only pre-evolution files (or the
-    // empty-scan fallback read an old group), `base` lacks the column
-    // entirely — the aligned projection null-fills it, and the range
-    // predicate then correctly drops those null rows instead of
-    // throwing an AnalysisException on an unresolvable name
-    alignTo(base, snapSchema)
-      .where(col(column) >= lo && col(column) <= hi)
+      if (scanPaths.nonEmpty) scan(spark, schema, scanPaths)
+      else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    base.where(col(column) >= lo && col(column) <= hi)
   }
 
-  private def commitLoop(root: String, action: String,
-      adds: Seq[String], publisher: CommitPublisher,
-      tag: String = ""): Int =
-    commitLoopDedup(root, action, adds, tag, dedupOnTag = false,
+  private def commitLoop(root: String, action: String, adds: Seq[String],
+      written: StructType, publisher: CommitPublisher): Int =
+    commitLoopDedup(root, action, adds, written, "", dedupOnTag = false,
       publisher).get
 
   /** The CAS retry loop. With `dedupOnTag` the tag is re-checked
@@ -929,17 +863,24 @@ object SnapshotStore {
     * instead of retrying at v+1. Without this the dedup would rest
     * solely on the documented single-writer-per-tag contract — exactly
     * the contract a failover zombie violates.
+    *
+    * `written` = the schema the added groups' files carry: an
+    * overwrite logs it alone, an append widens the schema of the
+    * version it lands on with it.
     */
   private def commitLoopDedup(root: String, action: String,
-      adds: Seq[String], tag: String, dedupOnTag: Boolean,
-      publisher: CommitPublisher): Option[Int] = {
+      adds: Seq[String], written: StructType, tag: String,
+      dedupOnTag: Boolean, publisher: CommitPublisher): Option[Int] = {
     while (true) {
       val st = state(root)
       if (dedupOnTag && st.hasTag(tag)) return None
       val v = st.lastVersion + 1
-      val removes =
-        if (action == "overwrite") st.liveAt(root, None) else Nil
-      val c = Commit(v, action, adds, removes, tag)
+      val cur = st.at(root, None)
+      val c =
+        if (action == "overwrite")
+          Commit(v, action, adds, cur.live, tag, encodeSchema(written))
+        else Commit(v, action, adds, Nil, tag,
+          encodeSchema(widen(cur.structType, written)))
       if (publish(root, v, render(c), publisher)) {
         afterPublish(root, st, c, publisher)
         return Some(v)
@@ -957,63 +898,46 @@ object SnapshotStore {
     * DROP and a retyped column would make the parquet schema union
     * fail or corrupt file-by-file, so both are rejected up front;
     * destructive schema changes go through overwrite, exactly as in
-    * the production formats. The table schema is the mergeSchema union
-    * of the LIVE groups' footers (footer-only reads, log-sized cost).
-    * The check is advisory under races (it runs before the CAS);
-    * single-writer-per-table appends — the common case — are fully
-    * protected.
+    * the production formats. The table schema is the one the log
+    * recorded (no data file is read); types compare as a parquet read
+    * sees them, all nullable. The check is advisory under races (it
+    * runs before the CAS); single-writer-per-table appends — the
+    * common case — are fully protected.
     */
-  private def tableSchema(
-      spark: SparkSession, root: String): Option[
-      org.apache.spark.sql.types.StructType] = {
-    val groups = state(root).liveAt(root, None)
-    if (groups.isEmpty) None
-    else Some(spark.read.option("mergeSchema", "true")
-      .parquet(groups.map(g => s"$root/$g"): _*).schema)
-  }
-
-  /** Project `df` through `schema`, null-filling absent columns — the
-    * evolution alignment shared by [[readWhere]]'s pruned scan and the
-    * [[upsert]]/[[deleteWhere]] survivor scans: a hit set made
-    * entirely of pre-evolution files lacks any evolved column, and
-    * without the projection a key join or range filter on that column
-    * would throw AnalysisException though the correct semantics (null
-    * never matches) are well-defined.
-    */
-  private def alignTo(df: DataFrame,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val have = df.columns.toSet
-    df.select(schema.map { f =>
-      if (have(f.name)) col(f.name)
-      else lit(null).cast(f.dataType).as(f.name)
-    }: _*)
-  }
-
-  private def checkAppendSchema(df: DataFrame, root: String): Unit =
-    tableSchema(df.sparkSession, root).foreach { cur =>
-      val incoming = df.schema.fields.map(f => f.name -> f.dataType).toMap
-      cur.fields.foreach { f =>
+  private def checkAppendSchema(df: DataFrame, cur: StructType): Unit = {
+    val incoming =
+      df.schema.fields.map(f => f.name -> nullable(f.dataType)).toMap
+    cur.fields.foreach { f =>
         require(incoming.contains(f.name),
           s"append drops column ${f.name}; dropping columns goes " +
             "through overwrite")
         require(incoming(f.name) == f.dataType,
           s"append retypes column ${f.name} from ${f.dataType} to " +
             s"${incoming(f.name)}; type changes go through overwrite")
-      }
     }
+  }
+
+  /** The table schema the log recorded at `asOf` (latest when None);
+    * empty before the first commit.
+    */
+  private[graft] def schemaAt(root: String,
+      asOf: Option[Int] = None): StructType =
+    state(root).at(root, asOf).structType
 
   /** Append `df` as a new commit; returns the committed version. */
   def append(df: DataFrame, root: String,
       publisher: CommitPublisher = HardLinkPublisher): Int = {
-    checkAppendSchema(df, root)
-    commitLoop(root, "append", Seq(writeGroup(df, root)), publisher)
+    checkAppendSchema(df, schemaAt(root))
+    val (group, written) = writeGroup(df, root)
+    commitLoop(root, "append", Seq(group), written, publisher)
   }
 
   /** Replace the table contents with `df`; returns the version. */
   def overwrite(df: DataFrame, root: String,
-      publisher: CommitPublisher = HardLinkPublisher): Int =
-    commitLoop(root, "overwrite", Seq(writeGroup(df, root)), publisher)
+      publisher: CommitPublisher = HardLinkPublisher): Int = {
+    val (group, written) = writeGroup(df, root)
+    commitLoop(root, "overwrite", Seq(group), written, publisher)
+  }
 
   /** Append with the batch range-partitioned on `clusterCol` into
     * `nGroups` SEPARATE data groups in one commit — the write-side
@@ -1029,7 +953,7 @@ object SnapshotStore {
       nGroups: Int,
       publisher: CommitPublisher = HardLinkPublisher): Int = {
     import org.apache.spark.sql.functions.{col, spark_partition_id}
-    checkAppendSchema(df, root)
+    checkAppendSchema(df, schemaAt(root))
     // collision-proof helper column: silently replacing a user column
     // named like it would drop real data past the schema check
     val grp = s"__grp_${UUID.randomUUID().toString.take(8)}"
@@ -1070,8 +994,8 @@ object SnapshotStore {
       group
     }
     sweepStaging()
-    sidecarsFor(df.sparkSession, root, groups)
-    commitLoop(root, "append", groups, publisher)
+    commitLoop(root, "append", groups,
+      sidecarsFor(df.sparkSession, root, groups), publisher)
   }
 
   /** Idempotent tagged append — the exactly-once sink primitive for
@@ -1095,19 +1019,17 @@ object SnapshotStore {
     // AUTHORITATIVE check is the in-loop one (dedupOnTag) — a racing
     // duplicate that passes here merely writes an orphaned group
     // (vacuum's job) and still lands exactly once.
-    if (state(root).hasTag(tag)) None
+    val st = state(root)
+    if (st.hasTag(tag)) None
     else {
-      checkAppendSchema(df, root)
-      commitLoopDedup(root, "append", Seq(writeGroup(df, root)), tag,
+      checkAppendSchema(df, st.at(root, None).structType)
+      val (group, written) = writeGroup(df, root)
+      commitLoopDedup(root, "append", Seq(group), written, tag,
         dedupOnTag = true, publisher)
     }
   }
 
-  /** Snapshot read at `asOf` (latest when None). An empty live set
-    * (no commits yet, or time travel to before the first append) is an
-    * error — there is no schema to produce an empty frame with.
-    */
-  /** The vacuumed-version contract, shared by both read paths: an
+  /** The vacuumed-version contract, shared by every scan: an
     * explicit error, never a raw path-does-not-exist from the scan.
     */
   private def requirePresent(root: String, groups: Seq[String]): Unit =
@@ -1116,18 +1038,27 @@ object SnapshotStore {
         s"data group $g was vacuumed; version is no longer readable")
     }
 
+  /** `snap` once the read contract holds: it has live data (an empty
+    * live set — no commits yet, or time travel to before the first
+    * append — is an error), and none of it was vacuumed.
+    */
+  private def readable(root: String, snap: Snap, asOf: Option[Int]): Snap = {
+    require(snap.live.nonEmpty,
+      s"no live data at ${asOf.fold("latest")(v => s"version $v")} in $root")
+    requirePresent(root, snap.live)
+    snap
+  }
+
+  /** Snapshot read at `asOf` (latest when None), through the schema
+    * logged at that version: live groups that straddle an add-column
+    * boundary read the column null-filled for pre-evolution groups,
+    * and a time travel BEFORE the boundary sees the old schema —
+    * evolution is invisible to history.
+    */
   def read(spark: SparkSession, root: String,
       asOf: Option[Int] = None): DataFrame = {
-    val groups = state(root).liveAt(root, asOf)
-    require(groups.nonEmpty,
-      s"no live data at ${asOf.fold("latest")(v => s"version $v")} in $root")
-    requirePresent(root, groups)
-    // mergeSchema: live groups may straddle an add-column boundary;
-    // the union schema null-fills the column for pre-evolution groups.
-    // A time travel BEFORE the boundary reads only old groups and so
-    // sees the old schema — evolution is invisible to history.
-    spark.read.option("mergeSchema", "true")
-      .parquet(groups.map(g => s"$root/$g"): _*)
+    val snap = readable(root, state(root).at(root, asOf), asOf)
+    scan(spark, snap.structType, snap.live.map(g => s"$root/$g"))
   }
 
   /** The DESCRIBE HISTORY analog: every commit's (version, action,
@@ -1182,7 +1113,8 @@ object SnapshotStore {
       val v = st.lastVersion
       if (v < 0) throw new IllegalArgumentException(
         s"nothing to compact in $root")
-      val live = st.liveAt(root, None)
+      val snap = st.at(root, None)
+      val live = snap.live
       if (group == null || !sources.forall(live.contains)) {
         // (re)build the rewrite from the current snapshot. Clustered
         // compaction range-partitions it so the ONE resulting group's
@@ -1196,7 +1128,7 @@ object SnapshotStore {
           if (clusterCol == null) content
           else content.repartitionByRange(nFiles,
             org.apache.spark.sql.functions.col(clusterCol))
-        group = writeGroup(rewrite, root)
+        group = writeGroup(rewrite, root)._1
         sources = live
       } else {
         // the rewrite is REUSED across CAS retries (the commuting-
@@ -1217,7 +1149,10 @@ object SnapshotStore {
         }
       }
       if (group != null) { // null = lost rewrite; loop rebuilds
-        val c = Commit(v + 1, "compact", Seq(group), sources)
+        // the schema of the version it lands on: a commuting append
+        // may have widened it since the rewrite was read
+        val c = Commit(v + 1, "compact", Seq(group), sources,
+          schema = snap.schema)
         if (publish(root, v + 1, render(c), publisher)) {
           afterPublish(root, st, c, publisher)
           committed = v + 1
@@ -1235,15 +1170,13 @@ object SnapshotStore {
     */
   private def rangeKeeps(
       r: Option[(Double, Double)], lo: Double, hi: Double): Boolean =
-    // a NaN bound (legacy sidecars written before writeGroup learned
-    // to skip NaN stats) makes every comparison false — which would
-    // silently EXCLUDE a file that may contain matches; keep instead
+    // a NaN bound makes every comparison false — which would silently
+    // EXCLUDE a file that may contain matches; keep instead
     r.forall { case (mn, mx) =>
       mn.isNaN || mx.isNaN || (mx >= lo && mn <= hi) }
 
-  /** One touched group's copy-on-write plan: `hit` = scan paths that
-    * may contain matches (file paths, or the whole group dir for a
-    * legacy group-granular sidecar), `keep` = file names PROVABLY
+  /** One touched group's copy-on-write plan: `hit` = paths of the
+    * files that may contain matches, `keep` = file names PROVABLY
     * clear of [lo, hi] to carry forward without rewriting, plus the
     * parsed ranges their new sidecar needs. Untouched groups (no hit)
     * produce no entry at all.
@@ -1254,18 +1187,11 @@ object SnapshotStore {
   private def touchPlan(root: String, live: Seq[String], column: String,
       lo: Double, hi: Double): Seq[Touch] =
     live.flatMap { g =>
-      val (manifest, ranges) = readSidecar(root, g)
-      manifest match {
-        case Some(files) =>
-          val (hit, keep) = files.partition(f =>
-            rangeKeeps(ranges.get(s"$f|$column"), lo, hi))
-          if (hit.isEmpty) None
-          else Some(Touch(g, hit.map(f => s"$root/$g/$f"), keep, ranges))
-        case None =>
-          if (rangeKeeps(ranges.get(column), lo, hi))
-            Some(Touch(g, Seq(s"$root/$g"), Nil, ranges))
-          else None
-      }
+      val (files, ranges) = readSidecar(root, g)
+      val (hit, keep) = files.partition(f =>
+        rangeKeeps(ranges.get(s"$f|$column"), lo, hi))
+      if (hit.isEmpty) None
+      else Some(Touch(g, hit.map(f => s"$root/$g/$f"), keep, ranges))
     }
 
   /** Interval cap for [[refineTouch]]'s nested-loop pricing join. */
@@ -1279,24 +1205,20 @@ object SnapshotStore {
     * ~2 files. One broadcast interval join prices every hull-hit
     * file's [mn, mx] against the real keys; files no key lands in
     * move to the re-link side, and groups with no remaining hit drop
-    * out of the plan entirely. Files without a range entry (and
-    * legacy whole-group sidecars) must stay hit — no stats, no
-    * refinement. Skipped above [[RefineCap]] intervals: the join is
-    * batch × intervals nested-loop, and past that size the hull plan
-    * is the cheaper arithmetic.
+    * out of the plan entirely. Files without a range entry must stay
+    * hit — no stats, no refinement. Skipped above [[RefineCap]]
+    * intervals: the join is batch × intervals nested-loop, and past
+    * that size the hull plan is the cheaper arithmetic.
     */
   private def refineTouch(b: DataFrame, keyCol: String, root: String,
       plan: Seq[Touch]): Seq[Touch] = {
     import org.apache.spark.sql.functions.{broadcast, col}
     val spark = b.sparkSession
     import spark.implicits._
-    def legacy(t: Touch): Boolean =
-      t.hit.headOption.contains(s"$root/${t.group}")
     def nameOf(t: Touch, path: String): String =
       path.drop(s"$root/${t.group}/".length)
     val iv = plan.zipWithIndex.flatMap { case (t, gi) =>
-      if (legacy(t)) Nil
-      else t.hit.flatMap { path =>
+      t.hit.flatMap { path =>
         val f = nameOf(t, path)
         t.ranges.get(s"$f|$keyCol")
           .map { case (mn, mx) => (gi, f, mn, mx) }
@@ -1309,16 +1231,13 @@ object SnapshotStore {
       .select("gi", "f").distinct().collect()
       .map(r => (r.getInt(0), r.getString(1))).toSet
     plan.zipWithIndex.flatMap { case (t, gi) =>
-      if (legacy(t)) Some(t)
-      else {
-        val (hitF, clear) = t.hit.partition { path =>
-          val f = nameOf(t, path)
-          !t.ranges.contains(s"$f|$keyCol") || hitSet((gi, f))
-        }
-        if (hitF.isEmpty) None
-        else Some(Touch(t.group, hitF,
-          t.keep ++ clear.map(nameOf(t, _)), t.ranges))
+      val (hitF, clear) = t.hit.partition { path =>
+        val f = nameOf(t, path)
+        !t.ranges.contains(s"$f|$keyCol") || hitSet((gi, f))
       }
+      if (hitF.isEmpty) None
+      else Some(Touch(t.group, hitF,
+        t.keep ++ clear.map(nameOf(t, _)), t.ranges))
     }
   }
 
@@ -1362,7 +1281,7 @@ object SnapshotStore {
     * key-clustered table (appendClustered) and a clustered-COMPACTED
     * one (one group, disjoint-range files) therefore pay ~1-of-N
     * rewrite cost for a narrow-key batch — the production MERGE
-    * shape. Legacy group-granular sidecars rewrite whole-group.
+    * shape.
     *
     * Preconditions: batch keys must be UNIQUE (two batch rows under
     * one key have no defined winner — rejected), and the batch obeys
@@ -1379,17 +1298,16 @@ object SnapshotStore {
       keyCol: String,
       publisher: CommitPublisher = HardLinkPublisher): Int = {
     import org.apache.spark.sql.functions.{col, count, countDistinct, lit, max, min}
-    checkAppendSchema(batch, root)
+    val cur = schemaAt(root)
+    checkAppendSchema(batch, cur)
     // the key must already exist in the table: keying on a column the
     // batch is ADDING (legal for the evolution lane otherwise) would
     // read survivors that cannot resolve it — fail clearly up front
     // instead of with a mid-commit AnalysisException
-    tableSchema(spark, root).foreach { cur =>
-      require(cur.fieldNames.contains(keyCol),
-        s"upsert key '$keyCol' does not exist in the table schema " +
-          s"(${cur.fieldNames.mkString(", ")}) — add the column via a " +
-          "plain append before keying on it")
-    }
+    require(cur.isEmpty || cur.fieldNames.contains(keyCol),
+      s"upsert key '$keyCol' does not exist in the table schema " +
+        s"(${cur.fieldNames.mkString(", ")}) — add the column via a " +
+        "plain append before keying on it")
     val b = batch.persist()
     try {
       val stats = b.agg(count(lit(1)), countDistinct(col(keyCol)),
@@ -1428,36 +1346,31 @@ object SnapshotStore {
       while (committed < 0) {
         val st = state(root)
         val v = st.lastVersion
-        val live = if (v < 0) Nil else st.liveAt(root, None)
-        requirePresent(root, live)
+        val snap = st.at(root, None)
+        requirePresent(root, snap.live)
         val plan = refineTouch(b, keyCol, root,
-          touchPlan(root, live, keyCol, kLo, kHi))
-        val adds =
-          if (plan.isEmpty) Seq(writeGroup(b, root))
+          touchPlan(root, snap.live, keyCol, kLo, kHi))
+        val (group, written) =
+          if (plan.isEmpty) writeGroup(b, root)
           else {
-            // align the hit scan to the SNAPSHOT schema before the key
-            // join: when every hit file predates an add-column
-            // evolution of keyCol, the mergeSchema union lacks the
-            // column and the join would throw — null-filled, those
-            // survivors simply never match (null equals nothing)
-            val snapSchema = spark.read.option("mergeSchema", "true")
-              .parquet(live.map(g => s"$root/$g"): _*).schema
-            val survivors = alignTo(
-              spark.read.option("mergeSchema", "true")
-                .parquet(plan.flatMap(_.hit): _*), snapSchema)
+            // the hit scan reads through the logged schema: when every
+            // hit file predates an add-column evolution of keyCol, the
+            // column reads null and those survivors simply never match
+            // (null equals nothing)
+            val survivors = scan(spark, snap.structType, plan.flatMap(_.hit))
               .join(b.select(col(keyCol)), Seq(keyCol), "left_anti")
             // allowMissingColumns: the batch may be post-evolution
-            // wider than pre-evolution survivors — null-fill, exactly
-            // as a read across the boundary would. Provably-clear
-            // files of touched groups re-LINK instead of rewriting
-            // (file-granular copy-on-write — see [[linkGroup]]).
+            // wider or narrower than the survivors — null-fill, exactly
+            // as a read across the boundary would
             writeGroup(
-              survivors.unionByName(b, allowMissingColumns = true),
-              root) +:
-              plan.filter(_.keep.nonEmpty)
-                .map(t => linkGroup(root, t.group, t.keep, t.ranges))
+              survivors.unionByName(b, allowMissingColumns = true), root)
           }
-        val c = Commit(v + 1, "upsert", adds, plan.map(_.group))
+        // provably-clear files of touched groups re-LINK instead of
+        // rewriting (file-granular copy-on-write — see [[linkGroup]])
+        val adds = group +: plan.filter(_.keep.nonEmpty)
+          .map(t => linkGroup(root, t.group, t.keep, t.ranges))
+        val c = Commit(v + 1, "upsert", adds, plan.map(_.group),
+          schema = encodeSchema(widen(snap.structType, written)))
         if (publish(root, v + 1, render(c), publisher)) {
           afterPublish(root, st, c, publisher)
           committed = v + 1
@@ -1491,26 +1404,23 @@ object SnapshotStore {
       val v = st.lastVersion
       if (v < 0) throw new IllegalArgumentException(
         s"nothing to delete from in $root")
-      val live = st.liveAt(root, None)
-      requirePresent(root, live)
-      val plan = touchPlan(root, live, column, lo, hi)
+      val snap = st.at(root, None)
+      requirePresent(root, snap.live)
+      val plan = touchPlan(root, snap.live, column, lo, hi)
       if (plan.isEmpty) return v
-      // align to the snapshot schema first (see upsert): an evolved
-      // `column` absent from every hit file null-fills, and null rows
-      // survive a range DELETE by the SQL rule below
-      val snapSchema = spark.read.option("mergeSchema", "true")
-        .parquet(live.map(g => s"$root/$g"): _*).schema
-      val survivors = alignTo(
-        spark.read.option("mergeSchema", "true")
-          .parquet(plan.flatMap(_.hit): _*), snapSchema)
+      // the logged schema again (see upsert): an evolved `column`
+      // absent from every hit file reads null, and null rows survive a
+      // range DELETE by the SQL rule below
+      val survivors = scan(spark, snap.structType, plan.flatMap(_.hit))
         // coalesce(false): a NULL comparison must KEEP the row, and
         // bare not(null) would drop it
         .where(not(coalesce(
           col(column) >= lo && col(column) <= hi, lit(false))))
-      val adds = writeGroup(survivors, root) +:
+      val adds = writeGroup(survivors, root)._1 +:
         plan.filter(_.keep.nonEmpty)
           .map(t => linkGroup(root, t.group, t.keep, t.ranges))
-      val c = Commit(v + 1, "delete", adds, plan.map(_.group))
+      val c = Commit(v + 1, "delete", adds, plan.map(_.group),
+        schema = snap.schema)
       if (publish(root, v + 1, render(c), publisher)) {
         afterPublish(root, st, c, publisher)
         committed = v + 1
@@ -1532,28 +1442,25 @@ object SnapshotStore {
   def changes(spark: SparkSession, root: String,
       fromV: Int, toV: Int): DataFrame = {
     import org.apache.spark.sql.functions.lit
-    val before = read(spark, root, Some(fromV))
-    val after = read(spark, root, Some(toV))
-    // across an add-column boundary the two snapshots have different
-    // widths; align them by null-filling the missing columns (the same
-    // shape the post-boundary read gives old rows), so the whole-row
-    // set semantics keep working and an unchanged old row does NOT
-    // show up as delete+insert merely because the schema grew
-    val allCols = (before.schema.fields ++ after.schema.fields)
-      .map(f => f.name -> f.dataType).distinct
+    val st = state(root)
+    val before = readable(root, st.at(root, Some(fromV)), Some(fromV))
+    val after = readable(root, st.at(root, Some(toV)), Some(toV))
+    // both sides read through the UNION of the two logged schemas:
+    // across an add-column boundary the older side null-fills the new
+    // column (the shape the post-boundary read gives old rows), so the
+    // whole-row set semantics keep working and an unchanged old row
+    // does NOT show up as delete+insert merely because the schema grew
+    val to = after.structType
+    val union = widen(before.structType, to)
     // a retype across an OVERWRITE boundary leaves one name with two
     // types — whole-row diff semantics are undefined there; fail loudly
-    require(allCols.map(_._1).distinct.size == allCols.size,
-      s"cannot diff across a column retype: ${allCols.mkString(", ")}")
-    def align(df: DataFrame): DataFrame = {
-      val have = df.columns.toSet
-      df.select(allCols.map { case (c, t) =>
-        if (have(c)) org.apache.spark.sql.functions.col(c)
-        else lit(null).cast(t).as(c)
-      }: _*)
-    }
-    val b = align(before)
-    val a = align(after)
+    val retyped = to.filter(f => union(f.name).dataType != f.dataType)
+    require(retyped.isEmpty, "cannot diff across a column retype: " +
+      retyped.map(f => s"${f.name} ${union(f.name).dataType} -> " +
+        f.dataType).mkString(", "))
+    def side(snap: Snap) = scan(spark, union, snap.live.map(g => s"$root/$g"))
+    val b = side(before)
+    val a = side(after)
     a.exceptAll(b).withColumn("_change", lit("insert"))
       .unionByName(
         b.exceptAll(a).withColumn("_change", lit("delete")))
@@ -1589,7 +1496,7 @@ object SnapshotStore {
     // it rather than wedging data vacuum behind a log horizon that was
     // deliberately set tighter than this one
     val referenced = retained.flatMap { v =>
-      try st.liveAt(root, Some(v))
+      try st.at(root, Some(v)).live
       catch {
         case e: IllegalArgumentException
             if e.getMessage != null &&
@@ -1642,7 +1549,7 @@ object SnapshotStore {
     * reads and time travel INSIDE the horizon are unaffected, and
     * [[describeHistory]]/[[history]] keep working over the retained
     * suffix. Versions whose records were pruned are explicitly
-    * rejected at read time (the [[LogState.liveAt]] gap check), the
+    * rejected at read time (the [[LogState.at]] gap check), the
     * same trade vacuumed data groups already make. No checkpoint at
     * or below the horizon yet ⇒ nothing can be pruned (returns 0) —
     * retention never outruns checkpointing. Like data vacuum, run it
@@ -1660,11 +1567,12 @@ object SnapshotStore {
       root: String, version: Int, groups: Seq[String]): Unit = {
     Files.createDirectories(commitsDir(root))
     writeCkpt(commitsDir(root), HardLinkPublisher,
-      Ckpt(version, groups.toVector, Set.empty))
+      Ckpt(version, groups.toVector, Set.empty, encodeSchema(
+        new StructType().add("id", org.apache.spark.sql.types.LongType))))
   }
 
   private[graft] def probeStateLiveCount(root: String): Int =
-    state(root).liveAt(root, None).size
+    state(root).at(root, None).live.size
 
   private[graft] def probeEvictCkptCache(): Unit = ckptCache.clear()
 

@@ -110,4 +110,29 @@ class ClassifierSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(w.forall(_ == 0.0))
     assert(Classifier.scoreCorpus(empty).count() == 0)
   }
+
+  test("training leaves the session's conf alone: a join planned on " +
+    "another thread meanwhile keeps adaptive execution") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val confBefore = spark.conf.getAll
+    val feats = Classifier.features(graft.Tables.documents(spark, dir))
+    @volatile var training = true
+    @volatile var w: Array[Double] = null
+    val trainer = new Thread(() =>
+      try w = Classifier.train(feats) finally training = false)
+    // plan joins until training ends: every plan must be adaptive
+    var plans, plainPlans = 0
+    trainer.start()
+    while (training) {
+      val j = spark.range(100).join(spark.range(100), "id")
+      if (!j.queryExecution.executedPlan
+          .isInstanceOf[AdaptiveSparkPlanExec]) plainPlans += 1
+      plans += 1
+    }
+    trainer.join()
+    assert(w != null && plans > 0)
+    assert(plainPlans === 0,
+      s"$plainPlans of $plans joins planned during training lost AQE")
+    assert(spark.conf.getAll === confBefore)
+  }
 }

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -794,6 +796,18 @@ class SnapshotStoreSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("torn or corrupt"))
   }
 
+  test("a commit record that adds data without a logged table schema " +
+    "fails closed with a rewrite-this-table error") {
+    val root = freshRoot()
+    SnapshotStore.append(df(1), root)
+    Files.writeString(Paths.get(root, "_commits", "00000001.json"),
+      """{"version":1,"action":"append","adds":["data/0123abcd"],""" +
+        """"removes":[],"tag":""}""")
+    val e = intercept[IllegalArgumentException](
+      SnapshotStore.read(spark, root))
+    assert(e.getMessage.contains("rewrite this table"))
+  }
+
   test("stats sidecar bounds CONTAIN long values beyond double " +
     "precision (widened outward, never rounded past the true value)") {
     import spark.implicits._
@@ -844,21 +858,174 @@ class SnapshotStoreSpec extends AnyFunSuite {
       "state() replayed a stale cached live set from the old incarnation")
   }
 
-  test("appendOnce Spark-job budget: one data write plus the schema " +
-    "inference over the live groups; a replayed tag runs no job") {
+  test("appendOnce Spark-job budget: one data write; a replayed tag " +
+    "runs no job") {
     val root = freshRoot()
     SnapshotStore.appendOnce(df(1, 2), root, "batch-0")
     SnapshotStore.appendOnce(df(3), root, "batch-1")
     val jobs = JobCensus.of(spark) {
       assert(SnapshotStore.appendOnce(df(4, 5), root, "batch-2") === Some(2))
     }
-    // the group write, and the schema check's inference over the live
-    // groups' footers: a ceiling at today's count that may only go down
-    assert(jobs.size <= 2, s"appendOnce ran ${jobs.size} Spark " +
+    // the group write only: the schema check reads the logged schema
+    assert(jobs.size == 1, s"appendOnce ran ${jobs.size} Spark " +
       s"jobs: ${jobs.map(_.stages.mkString("+")).mkString("; ")}")
     val replay = JobCensus.of(spark) {
       assert(SnapshotStore.appendOnce(df(6), root, "batch-2") === None)
     }
     assert(replay.isEmpty, s"a replayed tag ran Spark jobs: $replay")
+  }
+
+  test("building read, readWhere and changes frames starts no Spark " +
+    "job; upsert and deleteWhere run no parquet job beyond their write") {
+    import spark.implicits._
+    val root = freshRoot()
+    SnapshotStore.append(df(1, 2, 3), root)
+    SnapshotStore.append(
+      Seq((10L, "r10", 1.0)).toDF("id", "tag", "score"), root)
+    SnapshotStore.overwrite(df(1, 2, 10), root)
+    val build = JobCensus.of(spark) {
+      SnapshotStore.read(spark, root)
+      SnapshotStore.read(spark, root, Some(1))
+      SnapshotStore.readWhere(spark, root, "id", 2.0, 9.0)
+      SnapshotStore.readWhere(spark, root, "score", 0.0, 9.0, Some(1))
+      SnapshotStore.changes(spark, root, 0, 1)
+    }
+    assert(build.isEmpty, s"frame building ran Spark jobs: $build")
+    // at most the group write carries this call site (an adaptive
+    // write's query stages run under another); a schema read would too
+    def parquetJobs(jobs: Seq[JobCensus.Job]) =
+      jobs.filter(_.stages.exists(_.startsWith("parquet at SnapshotStore")))
+    val up = JobCensus.of(spark) {
+      SnapshotStore.upsert(spark,
+        Seq((2L, "UP"), (7L, "NEW")).toDF("id", "tag"), root, "id")
+    }
+    assert(parquetJobs(up).size <= 1,
+      s"upsert ran parquet jobs beyond its one write: $up")
+    val del = JobCensus.of(spark) {
+      SnapshotStore.deleteWhere(spark, root, "id", 1.0, 1.0)
+    }
+    assert(parquetJobs(del).size <= 1,
+      s"deleteWhere ran parquet jobs beyond its one write: $del")
+    assert(idSet(SnapshotStore.read(spark, root)) === Set(2L, 7L, 10L))
+  }
+
+  test("a row group whose double bounds parquet withholds (NaN in the " +
+    "chunk) keeps its file visible to readWhere beside clean row groups") {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    // a small row-group size on a child session: one file, many groups
+    val s = spark.newSession()
+    s.conf.set("parquet.block.size", "4096")
+    val root = freshRoot()
+    val n = 4000L
+    // first half: clean k = id; second half: k = id + 10000 with a NaN
+    // every 7th row, so every second-half chunk withholds its bounds
+    val data = s.range(0, n, 1, 1).select(col("id"),
+      when(col("id") < n / 2, col("id").cast("double"))
+        .when(col("id") % 7 === 0, lit(Double.NaN))
+        .otherwise(col("id").cast("double") + 10000.0).as("k"))
+    SnapshotStore.append(data, root)
+    val walk = Files.walk(Paths.get(root, "data"))
+    val parquet = try walk.iterator.asScala
+      .filter(_.toString.endsWith(".parquet")).toVector
+      finally walk.close()
+    assert(parquet.size === 1)
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(parquet.head.toUri),
+      s.sessionState.newHadoopConf()))
+    val kStats = try reader.getFooter.getBlocks.asScala.toSeq
+      .map(_.getColumns.get(1).getStatistics.hasNonNullValue)
+      finally reader.close()
+    // the premise: a clean chunk with bounds, and chunks without them
+    assert(kStats.size >= 2 && kStats.head && !kStats.last,
+      s"expected clean then withheld k chunks: $kStats")
+    // a second group inside the range, so the scan is not empty
+    SnapshotStore.append(s.range(-1, 0).select(col("id"),
+      lit(13000.5).as("k")), root)
+    val got = SnapshotStore.readWhere(spark, root, "k", 12500.0, 13500.0)
+      .select("id").collect().map(_.getLong(0)).toSet
+    assert(got === (2500L to 3500L).filter(_ % 7 != 0).toSet + -1L)
+  }
+
+  test("the logged schema equals the footer union of the live groups " +
+    "at every version, across every write path") {
+    import spark.implicits._
+    import org.apache.spark.sql.types._
+    def check(root: String): Unit = {
+      val last = SnapshotStore.history(root).last._1
+      (0 to last).foreach { v =>
+        val files = SnapshotStore.read(spark, root, Some(v)).inputFiles
+        val footers = spark.read.option("mergeSchema", "true")
+          .parquet(files: _*).schema
+        assert(SnapshotStore.schemaAt(root, Some(v)).sortBy(_.name) ===
+          footers.sortBy(_.name), s"version $v of $root")
+      }
+    }
+    // append chain, add-column evolution, upsert, compaction
+    val a = freshRoot()
+    SnapshotStore.append(df(1, 2), a)
+    SnapshotStore.append(df(3), a)
+    SnapshotStore.append(
+      Seq((4L, "r4", 4.0)).toDF("id", "tag", "score"), a)
+    SnapshotStore.upsert(spark,
+      Seq((1L, "UP", 1.5, 7)).toDF("id", "tag", "score", "n"), a, "id")
+    SnapshotStore.compact(spark, a)
+    SnapshotStore.deleteWhere(spark, a, "id", 3.0, 3.0)
+    check(a)
+    // overwrite across a retype, then a clustered append
+    val b = freshRoot()
+    SnapshotStore.append(df(1, 2), b)
+    SnapshotStore.overwrite(Seq(("x", 1.0)).toDF("id", "score"), b)
+    SnapshotStore.appendClustered(
+      (1 to 40).map(i => (s"k$i", i.toDouble)).toDF("id", "score"),
+      b, "score", 4)
+    SnapshotStore.compact(spark, b, clusterCol = "score", nFiles = 2)
+    check(b)
+    // the change feed refuses to diff across the retype
+    val e = intercept[IllegalArgumentException](
+      SnapshotStore.changes(spark, b, 0, 1))
+    assert(e.getMessage.contains("column retype"))
+    // non-nullable and nested source columns
+    val nested = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("p", StructType(Seq(
+        StructField("x", LongType, nullable = false),
+        StructField("y", StringType))), nullable = false)))
+    def rows(ids: Long*) = spark.createDataFrame(
+      java.util.Arrays.asList(ids.map(i =>
+        org.apache.spark.sql.Row(i, org.apache.spark.sql.Row(i * 2, s"y$i"))): _*),
+      nested)
+    val c = freshRoot()
+    SnapshotStore.append(rows(1, 2), c)
+    SnapshotStore.append(rows(3), c)
+    SnapshotStore.upsert(spark, rows(2, 9), c, "id")
+    check(c)
+    assert(SnapshotStore.read(spark, c).select("p.x").collect()
+      .map(_.getLong(0)).toSet === Set(2L, 4L, 6L, 18L))
+  }
+
+  test("a decimal column never prunes, and readWhere/deleteWhere on a " +
+    "decimal table return exactly the rows a plain filter returns") {
+    val root = freshRoot()
+    def batch(lo: Long, hi: Long) = spark.range(lo, hi, 1, 2)
+      .select(col("id"), (col("id") / 4).cast("decimal(12,2)").as("amt"))
+    SnapshotStore.append(batch(0, 40), root)
+    SnapshotStore.append(batch(40, 80), root)
+    SnapshotStore.append(batch(80, 120), root)
+    val all = SnapshotStore.read(spark, root)
+    def ids(d: DataFrame): Set[Long] =
+      d.select("id").collect().map(_.getLong(0)).toSet
+    for ((c, lo, hi) <- Seq(("amt", 5.0, 12.25), ("amt", 0.0, 0.0),
+        ("amt", 29.5, 40.0), ("id", 33.0, 87.0))) {
+      assert(ids(SnapshotStore.readWhere(spark, root, c, lo, hi)) ===
+        ids(all.where(col(c) >= lo && col(c) <= hi)), s"$c in [$lo, $hi]")
+    }
+    // no stats entry for the decimal column: every file stays in scan
+    assert(SnapshotStore.readWhere(spark, root, "amt", 0.0, 0.0)
+      .inputFiles.length === all.inputFiles.length)
+    val keep = ids(all.where(!(col("amt") >= 10.0 && col("amt") <= 20.0)))
+    SnapshotStore.deleteWhere(spark, root, "amt", 10.0, 20.0)
+    assert(idSet(SnapshotStore.read(spark, root)) === keep)
+    assert(keep.size === 120 - 41)
   }
 }
