@@ -4,6 +4,8 @@ import java.time.ZonedDateTime
 
 import org.apache.spark.sql.SparkSession
 
+import graft.JobDescription
+
 /** CLI entry point with the reference's exact positional-argument
   * contract (SANEF_Uploader.py:10-22):
   *
@@ -26,9 +28,6 @@ import org.apache.spark.sql.SparkSession
   * CSV without POSTing.
   */
 object JobRunner {
-
-  /** The thread-local property `SparkContext.setJobDescription` sets. */
-  private val JobDescription = "spark.job.description"
 
   def main(args: Array[String]): Unit = {
     // master precedence: GRAFT_MASTER (explicit env override) >
@@ -66,11 +65,9 @@ object JobRunner {
     require(args.length >= 10,
       "usage: JobRunner WAZI_ENDPOINT WAZI_TOKEN DATASET_ID IEC_TOKEN " +
         "IEC_ENDPOINT DB_SERVER DB DB_USERNAME DB_PASSWORD RESET_DATASET")
-    val sc = spark.sparkContext
-    val prior = sc.getLocalProperty(JobDescription)
-    sc.setLocalProperty(JobDescription, s"sanef.${args(4)}")
-    try compose(spark, args, env)
-    finally sc.setLocalProperty(JobDescription, prior)
+    JobDescription.during(spark, s"sanef.${args(4)}") {
+      compose(spark, args, env)
+    }
   }
 
   private def compose(

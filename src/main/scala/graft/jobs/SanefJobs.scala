@@ -1,6 +1,6 @@
 package graft.jobs
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -14,54 +14,97 @@ import org.apache.spark.sql.types._
   * (SANEF_Uploader.py:110-124,170-184,466-469) become set-based semi-joins:
   * O(wards) DB round trips → one distributed job.
   *
+  * Plan shape: the jobs are small-data plans, so a job's latency is its
+  * chain of sequential query stages, not its rows. Each ward job scans its
+  * fact once with the three completed-ward sets ([[completedOnly]])
+  * broadcast into that scan, and every job then makes ONE shuffle, into
+  * the single output partition ([[funnel]]); an aggregation or window
+  * over geography-bounded rows runs after that shuffle instead of behind
+  * a hash exchange of its own.
+  *
   * Output row order: the reference's CSV order comes from pandas groupby's
-  * sorted-key iteration (SURVEY §2.7 O3) — every job here ends in
-  * `sortedSingle`, a total sort inside one partition reproducing it
-  * deterministically.
+  * sorted-key iteration (SURVEY §2.7 O3) — every job here ends in a local
+  * sort on its output keys inside the funnel's one partition, a total
+  * order reproducing it deterministically.
   */
 object SanefJobs {
 
-  /** Reusable anti-join spine (SURVEY §7.2 step 2): wards of the configured
-    * delimitation having NO voting district with zero total votes cast —
-    * the 17-line LEFT JOIN … IS NULL at SANEF_Uploader.py:385-401 as a
-    * left_anti join, then a broadcast join back to the Wards dimension to
-    * recover (ProvinceID, MunicipalityID, WardID) (the per-row `.loc`
-    * lookup at :409).
+  /** Keep the rows of `df` whose ward `key` is in the configured
+    * delimitation and has no unfinished voting district — the 17-line
+    * LEFT JOIN … IS NULL at SANEF_Uploader.py:385-401 as two ward sets
+    * joined into `df`'s scan: the delimitation's wards
+    * (`EE_VotingDistricts`, a broadcast `left_semi`; duplicate wards are
+    * harmless to a semi-join, so no `distinct` shuffle) and the
+    * UNFINISHED wards, those with a (ward, vd) vote sum of zero (a
+    * broadcast `left_anti`).
     *
-    * Scale note: `unfinished` aggregates the big display-VD fact on
-    * (ward, vd) with partial aggregation before the anti-join shuffle; the
-    * 4,468-row wards dim is broadcast, so the only wide exchange is on
-    * fklWardId.
+    * Scale: both sets are bounded by the country's electoral geography
+    * (≤ 23,000 VDs), not by the fact they filter, so they broadcast at
+    * any fact size. The unfinished set is aggregated in one partition
+    * (`coalesce(1)`: no exchange, no query stage of its own) inside its
+    * broadcast; its input, the VD display rows of one event, is bounded
+    * by the VDs too.
     */
-  def completedWards(src: ElectionSources, cfg: JobConfig): DataFrame = {
+  private def finishedIn(src: ElectionSources, cfg: JobConfig, key: String)(
+      df: DataFrame): DataFrame = {
+    val delimitation = src.votingDistricts
+      .filter(col("pkfklDelimID") === cfg.delimitationId)
+      .select(col("fklWardId").as(key))
     val unfinished = src.displayVotingDistricts
       .filter(col("fklEEId") === cfg.electoralEventId)
+      .coalesce(1)
       .groupBy("fklWardId", "fklVotingDistrict")
       .agg(sum("lTotalVotesCast").as("VDTotalVotesCast"))
       .filter(col("VDTotalVotesCast") === 0)
-      .select("fklWardId")
-    src.votingDistricts
-      .filter(col("pkfklDelimID") === cfg.delimitationId)
-      .select("fklWardId")
-      .distinct()
-      .join(unfinished, Seq("fklWardId"), "left_anti")
-      .join(broadcast(src.wards), col("fklWardId") === col("WardID"))
-      .select("ProvinceID", "MunicipalityID", "WardID")
-      // its own output order (a registered query and the IecApi fan-out
-      // input); under the ward jobs' semi-joins EliminateSorts drops it
-      .orderBy("WardID")
+      .select(col("fklWardId").as(key))
+    df.join(broadcast(delimitation), Seq(key), "left_semi")
+      .join(broadcast(unfinished), Seq(key), "left_anti")
   }
 
-  /** The jobs' ordered tail: one shuffle into a single partition, then a
-    * local sort on the output keys. Same total order and CSV bytes
-    * as a global `orderBy`, without its range-partitioner sampling job;
-    * the single task is the one `CsvSink`'s `coalesce(1)` already implies,
-    * and every job's output is bounded by its dimensions (wards × parties,
-    * munis × parties). Upstream stages stay parallel: the funnel sits
-    * behind the shuffle, not a `coalesce` that would collapse them too.
+  /** Keep the fact rows of a completed ward: the third ward set, the
+    * `Wards` dimension (≤ 4,468 wards), as one more broadcast
+    * `left_semi` ahead of [[finishedIn]]'s two — the semi-join form of
+    * [[completedWards]]' inner join to the dimension. All three sets
+    * reach the fact's scan directly; no built `completed` frame sits
+    * between them and the fact.
     */
-  private def sortedSingle(keys: Column*)(df: DataFrame): DataFrame =
-    df.repartition(1).sortWithinPartitions(keys: _*)
+  private def completedOnly(src: ElectionSources, cfg: JobConfig,
+      key: String)(fact: DataFrame): DataFrame =
+    fact.join(broadcast(src.wards.select(col("WardID").as(key))),
+        Seq(key), "left_semi")
+      .transform(finishedIn(src, cfg, key))
+
+  /** The completed wards of the configured delimitation with their
+    * (ProvinceID, MunicipalityID, WardID) from the `Wards` dimension
+    * (the per-row `.loc` lookup at SANEF_Uploader.py:409), in WardID
+    * order — a registered query and the IecApi fan-out input. The ward
+    * jobs do not read this frame; they apply the same sets to their
+    * fact ([[completedOnly]]).
+    */
+  def completedWards(src: ElectionSources, cfg: JobConfig): DataFrame =
+    src.wards
+      .transform(finishedIn(src, cfg, "WardID"))
+      .select("ProvinceID", "MunicipalityID", "WardID")
+      .transform(funnel)
+      .sortWithinPartitions("WardID")
+
+  /** The jobs' single output partition: one shuffle into one partition,
+    * after which a job aggregates, windows and sorts locally. A local
+    * sort there gives the same total order and CSV bytes as a global
+    * `orderBy`, without its range-partitioner sampling job; the single
+    * task is the one `CsvSink`'s `coalesce(1)` already implies.
+    * Upstream stages stay parallel: the funnel sits behind the shuffle,
+    * not a `coalesce` that would collapse them too.
+    *
+    * Scale-safe because every funnel input, like every broadcast ward
+    * set, is bounded by the country's electoral geography, not by the
+    * size of any input fixture: ≤ 4,468 wards, ≤ 23,000 VDs, 257 munis,
+    * council rows ≤ munis × parties, and ward facts ≤ wards × parties or
+    * candidates — the same bound `CsvSink`'s single file already
+    * assumes. So an aggregation or window over them costs less in the
+    * one partition than its own hash exchange and stage would.
+    */
+  private def funnel(df: DataFrame): DataFrame = df.repartition(1)
 
   /** Province decode dim (JobConfig.provinceCodes as a broadcast frame —
     * the reference's thrice-repeated inline dict, SANEF_Uploader.py:226).
@@ -88,17 +131,17 @@ object SanefJobs {
   // =====================================================================
   def wardVotesByParty(
       spark: SparkSession, src: ElectionSources, cfg: JobConfig): DataFrame = {
-    val completed = completedWards(src, cfg).select("WardID")
     src.ballotResultsJson
       .select(from_json(col("body"), ElectionSchemas.ballotResults).as("r"))
       .select(col("r.WardID").as("WardID"),
         explode(col("r.PartyBallotResults")).as("p"))
-      .join(completed, Seq("WardID"), "left_semi")
+      .transform(completedOnly(src, cfg, "WardID"))
       .select(
         col("WardID").as("Geography"),
         col("p.Name").as("Party"),
         col("p.TotalValidVotes").as("Count"))
-      .transform(sortedSingle(col("Geography"), col("Party")))
+      .transform(funnel)
+      .sortWithinPartitions("Geography", "Party")
   }
 
   // =====================================================================
@@ -106,46 +149,42 @@ object SanefJobs {
   //
   // The reference's per-ward SQL groups by (ward, lRegisteredVoters) then
   // sums the grouped frame's registered column — i.e. tvoters is the sum
-  // of DISTINCT registered-voter values per ward. Reproduced exactly by
-  // the two-level aggregation; the N+1 loop collapses to one job.
+  // of DISTINCT registered-voter values per ward, and tvotes the sum of
+  // every turnout value. One aggregation per ward computes both, inside
+  // the funnel's partition; the N+1 loop collapses to one job.
   // =====================================================================
   def voterTurnout(
-      spark: SparkSession, src: ElectionSources, cfg: JobConfig): DataFrame = {
-    val completed = completedWards(src, cfg)
-      .select(col("WardID").as("fklWardID"))
-    val perWard = src.vdStats
+      spark: SparkSession, src: ElectionSources, cfg: JobConfig): DataFrame =
+    src.vdStats
       .filter(col("pkfklEEID") === cfg.electoralEventId)
-      .join(completed, Seq("fklWardID"), "left_semi")
-      .groupBy("fklWardID", "lRegisteredVoters")
-      .agg(sum("lVoterTurnout").as("votes"))
+      .transform(completedOnly(src, cfg, "fklWardID"))
+      .transform(funnel)
       .groupBy("fklWardID")
-      .agg(sum("lRegisteredVoters").as("tvoters"), sum("votes").as("tvotes"))
-    perWard
+      .agg(sum_distinct(col("lRegisteredVoters")).as("tvoters"),
+        sum("lVoterTurnout").as("tvotes"))
       .select(col("fklWardID"), expr(
         "stack(2, 'Voted', tvotes, 'Didn''t Vote', tvoters - tvotes)")
         .as(Seq("Voter Turnout", "Count")))
       .select(col("fklWardID").as("Geography"),
         col("Voter Turnout"), col("Count"))
-      .transform(sortedSingle(
-        col("Geography"), col("Voter Turnout").desc)) // Voted first
-  }
+      .sortWithinPartitions(col("Geography"),
+        col("Voter Turnout").desc) // Voted first
 
   // =====================================================================
   // 3. ward_votes_by_candidate (dataset 1379, SANEF_Uploader.py:94-124)
   // =====================================================================
   def wardVotesByCandidate(
       spark: SparkSession, src: ElectionSources, cfg: JobConfig): DataFrame = {
-    val completed = completedWards(src, cfg)
-      .select(col("WardID").as("fklWardId"))
     src.wardCandidates
       .filter(col("fklEEId") === cfg.electoralEventId)
-      .join(completed, Seq("fklWardId"), "left_semi")
+      .transform(completedOnly(src, cfg, "fklWardId"))
       .select(
         col("sWardGeography").as("Geography"),
         concat_ws(" - ", col("sPartyAbbr"), col("sCandidateName"))
           .as("Party"),
         col("lCount").as("Count"))
-      .transform(sortedSingle(col("Geography"), col("Party")))
+      .transform(funnel)
+      .sortWithinPartitions("Geography", "Party")
   }
 
   // =====================================================================
@@ -155,21 +194,21 @@ object SanefJobs {
   // previously-accumulated value (first-wins, arrival order). Contract
   // (SURVEY §2.4 A8): dedup by Geography keeping the first element in
   // payload order — posexplode supplies that order; row_number picks the
-  // winner deterministically.
+  // winner deterministically, inside the funnel's partition.
   // =====================================================================
   def wardCouncillorElected(
       spark: SparkSession, src: ElectionSources, cfg: JobConfig): DataFrame = {
-    val exploded = src.councilorsJson
+    val w = Window.partitionBy(col("c.WardID")).orderBy(col("pos"))
+    src.councilorsJson
       .select(posexplode(from_json(col("body"), ElectionSchemas.councilors))
         .as(Seq("pos", "c")))
-    val w = Window.partitionBy(col("c.WardID")).orderBy(col("pos"))
-    exploded
+      .transform(funnel)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select(
         col("c.WardID").as("Geography"),
         concat_ws(" - ", col("c.Name"), col("c.PartyName")).as("Contents"))
-      .transform(sortedSingle(col("Geography")))
+      .sortWithinPartitions("Geography")
   }
 
   // =====================================================================
@@ -177,16 +216,15 @@ object SanefJobs {
   // =====================================================================
   def prVotesByParty(
       spark: SparkSession, src: ElectionSources, cfg: JobConfig): DataFrame = {
-    val completed = completedWards(src, cfg)
-      .select(col("WardID").as("fklWardId"))
     src.displayWard
       .filter(col("fklEEId") === cfg.electoralEventId)
-      .join(completed, Seq("fklWardId"), "left_semi")
+      .transform(completedOnly(src, cfg, "fklWardId"))
       .select(
         col("sWardGeography").as("Geography"),
         col("sPartyName").as("Party"),
         col("lCount").as("Count"))
-      .transform(sortedSingle(col("Geography"), col("Party")))
+      .transform(funnel)
+      .sortWithinPartitions("Geography", "Party")
   }
 
   // =====================================================================
@@ -202,6 +240,7 @@ object SanefJobs {
     val winners = src.councilWinners
       .filter(col("fklEEID") === cfg.electoralEventId)
     councilsWithProvince(spark, src, winners)
+      .transform(funnel)
       .groupBy("ProvinceCode")
       .agg(sum("bHung").as("hung"), count("bHung").as("total"))
       .select(col("ProvinceCode"), expr(
@@ -209,7 +248,7 @@ object SanefJobs {
         .as(Seq("Councils", "Count")))
       .select(col("ProvinceCode").as("Geography"),
         col("Councils"), col("Count"))
-      .transform(sortedSingle(col("Geography"), col("Councils")))
+      .sortWithinPartitions("Geography", "Councils")
   }
 
   // =====================================================================
@@ -222,11 +261,12 @@ object SanefJobs {
         col("fklEEID") === cfg.electoralEventId)
     councilsWithProvince(spark, src, winners)
       .join(broadcast(src.parties), col("fklPartyID") === col("pklPartyID"))
+      .transform(funnel)
       .groupBy("ProvinceCode", "sPartyName")
       .agg(count("sPartyName").as("Count"))
       .select(col("ProvinceCode").as("Geography"),
         col("sPartyName").as("Party"), col("Count"))
-      .transform(sortedSingle(col("Geography"), col("Party")))
+      .sortWithinPartitions("Geography", "Party")
   }
 
   // =====================================================================
@@ -247,12 +287,13 @@ object SanefJobs {
       col("MunicipalityName"), lit(" </a> </li>"))
     councilsWithProvince(spark, src, winners)
       .withColumn("li", li)
+      .transform(funnel)
       .groupBy("ProvinceCode")
       .agg(concat(lit("<ul>"),
         array_join(array_sort(collect_list(col("li"))), ""),
         lit("</ul>")).as("Contents"))
       .select(col("ProvinceCode").as("Geography"), col("Contents"))
-      .transform(sortedSingle(col("Geography")))
+      .sortWithinPartitions("Geography")
   }
 
   // =====================================================================
@@ -279,8 +320,9 @@ object SanefJobs {
         .as(Seq("Seat Type", "Count")))
       .select(col("Municipality").as("Geography"), col("Party Name"),
         col("Seat Type"), col("Count"))
-      .transform(sortedSingle(
-        col("Geography"), col("Party Name"), col("Seat Type").desc))
+      .transform(funnel)
+      .sortWithinPartitions(
+        col("Geography"), col("Party Name"), col("Seat Type").desc)
   }
 
   // =====================================================================

@@ -779,15 +779,16 @@ object Dedup {
     * a per-query artifact.
     */
   private[operators] def memoCappedIndex(
-      s: SparkSession, d: String): DataFrame =
-    graft.plans.Memo.frame(s, d, "neardup_capped_sh3") {
-      val raw = shingleIndex(corpusNear(s, d), 3).persist()
-      // eager checkpoint BEFORE the unpersist so the cap's two raw
-      // branches (hot-key agg + anti-join) run against the cache once
-      val capped = capDocFrequency(raw, ShingleDfCap).localCheckpoint(true)
-      raw.unpersist()
-      capped
-    }
+      s: SparkSession, d: String): DataFrame = {
+    var raw: DataFrame = null
+    // Memo's one eager checkpoint materializes the capped frame on a
+    // miss; the raw index stays cached until then, so the cap's two raw
+    // branches (hot-key agg + anti-join) read it once
+    try graft.plans.Memo.frame(s, d, "neardup_capped_sh3") {
+      raw = shingleIndex(corpusNear(s, d), 3).persist()
+      capDocFrequency(raw, ShingleDfCap)
+    } finally if (raw != null) raw.unpersist()
+  }
 
   val qDedupNgramJaccardSql: String =
     """WITH corpus AS (

@@ -585,25 +585,40 @@ object SnapshotStore {
     won
   }
 
-  /** Write `df` as a new immutable data group; returns its name and
-    * the schema its files carry. A `_stats.json` sidecar records
-    * per-FILE per-numeric-column [min, max] plus the group's file
-    * manifest for file-level pruning ([[readWhere]]) — the underscore
-    * prefix keeps it invisible to the parquet reader, and sitting
-    * INSIDE the group it shares the group's immutability and vacuum
-    * lifetime.
+  /** `body` with every Spark job it starts described `snapshot.<op>`
+    * (see [[graft.JobDescription]]).
+    */
+  private def described[A](spark: SparkSession, op: String)(body: => A): A =
+    graft.JobDescription.during(spark, s"snapshot.$op")(body)
+
+  /** Delete `dir` and everything under it. */
+  private def deleteTree(dir: Path): Unit = {
+    val w = Files.walk(dir)
+    val paths = try w.iterator.asScala.toVector finally w.close()
+    paths.reverse.foreach(Files.deleteIfExists(_))
+  }
+
+  /** Write `df` as a new immutable data group; returns its name, the
+    * schema its files carry and their row count. A `_stats.json`
+    * sidecar records per-FILE per-numeric-column [min, max] plus the
+    * group's file manifest for file-level pruning ([[readWhere]]) — the
+    * underscore prefix keeps it invisible to the parquet reader, and
+    * sitting INSIDE the group it shares the group's immutability and
+    * vacuum lifetime.
     */
   private def writeGroup(
-      df: DataFrame, root: String): (String, StructType) = {
+      df: DataFrame, root: String): (String, StructType, Long) = {
     val group = s"data/${UUID.randomUUID()}"
     df.write.mode("error").parquet(s"$root/$group")
-    (group, sidecarsFor(df.sparkSession, root, Seq(group)))
+    val (schema, rows) = sidecarsFor(df.sparkSession, root, Seq(group))
+    (group, schema, rows)
   }
 
   /** Write the `_stats.json` sidecars for `groups` from the just-
     * written files' PARQUET FOOTERS, and return the union of the Spark
     * schemas those footers carry — the columns the commit adds to the
-    * logged table schema. Driver-side metadata reads, ZERO Spark jobs:
+    * logged table schema — with their total row count. Driver-side
+    * metadata reads, ZERO Spark jobs:
     * the footer already carries exact per-row-group min/max for every
     * numeric column Spark writes. Stats come from the FILES JUST
     * WRITTEN, never from re-running the input's lineage: a
@@ -616,10 +631,10 @@ object SnapshotStore {
     * kept files directly from it and never lists the data directory.
     * An empty group (an empty-batch append) records an empty manifest.
     */
-  private def sidecarsFor(
-      spark: SparkSession, root: String, groups: Seq[String]): StructType = {
+  private def sidecarsFor(spark: SparkSession, root: String,
+      groups: Seq[String]): (StructType, Long) = {
     val conf = spark.sessionState.newHadoopConf()
-    groups.foldLeft(new StructType()) { (schema, g) =>
+    groups.foldLeft((new StructType(), 0L)) { case ((schema, rows), g) =>
       val dir = Paths.get(root, g)
       val stats = listDir(dir).map(_.getFileName.toString)
         .filter(n => n.endsWith(".parquet") &&
@@ -633,7 +648,8 @@ object SnapshotStore {
         stats.flatMap { case (f, st) =>
           st.ranges.map { case (c, lo, hi) => (s"$f|$c", lo, hi) }
         })
-      stats.foldLeft(schema)((s, fs) => widen(s, fs._2.schema))
+      (stats.foldLeft(schema)((s, fs) => widen(s, fs._2.schema)),
+        rows + stats.map(_._2.rows).sum)
     }
   }
 
@@ -812,11 +828,15 @@ object SnapshotStore {
 
   /** Read `paths` through a logged schema: parquet null-fills the
     * columns a file lacks, so no footer is inferred at read time and
-    * no projection re-aligns an evolved table.
+    * no projection re-aligns an evolved table. No paths (pruning kept
+    * no file, or every commit so far was a tag-only empty batch) read
+    * as an empty frame of that schema.
     */
   private def scan(spark: SparkSession, schema: StructType,
       paths: Seq[String]): DataFrame =
-    spark.read.schema(schema).parquet(paths: _*)
+    if (paths.isEmpty)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    else spark.read.schema(schema).parquet(paths: _*)
 
   /** Snapshot read with FILE-LEVEL pruning on a numeric range
     * predicate — the file-skipping half of a table format: data files
@@ -842,11 +862,8 @@ object SnapshotStore {
     // data-dependent schema would make the same query's select succeed
     // or throw by range. An evolved `column` reads null from old files,
     // and the range predicate drops those rows.
-    val schema = snap.structType
-    val base =
-      if (scanPaths.nonEmpty) scan(spark, schema, scanPaths)
-      else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-    base.where(col(column) >= lo && col(column) <= hi)
+    scan(spark, snap.structType, scanPaths)
+      .where(col(column) >= lo && col(column) <= hi)
   }
 
   private def commitLoop(root: String, action: String, adds: Seq[String],
@@ -926,18 +943,23 @@ object SnapshotStore {
 
   /** Append `df` as a new commit; returns the committed version. */
   def append(df: DataFrame, root: String,
-      publisher: CommitPublisher = HardLinkPublisher): Int = {
+      publisher: CommitPublisher = HardLinkPublisher): Int =
+    described(df.sparkSession, "append")(appendGroup(df, root, publisher))
+
+  private def appendGroup(df: DataFrame, root: String,
+      publisher: CommitPublisher): Int = {
     checkAppendSchema(df, schemaAt(root))
-    val (group, written) = writeGroup(df, root)
+    val (group, written, _) = writeGroup(df, root)
     commitLoop(root, "append", Seq(group), written, publisher)
   }
 
   /** Replace the table contents with `df`; returns the version. */
   def overwrite(df: DataFrame, root: String,
-      publisher: CommitPublisher = HardLinkPublisher): Int = {
-    val (group, written) = writeGroup(df, root)
-    commitLoop(root, "overwrite", Seq(group), written, publisher)
-  }
+      publisher: CommitPublisher = HardLinkPublisher): Int =
+    described(df.sparkSession, "overwrite") {
+      val (group, written, _) = writeGroup(df, root)
+      commitLoop(root, "overwrite", Seq(group), written, publisher)
+    }
 
   /** Append with the batch range-partitioned on `clusterCol` into
     * `nGroups` SEPARATE data groups in one commit — the write-side
@@ -951,7 +973,12 @@ object SnapshotStore {
     */
   def appendClustered(df: DataFrame, root: String, clusterCol: String,
       nGroups: Int,
-      publisher: CommitPublisher = HardLinkPublisher): Int = {
+      publisher: CommitPublisher = HardLinkPublisher): Int =
+    described(df.sparkSession, "appendClustered")(
+      clusteredCommit(df, root, clusterCol, nGroups, publisher))
+
+  private def clusteredCommit(df: DataFrame, root: String,
+      clusterCol: String, nGroups: Int, publisher: CommitPublisher): Int = {
     import org.apache.spark.sql.functions.{col, spark_partition_id}
     checkAppendSchema(df, schemaAt(root))
     // collision-proof helper column: silently replacing a user column
@@ -976,16 +1003,11 @@ object SnapshotStore {
     val parts = listDir(staging)
       .filter(_.getFileName.toString.startsWith(s"$grp="))
       .sortBy(_.getFileName.toString.drop(grp.length + 1).toInt)
-    def sweepStaging(): Unit = {
-      val w = Files.walk(staging)
-      val paths = try w.iterator.asScala.toVector finally w.close()
-      paths.reverse.foreach(Files.deleteIfExists(_))
-    }
     if (parts.isEmpty) {
       // an empty batch has nothing to cluster — the plain append path
       // handles it
-      sweepStaging()
-      return append(df, root, publisher)
+      deleteTree(staging)
+      return appendGroup(df, root, publisher)
     }
     Files.createDirectories(Paths.get(root, "data"))
     val groups = parts.map { p =>
@@ -993,9 +1015,9 @@ object SnapshotStore {
       Files.move(p, Paths.get(root, group))
       group
     }
-    sweepStaging()
+    deleteTree(staging)
     commitLoop(root, "append", groups,
-      sidecarsFor(df.sparkSession, root, groups), publisher)
+      sidecarsFor(df.sparkSession, root, groups)._1, publisher)
   }
 
   /** Idempotent tagged append — the exactly-once sink primitive for
@@ -1003,9 +1025,11 @@ object SnapshotStore {
     * and a restart-replayed batch (same tag already in the log) is a
     * no-op, so the table holds each batch's rows exactly once however
     * often the engine re-delivers it. Returns the committed version,
-    * None when the tag had already landed. Single-writer-per-tag is
-    * the streaming contract (one query owns the checkpoint); the
-    * version-slot CAS still serializes cross-writer commits.
+    * None when the tag had already landed. A frame without rows (a
+    * no-data micro-batch) commits its tag and schema with no data
+    * group. Single-writer-per-tag is the streaming contract (one query
+    * owns the checkpoint); the version-slot CAS still serializes
+    * cross-writer commits.
     */
   def appendOnce(df: DataFrame, root: String, tag: String,
       publisher: CommitPublisher = HardLinkPublisher): Option[Int] = {
@@ -1021,10 +1045,17 @@ object SnapshotStore {
     // (vacuum's job) and still lands exactly once.
     val st = state(root)
     if (st.hasTag(tag)) None
-    else {
+    else described(df.sparkSession, "appendOnce") {
       checkAppendSchema(df, st.at(root, None).structType)
-      val (group, written) = writeGroup(df, root)
-      commitLoopDedup(root, "append", Seq(group), written, tag,
+      val (group, written, rows) = writeGroup(df, root)
+      // a no-data batch (a streaming query runs one after its watermark
+      // moves) commits its tag alone: the tag must still land for a
+      // replay to dedup against, and the live set gains no zero-row
+      // group. The row count is the footers' — no extra job.
+      val adds =
+        if (rows > 0) Seq(group)
+        else { deleteTree(Paths.get(root, group)); Nil }
+      commitLoopDedup(root, "append", adds, written, tag,
         dedupOnTag = true, publisher)
     }
   }
@@ -1038,13 +1069,16 @@ object SnapshotStore {
         s"data group $g was vacuumed; version is no longer readable")
     }
 
-  /** `snap` once the read contract holds: it has live data (an empty
-    * live set — no commits yet, or time travel to before the first
-    * append — is an error), and none of it was vacuumed.
+  /** `snap` once the read contract holds: it is a committed version
+    * (no commits yet, or time travel to before the first commit, is an
+    * error; a version whose commits were all tag-only empty batches
+    * has a logged schema and no live group, and reads empty), and none
+    * of its live data was vacuumed.
     */
   private def readable(root: String, snap: Snap, asOf: Option[Int]): Snap = {
-    require(snap.live.nonEmpty,
-      s"no live data at ${asOf.fold("latest")(v => s"version $v")} in $root")
+    require(snap.schema.nonEmpty,
+      s"nothing committed at ${asOf.fold("latest")(v => s"version $v")} " +
+        s"in $root")
     requirePresent(root, snap.live)
     snap
   }
@@ -1090,7 +1124,12 @@ object SnapshotStore {
     */
   def compact(spark: SparkSession, root: String,
       publisher: CommitPublisher = HardLinkPublisher,
-      clusterCol: String = null, nFiles: Int = 0): Int = {
+      clusterCol: String = null, nFiles: Int = 0): Int =
+    described(spark, "compact")(
+      compactCommit(spark, root, publisher, clusterCol, nFiles))
+
+  private def compactCommit(spark: SparkSession, root: String,
+      publisher: CommitPublisher, clusterCol: String, nFiles: Int): Int = {
     require(clusterCol == null || nFiles > 0,
       "clustered compaction needs nFiles > 0 — a clusterCol with the " +
         "default nFiles would funnel the table through ONE partition " +
@@ -1296,7 +1335,12 @@ object SnapshotStore {
     */
   def upsert(spark: SparkSession, batch: DataFrame, root: String,
       keyCol: String,
-      publisher: CommitPublisher = HardLinkPublisher): Int = {
+      publisher: CommitPublisher = HardLinkPublisher): Int =
+    described(spark, "upsert")(
+      upsertCommit(spark, batch, root, keyCol, publisher))
+
+  private def upsertCommit(spark: SparkSession, batch: DataFrame,
+      root: String, keyCol: String, publisher: CommitPublisher): Int = {
     import org.apache.spark.sql.functions.{col, count, countDistinct, lit, max, min}
     val cur = schemaAt(root)
     checkAppendSchema(batch, cur)
@@ -1350,7 +1394,7 @@ object SnapshotStore {
         requirePresent(root, snap.live)
         val plan = refineTouch(b, keyCol, root,
           touchPlan(root, snap.live, keyCol, kLo, kHi))
-        val (group, written) =
+        val (group, written, _) =
           if (plan.isEmpty) writeGroup(b, root)
           else {
             // the hit scan reads through the logged schema: when every
@@ -1396,7 +1440,13 @@ object SnapshotStore {
     */
   def deleteWhere(spark: SparkSession, root: String, column: String,
       lo: Double, hi: Double,
-      publisher: CommitPublisher = HardLinkPublisher): Int = {
+      publisher: CommitPublisher = HardLinkPublisher): Int =
+    described(spark, "deleteWhere")(
+      deleteCommit(spark, root, column, lo, hi, publisher))
+
+  private def deleteCommit(spark: SparkSession, root: String,
+      column: String, lo: Double, hi: Double,
+      publisher: CommitPublisher): Int = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, not}
     var committed = -1
     while (committed < 0) {
@@ -1531,11 +1581,7 @@ object SnapshotStore {
       Files.move(p, t)
       t
     }
-    (trash ++ renamed ++ staleStaging).foreach { dir =>
-      val w = Files.walk(dir)
-      val paths = try w.iterator.asScala.toVector finally w.close()
-      paths.reverse.foreach(Files.deleteIfExists(_))
-    }
+    (trash ++ renamed ++ staleStaging).foreach(deleteTree)
     doomed.size
   }
 

@@ -206,6 +206,39 @@ class DocStreamsSpec extends AnyFunSuite {
     assert(graft.plans.SnapshotStore.history(root).size === 2)
   }
 
+  test("a no-data micro-batch commits its tag alone: no zero-row group " +
+    "joins the live set, and a replay of that tag adds no row") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-snap-nodata").toString
+    val input = MemoryStream[Doc]
+    // the dedup watermark moves with the first batch, so the query then
+    // runs a no-data batch to evict state: a warm-up's trailing batch
+    val q = DocStreams.dedupByContent(prepare(input.toDF()))
+      .writeStream.foreachBatch(DocStreams.snapshotSink(root)).start()
+    try {
+      input.addData(Doc(1, good, "crawl", ts(0)))
+      q.processAllAvailable()
+    } finally q.stop()
+    val last = q.recentProgress.last
+    assert(last.numInputRows === 0, "the warm-up must end on a no-data batch")
+    val history = graft.plans.SnapshotStore.describeHistory(root)
+    assert(history.map(_._3) === Seq(1, 0),
+      "the data batch adds one group, the no-data batch none")
+    val groups = java.nio.file.Files.list(java.nio.file.Paths.get(root, "data"))
+      .toArray.toSeq.map(_.toString)
+    assert(groups.size === graft.plans.SnapshotStore.probeStateLiveCount(root))
+    groups.foreach(g => assert(spark.read.parquet(g).count() > 0,
+      s"zero-row group $g"))
+    val rows = graft.plans.SnapshotStore.read(spark, root).count()
+    assert(rows === 1L)
+    assert(graft.plans.SnapshotStore.appendOnce(
+      Seq(Doc(2, goodOtherPii, "crawl", ts(1))).toDF(), root,
+      s"batch-${last.batchId}") === None)
+    assert(graft.plans.SnapshotStore.read(spark, root).count() === rows)
+  }
+
   test("streaming retrieval over the saved artifacts: stream equals " +
     "batch search row-for-row for both stores, results land in a " +
     "snapshot table exactly-once, and retrieval composes with the " +

@@ -32,6 +32,21 @@ class PipelineOpsSpec extends AnyFunSuite {
     got.unpersist()
   }
 
+  test("memoized capped shingle index: a miss checkpoints it once, " +
+    "in Memo") {
+    graft.plans.Memo.clear()
+    // building the row's frame derives the index (its only memo entry);
+    // the rest of the plan stays lazy
+    val jobs = JobCensus.of(spark)(Dedup.qDedupMinhash(spark, dir))
+    val checkpoints = jobs.flatMap(_.stages)
+      .filter(_.startsWith("localCheckpoint at"))
+    // one eager localCheckpoint of the capped index runs as three jobs
+    // under adaptive execution; checkpointing it a second time (inside
+    // the producer, then again in Memo) ran four
+    assert(checkpoints.size === 3, jobs.mkString("\n"))
+    assert(checkpoints.forall(_.contains("Memo.scala")), jobs.mkString("\n"))
+  }
+
   test("minhash LSH recall >= 0.95 vs exact jaccard pairs") {
     val exact = Dedup.qDedupNgramJaccard(spark, dir)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1)))

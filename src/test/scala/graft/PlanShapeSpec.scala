@@ -255,4 +255,48 @@ class PlanShapeSpec extends AnyFunSuite {
       s"expected a partial (map-side) max(struct) before the doc_id " +
         s"exchange:\n${p.take(3000)}")
   }
+
+  /** The most exchanges (shuffle or broadcast) on any root-to-leaf path
+    * of `plan`: each one is a query stage the next must wait for, so it
+    * bounds a small-data job's chain of sequential stages.
+    */
+  private def exchangeDepth(
+      plan: org.apache.spark.sql.execution.SparkPlan): Int = {
+    import org.apache.spark.sql.execution.exchange.{
+      BroadcastExchangeExec, ShuffleExchangeExec}
+    val here = plan match {
+      case _: ShuffleExchangeExec | _: BroadcastExchangeExec => 1
+      case _ => 0
+    }
+    here + plan.children.map(exchangeDepth).maxOption.getOrElse(0)
+  }
+
+  test("election jobs: the ward sets broadcast into the fact scan and " +
+    "every job shuffles once, into its output partition") {
+    import graft.jobs._
+    // the static plan (adaptive execution off, in a child session) shows
+    // every exchange the planner puts in; adaptive execution runs each
+    // one as a query stage of its own
+    val static =
+      Tables.childSession(spark, "spark.sql.adaptive.enabled" -> "false")
+    val dir = new ElectionFixture(static).writeFiles(
+      java.nio.file.Files.createTempDirectory("graft-plan-jobs").toString)
+    val src = new FileElectionSources(static, dir)
+    // funnel shuffle + one broadcast (a ward set or a dimension) ahead of
+    // it; ward_councillor_elected has the funnel alone
+    val depth = Map(
+      "ward_votes_by_party" -> 2, "voter_turnout" -> 2,
+      "ward_votes_by_candidate" -> 2, "ward_councillor_elected" -> 1,
+      "pr_votes_by_party" -> 2, "hung_councils" -> 2,
+      "councils_won_by_party" -> 2, "list_of_hung_councils" -> 2,
+      "seats_won" -> 2)
+    assert(depth.keySet === SanefJobs.all.map(_.name).toSet)
+    val got = SanefJobs.all.map { spec =>
+      spec.name -> exchangeDepth(
+        SanefJobs.run(static, src, spec.name).queryExecution.executedPlan)
+    }.toMap
+    assert(got === depth)
+    assert(exchangeDepth(SanefJobs.completedWards(src, JobConfig())
+      .queryExecution.executedPlan) === 2)
+  }
 }

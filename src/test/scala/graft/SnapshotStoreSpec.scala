@@ -875,6 +875,58 @@ class SnapshotStoreSpec extends AnyFunSuite {
     assert(replay.isEmpty, s"a replayed tag ran Spark jobs: $replay")
   }
 
+  test("a table whose commits are all empty batches reads as an empty " +
+    "frame of its logged schema; the empty commits hold only their tags") {
+    val root = freshRoot()
+    assert(SnapshotStore.appendOnce(df().limit(0), root, "b-0") === Some(0))
+    assert(SnapshotStore.appendOnce(df().limit(0), root, "b-1") === Some(1))
+    assert(SnapshotStore.describeHistory(root) ===
+      Seq((0, "append", 0, 0), (1, "append", 0, 0)))
+    assert(SnapshotStore.probeStateLiveCount(root) === 0)
+    assert(!Files.exists(Paths.get(root, "data")) ||
+      Files.list(Paths.get(root, "data")).count() === 0,
+      "an empty batch must leave no data group behind")
+    val r = SnapshotStore.read(spark, root)
+    assert(r.schema.map(f => (f.name, f.dataType)) ===
+      df().schema.map(f => (f.name, f.dataType)))
+    assert(r.count() === 0)
+    assert(SnapshotStore.readWhere(spark, root, "id", 0.0, 9.0).count() === 0)
+    // the logged schema still guards the next append, which adds data
+    assert(SnapshotStore.appendOnce(df(1, 2), root, "b-2") === Some(2))
+    assert(idSet(SnapshotStore.read(spark, root)) === Set(1L, 2L))
+    assert(SnapshotStore.appendOnce(df(3), root, "b-0") === None)
+    assert(idSet(SnapshotStore.read(spark, root)) === Set(1L, 2L))
+  }
+
+  test("every Spark job of a SnapshotStore write is described " +
+    "snapshot.<op>; the caller's description is restored") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val root = freshRoot()
+    val ops: Seq[(String, () => Any)] = Seq(
+      "appendOnce" -> (() => SnapshotStore.appendOnce(df(1, 2, 3), root, "t")),
+      "append" -> (() => SnapshotStore.append(df(4, 5), root)),
+      "appendClustered" -> (() =>
+        SnapshotStore.appendClustered(df(8, 9), root, "id", 2)),
+      "upsert" -> (() => SnapshotStore.upsert(spark,
+        Seq((2L, "UP"), (7L, "NEW")).toDF("id", "tag"), root, "id")),
+      "deleteWhere" -> (() =>
+        SnapshotStore.deleteWhere(spark, root, "id", 4.0, 4.0)),
+      "compact" -> (() => SnapshotStore.compact(spark, root)),
+      "overwrite" -> (() => SnapshotStore.overwrite(df(10), root)))
+    sc.setJobDescription("caller")
+    try ops.foreach { case (op, run) =>
+      val jobs = JobCensus.of(spark)(run())
+      assert(jobs.nonEmpty, op)
+      assert(jobs.forall(_.description == s"snapshot.$op"),
+        jobs.mkString("\n"))
+      assert(sc.getLocalProperty("spark.job.description") === "caller")
+    } finally sc.setJobDescription(null)
+    assert(idSet(SnapshotStore.read(spark, root, Some(5))) ===
+      Set(1L, 2L, 3L, 5L, 7L, 8L, 9L))
+    assert(idSet(SnapshotStore.read(spark, root)) === Set(10L))
+  }
+
   test("building read, readWhere and changes frames starts no Spark " +
     "job; upsert and deleteWhere run no parquet job beyond their write") {
     import spark.implicits._
