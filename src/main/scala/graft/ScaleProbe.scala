@@ -423,12 +423,11 @@ object ScaleProbe {
           root, "id")))
     }
     // checkpoint payload headroom: a 100k-live-group checkpoint (the
-    // wide-table regime) must neither produce one multi-MB JSON file
-    // (sharded write caps each file) nor re-parse per action (the
-    // newest-checkpoint cache makes repeat state() calls O(suffix)).
-    // Groups are synthesized — state() never touches payloads, so this
-    // prices the replay path without 10⁴ real commits.
-    t("snapshot state() at 100k live groups (sharded ckpt: cold parse " +
+    // wide-table regime, one 4.4 MB JSON file) must not re-parse per
+    // action (the newest-checkpoint cache makes repeat state() calls
+    // O(suffix)). Groups are synthesized — state() never touches
+    // payloads, so this prices the replay path without 10⁴ real commits.
+    t("snapshot state() at 100k live groups (inline ckpt: cold parse " +
       "once, then cached replays)") {
       val root = java.nio.file.Files
         .createTempDirectory("graft-ckpt-probe").toString

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet fixtures (TESTDATA.md).
   *
@@ -43,8 +44,29 @@ object Tables {
   private val children = new java.util.WeakHashMap[
     SparkSession, java.util.Map[Seq[(String, String)], SparkSession]]
 
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** `dir/name.parquet`, read through the schema its footer carries.
+    * A bare `spark.read.parquet` runs a schema-inference Spark job on
+    * every read, so the footer schema is inferred once per session and
+    * file version and memoized (weakly, as [[childSession]]'s children
+    * are; the path's modification time is part of the key, so a
+    * rewritten fixture is inferred afresh). The footer stays the only
+    * schema source: no declared copy can drift from the file.
+    */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val p = new org.apache.hadoop.fs.Path(path)
+    val mtime = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(p).getModificationTime
+    val memo = schemas.synchronized {
+      schemas.computeIfAbsent(spark,
+        _ => new java.util.concurrent.ConcurrentHashMap)
+    }
+    spark.read.schema(memo.computeIfAbsent((path, mtime),
+      _ => spark.read.parquet(path).schema)).parquet(path)
+  }
+
+  private val schemas = new java.util.WeakHashMap[
+    SparkSession, java.util.Map[(String, Long), StructType]]
 
   def region(s: SparkSession, d: String): DataFrame   = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = table(s, d, "nation")
@@ -72,6 +94,7 @@ object Tables {
     // file actually carries instead of assuming one encoding; all branches
     // normalize to a session-TZ TimestampType column so every downstream
     // plan (windows, as-of joins, sessionization) sees one stable type.
+    // The branch reads the memoized footer schema: no Spark job.
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType}
     val raw = table(ns, d, "events")

@@ -8,6 +8,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+import org.json4s.{JArray, JDouble, JInt, JObject, JString, JValue}
+import org.json4s.jackson.JsonMethods
 
 /** Minimal table-format layer over raw parquet — the missing piece
   * between the artifact stores and a lakehouse, extending the
@@ -17,10 +19,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   *
   *   <root>/data/<uuid>/part-*.parquet   immutable data file groups
   *   <root>/_commits/<v>.json            one record per commit
+  *   <root>/_commits/<v>.ckpt            replayed state, every 10th
   *
   * A commit record is `{version, action, adds, removes, tag, schema}`
   * where `adds` / `removes` are data-group directories and `schema` is
-  * the table schema after the commit. The LIVE file set at version v
+  * the table schema after the commit; a checkpoint is `{version, tags,
+  * schema, live}`. Both are plain JSON objects, written and read by one
+  * json4s codec ([[Fields]]). The LIVE file set at version v
   * is the log replay: start empty; `append` adds its groups;
   * `overwrite` removes all prior live groups and adds its own. Readers
   * never list data directories and never infer a schema from data
@@ -62,13 +67,13 @@ object SnapshotStore {
   /** `schema` is the post-commit table schema, base64 of its JSON
     * ([[encodeSchema]]); only a record that adds no group may omit it.
     */
-  private case class Commit(
+  private[graft] case class Commit(
       version: Int, action: String, adds: Seq[String],
       removes: Seq[String], tag: String = "", schema: String = "")
 
-  /** The schema travels base64-encoded: its JSON quotes, commas and
-    * brackets would break the hand-rolled grammar, the base64 alphabet
-    * cannot, and a torn value still fails the closing-brace check.
+  /** The schema travels base64-encoded, the form every existing log
+    * holds, so those logs replay without a version branch; a value
+    * outside the base64 alphabet fails closed before it is decoded.
     */
   private def encodeSchema(s: StructType): String =
     Base64.getEncoder.encodeToString(s.json.getBytes(UTF_8))
@@ -76,8 +81,6 @@ object SnapshotStore {
   private def decodeSchema(b64: String): StructType =
     DataType.fromJson(new String(Base64.getDecoder.decode(b64), UTF_8))
       .asInstanceOf[StructType]
-
-  private val SchemaGrammar = "[A-Za-z0-9+/]*={0,2}"
 
   /** Fail closed on a record (or checkpoint) that adds data without a
     * schema: it was written before the log recorded schemas, and no
@@ -89,55 +92,91 @@ object SnapshotStore {
       s"$what records no table schema (written before the commit log " +
         "carried one); rewrite this table")
 
-  // hand-rolled (de)serialization: the record grammar is six fixed
-  // fields; a JSON library dependency is not available offline
-  private def render(c: Commit): String = {
-    // the group names are interpolated unescaped into the record, so
-    // their grammar is asserted here (mirroring the appendOnce tag
-    // whitelist): every group is self-generated `data/<uuid>`, and a
-    // future caller sneaking a quote/comma/bracket through would
-    // corrupt the log record parse() later splits on — fail at write
-    // time, not at the next read
-    (c.adds ++ c.removes).foreach { g =>
-      require(g.matches("data/[0-9a-fA-F-]+"),
-        s"data group name '$g' violates the data/<uuid> grammar")
+  // ---- the log codec: one json4s object per record or checkpoint ----
+
+  private val GroupName = "data/[0-9a-fA-F-]+".r
+  private val Base64Text = "[A-Za-z0-9+/]*={0,2}".r
+
+  private def jsonStrings(xs: Iterable[String]): JArray =
+    JArray(xs.iterator.map(JString(_)).toList)
+
+  private[graft] def render(c: Commit): String = JsonMethods.compact(JObject(
+    "version" -> JInt(c.version), "action" -> JString(c.action),
+    "adds" -> jsonStrings(c.adds), "removes" -> jsonStrings(c.removes),
+    "tag" -> JString(c.tag), "schema" -> JString(c.schema)))
+
+  private[graft] def render(ck: Ckpt): String = JsonMethods.compact(JObject(
+    "version" -> JInt(ck.version), "tags" -> jsonStrings(ck.tags.toSeq.sorted),
+    "schema" -> JString(ck.schema), "live" -> jsonStrings(ck.live)))
+
+  /** The fields of one log object. The log is input from outside the
+    * program (and [[vacuum]] deletes the groups it names), so every
+    * shape it does not expect fails closed as `torn or corrupt <what>`
+    * — the message [[readRetrying]] retries on: a torn read is a proper
+    * prefix, and no proper prefix of an object is a JSON object. Every
+    * group must be `data/<uuid>`.
+    */
+  private final class Fields(what: String, text: String) {
+    private val fields: Map[String, JValue] =
+      scala.util.Try(JsonMethods.parse(text)).toOption match {
+        case Some(JObject(fs)) => fs.toMap
+        case _ => fail("not a closed JSON object")
+      }
+
+    private def fail(why: String): Nothing = throw new IllegalArgumentException(
+      s"torn or corrupt $what ($why): ${text.take(200)}")
+
+    def int(name: String): Int = fields.get(name) match {
+      case Some(JInt(v)) if v.isValidInt => v.toInt
+      case _ => fail(s"no $name")
     }
-    s"""{"version":${c.version},"action":"${c.action}",""" +
-      s""""adds":${jsonArr(c.adds)},"removes":${jsonArr(c.removes)},""" +
-      s""""tag":"${c.tag}","schema":"${c.schema}"}"""
+
+    /** A string field; absent reads "" when `optional`. */
+    def string(name: String, optional: Boolean = false): String =
+      fields.get(name) match {
+        case Some(JString(v)) => v
+        case None if optional => ""
+        case _ => fail(s"no $name")
+      }
+
+    def strings(name: String): Vector[String] = fields.get(name) match {
+      case Some(JArray(xs)) =>
+        xs.iterator.map {
+          case JString(v) => v
+          case _ => fail(s"$name holds a non-string")
+        }.toVector
+      case _ => fail(s"no $name")
+    }
+
+    def groups(name: String): Vector[String] = strings(name).map { g =>
+      if (GroupName.matches(g)) g else fail(s"bad group '$g'")
+    }
+
+    /** Every `name: [lo, hi]` field, as a stats range. */
+    def ranges: Map[String, (Double, Double)] = fields.collect {
+      case (k, JArray(List(JDouble(lo), JDouble(hi)))) => k -> (lo, hi)
+    }
+
+    def schema: String = {
+      val b64 = string("schema", optional = true)
+      if (Base64Text.matches(b64)) b64 else fail("schema is not base64")
+    }
   }
 
-  private def parse(s: String): Commit = {
-    def field(name: String): String = {
-      val i = s.indexOf("\"" + name + "\":")
-      require(i >= 0, s"commit record missing $name: $s")
-      s.drop(i + name.length + 3)
-    }
-    def opt(name: String): String = {
-      val i = s.indexOf("\"" + name + "\":")
-      if (i < 0) "" else field(name).drop(1).takeWhile(_ != '"')
-    }
-    // fail CLOSED on a truncated/torn record: a partial read of the
-    // adds array would otherwise yield a mangled group name and the
-    // reader would replay a corrupted live set silently. render()
-    // guarantees every record is one JSON object ending in '}' and
-    // every group obeys the data/<uuid> grammar — anything else here
-    // is a torn read (or external corruption), never a valid commit.
-    require(s.trim.startsWith("{") && s.trim.endsWith("}"),
-      s"torn or corrupt commit record (not a closed JSON object): $s")
-    val c = Commit(
-      field("version").takeWhile(c => c.isDigit).toInt,
-      field("action").drop(1).takeWhile(_ != '"'),
-      parseArr(field("adds")), parseArr(field("removes")), opt("tag"),
-      opt("schema"))
-    (c.adds ++ c.removes).foreach { g =>
-      require(g.matches("data/[0-9a-fA-F-]+"),
-        s"torn or corrupt commit record (bad group '$g'): $s")
-    }
-    require(c.schema.matches(SchemaGrammar),
-      s"torn or corrupt commit record (schema is not base64): $s")
+  private[graft] def parse(s: String): Commit = {
+    val f = new Fields("commit record", s)
+    val c = Commit(f.int("version"), f.string("action"), f.groups("adds"),
+      f.groups("removes"), f.string("tag", optional = true), f.schema)
     requireSchema(s"commit record ${c.version}", c.schema, c.adds.nonEmpty)
     c
+  }
+
+  private[graft] def parseCkpt(s: String): Ckpt = {
+    val f = new Fields("checkpoint record", s)
+    val ck = Ckpt(f.int("version"), f.groups("live"),
+      f.strings("tags").toSet, f.schema)
+    requireSchema(s"checkpoint ${ck.version}", ck.schema, ck.live.nonEmpty)
+    ck
   }
 
   /** List a directory's entries, CLOSING the stream — Files.list leaks
@@ -155,8 +194,8 @@ object SnapshotStore {
   /** Read one commit record, retrying briefly on a TORN read: under
     * [[CreateNewPublisher]] a record's creation is exclusive but a
     * local FS does not make its CONTENT atomic — a concurrent reader
-    * can observe the file mid-write. parse() fails closed on the torn
-    * shape (no closing '}', mangled group name), so the read retries
+    * can observe the file mid-write. The codec fails closed on the torn
+    * shape (a proper prefix is never a JSON object), so the read retries
     * until the writer's single small write completes; a record still
     * torn after the window is real corruption and fails loudly rather
     * than corrupting the replayed live set. [[HardLinkPublisher]]
@@ -216,140 +255,31 @@ object SnapshotStore {
 
   private[graft] val CheckpointInterval = 10
 
-  /** Groups per checkpoint SHARD file. A checkpoint's live set at 10⁵
-    * groups is a multi-MB JSON string — written every interval and,
-    * worse, parsed on EVERY state() call (every read and every commit
-    * attempt). Over this cap the live set is split across
-    * `<v>-<uuid>-<i>.ckptshard` files (each bounded by this many
-    * groups) referenced from a small `<v>.ckpt` manifest; shards land
-    * BEFORE the manifest's putIfAbsent, so a visible manifest implies
-    * complete shards, and a checkpointer losing the manifest race
-    * deletes its own orphans. Under the cap the one-file inline
-    * form is still written — the common case pays zero extra files.
-    * Both forms parse through [[readCkpt]]. Test seam: specs shrink
-    * this to force sharding on fixture-sized tables.
+  /** A checkpoint: the replayed state at `version` — its live groups,
+    * every appendOnce tag seen so far, and the table schema (base64).
     */
-  private[graft] var CkptShardGroups = 4096
-
-  private case class Ckpt(version: Int, live: Vector[String],
+  private[graft] case class Ckpt(version: Int, live: Vector[String],
       tags: Set[String], schema: String)
 
-  private def jsonArr(xs: Seq[String]): String =
-    xs.map("\"" + _ + "\"").mkString("[", ",", "]")
+  private def readCkpt(p: Path): Ckpt = readRetrying(p)(parseCkpt)
 
-  private def parseArr(b: String): Vector[String] = {
-    val inner = b.drop(b.indexOf('[') + 1).takeWhile(_ != ']')
-    if (inner.trim.isEmpty) Vector.empty
-    else inner.split(",").toVector.map(_.trim.stripPrefix("\"")
-      .stripSuffix("\""))
-  }
-
-  /** Parsed manifest head: inline live groups (one-file form)
-    * or the shard-file names to read.
-    */
-  private case class CkptHead(
-      version: Int, tags: Set[String], schema: String,
-      inline: Option[Vector[String]], shards: Vector[String])
-
-  private def parseCkptHead(s: String): CkptHead = {
-    require(s.trim.startsWith("{") && s.trim.endsWith("}"),
-      s"torn or corrupt checkpoint record: $s")
-    def body(name: String): Option[String] = {
-      val i = s.indexOf("\"" + name + "\":")
-      if (i < 0) None else Some(s.drop(i + name.length + 3))
-    }
-    val version = body("version").map(_.takeWhile(_.isDigit).toInt)
-      .getOrElse(throw new IllegalArgumentException(
-        s"torn or corrupt checkpoint record (no version): $s"))
-    val tags = body("tags").map(parseArr).getOrElse(
-      throw new IllegalArgumentException(
-        s"torn or corrupt checkpoint record (no tags): $s")).toSet
-    val schema = body("schema").fold("")(_.drop(1).takeWhile(_ != '"'))
-    require(schema.matches(SchemaGrammar),
-      s"torn or corrupt checkpoint record (schema is not base64): $s")
-    val inline = body("live").map(parseArr)
-    val shards = body("shards").map(parseArr).getOrElse(Vector.empty)
-    require(inline.isDefined || shards.nonEmpty,
-      s"torn or corrupt checkpoint record (neither live nor shards): $s")
-    inline.foreach(_.foreach { g =>
-      require(g.matches("data/[0-9a-fA-F-]+"),
-        s"torn or corrupt checkpoint record (bad group '$g'): $s")
-    })
-    shards.foreach { n =>
-      require(n.matches("[0-9]{8}-[0-9a-fA-F-]+-[0-9]+\\.ckptshard"),
-        s"torn or corrupt checkpoint record (bad shard name '$n'): $s")
-    }
-    CkptHead(version, tags, schema, inline, shards)
-  }
-
-  private def parseShard(s: String): Vector[String] = {
-    require(s.trim.startsWith("{") && s.trim.endsWith("}"),
-      s"torn or corrupt checkpoint shard: ${s.take(200)}")
-    val i = s.indexOf("\"groups\":")
-    require(i >= 0, s"torn or corrupt checkpoint shard (no groups)")
-    val gs = parseArr(s.drop(i + 9))
-    gs.foreach { g =>
-      require(g.matches("data/[0-9a-fA-F-]+"),
-        s"torn or corrupt checkpoint shard (bad group '$g')")
-    }
-    gs
-  }
-
-  private def readCkpt(p: Path): Ckpt = {
-    val head = readRetrying(p)(parseCkptHead)
-    val live = head.inline.getOrElse(
-      head.shards.flatMap(n =>
-        readRetrying(p.getParent.resolve(n))(parseShard)))
-    requireSchema(s"checkpoint ${head.version}", head.schema, live.nonEmpty)
-    Ckpt(head.version, live, head.tags, head.schema)
-  }
-
-  /** Publish a checkpoint: inline one-file form when the live set fits
-    * a shard, the sharded form otherwise (shards first — a visible
-    * manifest implies complete shards; a lost manifest race deletes
-    * the loser's own shards, which nothing references).
-    */
+  /** Publish a checkpoint; a lost slot is someone else's identical one. */
   private def writeCkpt(
       dir: Path, publisher: CommitPublisher, ck: Ckpt): Unit = {
-    ck.live.foreach { g =>
-      require(g.matches("data/[0-9a-fA-F-]+"),
-        s"data group name '$g' violates the data/<uuid> grammar")
-    }
-    ck.tags.foreach { t =>
-      require(t.matches("[A-Za-z0-9._-]+"),
-        s"tag '$t' violates the tag grammar")
-    }
-    val head = s"""{"version":${ck.version},""" +
-      s""""tags":${jsonArr(ck.tags.toSeq.sorted)},"schema":"${ck.schema}","""
-    if (ck.live.size <= CkptShardGroups) {
-      publisher.putIfAbsent(dir, f"${ck.version}%08d.ckpt",
-        head + s""""live":${jsonArr(ck.live)}}""")
-      ()
-    } else {
-      val uuid = UUID.randomUUID().toString
-      val shards = ck.live.grouped(CkptShardGroups).toVector
-      val names = shards.indices
-        .map(i => f"${ck.version}%08d-$uuid-$i.ckptshard").toVector
-      shards.indices.foreach { i =>
-        publisher.putIfAbsent(dir, names(i),
-          s"""{"groups":${jsonArr(shards(i))}}""")
-      }
-      val manifest = head + s""""shards":${jsonArr(names)}}"""
-      if (!publisher.putIfAbsent(dir, f"${ck.version}%08d.ckpt", manifest))
-        names.foreach(n => Files.deleteIfExists(dir.resolve(n)))
-    }
+    publisher.putIfAbsent(dir, f"${ck.version}%08d.ckpt", render(ck))
+    ()
   }
 
   /** Newest-checkpoint cache: checkpoints are IMMUTABLE once published
     * (putIfAbsent slots, version-monotonic names), so the parsed form
     * is cached per log dir keyed by file name — repeat state() calls
-    * skip the O(live-set) JSON/shard parse entirely and pay only the
+    * skip the O(live-set) JSON parse entirely and pay only the
     * listing + suffix reads. A failed parse is never cached. One case
-    * DOES produce a same-named, different-content manifest: a store
+    * DOES produce a same-named, different-content checkpoint: a store
     * root deleted and recreated at the same path replays versions from
     * zero, so the deterministic `00000010.ckpt` name can reappear with
     * a different live set — the hit check therefore also compares the
-    * manifest's (size, mtime) discriminator read fresh per call (one
+    * checkpoint's (size, mtime) discriminator read fresh per call (one
     * stat, not a parse).
     */
   private val ckptCache = new java.util.concurrent.ConcurrentHashMap[
@@ -369,8 +299,8 @@ object SnapshotStore {
     val (sz, mt) = {
       val attrs = Files.readAttributes(
         p, classOf[java.nio.file.attribute.BasicFileAttributes])
-      // nanosecond mtime: shard names are fixed-width UUIDs, so two
-      // incarnations' manifests can tie on SIZE; millisecond mtime can
+      // nanosecond mtime: group names are fixed-width UUIDs, so two
+      // incarnations' checkpoints can tie on SIZE; millisecond mtime can
       // tie on a fast delete+recreate
       (attrs.size(),
         attrs.lastModifiedTime().to(java.util.concurrent.TimeUnit.NANOSECONDS))
@@ -665,8 +595,8 @@ object SnapshotStore {
     * unsigned, string, date, timestamp and nested columns record no
     * entry, so a file is never pruned on them. Integral bounds widen
     * OUTWARD past 2^53 ([[widenLo]]/[[widenHi]]). A chunk without
-    * usable bounds — no statistics, a NaN bound, or min/max withheld
-    * (parquet withholds them for a float chunk holding NaN) — leaves
+    * usable bounds — no statistics, a NaN or infinite bound, or min/max
+    * withheld (parquet withholds them for a float chunk holding NaN) — leaves
     * the column unbounded for the whole file, unless its null count
     * proves the chunk all-null, in which case it contributes nothing.
     */
@@ -724,7 +654,8 @@ object SnapshotStore {
             } else {
               val mn = st.genericGetMin.asInstanceOf[Number].doubleValue
               val mx = st.genericGetMax.asInstanceOf[Number].doubleValue
-              if (mn.isNaN || mx.isNaN) dead += name
+              // JSON has no token for a NaN or infinite bound
+              if (!mn.isFinite || !mx.isFinite) dead += name
               else {
                 loD(name) = loD.get(name).fold(mn)(math.min(_, mn))
                 hiD(name) = hiD.get(name).fold(mx)(math.max(_, mx))
@@ -773,19 +704,13 @@ object SnapshotStore {
     */
   private def writeSidecar(root: String, group: String,
       files: Seq[String], ranges: Seq[(String, Double, Double)]): Unit = {
-    val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-    entries += s""""_files":[${
-      files.sorted.map("\"" + _ + "\"").mkString(",")}]"""
-    ranges.foreach { case (k, lo, hi) =>
-      entries += s""""$k":[${statNum(lo)},${statNum(hi)}]"""
-    }
     Files.writeString(Paths.get(root, group, "_stats.json"),
-      entries.mkString("{", ",", "}"))
+      JsonMethods.compact(JObject(("_files" -> jsonStrings(files.sorted)) ::
+        ranges.map { case (k, lo, hi) =>
+          k -> JArray(List(JDouble(lo), JDouble(hi)))
+        }.toList)))
     ()
   }
-
-  private def statNum(v: Double) =
-    String.format(java.util.Locale.ROOT, "%.17g", Double.box(v))
 
   /** Integral bounds convert to double OUTWARD: a blind cast rounds
     * |values| > 2^53 to nearest, so a stored min could round UP past
@@ -808,22 +733,9 @@ object SnapshotStore {
     */
   private def readSidecar(root: String, group: String)
       : (Seq[String], Map[String, (Double, Double)]) = {
-    val s = Files.readString(Paths.get(root, group, "_stats.json"))
-    val i = s.indexOf("\"_files\":[")
-    require(i >= 0, s"stats sidecar of $group has no file manifest; " +
-      "rewrite this table")
-    val manifest = s.drop(i + 10).takeWhile(_ != ']').split(",").toSeq
-      .map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty)
-    val re = "\"([^\"]+)\":\\[([^\\]]*)\\]".r
-    val ranges = re.findAllMatchIn(s).flatMap { m =>
-      if (m.group(1) == "_files") None
-      else {
-        val parts = m.group(2).split(",")
-        scala.util.Try(
-          (m.group(1), (parts(0).toDouble, parts(1).toDouble))).toOption
-      }
-    }.toMap
-    (manifest, ranges)
+    val f = new Fields(s"stats sidecar of $group",
+      Files.readString(Paths.get(root, group, "_stats.json")))
+    (f.strings("_files"), f.ranges)
   }
 
   /** Read `paths` through a logged schema: parquet null-fills the
@@ -1033,10 +945,8 @@ object SnapshotStore {
     */
   def appendOnce(df: DataFrame, root: String, tag: String,
       publisher: CommitPublisher = HardLinkPublisher): Option[Int] = {
-    // the tag is interpolated into the hand-rolled commit JSON: a
-    // quote/comma/bracket would corrupt the record and break the
-    // exactly-once dedup (a mangled tag never matches its replay), so
-    // the grammar is a whitelist, not escaping
+    // a whitelist keeps tags plain names: the batch ids a stream
+    // replays, never text that needs escaping or reads as a path
     require(tag.nonEmpty && tag.matches("[A-Za-z0-9._-]+"),
       s"tag must be non-empty [A-Za-z0-9._-]+, got '$tag'")
     // fast path: a replayed tag skips the data write entirely. The
@@ -1654,32 +1564,12 @@ object SnapshotStore {
         // bounds the write-to-publish gap (tests pass minAgeMs = 0)
         val cutoff = System.currentTimeMillis() - minAgeMs
         var removed = 0
-        // pass 1: records and checkpoint MANIFESTS (one file each —
-        // the per-file mtime gate is atomic for them)
         entries.foreach { p =>
           val n = p.getFileName.toString
           val doomed =
             ((n.endsWith(".json") && versionOfName(n) <= c0) ||
               (n.endsWith(".ckpt") && versionOfName(n) < c0)) &&
               Files.getLastModifiedTime(p).toMillis <= cutoff
-          if (doomed) {
-            if (Files.deleteIfExists(p)) removed += 1
-          }
-        }
-        // pass 2: shard files — ONLY once their manifest is gone (a
-        // sharded checkpoint must never be deleted partially: shards
-        // are written before the manifest, so their mtimes can sit on
-        // the other side of the grace cutoff and a per-file rule would
-        // orphan a live manifest). Manifest-absent + old also sweeps
-        // crashed checkpointers' orphans; manifest-absent + YOUNG is a
-        // checkpoint mid-publish and the grace window spares it.
-        entries.foreach { p =>
-          val n = p.getFileName.toString
-          val doomed = n.endsWith(".ckptshard") &&
-            versionOfName(n) < c0 &&
-            !Files.exists(p.getParent.resolve(
-              f"${versionOfName(n)}%08d.ckpt")) &&
-            Files.getLastModifiedTime(p).toMillis <= cutoff
           if (doomed) {
             if (Files.deleteIfExists(p)) removed += 1
           }

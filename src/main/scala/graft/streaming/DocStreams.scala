@@ -176,7 +176,7 @@ object DocStreams {
   def bpeTokenAccounting(
       docs: DataFrame, table: String, window: String = "10 minutes")(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+    gate(docs, "bpeTokenAccounting") { (batch, batchId) =>
       val enc = graft.plans.BpeStore.encode(
         batch.sparkSession, batch.select("doc_id", "text"), table)
       val out = batch.select("doc_id", "source", "ingest_ts")
@@ -217,7 +217,7 @@ object DocStreams {
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     val sizes = corpusShingles.groupBy("doc_id").agg(count(lit(1)).as("n"))
       .localCheckpoint(eager = true)
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+    gate(docs, "admitAgainstCorpus") { (batch, batchId) =>
       once(batch) { b =>
         val matched = graft.operators.Dedup
           .crossJaccardMatchesIndexed(
@@ -251,7 +251,7 @@ object DocStreams {
       docs: DataFrame, table: String,
       threshold: Double = 0.5, n: Int = 3)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+    gate(docs, "admitAgainstSignatureIndex") { (batch, batchId) =>
       once(batch) { b =>
         val matched = graft.plans.ShingleIndexStore
           .matchBatchBySignature(b.select("doc_id", "text"), n, table,
@@ -313,7 +313,7 @@ object DocStreams {
       vecs: DataFrame, table: String, threshold: Double,
       nprobe: Int = 4)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vecs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+    gate(vecs, "admitBySimilarity") { (batch, batchId) =>
       once(batch) { b =>
         val dup = graft.plans.IvfIndexStore
           .knn(b.select("vec_id", "embedding"), 1, nprobe, table)
@@ -345,7 +345,7 @@ object DocStreams {
   def admitByFingerprint(store: graft.plans.FingerprintIndexStore)(
       clips: DataFrame, table: String, maxHamming: Int = store.Radius)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    clips.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+    gate(clips, "admitByFingerprint") { (batch, batchId) =>
       once(batch) { b =>
         once(store.fingerprints(b.select("doc_id", "payload"))) { fps =>
           val dup = store.matchFingerprints(fps, table, maxHamming)
@@ -381,7 +381,7 @@ object DocStreams {
   def searchBm25Stream(
       queries: DataFrame, table: String, topN: Int)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    queries.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+    gate(queries, "searchBm25Stream") { (batch, batchId) =>
       sink(graft.plans.Bm25IndexStore.wandSearch(
         batch.sparkSession, table, batch.select("doc_id", "text"),
         topN), batchId)
@@ -395,7 +395,7 @@ object DocStreams {
   def searchTfidfStream(
       queryIds: DataFrame, table: String, topN: Int)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    queryIds.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+    gate(queryIds, "searchTfidfStream") { (batch, batchId) =>
       sink(graft.plans.TfidfIndexStore.wandSearch(
         batch.sparkSession, table, batch.select("doc_id"), topN),
         batchId)
@@ -421,7 +421,7 @@ object DocStreams {
       docs: DataFrame, weights: DataFrame, defaultLr: Double,
       minScore: Double = 0.0)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+    gate(docs, "admitByImportance") { (batch, batchId) =>
       once(batch) { b =>
         val admitted = b
           .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
@@ -464,7 +464,7 @@ object DocStreams {
       docs: DataFrame, corpusGrams: DataFrame,
       n: Int = graft.operators.Dedup.SpanN)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+    gate(docs, "scrubSpansAgainstCorpus") { (batch, batchId) =>
       sink(graft.operators.Dedup.spanCoverageScrub(
         batch.select("doc_id", "text"), corpusGrams, n), batchId)
     }
@@ -482,7 +482,7 @@ object DocStreams {
       docs: DataFrame, corpusLines: DataFrame,
       segTokens: Int = graft.operators.Dedup.LineSegTokens)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+    gate(docs, "scrubLinesAgainstCorpus") { (batch, batchId) =>
       sink(graft.operators.Dedup.lineScrubAgainstCorpus(
         batch.select("doc_id", "text"), corpusLines, segTokens), batchId)
     }
@@ -498,6 +498,20 @@ object DocStreams {
       .select(explode(array_distinct(
         shinglesFromTokens(col("toks"), n))).as("g"))
       .distinct()
+
+  /** The one way a gate becomes a `foreachBatch` writer: every Spark
+    * job of a micro-batch's body is described `docstreams.<gate>` (see
+    * [[graft.JobDescription]]), so a listener attributes the batch's
+    * jobs to the gate; a [[snapshotSink]] commit inside it describes
+    * its own as `snapshot.appendOnce`.
+    */
+  private def gate(frame: DataFrame, name: String)(
+      body: (DataFrame, Long) => Unit)
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    frame.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+      graft.JobDescription.during(batch.sparkSession, s"docstreams.$name")(
+        body(batch, batchId))
+    }
 
   /** Runs `body` over `frame` computed exactly once. One job computes
     * the frame into checkpointed blocks (`localCheckpoint`, which keeps

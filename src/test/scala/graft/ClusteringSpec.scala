@@ -154,6 +154,16 @@ class ClusteringSpec extends AnyFunSuite {
     }
   }
 
+  test("a fixture's schema is inferred once per session: a second " +
+    "cluster-histogram execution runs no parquet schema job") {
+    Clustering.qClusterHistogram(spark, dir).collect()
+    val jobs = JobCensus.of(spark) {
+      Clustering.qClusterHistogram(spark, dir).collect(); ()
+    }
+    val inferred = jobs.filter(_.stages.exists(_.startsWith("parquet at Tables")))
+    assert(inferred.isEmpty, jobs.mkString("\n"))
+  }
+
   test("cluster histogram conserves the corpus and matches the clusters") {
     val hist = Clustering.qClusterHistogram(spark, dir).collect()
     val nTotal = Dedup.corpusNear(spark, dir).count()

@@ -206,6 +206,33 @@ class DocStreamsSpec extends AnyFunSuite {
     assert(graft.plans.SnapshotStore.history(root).size === 2)
   }
 
+  test("every Spark job of an admission micro-batch is described: the " +
+    "gate's as docstreams.<gate>, the sink commit's as snapshot.appendOnce") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val corpus = Seq((1L, good), (2L, "a wholly different corpus line " +
+      "about rivers mountains and the weather in spring")).toDF("doc_id", "text")
+    val newDocs = Seq(Doc(10L, good, "crawl", ts(0)),
+      Doc(11L, "fresh text about ledgers tallies and audits of the " +
+        "municipal count", "crawl", ts(0)))
+    val corpusSh = graft.operators.Dedup.shingleIndex(corpus, 3).persist()
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-snap-described").toString
+    val input = MemoryStream[Doc]
+    input.addData(newDocs.toIndexedSeq: _*)
+    val writer = DocStreams.admitAgainstCorpus(input.toDF(), corpusSh)(
+      DocStreams.snapshotSink(root))
+    val jobs = JobCensus.of(spark) {
+      val q = writer.start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    corpusSh.unpersist()
+    assert(graft.plans.SnapshotStore.read(spark, root).select("doc_id")
+      .as[Long].collect().toSeq === Seq(11L), "the corpus copy is not admitted")
+    val described = Set("docstreams.admitAgainstCorpus", "snapshot.appendOnce")
+    assert(jobs.map(_.description).toSet === described, jobs.mkString("\n"))
+  }
+
   test("a no-data micro-batch commits its tag alone: no zero-row group " +
     "joins the live set, and a replay of that tag adds no row") {
     import spark.implicits._

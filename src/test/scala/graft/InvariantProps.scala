@@ -631,12 +631,6 @@ object InvariantProps extends Properties("graft.invariants") {
       val ops = seed ++ ops0.take(6) // each commit writes real parquet
       val root = java.nio.file.Files
         .createTempDirectory("graft-snap-prop").toString
-      // run the whole law under SHARDED checkpoints (cap 3 forces the
-      // v10 checkpoint's ≥10-group live set across multiple shard
-      // files) — the sharded and inline forms must replay identically
-      val oldCap = graft.plans.SnapshotStore.CkptShardGroups
-      graft.plans.SnapshotStore.CkptShardGroups = 3
-      try {
       val model = scala.collection.mutable.ArrayBuffer.empty[Seq[Long]]
       var state = Seq.empty[Long]
       ops.foreach { case (action, ids) =>
@@ -660,7 +654,6 @@ object InvariantProps extends Properties("graft.invariants") {
         contents(Some(v)) == refCounts(want)
       }
       everyVersion && contents(None) == refCounts(model.last)
-      } finally graft.plans.SnapshotStore.CkptShardGroups = oldCap
     }
 
   // tiny alphabet + short words force dense pair interactions: merged

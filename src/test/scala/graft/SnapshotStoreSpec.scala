@@ -622,6 +622,21 @@ class SnapshotStoreSpec extends AnyFunSuite {
       val tags = SnapshotStore.read(spark, root).collect()
         .map(r => r.getLong(0) -> r.getString(1)).toMap
       assert(tags === Map(60L -> "UP", 70L -> "r70", 80L -> "r80"))
+      // grow to the next boundary; retention sweeps the superseded v10
+      // checkpoint once v20 covers the horizon (keep = 1 → cut = v20)
+      (13L to 20L).foreach(i => SnapshotStore.append(df(100 + i), root, pub))
+      val dir = Paths.get(root, "_commits")
+      assert(Files.exists(dir.resolve(f"${2 * N}%08d.ckpt")))
+      assert(SnapshotStore.vacuumLog(root, keep = 1, minAgeMs = 0) > 0)
+      assert(listNames(dir).filter(_.endsWith(".ckpt")) ===
+        Seq(f"${2 * N}%08d.ckpt"), "only the covering checkpoint stays")
+      assert(idSet(SnapshotStore.read(spark, root)) ===
+        Set(60L, 70L, 80L) ++ (113L to 120L))
+      // the v20 checkpoint alone still carries the pre-checkpoint tag
+      assert(SnapshotStore.appendOnce(df(99), root, "pre-ckpt", pub)
+        === None)
+      intercept[IllegalArgumentException](
+        SnapshotStore.read(spark, root, Some(15)))
     }
   }
 
@@ -666,60 +681,6 @@ class SnapshotStoreSpec extends AnyFunSuite {
     val root2 = freshRoot()
     (0L to 5L).foreach(i => SnapshotStore.append(df(i), root2))
     assert(SnapshotStore.vacuumLog(root2, keep = 2, minAgeMs = 0) === 0)
-  }
-
-  test("sharded checkpoints: over the shard cap the live set splits " +
-    "across .ckptshard files behind a small manifest; replay, tag " +
-    "dedup, time travel, and retention agree with the inline form " +
-    "under both publishers") {
-    val old = SnapshotStore.CkptShardGroups
-    try {
-      SnapshotStore.CkptShardGroups = 3 // force sharding on fixture sizes
-      for (pub <- Seq(SnapshotStore.HardLinkPublisher,
-          SnapshotStore.CreateNewPublisher)) {
-        val root = freshRoot()
-        assert(SnapshotStore.appendOnce(df(500), root, "pre", pub)
-          === Some(0))
-        (1L to 10L).foreach(i => SnapshotStore.append(df(i), root, pub))
-        // v10 checkpoint carries 11 live groups > cap 3 → sharded
-        val dir = Paths.get(root, "_commits")
-        assert(Files.exists(dir.resolve(f"${10}%08d.ckpt")))
-        val shardNames = listNames(dir).filter(_.endsWith(".ckptshard"))
-        assert(shardNames.size === 4,
-          s"11 groups over cap 3 must write 4 shards: $shardNames")
-        assert(shardNames.forall(_.startsWith(f"${10}%08d-")))
-        // the manifest itself stays small — no group names inline
-        val manifest =
-          Files.readString(dir.resolve(f"${10}%08d.ckpt"))
-        assert(!manifest.contains("data/"),
-          s"sharded manifest must not inline groups: $manifest")
-        // replay through the sharded checkpoint
-        SnapshotStore.append(df(11), root, pub) // v11
-        assert(idSet(SnapshotStore.read(spark, root)) ===
-          (1L to 11L).toSet + 500L)
-        assert(idSet(SnapshotStore.read(spark, root, Some(10))) ===
-          (1L to 10L).toSet + 500L)
-        assert(idSet(SnapshotStore.read(spark, root, Some(4))) ===
-          (1L to 4L).toSet + 500L)
-        // tag carried by the sharded checkpoint still dedups
-        assert(SnapshotStore.appendOnce(df(9999), root, "pre", pub)
-          === None)
-        // grow to the next boundary; retention sweeps the OLD shards
-        // once a NEWER checkpoint covers the horizon (keep=1 → cut=v20;
-        // a wider keep correctly spares v10 as the covering checkpoint)
-        (12L to 20L).foreach(i => SnapshotStore.append(df(i), root, pub))
-        assert(SnapshotStore.vacuumLog(root, keep = 1, minAgeMs = 0) > 0)
-        val after = listNames(dir)
-        assert(!after.exists(n =>
-          n.endsWith(".ckptshard") && n.startsWith(f"${10}%08d-")),
-          s"v10 shards must be swept once v20 covers the horizon: $after")
-        assert(after.exists(n =>
-          n.endsWith(".ckptshard") && n.startsWith(f"${20}%08d-")),
-          "the covering checkpoint's shards must survive")
-        assert(idSet(SnapshotStore.read(spark, root)) ===
-          (1L to 20L).toSet + 500L)
-      }
-    } finally SnapshotStore.CkptShardGroups = old
   }
 
   private def listNames(dir: java.nio.file.Path): Seq[String] = {
@@ -794,6 +755,88 @@ class SnapshotStoreSpec extends AnyFunSuite {
     val e2 = intercept[IllegalArgumentException](
       SnapshotStore.read(spark, root))
     assert(e2.getMessage.contains("torn or corrupt"))
+  }
+
+  test("every proper prefix of a written commit record and of a " +
+    "checkpoint fails as torn or corrupt") {
+    val root = freshRoot()
+    SnapshotStore.appendOnce(df(1), root, "b-0")
+    (1L to SnapshotStore.CheckpointInterval.toLong)
+      .foreach(i => SnapshotStore.append(df(i), root))
+    val dir = Paths.get(root, "_commits")
+    val record = Files.readString(dir.resolve("00000000.json"))
+    val ckpt = Files.readString(dir.resolve(
+      f"${SnapshotStore.CheckpointInterval}%08d.ckpt"))
+    assert(SnapshotStore.parse(record).tag === "b-0")
+    assert(SnapshotStore.parseCkpt(ckpt).live.size === 11)
+    for ((text, parse) <- Seq[(String, String => Any)](
+        (record, SnapshotStore.parse _), (ckpt, SnapshotStore.parseCkpt _));
+        n <- 0 until text.length) {
+      val e = intercept[IllegalArgumentException](parse(text.take(n)))
+      assert(e.getMessage.contains("torn or corrupt"), text.take(n))
+    }
+  }
+
+  test("a log written before the json4s codec parses to the same " +
+    "commits, replays, and is written back byte for byte") {
+    // copied from a table written by the hand-rolled codec: an append,
+    // a tag-only empty batch, an overwrite, a compaction, the v10
+    // checkpoint
+    val schema = "eyJ0eXBlIjoic3RydWN0IiwiZmllbGRzIjpbeyJuYW1lIjoiaWQiLCJ0eXBlIj" +
+      "oibG9uZyIsIm51bGxhYmxlIjp0cnVlLCJtZXRhZGF0YSI6e319LHsibmFtZSI6" +
+      "InRhZyIsInR5cGUiOiJzdHJpbmciLCJudWxsYWJsZSI6dHJ1ZSwibWV0YWRhdG" +
+      "EiOnt9fV19"
+    def g(id: String) = s"data/$id"
+    val v0 = g("092dc335-45e3-4024-a7f3-3afb8586e858")
+    val v2 = g("442196d1-6c16-4a2b-80c4-ff34c67e44c6")
+    val v3 = g("2d3eba38-2383-4af8-a9bd-9ccca18710fe")
+    val v4to8 = Seq("fd93f4b6-f9b0-43da-8d2e-fb979cc66f02",
+      "fb07d42e-4021-45fd-8058-fc6966273dcb",
+      "2d9c68ec-531a-4947-920e-95820ea14709",
+      "2a1bd280-f6ec-4d09-9101-585216dcfde2",
+      "b773f850-7f68-4dd8-b6a0-6c938524ad49").map(g)
+    val v9 = g("7632fdd8-09e2-451b-8b88-624380d6b545")
+    val v10 = g("24eecce0-223f-4357-8546-d7d38d90f825")
+    import SnapshotStore.{Ckpt, Commit}
+    val golden = Seq[(String, Commit)](
+      s"""{"version":0,"action":"append","adds":["$v0"],"removes":[],""" +
+        s""""tag":"","schema":"$schema"}""" ->
+        Commit(0, "append", Vector(v0), Vector(), "", schema),
+      s"""{"version":1,"action":"append","adds":[],"removes":[],""" +
+        s""""tag":"batch-1","schema":"$schema"}""" ->
+        Commit(1, "append", Vector(), Vector(), "batch-1", schema),
+      s"""{"version":3,"action":"overwrite","adds":["$v3"],""" +
+        s""""removes":["$v0","$v2"],"tag":"","schema":"$schema"}""" ->
+        Commit(3, "overwrite", Vector(v3), Vector(v0, v2), "", schema),
+      s"""{"version":9,"action":"compact","adds":["$v9"],"removes":""" +
+        s"""["$v3",${v4to8.map("\"" + _ + "\"").mkString(",")}],""" +
+        s""""tag":"","schema":"$schema"}""" ->
+        Commit(9, "compact", Vector(v9), (v3 +: v4to8).toVector, "", schema))
+    golden.foreach { case (text, commit) =>
+      assert(SnapshotStore.parse(text) === commit)
+      assert(SnapshotStore.render(commit) === text)
+    }
+    val ckText = s"""{"version":10,"tags":["batch-1","batch-2"],""" +
+      s""""schema":"$schema","live":["$v9","$v10"]}"""
+    val ck = Ckpt(10, Vector(v9, v10), Set("batch-1", "batch-2"), schema)
+    assert(SnapshotStore.parseCkpt(ckText) === ck)
+    assert(SnapshotStore.render(ck) === ckText)
+    // the same files as a log: replay, time travel and tag dedup
+    val root = freshRoot()
+    val dir = Files.createDirectories(Paths.get(root, "_commits"))
+    golden.foreach { case (text, c) =>
+      Files.writeString(dir.resolve(f"${c.version}%08d.json"), text)
+    }
+    Files.writeString(dir.resolve(f"${10}%08d.ckpt"), ckText)
+    assert(SnapshotStore.probeStateLiveCount(root) === 2)
+    assert(SnapshotStore.schemaAt(root).fieldNames.toSeq === Seq("id", "tag"))
+    assert(SnapshotStore.describeHistory(root) ===
+      Seq((0, "append", 1, 0), (1, "append", 0, 0), (3, "overwrite", 1, 2),
+        (9, "compact", 1, 6)))
+    // time travel below the checkpoint replays the records 0..1
+    assert(SnapshotStore.schemaAt(root, Some(1)).fieldNames.toSeq ===
+      Seq("id", "tag"))
+    assert(SnapshotStore.appendOnce(df(7), root, "batch-2") === None)
   }
 
   test("a commit record that adds data without a logged table schema " +
